@@ -1,11 +1,11 @@
 """Event/derived-view analytics operators: 2-D skyline (Pareto frontier),
 retention cohorts, and calendar gap-fill with forward fill.
 
-These extend the reference's selection/window semantics (src/YAXArrays
-`where`/reduction surface, src/Queries.jl windowed views) the same way
-operators/asof.py does for event time: each is a classic derived view a
-web-analytics / training-data pipeline materializes over the event log,
-re-expressed as pure Catalyst window/join plans.
+These extend the reference's selection semantics (`where`/`pwhere`
+masking, src/YAXTrees.jl:794–854) the same way operators/asof.py does
+for event time: each is a classic derived view a web-analytics /
+training-data pipeline materializes over the event log, re-expressed as
+pure Catalyst window/join plans.
 
 Scale design:
 - ``skyline2d`` deduplicates to distinct (x, y) points FIRST (bounded by

@@ -1,11 +1,11 @@
 """Grid-density spatial operators: DBSCAN-style clustering, kernel
 heat-map smoothing, and per-entity trajectory statistics.
 
-These extend the reference's spatial surface (src/Queries.jl bbox filter,
-cell covers) from point-in-region selection to the density views a
-geospatial web-analytics pipeline derives from an event stream: where do
-events cluster, what does the density surface look like, how far does
-each entity move.
+These extend the reference's spatial surface (the `Where` lat/lon box
+selector, test/test_yaxtree.jl:299–302; cell covers) from point-in-region
+selection to the density views a geospatial web-analytics pipeline
+derives from an event stream: where do events cluster, what does the
+density surface look like, how far does each entity move.
 
 Scale design:
 - ``grid_dbscan`` is the cell-based DBSCAN variant (GriDBSCAN family):
@@ -51,7 +51,9 @@ _KEY_BASE = 1_000_000
 # km per degree at the equator (planar-degree scale constant)
 _KM_PER_DEG = 111.32
 
-# binomial 3×3 stencil: (1 2 1) ⊗ (1 2 1) — integer weights, sum 16
+# binomial 3×3 stencil: (1 2 1) ⊗ (1 2 1) — integer weights, sum 16.
+# Must satisfy w(dx, dy) == w(-dx, -dy): heatmap_smooth scatters and the
+# _heatmap_sql oracle gathers, which agree only under that symmetry.
 STENCIL = [
     (-1, -1, 1), (-1, 0, 2), (-1, 1, 1),
     (0, -1, 2), (0, 0, 4), (0, 1, 2),

@@ -50,7 +50,7 @@ def _minhash_ctes() -> str:
     base = D.h56_sql("g", "mh")
     mins = ", ".join(f"min({D.affine_sql('h', j)}) AS m{j}" for j in range(_NH))
     bands_sel = "\nUNION ALL\n".join(
-        "SELECT doc_id, {b} AS band, CAST(m{i} AS VARCHAR) || '_' || CAST(m{j} AS VARCHAR) AS key FROM sig".format(
+        "SELECT doc_id AS id, {b} AS band, CAST(m{i} AS VARCHAR) || '_' || CAST(m{j} AS VARCHAR) AS key FROM sig".format(
             b=b, i=b * _ROWS, j=b * _ROWS + 1
         )
         for b in range(_BANDS)
@@ -60,22 +60,10 @@ ex AS (SELECT doc_id, unnest(sh) AS g FROM sh),
 hx AS (SELECT doc_id, {base} AS h FROM ex),
 sig AS (SELECT doc_id, {mins} FROM hx GROUP BY doc_id),
 bands AS ({bands_sel}),
-sized AS (
-  SELECT band, key, count(*) AS n FROM bands GROUP BY band, key
-),
-kept AS (
-  SELECT b.* FROM bands b JOIN sized s USING (band, key) WHERE s.n <= 64
-),
-pairs AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM kept a JOIN kept b USING (band, key)
-  WHERE a.doc_id < b.doc_id
-),
+{D.band_pairs_sql(64)},
 j AS (
-  SELECT id_a, id_b,
-         round(len(list_intersect(x.sh, y.sh)) * 1.0
-               / len(list_distinct(x.sh || y.sh)), 6) AS jaccard
-  FROM pairs JOIN sh x ON x.doc_id = id_a JOIN sh y ON y.doc_id = id_b
+  SELECT id_a, id_b, {D.jaccard_sql('x.sh', 'y.sh')} AS jaccard
+  FROM {D.join_sides_sql('sh')}
 )"""
 
 
@@ -263,18 +251,25 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _simhash_sql() -> str:
+def _simhash_ctes() -> str:
+    """Unordered CTE chain ending in ``sh(doc_id, simhash)`` — the body
+    of the `simhash` oracle, composed by the near-dup oracles."""
     h = D.h56_sql("t", "sim")
     votes = ", ".join(
         f"sum(CASE WHEN (({h}) >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS v{b}" for b in range(_SIMBITS)
     )
     combine = " + ".join(f"(CASE WHEN v{b} > 0 THEN {1 << b} ELSE 0 END)" for b in range(_SIMBITS))
-    return f"""
-WITH toks AS (
+    return f"""toks AS (
   SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents
 ),
-votes AS (SELECT doc_id, {votes} FROM toks GROUP BY doc_id)
-SELECT doc_id, CAST({combine} AS BIGINT) AS simhash FROM votes ORDER BY doc_id
+votes AS (SELECT doc_id, {votes} FROM toks GROUP BY doc_id),
+sh AS (SELECT doc_id, CAST({combine} AS BIGINT) AS simhash FROM votes)"""
+
+
+def _simhash_sql() -> str:
+    return f"""
+WITH {_simhash_ctes()}
+SELECT doc_id, simhash FROM sh ORDER BY doc_id
 """
 
 
@@ -287,23 +282,13 @@ def q_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _simhash_neardup_sql() -> str:
-    chunks = _SIMBITS // 4
-    bands_sel = "\nUNION ALL\n".join(
-        f"SELECT doc_id, simhash, {c} AS band, (simhash >> {c * 4}) & 15 AS key FROM sh"
-        for c in range(chunks)
-    )
+    ham = "bit_count(xor(x.simhash, y.simhash))"
     return f"""
-WITH base AS ({_simhash_sql().replace('ORDER BY doc_id', '')}),
-sh AS (SELECT doc_id, simhash FROM base),
-bands AS ({bands_sel}),
-pairs AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-         a.simhash AS sh_a, b.simhash AS sh_b
-  FROM bands a JOIN bands b USING (band, key)
-  WHERE a.doc_id < b.doc_id
-)
-SELECT id_a, id_b, bit_count(xor(sh_a, sh_b)) AS hamming
-FROM pairs WHERE bit_count(xor(sh_a, sh_b)) <= 2
+WITH {_simhash_ctes()},
+bands AS ({D.simhash_bands_sql(_SIMBITS, 4)}),
+{D.band_pairs_sql(None)}
+SELECT id_a, id_b, {ham} AS hamming
+FROM {D.join_sides_sql('sh')} WHERE {ham} <= 2
 ORDER BY id_a, id_b
 """
 
@@ -313,10 +298,10 @@ ORDER BY id_a, id_b
 # ---------------------------------------------------------------------------
 
 
-def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact word-3-gram Jaccard for candidate pairs blocked by (lang,
-    |n_chars| diff ≤ 20) — demonstrates the exact metric; at 10^12 docs the
-    blocked self-join is replaced by the MinHash-LSH candidate generator."""
+def _ngram_blocked(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """(pairs(id_a, id_b), docs(doc_id, sh)): candidate pairs blocked by
+    (lang, |n_chars| diff ≤ 20) and the word-3-gram shingles the verify
+    reads — shared by `ngram_jaccard` and `ngram_containment`."""
     docs = load(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars", D.word_ngrams_expr(F.col("text"), 3).alias("sh")
     )
@@ -327,30 +312,34 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("a.doc_id") < F.col("b.doc_id"))
             & (F.abs(F.col("a.n_chars") - F.col("b.n_chars")) <= 20)
         )
-        .select(
-            F.col("a.doc_id").alias("id_a"),
-            F.col("b.doc_id").alias("id_b"),
-            F.round(
-                F.size(F.array_intersect("a.sh", "b.sh"))
-                / F.size(F.array_union("a.sh", "b.sh")).cast("double"),
-                6,
-            ).alias("jaccard"),
-        )
+        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
     )
-    return pairs.filter(F.col("jaccard") >= 0.5).orderBy("id_a", "id_b")
+    return pairs, docs.select("doc_id", "sh")
+
+
+def _ngram_blocked_ctes() -> str:
+    """SQL twin of :func:`_ngram_blocked`: ``s(doc_id, lang, n_chars, sh)``
+    and ``pairs(id_a, id_b)``."""
+    return f"""s AS (SELECT doc_id, lang, n_chars, {D.word_ngrams_sql("text", 3)} AS sh FROM documents),
+pairs AS (
+  SELECT a.doc_id AS id_a, b.doc_id AS id_b
+  FROM s a JOIN s b ON a.lang = b.lang
+  WHERE a.doc_id < b.doc_id AND abs(a.n_chars - b.n_chars) <= 20
+)"""
+
+
+def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact word-3-gram Jaccard for candidate pairs blocked by (lang,
+    |n_chars| diff ≤ 20) — demonstrates the exact metric; at 10^12 docs the
+    blocked self-join is replaced by the MinHash-LSH candidate generator."""
+    out = D.jaccard_verify(*_ngram_blocked(spark, sf_dir))
+    return out.filter(F.col("jaccard") >= 0.5).orderBy("id_a", "id_b")
 
 
 def _ngram_jaccard_sql() -> str:
-    sh = D.word_ngrams_sql("text", 3)
     return f"""
-WITH s AS (SELECT doc_id, lang, n_chars, {sh} AS sh FROM documents),
-p AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         round(len(list_intersect(a.sh, b.sh)) * 1.0
-               / len(list_distinct(a.sh || b.sh)), 6) AS jaccard
-  FROM s a JOIN s b ON a.lang = b.lang
-  WHERE a.doc_id < b.doc_id AND abs(a.n_chars - b.n_chars) <= 20
-)
+WITH {_ngram_blocked_ctes()},
+p AS (SELECT id_a, id_b, {D.jaccard_sql('x.sh', 'y.sh')} AS jaccard FROM {D.join_sides_sql('s')})
 SELECT id_a, id_b, jaccard FROM p WHERE jaccard >= 0.5 ORDER BY id_a, id_b
 """
 
@@ -396,16 +385,11 @@ _COS_SQL = """round(
 
 
 def _embed_neardup_sql() -> str:
-    cos = _COS_SQL.format(a="a.embedding", b="b.embedding")
+    cos = _COS_SQL.format(a="x.embedding", b="y.embedding")
     return f"""
-WITH b0 AS (SELECT vec_id, embedding, ({_bucket_sql('embedding', 8)}) AS bucket FROM embeddings),
-sized AS (SELECT bucket, count(*) AS n FROM b0 GROUP BY bucket),
-b AS (SELECT b0.* FROM b0 JOIN sized USING (bucket) WHERE sized.n <= 4096),
-p AS (
-  SELECT a.vec_id AS id_a, b.vec_id AS id_b, {cos} AS cos_sim
-  FROM b a JOIN b b ON a.bucket = b.bucket
-  WHERE a.vec_id < b.vec_id
-)
+WITH bands AS (SELECT vec_id AS id, 0 AS band, ({_bucket_sql('embedding', 8)}) AS key FROM embeddings),
+{D.band_pairs_sql(4096)},
+p AS (SELECT id_a, id_b, {cos} AS cos_sim FROM {D.join_sides_sql('embeddings', 'vec_id')})
 SELECT id_a, id_b, cos_sim FROM p WHERE cos_sim >= 0.35 ORDER BY id_a, id_b
 """
 

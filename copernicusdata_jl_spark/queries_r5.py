@@ -331,20 +331,9 @@ def q_ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the same blocked candidate pairs as ngram_jaccard — catches the
     short-page-quoted-in-long-page duplicates Jaccard misses."""
     from .operators import dedup as D
+    from .queries_ext import _ngram_blocked
 
-    docs = load(spark, sf_dir, "documents").select(
-        "doc_id", "lang", "n_chars", D.word_ngrams_expr(F.col("text"), 3).alias("sh")
-    )
-    a, b = docs.alias("a"), docs.alias("b")
-    pairs = (
-        a.join(b, "lang")
-        .filter(
-            (F.col("a.doc_id") < F.col("b.doc_id"))
-            & (F.abs(F.col("a.n_chars") - F.col("b.n_chars")) <= 20)
-        )
-        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-    )
-    out = D.containment_verify(pairs, docs)
+    out = D.containment_verify(*_ngram_blocked(spark, sf_dir))
     return out.filter(
         F.greatest("cont_a", "cont_b") >= 0.5
     ).orderBy("id_a", "id_b")
@@ -352,16 +341,16 @@ def q_ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ngram_containment_sql() -> str:
     from .operators import dedup as D
+    from .queries_ext import _ngram_blocked_ctes
 
-    sh = D.word_ngrams_sql("text", 3)
+    inter = "len(list_intersect(x.sh, y.sh)) * 1.0"
     return f"""
-WITH s AS (SELECT doc_id, lang, n_chars, {sh} AS sh FROM documents),
+WITH {_ngram_blocked_ctes()},
 p AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         round(len(list_intersect(a.sh, b.sh)) * 1.0 / len(a.sh), 6) AS cont_a,
-         round(len(list_intersect(a.sh, b.sh)) * 1.0 / len(b.sh), 6) AS cont_b
-  FROM s a JOIN s b ON a.lang = b.lang
-  WHERE a.doc_id < b.doc_id AND abs(a.n_chars - b.n_chars) <= 20
+  SELECT id_a, id_b,
+         round({inter} / len(x.sh), 6) AS cont_a,
+         round({inter} / len(y.sh), 6) AS cont_b
+  FROM {D.join_sides_sql('s')}
 )
 SELECT id_a, id_b, cont_a, cont_b FROM p
 WHERE GREATEST(cont_a, cont_b) >= 0.5 ORDER BY id_a, id_b

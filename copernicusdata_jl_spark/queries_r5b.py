@@ -405,7 +405,7 @@ FROM q GROUP BY 1 ORDER BY tile
 """
 
 
-# bit width MUST stay the oracle's _simhash_sql width (queries_ext),
+# bit width MUST stay the oracle's _simhash_ctes width (queries_ext),
 # since _fuzzy_sql bands the fingerprint that CTE produces
 from .queries_ext import _SIMBITS as _FUZZY_BITS  # noqa: E402
 
@@ -431,28 +431,16 @@ def q_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _fuzzy_sql() -> str:
-    from .queries_ext import _simhash_sql
+    from .operators.dedup import band_pairs_sql, join_sides_sql, simhash_bands_sql
+    from .queries_ext import _simhash_ctes
 
-    base = _simhash_sql().replace("ORDER BY doc_id", "")
-    chunks = _FUZZY_BITS // _FUZZY_BAND_BITS
-    mask = (1 << _FUZZY_BAND_BITS) - 1
-    bands = "\nUNION ALL\n".join(
-        f"SELECT doc_id, {c} AS band, (simhash >> {c * _FUZZY_BAND_BITS}) & {mask} AS key FROM sh"
-        for c in range(chunks)
-    )
     return f"""
-WITH base AS ({base}),
-sh AS (SELECT doc_id, simhash FROM base),
-bands AS ({bands}),
-pairs AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM bands a JOIN bands b USING (band, key) WHERE a.doc_id < b.doc_id
-),
+WITH {_simhash_ctes()},
+bands AS ({simhash_bands_sql(_FUZZY_BITS, _FUZZY_BAND_BITS)}),
+{band_pairs_sql(None)},
 verified AS (
-  SELECT id_a, id_b, levenshtein(da.text, db.text) AS dist
-  FROM pairs
-  JOIN documents da ON da.doc_id = id_a
-  JOIN documents db ON db.doc_id = id_b
+  SELECT id_a, id_b, levenshtein(x.text, y.text) AS dist
+  FROM {join_sides_sql('documents')}
 )
 SELECT id_a, id_b, dist FROM verified
 WHERE dist <= {_FUZZY_MAX_DIST}

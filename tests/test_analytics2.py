@@ -395,6 +395,16 @@ def test_heatmap_smooth_stencil_exact(spark):
     assert vals == [(1, 8), (2, 10), (3, 12)]
 
 
+
+def test_heatmap_stencil_is_point_symmetric():
+    """heatmap_smooth scatters by +offset while the oracle gathers by
+    -offset; the two agree only if w(dx, dy) == w(-dx, -dy)."""
+    from copernicusdata_jl_spark.operators.density import STENCIL
+
+    w = {(dx, dy): wt for dx, dy, wt in STENCIL}
+    assert all(w.get((-dx, -dy)) == wt for (dx, dy), wt in w.items())
+
+
 def test_trajectory_stats_known_path(spark):
     from copernicusdata_jl_spark.operators.density import trajectory_stats
     import datetime as dt

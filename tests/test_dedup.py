@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from conftest import SF_DIR
 from pyspark.sql import functions as F
 
 from copernicusdata_jl_spark.operators import dedup as D
@@ -54,9 +55,8 @@ def test_fast_and_portable_minhash_same_pairs(spark):
     DuckDB pipeline as the fast flavor's oracle SQL."""
     from copernicusdata_jl_spark.queries_ext import q_minhash_lsh, q_minhash_lsh_fast
 
-    sf = "/root/testdata/sf0.001"
-    portable = {tuple(r) for r in q_minhash_lsh(spark, sf).collect()}
-    fast = {tuple(r) for r in q_minhash_lsh_fast(spark, sf).collect()}
+    portable = {tuple(r) for r in q_minhash_lsh(spark, SF_DIR).collect()}
+    fast = {tuple(r) for r in q_minhash_lsh_fast(spark, SF_DIR).collect()}
     assert portable == fast and len(fast) > 0
 
 
@@ -341,3 +341,49 @@ def test_containment_catches_quote_inclusion_jaccard_misses(spark):
     assert c["cont_a"] == 1.0 and c["cont_b"] < 0.3
     j = D.jaccard_verify(pairs, docs).first()["jaccard"]
     assert j < 0.3
+
+
+# every similarity query whose candidate and verify stages go through
+# candidate_pairs/join_sides and their SQL twins; each returns rows at sf0.001
+SIMILARITY_QUERIES = [
+    "minhash_lsh", "minhash_lsh_fast", "neardup_components", "simhash_neardup",
+    "fuzzy_match", "ngram_jaccard", "ngram_containment", "embed_neardup",
+]
+
+
+@pytest.fixture(scope="module")
+def oracle_db():
+    import duckdb
+
+    con = duckdb.connect()
+    for t in ("documents", "embeddings"):
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
+    yield con
+    con.close()
+
+
+@pytest.mark.parametrize("name", SIMILARITY_QUERIES)
+def test_similarity_query_matches_oracle(spark, oracle_db, name):
+    """Spark plan and DuckDB twin agree on row count, columns and the
+    order-insensitive value hash of the correctness gate."""
+    from copernicusdata_jl_spark.queries import REGISTRY
+    from tools.check_oracle import canon
+
+    fn, sql = REGISTRY[name]
+    got = canon(fn(spark, SF_DIR).toPandas())
+    assert got[0] > 0
+    assert got == canon(oracle_db.execute(sql).fetchdf())
+
+
+@pytest.mark.parametrize("tier", ["sf0.001", "sf0.01"])
+def test_documents_text_is_ascii(tier):
+    """Precondition of fuzzy_match's oracle parity: Spark's levenshtein
+    counts codepoints and DuckDB's counts bytes, which agree on ASCII."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    path = os.path.join(os.path.dirname(SF_DIR), tier, "documents.parquet")
+    texts = pq.read_table(path, columns=["text"]).column("text").to_pylist()
+    assert len(texts) > 0
+    assert all(t is None or t.isascii() for t in texts)
