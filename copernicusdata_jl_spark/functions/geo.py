@@ -100,15 +100,18 @@ def points_in_rings(lat, lon, rings: list[np.ndarray], chunk: int = 262144) -> n
     return out
 
 
-def _segments_intersect_box(x1, y1, x2, y2, bx0, by0, bx1, by1) -> bool:
-    """True if any segment (arrays) intersects the axis-aligned box.
+_COVER_CHUNK = 262144  # (cells x edges) prefilter pairs per chunk
 
-    Liang-Barsky style slab clipping, vectorized over segments."""
+
+def _segments_hit_boxes(x1, y1, x2, y2, bx0, by0, bx1, by1) -> np.ndarray:
+    """Elementwise over equal-shape arrays of (segment, box) pairs: does
+    segment ``(x1, y1)-(x2, y2)`` intersect the axis-aligned box
+    ``[bx0, bx1] x [by0, by1]``? Liang-Barsky style slab clipping."""
     dx = x2 - x1
     dy = y2 - y1
-    t0 = np.zeros_like(x1)
-    t1 = np.ones_like(x1)
-    alive = np.ones(x1.shape, dtype=bool)
+    t0 = np.zeros_like(dx)
+    t1 = np.ones_like(dx)
+    alive = np.ones(dx.shape, dtype=bool)
     for p, q in (
         (-dx, x1 - bx0),
         (dx, bx1 - x1),
@@ -124,8 +127,7 @@ def _segments_intersect_box(x1, y1, x2, y2, bx0, by0, bx1, by1) -> bool:
         ext = (~zero) & (p > 0)
         t0 = np.where(ent, np.maximum(t0, t), t0)
         t1 = np.where(ext, np.minimum(t1, t), t1)
-    alive &= t0 <= t1
-    return bool(np.any(alive))
+    return alive & (t0 <= t1)
 
 
 def polygon_cover(
@@ -137,7 +139,7 @@ def polygon_cover(
     False``) are wholly inside the polygon — points there skip the exact PIP
     refinement; boundary cells require it. Interior runs are additionally
     compacted to parent cells when ``compact`` (H3 ``compactCells`` analog) —
-    the compacted cover is what gets broadcast in the spatial join.
+    the compacted cover is what the sort-merge spatial join matches.
 
     Classification per candidate cell (from the polygon's bbox):
     - any polygon edge intersects the cell box → boundary
@@ -168,20 +170,24 @@ def polygon_cover(
 
     n = cand.shape[0]
     boundary = np.zeros(n, dtype=bool)
-    # bbox prefilter per cell: only edges whose bbox overlaps the cell box
+    # bbox prefilter over (cells x edges), chunked over cells so the
+    # intermediate stays bounded; only the surviving pairs run the slab test
     smin_x, smax_x = np.minimum(ex1, ex2), np.maximum(ex1, ex2)
     smin_y, smax_y = np.minimum(ey1, ey2), np.maximum(ey1, ey2)
-    for i in range(n):
-        m = (
-            (smax_x >= bmin_lon[i])
-            & (smin_x <= bmax_lon[i])
-            & (smax_y >= bmin_lat[i])
-            & (smin_y <= bmax_lat[i])
+    step = max(1, _COVER_CHUNK // max(1, ex1.shape[0]))
+    for i in range(0, n, step):
+        c = slice(i, i + step)
+        ci, ei = np.nonzero(
+            (smax_x[None, :] >= bmin_lon[c, None])
+            & (smin_x[None, :] <= bmax_lon[c, None])
+            & (smax_y[None, :] >= bmin_lat[c, None])
+            & (smin_y[None, :] <= bmax_lat[c, None])
         )
-        if np.any(m) and _segments_intersect_box(
-            ex1[m], ey1[m], ex2[m], ey2[m], bmin_lon[i], bmin_lat[i], bmax_lon[i], bmax_lat[i]
-        ):
-            boundary[i] = True
+        ci = ci + i
+        hit = _segments_hit_boxes(
+            ex1[ei], ey1[ei], ex2[ei], ey2[ei], bmin_lon[ci], bmin_lat[ci], bmax_lon[ci], bmax_lat[ci]
+        )
+        boundary[ci[hit]] = True
 
     # corners-inside for non-boundary cells
     interior = np.zeros(n, dtype=bool)

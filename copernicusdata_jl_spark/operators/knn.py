@@ -23,9 +23,11 @@ this pair):
 
 - ``state="driver"`` (auto for ≤ 4096 queries): ring/done bookkeeping in a
   plain dict over the collected query rows — queries are small-side by
-  contract, and the dict loop costs 2 Spark jobs per round. This is the
-  fast path for the granule/oracle use case (measured 2.7 s vs 12 s at
-  sf0.1 — per-round job fixed cost, not data, dominates toy scale).
+  contract. Each round is one ``collect`` of the ranked top-k rows,
+  measured at 4 Spark jobs (query broadcast, the two top-k window
+  shuffles, the final stage), plus one query collect per call. This is the
+  fast path for the granule/oracle use case (per-round job fixed cost, not
+  data, dominates toy scale).
 - ``state="dataframe"`` (auto above the threshold): ring state is a
   ``_ring`` column on a localCheckpointed pending frame, never
   materialized on the driver — millions of queries escalate without
@@ -37,9 +39,10 @@ this pair):
   an extra round near the poles.
 
 Both paths produce identical results (parity-tested); candidate count per
-query is bounded by ring area × cell density; each round's top-k is
-persisted so the final union never recomputes a round, and every round
-cache is unpersisted once the final result materializes.
+query is bounded by ring area × cell density. The driver path returns a
+local DataFrame of its collected rows; the DataFrame path persists each
+round's top-k so the final union never recomputes a round, and unpersists
+every round cache once the final result materializes.
 """
 
 from __future__ import annotations
@@ -178,17 +181,19 @@ def knn_kring(
     "driver" keeps rings in a dict over collected query rows (fast for the
     contractually-small query side), "dataframe" keeps them in a
     localCheckpointed ``_ring`` column (unbounded query sets), "auto"
-    probes ``limit(threshold+1).count()`` and picks. Both paths return
-    identical rows (parity-tested). Empty query sets return an empty
-    result (correct schema); a 0 starting ring escalates to 1 rather than
-    spinning; round caches are unpersisted after the final result
-    materializes."""
+    collects up to ``threshold+1`` query rows once and picks — the driver
+    path reuses those rows. Both paths return identical rows
+    (parity-tested). Empty query sets return an empty result (correct
+    schema); a 0 starting ring escalates to 1 rather than spinning."""
+    qsel = queries.select(query_id_col, qlat_col, qlon_col)
     if state == "auto":
-        n_q = queries.limit(small_query_threshold + 1).count()
-        state = "driver" if 0 < n_q <= small_query_threshold else "dataframe"
+        qrows = qsel.limit(small_query_threshold + 1).collect()
+        state = "driver" if len(qrows) <= small_query_threshold else "dataframe"
+    elif state == "driver":
+        qrows = qsel.collect()
     if state == "driver":
         return _knn_kring_driver_state(
-            points, queries, res, k_ring, k, lat_col, lon_col, qlat_col,
+            points, queries, qrows, res, k_ring, k, lat_col, lon_col, qlat_col,
             qlon_col, query_id_col, point_id_col, escalate, max_rounds,
         )
     pts = points.withColumn("cell_id", cells.latlng_to_cell_expr(lat_col, lon_col, res))
@@ -196,9 +201,7 @@ def knn_kring(
         geo.haversine_m_expr(F.col(lat_col), F.col(lon_col), F.col(qlat_col), F.col(qlon_col)), 3
     )
     r_full = full_ring(res)
-    q = queries.select(query_id_col, qlat_col, qlon_col).withColumn(
-        "_ring", F.lit(int(min(k_ring, r_full))).cast("int")
-    )
+    q = qsel.withColumn("_ring", F.lit(int(min(k_ring, r_full))).cast("int"))
     cached: list[DataFrame] = []
     out: DataFrame | None = None
     rounds = 0
@@ -265,6 +268,7 @@ def knn_kring(
 def _knn_kring_driver_state(
     points: DataFrame,
     queries: DataFrame,
+    qrows: list,
     res: int,
     k_ring: int,
     k: int,
@@ -277,90 +281,71 @@ def _knn_kring_driver_state(
     escalate: bool,
     max_rounds: int,
 ) -> DataFrame:
-    """Driver-state escalation loop: ring/done bookkeeping in a dict over
-    the collected query rows. 2 Spark jobs per round (stats collect +
-    next-round broadcast) vs the DataFrame path's 3-4 — the fast path when
+    """Driver-state escalation loop over the collected query rows ``qrows``:
+    ring/done bookkeeping in a dict. Each round is ONE action — a collect
+    of the ranked top-k rows (≤ k per pending query), from which the
+    per-query count and k-th distance are read on the driver — measured at
+    4 Spark jobs per round (query broadcast, the two top-k window shuffles,
+    the final stage). The result is a local DataFrame of the collected rows
+    of the done queries: no round cache, no union. The fast path when
     queries fit comfortably on the driver, which is the contract for the
     granule use case. Result rows identical to the DataFrame path
     (tests/test_lineage_knn.py parity)."""
+    from pyspark.sql import types as T
+
     spark = points.sparkSession
     pts = points.withColumn("cell_id", cells.latlng_to_cell_expr(lat_col, lon_col, res))
     dist = F.round(
         geo.haversine_m_expr(F.col(lat_col), F.col(lon_col), F.col(qlat_col), F.col(qlon_col)), 3
     )
     r_full = full_ring(res)
-
-    from pyspark.sql import types as T
-
-    qsel = queries.select(query_id_col, qlat_col, qlon_col)
-    qschema = T.StructType(list(qsel.schema.fields) + [T.StructField("_ring", T.IntegerType())])
-    qrows = qsel.collect()
-    rings = {r[query_id_col]: min(k_ring, r_full) for r in qrows}
+    qfields = [queries.schema[c] for c in (query_id_col, qlat_col, qlon_col)]
+    qschema = T.StructType(qfields + [T.StructField("_ring", T.IntegerType())])
+    # the result keeps the id COLUMN TYPES of the inputs (a hardcoded
+    # LongType would break unionByName with non-long ids)
+    out_schema = T.StructType(
+        [
+            T.StructField(query_id_col, qfields[0].dataType),
+            T.StructField(point_id_col, points.schema[point_id_col].dataType),
+            T.StructField("rank", T.IntegerType()),
+            T.StructField("dist_m", T.DoubleType()),
+        ]
+    )
+    rings = {r[0]: min(k_ring, r_full) for r in qrows}
     pending = qrows
-    finals: list[DataFrame] = []
-    cached: list[DataFrame] = []
+    done_rows: list[tuple] = []
     rounds = 0
-    try:
-        while pending:
-            rounds += 1
-            qdf = spark.createDataFrame(
-                [(r[query_id_col], r[qlat_col], r[qlon_col], rings[r[query_id_col]]) for r in pending],
-                qschema,
-            ).withColumn("qcell", cells.latlng_to_cell_expr(qlat_col, qlon_col, res))
-            qx = qdf.withColumn(
-                "cell_id", F.explode(cells.kring_expr(F.col("qcell"), res, F.col("_ring")))
-            ).select(query_id_col, qlat_col, qlon_col, "cell_id")
-            cand = pts.join(F.broadcast(qx), "cell_id")
-            ranked = topk_per_group(
-                cand.withColumn("dist_m", dist),
-                [query_id_col],
-                [F.asc("dist_m"), F.asc(point_id_col)],
-                k,
-            ).select(query_id_col, point_id_col, "rank", "dist_m").persist()
-            cached.append(ranked)
-            stats = {
-                r[0]: (r[1], r[2])
-                for r in ranked.groupBy(query_id_col)
-                .agg(F.count(F.lit(1)), F.max("dist_m"))
-                .collect()
-            }
-            done_ids, still = [], []
-            for r in pending:
-                qid = r[query_id_col]
-                n, d_k = stats.get(qid, (0, None))
-                ring = rings[qid]
-                exact = ring >= r_full or (
-                    n >= k and d_k <= ring_guarantee_m(r[qlat_col], ring, res)
-                )
-                if (not escalate) or exact or rounds >= max_rounds:
-                    done_ids.append(qid)
-                else:
-                    rings[qid] = min(max(1, ring * 2), r_full)
-                    still.append(r)
-            if done_ids:
-                finals.append(ranked.filter(F.col(query_id_col).isin(done_ids)))
-            pending = still
-
-        if not finals:
-            # explicit state="driver" with an empty query set: mirror the
-            # dataframe path's empty-result contract instead of IndexError —
-            # including the id COLUMN TYPES, which follow the inputs (a
-            # hardcoded LongType would break unionByName with non-long ids)
-            return spark.createDataFrame(
-                [],
-                T.StructType(
-                    [
-                        T.StructField(query_id_col, queries.schema[query_id_col].dataType),
-                        T.StructField(point_id_col, points.schema[point_id_col].dataType),
-                        T.StructField("rank", T.IntegerType()),
-                        T.StructField("dist_m", T.DoubleType()),
-                    ]
-                ),
+    while pending:
+        rounds += 1
+        qdf = spark.createDataFrame(
+            [(r[0], r[1], r[2], rings[r[0]]) for r in pending], qschema
+        ).withColumn("qcell", cells.latlng_to_cell_expr(qlat_col, qlon_col, res))
+        qx = qdf.withColumn(
+            "cell_id", F.explode(cells.kring_expr(F.col("qcell"), res, F.col("_ring")))
+        ).select(query_id_col, qlat_col, qlon_col, "cell_id")
+        cand = pts.join(F.broadcast(qx), "cell_id")
+        ranked = topk_per_group(
+            cand.withColumn("dist_m", dist),
+            [query_id_col],
+            [F.asc("dist_m"), F.asc(point_id_col)],
+            k,
+        ).select(query_id_col, point_id_col, "rank", "dist_m").collect()
+        by_q: dict = {}
+        for r in ranked:
+            by_q.setdefault(r[0], []).append(tuple(r))
+        still = []
+        for r in pending:
+            qid = r[0]
+            top = sorted(by_q.get(qid, []), key=lambda t: t[2])
+            ring = rings[qid]
+            # the k-th distance is the last-ranked row's (ranked ascending)
+            exact = ring >= r_full or (
+                len(top) >= k and top[-1][3] <= ring_guarantee_m(r[1], ring, res)
             )
-        out = finals[0]
-        for extra in finals[1:]:
-            out = out.unionByName(extra)
-        return out.localCheckpoint(eager=True)
-    finally:
-        for c in cached:
-            c.unpersist()
+            if (not escalate) or exact or rounds >= max_rounds:
+                done_rows.extend(top)
+            else:
+                rings[qid] = min(max(1, ring * 2), r_full)
+                still.append(r)
+        pending = still
+    return spark.createDataFrame(done_rows, out_schema)

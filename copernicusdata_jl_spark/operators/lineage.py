@@ -3,8 +3,8 @@
 Mirrors the reference payload's ``breakpoints`` block (reference
 test/resources/payload.toml:5-9, parsed at src/EOTriggering.jl:11-16):
 every run emits per-work-unit lineage rows ``(bucket, cell_min, cell_max,
-row_count, checksum)`` to a checkpoint table; a re-run anti-joins pending
-work against completed lineage and recomputes only what's missing.
+row_count, checksum)`` to a checkpoint table; a re-run subtracts the
+completed buckets from its work and recomputes only what's missing.
 
 The checksum is an order-insensitive BIT_XOR of row hashes — stable under
 any partitioning/shuffle order, so resume verification works no matter how
@@ -93,14 +93,6 @@ def read_checkpoint(spark: SparkSession, path: str) -> DataFrame | None:
         return None
 
 
-def pending_buckets(work: DataFrame, checkpoint: DataFrame | None, bucket_col: str = "bucket") -> DataFrame:
-    """J6 resume: anti-join work units against completed lineage buckets."""
-    if checkpoint is None:
-        return work
-    done = checkpoint.select(F.col("bucket").alias(bucket_col)).distinct()
-    return work.join(done, bucket_col, "left_anti")
-
-
 def run_with_resume(
     df: DataFrame,
     bucket_col: str,
@@ -113,14 +105,20 @@ def run_with_resume(
     return (lineage_df_written, n_buckets_skipped). Idempotent: a second
     call with the same checkpoint writes nothing. With ``atomic`` (default)
     a run killed mid-commit leaves the checkpoint exactly as before — the
-    retry recomputes that run's buckets instead of trusting torn state."""
+    retry recomputes that run's buckets instead of trusting torn state.
+
+    Contract: bucket ids are work units, one lineage row each, so the done
+    and pending bucket sets are the size of the checkpoint table and are
+    decided on the driver — one collect of the checkpoint's buckets, one of
+    ``df``'s distinct buckets, then set arithmetic. A NULL bucket is never
+    written and never counted as skipped."""
     spark = df.sparkSession
     ckpt = read_checkpoint(spark, checkpoint_path)
-    total = df.select(bucket_col).distinct()
-    todo = pending_buckets(total, ckpt, bucket_col)
-    n_skip = total.count() - todo.count()
-    fresh = df.join(todo, bucket_col, "left_semi")
+    done = set() if ckpt is None else {r[0] for r in ckpt.select("bucket").distinct().collect()}
+    total = {r[0] for r in df.select(bucket_col).distinct().collect()} - {None}
+    todo = total - done
+    fresh = df.filter(F.col(bucket_col).isin(sorted(todo)))
     lin = lineage_rows(fresh, bucket_col, cell_col)
-    if lin.limit(1).count() > 0:
+    if todo:
         write_checkpoint(lin, checkpoint_path, run_id, atomic=atomic)
-    return lin, n_skip
+    return lin, len(total) - len(todo)

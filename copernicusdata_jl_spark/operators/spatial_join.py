@@ -11,10 +11,10 @@ only the O(perimeter) fraction of candidates.
 
 Two physical strategies, picked by cover size:
 
-- ``broadcast`` (default): covers uncompacted to page resolution and
-  broadcast — a BroadcastHashJoin on ``cell_id``; the big side never
-  shuffles. Right whenever the uncompacted cover fits the broadcast
-  threshold (polygon sets up to ~10^6 cells).
+- ``broadcast`` (default): covers built at page resolution
+  (``compact=False``) and broadcast — a BroadcastHashJoin on ``cell_id``;
+  the big side never shuffles. Right whenever the uncompacted cover fits
+  the broadcast threshold (polygon sets up to ~10^6 cells).
 - ``sortmerge``: pages explode to their parent-cell chain (res_min..res) —
   ~4 keys/row — and sort-merge-join the *compacted* cover on ``cell_id``.
   Right when covers are too big to broadcast; both sides can be bucketed by
@@ -49,10 +49,11 @@ def build_covers(
     id_key: str = "poly_id",
     compact: bool = True,
 ) -> pd.DataFrame:
-    """Compute compacted covers for a polygon list (driver-side NumPy; the
-    polygon side is small — this is the reference's ADF/broadcast shape,
-    reference src/EOTriggering.jl:156-168). Antimeridian polygons are split
-    first. Returns pandas (poly_id, cell_id, is_boundary)."""
+    """Compute covers for a polygon list, interior runs compacted unless
+    ``compact=False`` (driver-side NumPy; the polygon side is small — this
+    is the reference's ADF/broadcast shape, reference
+    src/EOTriggering.jl:156-168). Antimeridian polygons are split first.
+    Returns pandas (poly_id, cell_id, is_boundary)."""
     ids: list[str] = []
     cids: list[int] = []
     bnds: list[bool] = []
@@ -69,25 +70,6 @@ def build_covers(
 def covers_df(spark: SparkSession, polygons: list[dict], res: int, id_key: str = "poly_id", compact: bool = True) -> DataFrame:
     pdf = build_covers(polygons, res, id_key=id_key, compact=compact)
     return spark.createDataFrame(pdf, schema=COVER_SCHEMA)
-
-
-def _uncompact_cover_pdf(cover: pd.DataFrame, res: int) -> pd.DataFrame:
-    """Expand compacted interior cells to uniform page resolution."""
-    rows_id: list[str] = []
-    rows_cell: list[int] = []
-    rows_b: list[bool] = []
-    for pid, cid, b in cover.itertuples(index=False):
-        r = int(cid) >> cells.RES_BITS
-        if r == res:
-            rows_id.append(pid)
-            rows_cell.append(int(cid))
-            rows_b.append(bool(b))
-        else:
-            for leaf in cells.uncompact_cells(np.array([cid]), res).tolist():
-                rows_id.append(pid)
-                rows_cell.append(leaf)
-                rows_b.append(bool(b))
-    return pd.DataFrame({"poly_id": rows_id, "cell_id": rows_cell, "is_boundary": rows_b})
 
 
 def make_pip_udf(spark: SparkSession, polygons: list[dict], id_key: str = "poly_id"):
@@ -144,13 +126,11 @@ def spatial_join(
     keep_cols = keep_cols or [c for c in points.columns if c not in (lat_col, lon_col)]
     pts = points.withColumn("cell_id", cells.latlng_to_cell_expr(lat_col, lon_col, res))
 
-    cover_pdf = build_covers(polygons, res, id_key=id_key, compact=True)
-
     if strategy == "broadcast":
-        flat = _uncompact_cover_pdf(cover_pdf, res)
-        cover = spark.createDataFrame(flat, schema=COVER_SCHEMA)
+        cover = covers_df(spark, polygons, res, id_key=id_key, compact=False)
         cand = pts.join(F.broadcast(cover), "cell_id", "inner")
     elif strategy == "sortmerge":
+        cover_pdf = build_covers(polygons, res, id_key=id_key, compact=True)
         res_list = sorted({int(c) >> cells.RES_BITS for c in cover_pdf["cell_id"]})
         parents = F.array(
             *[cells.cell_parent_expr(F.col("cell_id"), res, r) for r in res_list]

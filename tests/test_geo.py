@@ -132,3 +132,94 @@ def test_split_antimeridian():
     assert misses == 0
     # non-crossing polygon passes through
     assert len(geo.split_antimeridian([np.array([[0.0, 0.0], [1.0, 0.0], [1.0, 1.0]])])) == 1
+
+
+def _reference_cover(rings, res: int, compact: bool):
+    """Per-cell loop twin of ``geo.polygon_cover``: the same candidate
+    cells, bbox prefilter and Liang-Barsky slab test, one cell and one
+    edge at a time in plain Python floats."""
+    rings = [np.asarray(r, dtype=np.float64) for r in rings]
+    allpts = np.vstack(rings)
+    (min_lon, min_lat), (max_lon, max_lat) = allpts.min(axis=0), allpts.max(axis=0)
+    x0, y0 = cells.latlng_to_xy(np.array([min_lat]), np.array([min_lon]), res)
+    x1, y1 = cells.latlng_to_xy(np.array([max_lat]), np.array([max_lon]), res)
+    gx, gy = np.meshgrid(
+        np.arange(int(x0[0]), int(x1[0]) + 1), np.arange(int(y0[0]), int(y1[0]) + 1), indexing="ij"
+    )
+    cand = cells.pack(res, gx.ravel(), gy.ravel())
+    bounds = np.stack(cells.cell_bounds(cand), axis=1).tolist()
+    segs = []
+    for r in rings:
+        if not np.array_equal(r[0], r[-1]):
+            r = np.vstack([r, r[0]])
+        segs += [(*r[i], *r[i + 1]) for i in range(len(r) - 1)]
+    segs = [tuple(float(v) for v in s) for s in segs]
+
+    def hits(sx1, sy1, sx2, sy2, bx0, by0, bx1, by1):
+        if max(sx1, sx2) < bx0 or min(sx1, sx2) > bx1 or max(sy1, sy2) < by0 or min(sy1, sy2) > by1:
+            return False
+        dx, dy = sx2 - sx1, sy2 - sy1
+        t0, t1 = 0.0, 1.0
+        for p, q in ((-dx, sx1 - bx0), (dx, bx1 - sx1), (-dy, sy1 - by0), (dy, by1 - sy1)):
+            if p == 0:
+                if q < 0:
+                    return False
+            elif p < 0:
+                t0 = max(t0, q / p)
+            else:
+                t1 = min(t1, q / p)
+        return t0 <= t1
+
+    out_cells, out_bnd = [], []
+    for cid, (bx0, by0, bx1, by1) in zip(cand.tolist(), bounds):
+        if any(hits(*s, bx0, by0, bx1, by1) for s in segs):
+            out_cells.append(cid)
+            out_bnd.append(True)
+        elif all(scalar_pip(la, lo, rings) for lo, la in [(bx0, by0), (bx1, by0), (bx0, by1), (bx1, by1)]):
+            out_cells.append(cid)
+            out_bnd.append(False)
+    cover, boundary = np.array(out_cells, dtype=np.int64), np.array(out_bnd, dtype=bool)
+    if compact and (~boundary).any():
+        inner = cells.compact_cells(cover[~boundary])
+        cover = np.concatenate([cover[boundary], inner])
+        boundary = np.concatenate([np.ones(int(boundary.sum()), dtype=bool), np.zeros(len(inner), dtype=bool)])
+    order = np.argsort(cover, kind="stable")
+    return cover[order], boundary[order]
+
+
+DIAMOND = [np.array([[2.8125, 0.0], [0.0, 2.8125], [-2.8125, 0.0], [0.0, -2.8125]])]
+
+
+def _random_polygons(seed: int) -> list[list[np.ndarray]]:
+    """Seeded convex, concave, donut and antimeridian-crossing polygons
+    (the last one split into its east/west parts)."""
+    rng = np.random.default_rng(seed)
+
+    def ring(cx, cy, radii):
+        ang = np.sort(rng.uniform(0.0, 2.0 * np.pi, len(radii)))
+        return np.stack([cx + radii * np.cos(ang), cy + radii * 0.6 * np.sin(ang)], axis=1)
+
+    cx, cy = rng.uniform(-150, 150), rng.uniform(-60, 60)
+    convex = [ring(cx, cy, np.full(int(rng.integers(5, 12)), rng.uniform(2, 6)))]
+    concave = [ring(cx + 3, cy - 2, rng.uniform(1.0, 6.0, int(rng.integers(12, 40))))]
+    outer = rng.uniform(4, 7)
+    donut = [ring(cx, cy, np.full(24, outer)), ring(cx, cy, np.full(10, outer / 3))]
+    am = ring(179.0, cy, rng.uniform(2.0, 4.0, 16))
+    am[:, 0] = np.where(am[:, 0] > 180.0, am[:, 0] - 360.0, am[:, 0])
+    return [convex, concave, donut, *geo.split_antimeridian([am])]
+
+
+def test_polygon_cover_matches_per_cell_reference():
+    n = 0
+    for seed in range(4):
+        # the fixed shapes put edges on cell edges; DIAMOND's vertices sit
+        # on cell corners, touching some cells in a single point
+        for rings in _random_polygons(seed) + ([SQUARE, CONCAVE, DONUT, DIAMOND] if seed == 0 else []):
+            for res in (7, 9):
+                for compact in (False, True):
+                    got = geo.polygon_cover(rings, res=res, compact=compact)
+                    want = _reference_cover(rings, res, compact)
+                    assert np.array_equal(got[0], want[0]) and np.array_equal(got[1], want[1]), (
+                        seed, res, compact)
+                    n += 1
+    assert n == (4 * 5 + 4) * 2 * 2  # every seed yields a two-part antimeridian polygon

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from copernicusdata_jl_spark.functions import cells, interp
 from copernicusdata_jl_spark.operators import lineage as L
 from copernicusdata_jl_spark.operators.knn import knn_kring
+from copernicusdata_jl_spark.operators.snapshot import SnapshotTable
 from copernicusdata_jl_spark.operators.skew import hot_keys, salted_groupby
 
 
@@ -89,6 +90,42 @@ def test_resume_after_partial_checkpoint(spark, cellified, tmp_path):
     # full checkpoint now covers all buckets; totals add up to input rows
     ck = L.read_checkpoint(spark, ckpt)
     assert ck.agg(F.sum("row_count")).first()[0] == 400
+
+
+def test_resume_null_bucket_never_written_or_skipped(spark, cellified, tmp_path):
+    ckpt = str(tmp_path / "ckpt_null")
+    df = cellified.withColumn("bucket", F.when(F.col("bucket") == 0, None).otherwise(F.col("bucket")))
+    lin1, skip1 = L.run_with_resume(df, "bucket", ckpt, "run1", "cell_id")
+    assert skip1 == 0 and sorted(r.bucket for r in lin1.collect()) == [1, 2, 3, 4, 5, 6, 7]
+    lin2, skip2 = L.run_with_resume(df, "bucket", ckpt, "run2", "cell_id")
+    assert skip2 == 7 and lin2.count() == 0
+    ck = L.read_checkpoint(spark, ckpt)
+    assert ck.count() == 7 and ck.filter(F.col("bucket").isNull()).count() == 0
+    assert len(SnapshotTable(ckpt).versions()) == 1  # run2 committed nothing
+
+
+def test_resume_empty_input_writes_nothing(spark, cellified, tmp_path):
+    ckpt = str(tmp_path / "ckpt_empty")
+    lin, skip = L.run_with_resume(cellified.limit(0), "bucket", ckpt, "run1", "cell_id")
+    assert skip == 0 and lin.count() == 0
+    assert L.read_checkpoint(spark, ckpt) is None
+    # over an existing checkpoint: still nothing written, nothing skipped
+    L.run_with_resume(cellified, "bucket", ckpt, "run1", "cell_id")
+    lin, skip = L.run_with_resume(cellified.limit(0), "bucket", ckpt, "run2", "cell_id")
+    assert skip == 0 and lin.count() == 0
+    assert len(SnapshotTable(ckpt).versions()) == 1
+
+
+def test_resume_half_done_writes_exactly_missing_buckets(spark, cellified, tmp_path):
+    ckpt = str(tmp_path / "ckpt_half")
+    L.run_with_resume(cellified.filter(F.col("bucket") % 2 == 1), "bucket", ckpt, "run1", "cell_id")
+    _, skip = L.run_with_resume(cellified, "bucket", ckpt, "run2", "cell_id")
+    assert skip == 4
+    ck = L.read_checkpoint(spark, ckpt)
+    run2 = sorted(tuple(r) for r in ck.filter(F.col("run_id") == "run2").select(*L.LINEAGE_COLS).collect())
+    want = L.lineage_rows(cellified.filter(F.col("bucket") % 2 == 0), "bucket", "cell_id")
+    assert run2 == sorted(tuple(r) for r in want.collect())
+    assert ck.count() == 8 and ck.select("bucket").distinct().count() == 8
 
 
 # ---------------------------------------------------------------------------
@@ -353,3 +390,47 @@ def test_salted_join_spreads_identical_hot_rows(spark):
         .filter("k = 'hot'").select("_salt").distinct().count()
     )
     assert n_salts > 1  # identical rows spread across buckets
+
+
+def _brute_knn(pts, qdf, k):
+    from copernicusdata_jl_spark.functions import geo
+    from copernicusdata_jl_spark.operators.knn import topk_per_group
+
+    brute = pts.crossJoin(F.broadcast(qdf)).withColumn(
+        "dist_m",
+        F.round(geo.haversine_m_expr(F.col("lat"), F.col("lon"), F.col("qlat"), F.col("qlon")), 3),
+    )
+    return topk_per_group(brute, ["query_id"], [F.asc("dist_m"), F.asc("event_id")], k).select(
+        "query_id", "event_id", "rank", "dist_m")
+
+
+@pytest.mark.parametrize("n_queries, path", [(6, "driver"), (7, "dataframe")])
+def test_knn_kring_auto_threshold_edges_match_bruteforce(spark, monkeypatch, n_queries, path):
+    """``state="auto"`` takes the driver path at exactly
+    ``small_query_threshold`` queries and the DataFrame path at one more;
+    both equal brute-force kNN."""
+    from copernicusdata_jl_spark.operators import knn as K
+
+    calls = []
+    driver = K._knn_kring_driver_state
+    monkeypatch.setattr(K, "_knn_kring_driver_state", lambda *a: calls.append(1) or driver(*a))
+    pts = spark.createDataFrame(
+        [(i, float((i * 37) % 160) - 80.0, float((i * 73) % 360) - 180.0) for i in range(150)],
+        "event_id long, lat double, lon double",
+    )
+    qdf = spark.createDataFrame(
+        [(f"q{i}", -85.0 + i * 24.0, float((i * 61) % 358) - 179.0) for i in range(n_queries)],
+        "query_id string, qlat double, qlon double",
+    )
+    got = K.knn_kring(pts, qdf, res=5, k_ring=1, k=4, small_query_threshold=6)
+    assert ("driver" if calls else "dataframe") == path
+    want = _brute_knn(pts, qdf, 4)
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+
+
+def test_knn_kring_auto_empty_queries_keep_id_types(spark):
+    pts = spark.createDataFrame([(1, 10.0, 10.0), (2, 11.0, 11.0)], "event_id int, lat double, lon double")
+    empty_q = spark.createDataFrame([], "query_id bigint, qlat double, qlon double")
+    out = knn_kring(pts, empty_q, res=5, k_ring=2, k=3)
+    assert out.count() == 0
+    assert out.dtypes == [("query_id", "bigint"), ("event_id", "int"), ("rank", "int"), ("dist_m", "double")]

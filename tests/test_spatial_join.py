@@ -9,8 +9,9 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from copernicusdata_jl_spark import fixtures
 from copernicusdata_jl_spark.functions import cells, geo
-from copernicusdata_jl_spark.operators.spatial_join import spatial_join
+from copernicusdata_jl_spark.operators.spatial_join import build_covers, spatial_join
 
 POLYGONS = [
     {"poly_id": "SQ", "rings": [[[0.0, 0.0], [10.0, 0.0], [10.0, 10.0], [0.0, 10.0]]]},
@@ -66,6 +67,31 @@ def test_spatial_join_matches_exact_pip(spark, points_pdf, strategy):
             want_set.add((pid, p["poly_id"]))
     assert got_set == want_set
     assert len(got) == len(got_set)  # no duplicate candidate rows
+
+
+@pytest.mark.parametrize(
+    "polygons, id_key",
+    [
+        (fixtures.footprints(120), "product_id"),
+        ([{"poly_id": "AM", "rings": [[[170.0, -10.0], [-170.0, -10.0], [-170.0, 10.0], [170.0, 10.0]]]}], "poly_id"),
+    ],
+    ids=["footprints120", "antimeridian"],
+)
+def test_broadcast_cover_is_uncompacted_compact_cover(polygons, id_key):
+    """The broadcast strategy builds its cover with ``compact=False``; that
+    is, as a set, the compacted cover with every interior parent expanded
+    to its leaves (compaction only merges complete interior sibling quads)."""
+    res = 7
+    flat = build_covers(polygons, res, id_key=id_key, compact=False)
+    packed = build_covers(polygons, res, id_key=id_key, compact=True)
+    want = {
+        (pid, leaf, b)
+        for pid, cid, b in packed.itertuples(index=False)
+        for leaf in cells.uncompact_cells(np.array([cid]), res).tolist()
+    }
+    got = list(flat.itertuples(index=False, name=None))
+    assert len(got) == len(set(got)) and set(got) == want
+    assert (cells.unpack(packed["cell_id"].to_numpy())[0] < res).any()  # quads were merged
 
 
 def test_interior_rows_skip_pip(spark, points_pdf):
