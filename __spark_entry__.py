@@ -3,7 +3,7 @@
 ``entry(spark)`` runs the flagship query (spatial join of geotagged events
 against granule footprints → per-tile counts) at sf0.001. ``queries()`` /
 ``oracle_sql()`` expose every implemented operator from SURVEY.md §2 with
-its DuckDB oracle (see copernicusdata_jl_spark/queries.py).
+its DuckDB oracle (see copernicusdata_jl_spark/queries/).
 """
 
 from __future__ import annotations
@@ -56,10 +56,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         return run
 
-    return {name: wrap(fn) for name, (fn, _sql) in REGISTRY.items()}
+    return {name: wrap(q.plan) for name, q in REGISTRY.items()}
 
 
 def oracle_sql() -> dict[str, str]:
     from copernicusdata_jl_spark.queries import REGISTRY
 
-    return {name: sql for name, (_fn, sql) in REGISTRY.items() if sql is not None}
+    return {name: q.oracle for name, q in REGISTRY.items()}

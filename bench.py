@@ -1,5 +1,6 @@
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
-sf0.1) on local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
+"""Benchmark harness: the registry's timed queries (``Query.timed``) at
+$SPARK_GRAFT_SF_DIR (default sf0.1) on local[$SPARK_GRAFT_CPUS]. Prints
+ONE JSON line:
 {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
 
 Throughput framing (north rule): the flagship spatial-join+tiling job also
@@ -16,117 +17,13 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-HEADLINE = [
-    "pricing_summary",
-    "sortmerge_join",
-    "broadcast_join",
-    "cell_index",
-    "cell_rollup",
-    "spatial_join_rect",
-    "knn_bruteforce",
-    "knn_kring",
-    "tile_assign",
-    "window_dedup",
-    "dedup_exact",
-    "minhash_lsh",
-    "minhash_lsh_fast",
-    # neardup_components is correctness-gated (48/48) but not timed here:
-    # the iterative label-propagation loop is per-round fixed cost at
-    # sf<=0.1 corpus sizes (a few hundred docs), which measures Spark job
-    # scheduling, not the operator
-    "stratified_sample",
-    "asof_join",
-    "sessionize",
-    "winnowing",
-    "simhash",
-    "token_quality",
-    "bm25",
-    "extract_digest",
-    "cosine_topk",
-    "ann_lsh",
-    "ann_multiprobe",
-    "ann_ivf",
-    "salted_agg",
-    "lineage_rows",
-    "event_windows",
-    "linear_interp",
-    "media_meta",
-    # round-3 additions: corpus-hygiene + aggregation surface
-    "decontaminate",
-    "dup_spans",
-    "unigram_logprob",
-    "host_cap",
-    "pii_redact",
-    "lang_pivot",
-    "rollup_counts",
-    "percentiles",
-    "pack_sequences",
-    "temperature_sample",
-    "salted_join",
-    "training_mix",
-    "table_profile",
-    "zscore_outliers",
-    "bpe_pairs",
-    "corpus_diff",
-    # round-4 additions (bpe_merges/bpe_encode stay out like
-    # neardup_components: the trainer's per-merge argmax collect is
-    # job-scheduling-bound at toy scale)
-    "dup_span_islands",
-    "dup_span_removal",
-    "ccnet_buckets",
-    "blocklist_filter",
-    "tile_pyramid",
-    # round-5 additions: governance + quality layer (snapshot_delete /
-    # incremental_dedup time the real SnapshotTable commit+merge-on-read
-    # machinery including their local parquet writes — that IS the op)
-    "gopher_rules",
-    "snapshot_delete",
-    "incremental_dedup",
-    # pagerank_hosts stays out like neardup_components (fixed-iteration
-    # loop = job scheduling at sf0.1); nc3_scan stays out because one .nc
-    # granule is catalog-scale by contract
-    "chunk_overlap",
-    "dataset_split",
-    "zorder_index",
-    "snapshot_upsert",
-    "range_lookup",
-    "priority_sample",
-    "line_dedup",
-    "build_postings",
-    "cooccur_pmi",
-    "text_normalize",
-    "ngram_containment",
-    "funnel_steps",
-    "geohash_encode",
-    "session_window_agg",
-    # snapshot_pointread times the real commit + bloom build + pruned read;
-    # warc_scan and nc3_scan stay out (driver-side fixture write is
-    # catalog-scale by contract — the timed part would be the fixture)
-    "snapshot_pointread",
-    # round-5 second wave; triangle_count stays out like pagerank_hosts
-    # (multi-join census over a 20-node host graph = job scheduling)
-    "cell_compact",
-    "polygon_stats",
-    "retention_cohorts",
-    "gap_fill",
-    "dsir_weights",
-    "skyline_2d",
-    "quadkey_tiles",
-    "fuzzy_match",
-    "tfidf_topterms",
-    "value_histogram",
-    # dbscan_grid stays out like neardup_components (iterative
-    # pointer-jumping loop = multi-job scheduling, not a plan measurement)
-    "heatmap_kde",
-    "trajectory_stats",
-]
-
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-    from copernicusdata_jl_spark.queries import REGISTRY, geotagged_events
+    from copernicusdata_jl_spark.queries import REGISTRY
+    from copernicusdata_jl_spark.queries.shared import geotagged_events
     from copernicusdata_jl_spark.session import get_spark
     from tools.host_probe import quick_probe
 
@@ -142,10 +39,11 @@ def main() -> None:
     n_docs = geotagged_events(spark, sf_dir).count()
 
     times: dict[str, float] = {}
-    for name in HEADLINE:
-        fn, _ = REGISTRY[name]
+    for name, q in REGISTRY.items():
+        if not q.timed:
+            continue
         t0 = time.perf_counter()
-        df = fn(spark, sf_dir)
+        df = q.plan(spark, sf_dir)
         rows = df.count()
         times[name] = round(time.perf_counter() - t0, 3)
         assert rows >= 0

@@ -148,7 +148,7 @@ def geohash_py(lat: float, lon: float, precision: int = 8) -> str:
 # 2^z × 2^z quantization (top-left origin, matching the tile convention);
 # the canonical Bing flavor uses Web-Mercator y — that differs only in the
 # y quantization formula, which needs ln/tan (libm — NOT engine-portable;
-# see queries.py parity rules), so the portable EQC flavor is the default
+# see the queries/ parity rules), so the portable EQC flavor is the default
 # and the Mercator variant is a one-line substitution for consumers that
 # need slippy-map alignment over a single engine.
 

@@ -11,7 +11,7 @@ Spark re-expression, two flavors:
 1. ``linear_interp_at`` — relational: per group, find the bracketing
    samples of ``x`` around ``at`` with two tiny filtered aggregations and
    lerp. Pure JVM expressions, shuffles only (group, x0/x1) pairs; the
-   DuckDB oracle reproduces it exactly (queries_ext.q_linear_interp).
+   DuckDB oracle reproduces it exactly (queries/spatial.q_linear_interp).
    Reverse-ordered axes need no special case — bracketing is order-free.
 2. ``interp_series_udf`` — the mapslices analog: ``applyInPandas`` per
    group running ``np.interp`` over a whole target grid (resampling many

@@ -43,7 +43,8 @@ def skyline2d(
     """Pareto frontier of ``df`` under (minimize x, maximize y) — rows for
     which no other row is at-least-as-good on both axes and strictly
     better on one. Duplicate (x, y) points do not dominate each other, so
-    every copy of a frontier point is returned.
+    every copy of a frontier point is returned. A row with a NULL x or y
+    neither dominates nor is on the frontier.
 
     Plan: distinct points sorted by (x asc, y desc); a point is dominated
     iff the running max of y over STRICTLY EARLIER rows reaches its own y
@@ -55,7 +56,11 @@ def skyline2d(
     """
     sx = F.col(x_col) if minimize_x else -F.col(x_col)
     sy = F.col(y_col) if maximize_y else -F.col(y_col)
-    pts = df.select(sx.alias("_sx"), sy.alias("_sy")).distinct()
+    pts = (
+        df.select(sx.alias("_sx"), sy.alias("_sy"))
+        .filter(F.col("_sx").isNotNull() & F.col("_sy").isNotNull())
+        .distinct()
+    )
     w = Window.orderBy(F.col("_sx").asc(), F.col("_sy").desc()).rowsBetween(
         Window.unboundedPreceding, -1
     )
@@ -115,7 +120,7 @@ def gap_fill_days(
 
     ``value_col`` is aggregated per (key, day) with an order-independent
     aggregate (default ``min`` — float sums are partition-order dependent
-    and break cross-engine parity; see queries.py parity rules). Returns
+    and break cross-engine parity; see the queries/ parity rules). Returns
     ``(key, day, value, observed)`` where ``day`` counts from epoch and
     ``observed`` is 0 for gap days carrying a forward-filled value.
     """

@@ -1050,7 +1050,7 @@ def dsir_scores(
       (sum_t cnt_raw[b(t)] * T)`` with R/T the global token totals —
       one integer-exact numerator/denominator pair and a single IEEE
       division, reproducible bit-for-bit in any engine (the same
-      log-avoidance trick as cooccur_pmi; see queries.py parity rules).
+      log-avoidance trick as cooccur_pmi; see the queries/ parity rules).
     - log form (``log_form=True``): the paper's actual importance
       log-weight ``sum_t log((cnt_t+1)/(T+B)) - log((cnt_r+1)/(R+B))``
       — use for production resampling, not for cross-engine oracles

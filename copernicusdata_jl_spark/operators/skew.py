@@ -8,7 +8,7 @@ grain cols), n)`` to the group key, partially aggregate (key, salt) — the
 shuffle now spreads a hot key over ``n`` reducers — then combine partials
 by key. Results are bit-identical to the unsalted groupBy for decomposable
 aggregates (count/sum/min/max), which is exactly what the DuckDB oracle
-asserts (queries_ext.q_salted_agg).
+asserts (queries/spatial.q_salted_agg).
 
 Hot-key detection: one cheap pre-pass with an approximate frequency sketch
 (``F.count_distinct`` is overkill — a sampled count per key suffices) so

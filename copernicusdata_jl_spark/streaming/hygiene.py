@@ -120,7 +120,7 @@ def hygiene_front(
 ) -> DataFrame:
     """BATCH front half over an url-deduped extracted corpus
     (flagship.prepare_corpus order: cap → exact text dedup → gates, as in
-    queries_llm.q_training_mix, plus decontamination): returns
+    queries/corpus.q_training_mix, plus decontamination): returns
     ``(url, host, n_tokens)`` — the documents that enter mixing."""
     return _finish(
         hygiene_meta(corpus, benchmark, decontaminate_n), cap, min_tokens, max_rep

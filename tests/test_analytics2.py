@@ -162,6 +162,38 @@ def test_skyline_orientations(spark):
     assert [(r["x"], r["y"]) for r in got] == [(3, 3)]
 
 
+def test_skyline_query_null_coordinates_match_oracle(spark, tmp_path):
+    """A row with a NULL coordinate neither dominates nor is on the
+    frontier, in the registry plan and its DuckDB twin alike: the NULL-x
+    row would otherwise sort first and its y would dominate every row."""
+    import datetime
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from copernicusdata_jl_spark.queries import REGISTRY
+    from tools.check_oracle import canon
+
+    pq.write_table(
+        pa.table({
+            "l_orderkey": pa.array([1, 2, 3, 4, 5], pa.int64()),
+            "l_linenumber": pa.array([1] * 5, pa.int32()),
+            "l_extendedprice": pa.array([None, 1.0, 2.0, 3.0, 0.5]),
+            "l_quantity": pa.array([100.0, 5.0, 10.0, 1.0, None]),
+            "l_shipdate": pa.array([datetime.datetime(1996, 3, 1)] * 5, pa.timestamp("us")),
+        }),
+        tmp_path / "lineitem.parquet",
+    )
+    q = REGISTRY["skyline_2d"]
+    got = canon(q.plan(spark, str(tmp_path)).toPandas())
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW lineitem AS SELECT * FROM '{tmp_path}/lineitem.parquet'")
+    want = canon(con.execute(q.oracle).fetchdf())
+    con.close()
+    assert got == want and got[0] == 2  # (1, 5) and (2, 10)
+
+
 # ---------------------------------------------------------------------------
 # retention + gap fill
 # ---------------------------------------------------------------------------
@@ -317,7 +349,7 @@ def test_fuzzy_neardup_bounded_distance_is_exact(spark):
 def test_tfidf_ranking_tiny(spark, tmp_path):
     # drive the PRODUCTION query (not a re-implementation) over a tiny
     # documents table staged in the sf_dir layout it expects
-    from copernicusdata_jl_spark.queries_r5b import q_tfidf_topterms
+    from copernicusdata_jl_spark.queries import REGISTRY
 
     rows = [
         (1, "apple apple banana shared"),
@@ -327,7 +359,7 @@ def test_tfidf_ranking_tiny(spark, tmp_path):
     spark.createDataFrame(rows, "doc_id long, text string").toPandas().to_parquet(
         tmp_path / "documents.parquet"
     )
-    out = q_tfidf_topterms(spark, str(tmp_path)).collect()
+    out = REGISTRY["tfidf_topterms"].plan(spark, str(tmp_path)).collect()
     top1 = {r["doc_id"]: (r["tok"], r["score"]) for r in out if r["rank"] == 1}
     # doc 1: apple tf=2 df=1 -> 6.0 beats banana (tf=1, df=2 -> 1.5)
     assert top1[1] == ("apple", 6.0)
@@ -340,9 +372,10 @@ def test_tfidf_ranking_tiny(spark, tmp_path):
 
 
 def test_value_histogram_cdf_monotone(spark):
-    from copernicusdata_jl_spark.queries_r5b import q_value_histogram
+    from copernicusdata_jl_spark.queries import REGISTRY
+    from conftest import SF_DIR
 
-    out = q_value_histogram(spark, "/root/testdata/sf0.001").collect()
+    out = REGISTRY["value_histogram"].plan(spark, SF_DIR).collect()
     cdfs = [r["cdf"] for r in out]
     assert cdfs == sorted(cdfs)
     assert abs(cdfs[-1] - 1.0) < 1e-12

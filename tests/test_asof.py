@@ -235,9 +235,9 @@ def test_funnel_rollup_reuses_window_partitioning(spark):
     """The registry funnel rollup groups on the window's partition key, so
     the per-user groupBy must NOT add a second hash-partitioning Exchange
     over the event scan (ClusteredDistribution already satisfied)."""
-    from copernicusdata_jl_spark import queries_analytics as QA
+    from copernicusdata_jl_spark.queries import REGISTRY
     from conftest import SF_DIR
 
-    plan = QA.q_funnel_steps(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
+    plan = REGISTRY["funnel_steps"].plan(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
     hash_exchanges = plan.count("Exchange hashpartitioning")
     assert hash_exchanges == 1, f"q_funnel_steps: {hash_exchanges} hash exchanges"

@@ -59,11 +59,11 @@ def test_neardup_components_query_matches_pair_query(spark):
     """The registry entry must agree with the pair query it builds on:
     every emitted pair's endpoints share a component, and every
     multi-member component is spanned by pairs."""
-    from copernicusdata_jl_spark.queries_ext import q_minhash_lsh, q_neardup_components
+    from copernicusdata_jl_spark.queries import REGISTRY
 
     sf = "/root/testdata/sf0.001"
-    comp = {r.doc_id: r.component_id for r in q_neardup_components(spark, sf).collect()}
-    pairs = [(r.id_a, r.id_b) for r in q_minhash_lsh(spark, sf).collect()]
+    comp = {r.doc_id: r.component_id for r in REGISTRY["neardup_components"].plan(spark, sf).collect()}
+    pairs = [(r.id_a, r.id_b) for r in REGISTRY["minhash_lsh"].plan(spark, sf).collect()]
     assert len(pairs) > 0
     for a, b in pairs:
         assert comp[a] == comp[b]

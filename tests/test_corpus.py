@@ -574,7 +574,7 @@ def test_line_dedup_first_occurrence_wins(spark):
 
 def test_line_dedup_hashed_matches_string_keys(spark):
     from copernicusdata_jl_spark.operators.corpus import line_dedup
-    from copernicusdata_jl_spark.queries_ext import load
+    from copernicusdata_jl_spark.queries.shared import load
 
     d = load(spark, "/root/testdata/sf0.001", "documents").withColumn(
         "text", F.regexp_replace("text", r"((\S+ ){3}\S+) ", "$1\n")

@@ -53,10 +53,10 @@ def test_fast_and_portable_minhash_same_pairs(spark):
     LSH flavors must emit the SAME (id_a, id_b, jaccard) set after the exact
     Jaccard ≥ 0.8 filter — which is what licenses using the portable-LSH
     DuckDB pipeline as the fast flavor's oracle SQL."""
-    from copernicusdata_jl_spark.queries_ext import q_minhash_lsh, q_minhash_lsh_fast
+    from copernicusdata_jl_spark.queries import REGISTRY
 
-    portable = {tuple(r) for r in q_minhash_lsh(spark, SF_DIR).collect()}
-    fast = {tuple(r) for r in q_minhash_lsh_fast(spark, SF_DIR).collect()}
+    portable = {tuple(r) for r in REGISTRY["minhash_lsh"].plan(spark, SF_DIR).collect()}
+    fast = {tuple(r) for r in REGISTRY["minhash_lsh_fast"].plan(spark, SF_DIR).collect()}
     assert portable == fast and len(fast) > 0
 
 
@@ -369,10 +369,10 @@ def test_similarity_query_matches_oracle(spark, oracle_db, name):
     from copernicusdata_jl_spark.queries import REGISTRY
     from tools.check_oracle import canon
 
-    fn, sql = REGISTRY[name]
-    got = canon(fn(spark, SF_DIR).toPandas())
+    q = REGISTRY[name]
+    got = canon(q.plan(spark, SF_DIR).toPandas())
     assert got[0] > 0
-    assert got == canon(oracle_db.execute(sql).fetchdf())
+    assert got == canon(oracle_db.execute(q.oracle).fetchdf())
 
 
 @pytest.mark.parametrize("tier", ["sf0.001", "sf0.01"])

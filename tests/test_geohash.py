@@ -77,7 +77,7 @@ def test_spark_and_duckdb_twins_match_py(spark):
 
 def test_plan_is_map_side_codegen(spark):
     from conftest import SF_DIR
-    from copernicusdata_jl_spark.queries import geotagged_events
+    from copernicusdata_jl_spark.queries.shared import geotagged_events
 
     df = geotagged_events(spark, SF_DIR).select(
         geohash_expr(F.col("lat"), F.col("lon"), 8).alias("gh")

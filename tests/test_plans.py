@@ -14,8 +14,10 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from copernicusdata_jl_spark import queries as Q
 from copernicusdata_jl_spark.operators.spatial_join import spatial_join
+from copernicusdata_jl_spark.queries import REGISTRY
+from copernicusdata_jl_spark.queries.shared import geotagged_events
+from copernicusdata_jl_spark.queries.spatial import RECT_POLYGONS
 
 from conftest import SF_DIR
 
@@ -39,8 +41,8 @@ def test_filter_and_projection_pushed_to_scan(spark):
 
 
 def test_spatial_join_broadcast_strategy_broadcasts(spark):
-    ev = Q.geotagged_events(spark, SF_DIR)
-    out = spatial_join(ev, Q.RECT_POLYGONS, res=7, keep_cols=["event_id"], strategy="broadcast")
+    ev = geotagged_events(spark, SF_DIR)
+    out = spatial_join(ev, RECT_POLYGONS, res=7, keep_cols=["event_id"], strategy="broadcast")
     plan = plan_of(out)
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
@@ -50,8 +52,8 @@ def test_spatial_join_broadcast_strategy_broadcasts(spark):
 
 
 def test_spatial_join_sortmerge_strategy_merges(spark):
-    ev = Q.geotagged_events(spark, SF_DIR)
-    out = spatial_join(ev, Q.RECT_POLYGONS, res=7, keep_cols=["event_id"], strategy="sortmerge")
+    ev = geotagged_events(spark, SF_DIR)
+    out = spatial_join(ev, RECT_POLYGONS, res=7, keep_cols=["event_id"], strategy="sortmerge")
     assert "SortMergeJoin" in plan_of(out)
 
 
@@ -68,7 +70,7 @@ def test_aggregation_is_partial_then_final(spark):
 
 
 def test_topk_is_two_phase(spark):
-    out = Q.q_knn_bruteforce(spark, SF_DIR)
+    out = REGISTRY["knn_bruteforce"].plan(spark, SF_DIR)
     plan = plan_of(out)
     # local prune ranks within (group, input partition) BEFORE the global
     # window: two Window operators, the first keyed by SPARK_PARTITION_ID
@@ -77,8 +79,8 @@ def test_topk_is_two_phase(spark):
 
 
 def test_semi_and_anti_join_shapes(spark):
-    semi = Q.q_semi_join(spark, SF_DIR)
-    anti = Q.q_anti_join_resume(spark, SF_DIR)
+    semi = REGISTRY["semi_join"].plan(spark, SF_DIR)
+    anti = REGISTRY["anti_join_resume"].plan(spark, SF_DIR)
     assert "LeftSemi" in plan_of(semi)
     assert "LeftAnti" in plan_of(anti)
 
@@ -103,22 +105,18 @@ def test_ann_plans_broadcast_queries_never_shuffle_base(spark):
     keep the base/embeddings table out of any SortMergeJoin: at 10^12
     vectors the base scan is the data path and must stay map-side up to
     the per-query top-k window."""
-    from copernicusdata_jl_spark.queries_ext import q_ann_lsh, q_ann_multiprobe, q_ann_ivf
-
-    for q in (q_ann_lsh, q_ann_multiprobe, q_ann_ivf):
-        plan = plan_of(q(spark, SF_DIR))
-        assert "BroadcastHashJoin" in plan, q.__name__
-        assert "SortMergeJoin" not in plan, q.__name__
+    for name in ("ann_lsh", "ann_multiprobe", "ann_ivf"):
+        plan = plan_of(REGISTRY[name].plan(spark, SF_DIR))
+        assert "BroadcastHashJoin" in plan, name
+        assert "SortMergeJoin" not in plan, name
         # candidate generation is JVM-side (no Python eval before re-rank)
-        assert "BatchEvalPython" not in plan, q.__name__
+        assert "BatchEvalPython" not in plan, name
 
 
 def test_bm25_single_row_stats_broadcast(spark):
     """BM25's only join is the 1-row corpus-stats broadcast; the document
     side never sorts or shuffles for scoring."""
-    from copernicusdata_jl_spark.queries_ext import q_bm25
-
-    plan = plan_of(q_bm25(spark, SF_DIR))
+    plan = plan_of(REGISTRY["bm25"].plan(spark, SF_DIR))
     assert "BroadcastNestedLoopJoin" in plan
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
 
@@ -128,18 +126,12 @@ def test_corpus_hygiene_plans(spark):
     unigram_logprob is a broadcast (the corpus scan itself never feeds a
     SortMergeJoin); PII redaction stays in whole-stage codegen with no
     Python eval nodes."""
-    from copernicusdata_jl_spark.queries_llm import (
-        q_decontaminate,
-        q_pii_redact,
-        q_unigram_logprob,
-    )
+    for name in ("decontaminate", "unigram_logprob"):
+        plan = plan_of(REGISTRY[name].plan(spark, SF_DIR))
+        assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan, name
+        assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, name
 
-    for q in (q_decontaminate, q_unigram_logprob):
-        plan = plan_of(q(spark, SF_DIR))
-        assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan, q.__name__
-        assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, q.__name__
-
-    plan = plan_of(q_pii_redact(spark, SF_DIR))
+    plan = plan_of(REGISTRY["pii_redact"].plan(spark, SF_DIR))
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     # no join, no aggregation: scan → project → final orderBy; the only
     # exchange is the range partitioning for that sort
@@ -151,12 +143,12 @@ def test_rollup_single_shuffle_and_pivot_partial_agg(spark):
     """ROLLUP expands grouping sets BEFORE one exchange (no per-level
     re-aggregation jobs); pivot with a fixed value list partial-aggregates
     map-side."""
-    plan = plan_of(Q.q_rollup_counts(spark, SF_DIR))
+    plan = plan_of(REGISTRY["rollup_counts"].plan(spark, SF_DIR))
     # ONE hash exchange for all grouping-set levels (Expand feeds a single
     # partial→final aggregate) — never one scan/shuffle per level
     assert plan.count("hashpartitioning") == 1
     assert "Expand" in plan and "partial_count" in plan
-    plan2 = plan_of(Q.q_lang_pivot(spark, SF_DIR))
+    plan2 = plan_of(REGISTRY["lang_pivot"].plan(spark, SF_DIR))
     # pivot = count by (source, lang) then pivotfirst by source: two hash
     # exchanges, both carrying aggregate rows only, both map-side partial
     assert plan2.count("hashpartitioning") == 2
@@ -167,17 +159,12 @@ def test_pack_and_mix_plans_scale_out(spark):
     """pack_sequences must be the DISTRIBUTED prefix sum (range exchange +
     windows keyed by partition id — never one global-sort window);
     temperature_sample's joins are broadcast-only."""
-    from copernicusdata_jl_spark.queries_llm import (
-        q_pack_sequences,
-        q_temperature_sample,
-    )
-
-    plan = plan_of(q_pack_sequences(spark, SF_DIR))
+    plan = plan_of(REGISTRY["pack_sequences"].plan(spark, SF_DIR))
     assert "rangepartitioning" in plan
     assert "_pid" in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
-    p2 = plan_of(q_temperature_sample(spark, SF_DIR))
+    p2 = plan_of(REGISTRY["temperature_sample"].plan(spark, SF_DIR))
     assert "SortMergeJoin" not in p2 and "ShuffledHashJoin" not in p2
 
 
@@ -190,9 +177,8 @@ def test_dup_span_plans(spark):
     from conftest import SF_DIR as _sf
 
     from copernicusdata_jl_spark.operators.corpus import dup_span_islands
-    from copernicusdata_jl_spark.queries_llm import q_dup_span_islands, q_dup_span_removal
 
-    plan = q_dup_span_islands(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
+    plan = REGISTRY["dup_span_islands"].plan(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
     exchanges = [l for l in plan.splitlines() if "Exchange" in l]
     assert not [l for l in exchanges if re.search(r"text#\d+", l)], exchanges
 
@@ -205,7 +191,7 @@ def test_dup_span_plans(spark):
     # every gram key in the hashed flavor is a long (xxhash64), never a string
     assert not [l for l in hexchanges if re.search(r"gram#\d+(?![\dL])", l)], hexchanges
 
-    rplan = q_dup_span_removal(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
+    rplan = REGISTRY["dup_span_removal"].plan(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
     # no Python UDF anywhere in either plan
     assert "BatchEvalPython" not in plan and "BatchEvalPython" not in rplan
     assert "ArrowEvalPython" not in plan and "ArrowEvalPython" not in rplan
@@ -226,9 +212,7 @@ def test_dup_span_islands_hashed_matches_string(spark):
 def test_ccnet_buckets_vocab_broadcast(spark):
     """The LM-score side broadcasts the vocab stats (the corpus never
     shuffles for scoring); only the (id, score) banding sorts globally."""
-    from copernicusdata_jl_spark.queries_llm import q_ccnet_buckets
-
-    plan = q_ccnet_buckets(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
+    plan = REGISTRY["ccnet_buckets"].plan(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
@@ -240,9 +224,7 @@ def test_training_mix_dedup_exchange_never_keys_on_text(spark):
     Text as a shuffle key is the round-3 verdict's last scale wart."""
     import re
 
-    from copernicusdata_jl_spark.queries_llm import q_training_mix
-
-    plan = q_training_mix(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
+    plan = REGISTRY["training_mix"].plan(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
     exchanges = [l for l in plan.splitlines() if "Exchange" in l]
     keyed_on_text = [l for l in exchanges if re.search(r"text#\d+", l)]
     assert not keyed_on_text, keyed_on_text

@@ -136,7 +136,7 @@ def test_tile_pyramid_levels_consistent(spark):
     """Every level conserves the event total; n_fine_cells sums to the
     fine-level cell count; each level has <= the previous level's cells."""
     from copernicusdata_jl_spark.operators.spatial_join import tile_pyramid
-    from copernicusdata_jl_spark.queries import geotagged_events
+    from copernicusdata_jl_spark.queries.shared import geotagged_events
     from conftest import SF_DIR
 
     ev = geotagged_events(spark, SF_DIR)

@@ -48,13 +48,10 @@ def main(sf_dir: str = "/root/testdata/sf0.01", names: list[str] | None = None) 
     failures = 0
     todo = names or list(REGISTRY)
     for name in todo:
-        fn, sql = REGISTRY[name]
+        q = REGISTRY[name]
         try:
-            sdf = fn(spark, sf_dir).toPandas()
-            if sql is None:
-                print(f"{name:24s} rows={len(sdf):7d}  (rows-only, no oracle)")
-                continue
-            odf = con.execute(sql).fetchdf()
+            sdf = q.plan(spark, sf_dir).toPandas()
+            odf = con.execute(q.oracle).fetchdf()
             sn, sc, sh = canon(sdf)
             on, oc, oh = canon(odf)
             ok = (sn, sc, sh) == (on, oc, oh)

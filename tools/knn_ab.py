@@ -32,9 +32,8 @@ spark = (SparkSession.builder.master("local[{cpus}]")
          .config("spark.sql.session.timeZone", "UTC")
          .config("spark.ui.enabled", "false").getOrCreate())
 spark.sparkContext.setLogLevel("ERROR")
-from copernicusdata_jl_spark.queries_ext import q_knn_kring
-from copernicusdata_jl_spark.queries import q_knn_bruteforce
-FNS = {{"kring": q_knn_kring, "bruteforce": q_knn_bruteforce}}
+from copernicusdata_jl_spark.queries import REGISTRY
+FNS = {{"kring": REGISTRY["knn_kring"].plan, "bruteforce": REGISTRY["knn_bruteforce"].plan}}
 out = {{}}
 for name in {order!r}:
     fn = FNS[name]

@@ -9,13 +9,13 @@ per-query Exchange/Join/Window counts are recorded so a future change
 that adds a shuffle to a formerly map-side operator shows up as an
 artifact diff, not a production surprise.
 
-Allowlist: queries whose nested-loop is BY DESIGN (a one-row broadcast
-scalar — BM25's corpus stats, PageRank's dangling mass, bench scalars)
-are annotated, not failed; there are NO allowed Python-eval nodes (the
-engine's only Python is Arrow-batched mapInPandas, which plans as
-MapInPandas/ArrowEvalPython for pandas_udf kernels — winnowing and the
-multimodal decode are the two marked exceptions, both Arrow-batched,
-never per-row).
+Allowances live on the registry records (``Query.allow``): a query whose
+nested-loop join is BY DESIGN (a one-row broadcast scalar such as BM25's
+corpus stats) or whose Arrow-batched pandas kernel is the operator
+(winnowing, the multimodal decode, the PIP refine) names that counter.
+There are NO allowed row-at-a-time Python-eval nodes. An allowance the
+query's plan does not use is itself a violation, so none can go stale
+and let a new nested loop or Python node through unseen.
 
 Usage: python tools/plan_audit.py [sf_dir] — exits nonzero on violation.
 """
@@ -29,52 +29,18 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# one-row scalar broadcasts: BroadcastNestedLoopJoin is the CORRECT plan
-# (no join key exists; the build side is exactly one row)
-NESTED_LOOP_OK = {
-    "bm25",             # corpus-stats scalar
-    "pagerank_hosts",   # dangling-mass scalar per iteration
-    "table_profile",    # single-row profile join
-    "build_postings",   # N-docs scalar for the df cut
-    "priority_sample",  # n-docs scalar (via topk two-phase)
-    "dataset_split",
-    "temperature_sample",  # normalizer scalar
-    "training_mix",
-    "pack_sequences",   # n_parts offsets scalar
-    "zscore_outliers",  # mean/std scalar
-    "percentiles",
-    "decontaminate", "unigram_logprob", "host_cap", "ccnet_buckets",
-    "gopher_rules", "stratified_sample", "corpus_diff", "incremental_dedup",
-    "snapshot_delete", "snapshot_upsert",
-    "cooccur_pmi",      # total-pair-slots scalar
-    "dsir_weights",     # global token-total scalars (tt, tr)
-    "tfidf_topterms",   # corpus-size scalar (n_docs)
-    "triangle_count",   # three one-row census scalars crossed at the end
-    # intentional exact-baseline cross products (the candidate set IS all
-    # (query, base) pairs — these exist as oracle foils for the ANN/kNN
-    # approximate paths, never as the scale path)
-    "cosine_topk", "knn_bruteforce",
-}
-
-# Arrow-batched pandas kernels (never row-at-a-time Python): plans show
-# ArrowEvalPython / MapInPandas for these by design
-ARROW_OK = {
-    "winnowing", "media_meta", "linear_interp",
-    "spatial_join_rect",  # exact point-in-polygon refinement kernel
-}
+# plan counters a query must not show unless its record allows them
+ALLOWABLE = ("nested_loop_joins", "arrow_eval")
 
 
-def main(sf_dir: str = "/root/testdata/sf0.001") -> int:
+def audit(spark, sf_dir: str) -> tuple[dict[str, dict], list[str]]:
+    """Plan counters of every registry query and the audit's violations."""
     from copernicusdata_jl_spark.queries import REGISTRY
-    from copernicusdata_jl_spark.session import get_spark
-
-    spark = get_spark(app_name="plan-audit", master="local[8]", shuffle_partitions=8)
-    spark.sparkContext.setLogLevel("ERROR")
 
     inventory: dict[str, dict] = {}
     violations: list[str] = []
-    for name, (fn, _sql) in sorted(REGISTRY.items()):
-        df = fn(spark, sf_dir)
+    for name, q in sorted(REGISTRY.items()):
+        df = q.plan(spark, sf_dir)
         plan = df._jdf.queryExecution().executedPlan().toString()
         row = {
             "exchanges": len(re.findall(r"Exchange (hash|range)partitioning", plan)),
@@ -88,11 +54,21 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> int:
         }
         if row["python_eval"]:
             violations.append(f"{name}: row-at-a-time BatchEvalPython in plan")
-        if row["arrow_eval"] and name not in ARROW_OK:
-            violations.append(f"{name}: unexpected Python (Arrow) eval node")
-        if row["nested_loop_joins"] and name not in NESTED_LOOP_OK:
-            violations.append(f"{name}: BroadcastNestedLoopJoin not allowlisted")
+        for k in ALLOWABLE:
+            if row[k] and k not in q.allow:
+                violations.append(f"{name}: {k} not allowed")
+            if k in q.allow and not row[k]:
+                violations.append(f"{name}: {k} allowed but unused")
         inventory[name] = row
+    return inventory, violations
+
+
+def main(sf_dir: str = "/root/testdata/sf0.001") -> int:
+    from copernicusdata_jl_spark.session import get_spark
+
+    spark = get_spark(app_name="plan-audit", master="local[8]", shuffle_partitions=8)
+    spark.sparkContext.setLogLevel("ERROR")
+    inventory, violations = audit(spark, sf_dir)
 
     out = {
         "sf_dir": sf_dir,
