@@ -1,5 +1,6 @@
 """Deterministic synthetic tables (FIXTURES.md): pages, footprints,
-admin_polygons, tiles. Seeded NumPy, no wall-clock, no external data.
+admin_polygons, planted embeddings. Seeded NumPy, no wall-clock, no
+external data.
 
 ``pages`` mirrors BASELINE.json's input hint
 ``(url, warc_ts, html, text, lang)`` plus geotag columns; host ids are
@@ -61,10 +62,6 @@ def pages_pdf(n: int = 1000, seed: int = 42) -> pd.DataFrame:
     dups["warc_ts"] = dups["warc_ts"] + pd.Timedelta(days=30)
     out = pd.concat([pdf, dups], ignore_index=True)
     return out.sort_values("url", kind="stable").reset_index(drop=True)
-
-
-def pages_df(spark: SparkSession, n: int = 1000, seed: int = 42, partitions: int = 8) -> DataFrame:
-    return spark.createDataFrame(pages_pdf(n, seed)).repartition(partitions)
 
 
 def _rect(lon0, lat0, w, h) -> np.ndarray:
@@ -146,33 +143,6 @@ def admin_polygons(n: int = 50, seed: int = 42) -> list[dict]:
             }
         )
     return out
-
-
-def tile_grid(z: int = 6) -> pd.DataFrame:
-    """Web-mercator-style z/x/y tile grid over the full extent."""
-    n = 1 << z
-    xs, ys = np.meshgrid(np.arange(n), np.arange(n), indexing="ij")
-    xs, ys = xs.ravel(), ys.ravel()
-    lon0 = xs / n * 360.0 - 180.0
-    lon1 = (xs + 1) / n * 360.0 - 180.0
-
-    def merc_lat(yy):
-        return np.degrees(np.arctan(np.sinh(np.pi * (1 - 2 * yy / n))))
-
-    lat1 = merc_lat(ys)
-    lat0 = merc_lat(ys + 1)
-    return pd.DataFrame(
-        {
-            "tile_id": [f"Z{z}_X{x}_Y{y}" for x, y in zip(xs.tolist(), ys.tolist())],
-            "x": xs,
-            "y": ys,
-            "z": z,
-            "min_lon": lon0,
-            "min_lat": lat0,
-            "max_lon": lon1,
-            "max_lat": lat1,
-        }
-    )
 
 
 def planted_embeddings(

@@ -1,8 +1,8 @@
 """Flagship job: the north-rule pipeline end-to-end over a Common-Crawl-
 style pages table ``(url, warc_ts, html, text, lang)``:
 
-  scan → Arrow-batched HTML extraction (byte-identical text per url) →
-  url dedup (latest warc_ts) → cell index (JVM expr) → broadcast cover
+  scan → url dedup (latest warc_ts) → HTML extraction (JVM expr,
+  byte-identical text per url) → cell index (JVM expr) → broadcast cover
   join + PIP refinement against granule footprints → per-tile counts →
   per-partition lineage rows to a checkpoint table.
 
@@ -18,12 +18,13 @@ Scale design notes (10^12 docs):
   Exchange, so html bytes never cross a shuffle and per-pass shuffle volume
   is independent of executor count (the N→4N scaling property). On a plain
   table the aggregate dedup still partial-aggregates map-side.
-- The only Python in the hot path is the extractor + PIP kernels, both
-  Arrow-batched. Everything else (dedup aggregate, cell index, joins,
+- The only Python in the hot path is the Arrow-batched PIP kernel.
+  Everything else (dedup aggregate, extraction, cell index, joins,
   counts, lineage) is whole-stage-codegen JVM work.
-- The cover join broadcasts compacted-and-uncompacted footprint covers
-  (small side); the pages table never shuffles before the per-tile agg,
-  which partial-aggregates map-side to one row per tile.
+- The cover join broadcasts the footprint covers built at page
+  resolution, uncompacted (small side); the pages table never shuffles
+  before the per-tile agg, which partial-aggregates map-side to one row
+  per tile.
 """
 
 from __future__ import annotations
@@ -31,7 +32,7 @@ from __future__ import annotations
 import time
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -82,50 +83,39 @@ def build_pages(spark: SparkSession, n: int, partitions: int = 32, rich: bool = 
     )
 
 
-def prepare_corpus(pages: DataFrame, strategy: str = "aggregate") -> dict[str, DataFrame]:
+def prepare_corpus(pages: DataFrame) -> dict[str, DataFrame]:
     """Dedup + extraction: the corpus half of the pipeline.
 
     1. dedup FIRST: latest warc_ts per url, so the extractor runs once per
        surviving url instead of once per crawl duplicate — at 10^12 docs
        with ~5-30% recrawl duplication this is the single biggest saving.
 
-       ``strategy``:
-       - "aggregate" (default): ``groupBy(url).agg(max_by(struct(payload),
-         key))`` — a hash aggregate, no sort; ONE max_by over the whole
-         payload struct, so exactly one input row survives even on full
-         (url, warc_ts, html) tie-key duplicates (per-column max_by would
-         let the surviving lang/lat/lon come from different rows depending
-         on encounter order). Ties on warc_ts break deterministically on
-         the html bytes. Over a pages table BUCKETED
-         BY url (``write_pages_bucketed`` — the Iceberg
-         bucket-partitioned-table analog) Catalyst elides the Exchange
-         entirely: html NEVER crosses a shuffle (plan-asserted in
-         tests/test_flagship.py). Over a plain table the one shuffle it
-         needs partial-aggregates map-side, collapsing same-partition
-         duplicates before the wire.
-       - "window": row_number over (url, warc_ts desc) — the classic form;
-         shuffles+sorts full rows on a non-bucketed source. Kept as the
-         readable twin; identical output (tested).
+       ``groupBy(url).agg(max_by(struct(payload), key))`` — a hash
+       aggregate, no sort; ONE max_by over the whole payload struct, so
+       exactly one input row survives even on full (url, warc_ts, html)
+       tie-key duplicates (per-column max_by would let the surviving
+       lang/lat/lon come from different rows depending on encounter
+       order). Ties on warc_ts break deterministically on the html bytes.
+       Over a pages table BUCKETED BY url (``write_pages_bucketed`` — the
+       Iceberg bucket-partitioned-table analog) Catalyst elides the
+       Exchange entirely: html NEVER crosses a shuffle (plan-asserted in
+       tests/test_flagship.py). Over a plain table the one shuffle it
+       needs partial-aggregates map-side, collapsing same-partition
+       duplicates before the wire. Same rows as the classic
+       ``row_number`` over (url, warc_ts desc) form (tested), which
+       shuffles and sorts full rows.
     2. extractor + digest (the per-row invariant gate). JVM codegen
        expression — byte-identical to the Arrow pandas kernel (tested),
        but no Arrow round-trip for the hottest column at 10^12 docs.
     """
-    if strategy == "window":
-        w = Window.partitionBy("url").orderBy(F.desc("warc_ts"))
-        deduped = (
-            pages.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
-        )
-    elif strategy == "aggregate":
-        payload = [c for c in pages.columns if c != "url"]
-        key = F.struct(F.col("warc_ts"), F.col("html"))
-        deduped = (
-            pages.groupBy("url")
-            .agg(F.max_by(F.struct(*payload), key).alias("_row"))
-            .select("url", *[F.col(f"_row.{c}").alias(c) for c in payload])
-            .select(pages.columns)
-        )
-    else:
-        raise ValueError(f"unknown dedup strategy {strategy!r}")
+    payload = [c for c in pages.columns if c != "url"]
+    key = F.struct(F.col("warc_ts"), F.col("html"))
+    deduped = (
+        pages.groupBy("url")
+        .agg(F.max_by(F.struct(*payload), key).alias("_row"))
+        .select("url", *[F.col(f"_row.{c}").alias(c) for c in payload])
+        .select(pages.columns)
+    )
     extracted = deduped.withColumn("text", extract_text_expr(F.col("html"))).withColumn(
         "text_sha256", F.sha2(F.col("text"), 256)
     )
@@ -199,11 +189,9 @@ def flagship_pipeline(
     pages: DataFrame,
     footprints: list[dict] | None = None,
     res: int = 7,
-    checkpoint_path: str | None = None,
-    dedup_strategy: str = "aggregate",
 ) -> dict[str, DataFrame]:
     """The full north-rule pipeline as lazy DataFrames."""
-    corpus = prepare_corpus(pages, strategy=dedup_strategy)
+    corpus = prepare_corpus(pages)
     spatial = spatial_products(corpus["extracted"], footprints, res)
     return {**corpus, **spatial}
 
@@ -212,7 +200,6 @@ def run_flagship(
     spark: SparkSession,
     pages_path: str,
     checkpoint_path: str | None = None,
-    dedup_strategy: str = "aggregate",
 ) -> dict[str, float]:
     """Execute the pipeline over a pages table and return metrics.
     ``pages_path`` is a parquet path, or ``table:NAME`` for a catalog table
@@ -233,7 +220,7 @@ def run_flagship(
     # executor cache never holds the 2.5 GB text column — in production the
     # corpus table streams to parquet/Iceberg storage instead of living in
     # cache, and the downstream spatial product needs only the digest.
-    full = prepare_corpus(pages, strategy=dedup_strategy)["extracted"]
+    full = prepare_corpus(pages)["extracted"]
     extracted = full.select(
         *[c for c in full.columns if c not in ("html", "text")],
         F.length("text").alias("n_chars"),

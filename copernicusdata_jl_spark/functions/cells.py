@@ -38,7 +38,6 @@ RES_BITS = 58
 X_BITS = 29
 R_MULT = 1 << RES_BITS  # 288230376151711744
 X_MULT = 1 << X_BITS  # 536870912
-MAX_RES = 15
 
 # ---------------------------------------------------------------------------
 # NumPy twins (driver-side covers, pandas-UDF kernels)
@@ -253,23 +252,6 @@ def kring_expr(cell, res: int, k) -> Column:
             + (y + p["dy"]),
         )
     )
-
-
-def cell_bounds_exprs(cell) -> dict[str, Column]:
-    cell = F.col(cell) if isinstance(cell, str) else cell
-    r = (cell / F.lit(R_MULT)).cast("long")
-    x = ((cell % F.lit(R_MULT)) / F.lit(X_MULT)).cast("long")
-    y = (cell % F.lit(X_MULT)).cast("long")
-    w = F.lit(360.0) / F.pow(F.lit(2.0), (r + 1).cast("double"))
-    h = F.lit(180.0) / F.pow(F.lit(2.0), r.cast("double"))
-    min_lon = F.lit(-180.0) + x.cast("double") * w
-    min_lat = F.lit(-90.0) + y.cast("double") * h
-    return {
-        "min_lon": min_lon,
-        "min_lat": min_lat,
-        "max_lon": min_lon + w,
-        "max_lat": min_lat + h,
-    }
 
 
 # ---------------------------------------------------------------------------

@@ -9,7 +9,7 @@ hash threshold: keep a row iff ``h(key) mod D < rate·D``.  Pure map-side
 projection — no shuffle, no state — and the hash is salted so
 independent samples of the same corpus are uncorrelated.
 
-The portable flavor reuses the engine's 56-bit md5-prefix hash
+The sampler reuses the engine's 56-bit md5-prefix hash
 (operators/dedup.h56_expr) so DuckDB re-derives the exact selection —
 the sampler is value-checked by the driver gate, not just row-counted.
 
@@ -29,22 +29,24 @@ from ..operators.dedup import h56_expr, h56_sql
 _DENOM = 1_000_000
 
 
-def sample_hash_expr(key: Column, rate: float, salt: str = "smp", fast: bool = False) -> Column:
+def sample_hash_expr(key: Column, rate: float, salt: str = "smp") -> Column:
     """Boolean keep-predicate: deterministic ``rate`` fraction of keys.
     ``pmod(h56(salt||key), 1e6) < rate·1e6`` — uniform because the hash's
     low bits are uniform; changing ``salt`` draws an independent sample."""
-    return F.pmod(h56_expr(key, salt, fast=fast), F.lit(_DENOM)) < int(rate * _DENOM)
+    return sample_mod_expr(key, salt) < int(rate * _DENOM)
+
+
+def sample_mod_expr(key: Column, salt: str = "smp") -> Column:
+    """``pmod(h56(salt||key), 1e6)`` — the hash half of every sampler
+    predicate, compared against a per-stratum threshold by callers
+    (twin :func:`sample_mod_sql`)."""
+    return F.pmod(h56_expr(key, salt), F.lit(_DENOM))
 
 
 def sample_mod_sql(key_expr: str, salt: str = "smp") -> str:
-    """The ``pmod(h56(salt||key), 1e6)`` half of the predicate — compared
-    against a per-stratum threshold by callers."""
+    """SQL twin of :func:`sample_mod_expr`."""
     h = h56_sql(key_expr, salt)
     return f"((({h}) % {_DENOM} + {_DENOM}) % {_DENOM})"
-
-
-def sample_hash_sql(key_expr: str, rate: float, salt: str = "smp") -> str:
-    return f"{sample_mod_sql(key_expr, salt)} < {int(rate * _DENOM)}"
 
 
 def stratified_sample(
@@ -54,14 +56,13 @@ def stratified_sample(
     rates: dict[str, float],
     default_rate: float = 0.0,
     salt: str = "smp",
-    fast: bool = False,
 ) -> DataFrame:
     """Keep each stratum at its own rate (training-mix construction):
     ``rates`` maps stratum value → keep fraction; strata not listed keep
     ``default_rate``.  One whole-stage-codegen filter — at 10^12 rows the
     sampler costs a scan, nothing more, and the selection is stable under
     any partitioning / resume / cluster size."""
-    h = F.pmod(h56_expr(F.col(key_col), salt, fast=fast), F.lit(_DENOM))
+    h = sample_mod_expr(F.col(key_col), salt)
     thresh = F.lit(int(default_rate * _DENOM))
     for value, rate in sorted(rates.items()):
         thresh = F.when(F.col(strata_col) == value, F.lit(int(rate * _DENOM))).otherwise(thresh)
@@ -73,7 +74,6 @@ def dataset_split(
     key_col: str,
     fractions: dict[str, float],
     salt: str = "split",
-    fast: bool = False,
     out_col: str = "split",
 ) -> DataFrame:
     """Deterministic train/val/test assignment: every row gets exactly one
@@ -92,7 +92,7 @@ def dataset_split(
         raise ValueError(f"split fractions must sum to 1, got {total}")
     if len(fractions) < 2:
         raise ValueError("need at least two splits")
-    m = F.pmod(h56_expr(F.col(key_col).cast("string"), salt, fast=fast), F.lit(_DENOM))
+    m = sample_mod_expr(F.col(key_col).cast("string"), salt)
     labels = list(fractions)
     expr = None
     cum = 0.0
@@ -127,7 +127,6 @@ def priority_sample(
     key_col: str,
     group_cols: list[str] | None = None,
     salt: str = "pri",
-    fast: bool = False,
 ) -> DataFrame:
     """☆ Priority sampling (Duffield, Lund & Thorup, JACM 2007): a
     weighted-without-replacement sample of ``k`` rows (per group) with an
@@ -155,8 +154,7 @@ def priority_sample(
     if k < 1:
         raise ValueError("k must be >= 1")
     groups = list(group_cols or [])
-    u = (F.pmod(h56_expr(F.col(key_col).cast("string"), salt, fast=fast),
-                F.lit(_DENOM)) + F.lit(0.5)) / F.lit(float(_DENOM))
+    u = (sample_mod_expr(F.col(key_col).cast("string"), salt) + F.lit(0.5)) / F.lit(float(_DENOM))
     scored = df.withColumn("_q", F.col(weight_col).cast("double") / u)
     top = topk_per_group(
         scored, groups or [F.lit(1)],

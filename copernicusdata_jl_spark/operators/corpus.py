@@ -299,8 +299,7 @@ def temperature_sample(
     Scale shape: one small per-stratum aggregate, rates broadcast back,
     map-side filter; nothing but (stratum, count) rows ever shuffle.
     Returns the kept rows with their ``_keep_p`` for mix accounting."""
-    from ..functions.sample import _DENOM
-    from .dedup import h56_expr
+    from ..functions.sample import _DENOM, sample_mod_expr
 
     counts = corpus.groupBy(strata_col).agg(F.count(F.lit(1)).alias("_c"))
     # weights integerized at 6dp BEFORE summation: Σ of integers is exact,
@@ -318,7 +317,7 @@ def temperature_sample(
             / F.col("_c"),
         ).alias("_keep_p"),
     )
-    h = F.pmod(h56_expr(F.col(id_col).cast("string"), salt), F.lit(_DENOM))
+    h = sample_mod_expr(F.col(id_col).cast("string"), salt)
     return (
         corpus.join(F.broadcast(rates), strata_col)
         .filter(h < F.floor(F.col("_keep_p") * _DENOM))

@@ -24,9 +24,8 @@ Scale design (100 TB):
 - Hot buckets (boilerplate pages) are bounded by a per-bucket size cap
   before pairing (`max_bucket` — drop degenerate buckets like an empty-text
   bucket; at 10^12 docs an uncapped boilerplate bucket is a quadratic bomb).
-- The portable 56-bit hash (md5-prefix) exists for cross-engine parity;
-  the fast path swaps in xxhash64 (JVM intrinsic) via ``fast=True`` —
-  same structure, no md5 cost.
+- One hash flavour: the portable 56-bit md5-prefix hash, so DuckDB
+  re-derives every value.
 """
 
 from __future__ import annotations
@@ -39,12 +38,9 @@ from pyspark.sql import functions as F
 # ---------------------------------------------------------------------------
 
 
-def h56_expr(col: Column, salt: str, fast: bool = False) -> Column:
-    """56-bit salted hash. Portable flavor: first 14 hex digits of
-    md5(salt||s) — reproducible in any SQL engine. Fast flavor: xxhash64
-    (JVM intrinsic, ~20× cheaper; not portable to DuckDB)."""
-    if fast:
-        return F.xxhash64(F.lit(salt), col)
+def h56_expr(col: Column, salt: str) -> Column:
+    """56-bit salted hash: the first 14 hex digits of md5(salt||s) —
+    reproducible in any SQL engine (twin :func:`h56_sql`)."""
     return F.conv(F.substring(F.md5(F.concat(F.lit(salt), col)), 1, 14), 16, 10).cast("long")
 
 
@@ -126,14 +122,13 @@ def minhash_signatures(
     id_col: str = "doc_id",
     shingle_col: str = "sh",
     num_hashes: int = 8,
-    fast: bool = False,
 ) -> DataFrame:
     """(id, m0..m{H-1}) — min of H affine transforms of ONE salted base
-    hash per shingle (md5/xxhash64 computed once, not H times). One explode
+    hash per shingle (md5 computed once, not H times). One explode
     + one partial-aggregated groupBy (map-side combine makes the shuffle
     carry only H longs per doc)."""
     ex = docs.select(id_col, F.explode(shingle_col).alias("_g"))
-    base = h56_expr(F.col("_g"), "mh", fast=fast)
+    base = h56_expr(F.col("_g"), "mh")
     ex = ex.select(id_col, base.alias("_h"))
     return ex.groupBy(id_col).agg(
         *[F.min(affine_expr(F.col("_h"), j)).alias(f"m{j}") for j in range(num_hashes)]
@@ -248,13 +243,12 @@ def minhash_dedup(
     num_hashes: int = 8,
     bands: int = 4,
     threshold: float = 0.8,
-    fast: bool = True,
     max_bucket: int | None = 64,
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline → (id_a, id_b, jaccard ≥ threshold)."""
     rows = num_hashes // bands
     docs = df.select(id_col, word_ngrams_expr(F.col(text_col), ngram).alias("sh"))
-    sig = minhash_signatures(docs, id_col, "sh", num_hashes, fast=fast)
+    sig = minhash_signatures(docs, id_col, "sh", num_hashes)
     cand = candidate_pairs(lsh_bands(sig, id_col, bands, rows), id_col, max_bucket=max_bucket)
     return jaccard_verify(cand, docs, id_col, "sh").filter(F.col("jaccard") >= threshold)
 
@@ -287,14 +281,13 @@ def simhash(
     id_col: str = "doc_id",
     text_col: str = "text",
     bits: int = 16,
-    fast: bool = True,
 ) -> DataFrame:
     """(id, simhash) — classic tf-weighted SimHash: every token occurrence
     votes ±1 per bit (Charikar 2002), so near-identical word histograms →
     near-identical fingerprints. One explode + one groupBy; votes
     partial-aggregate map-side."""
     toks = df.select(id_col, F.explode(F.split(F.col(text_col), " ")).alias("_t"))
-    h = h56_expr(F.col("_t"), "sim", fast=fast)
+    h = h56_expr(F.col("_t"), "sim")
     votes = toks.groupBy(id_col).agg(*simhash_expr_agg(h, bits))
     return votes.select(id_col, simhash_value_expr(bits).alias("simhash"))
 
@@ -332,12 +325,11 @@ def simhash_neardup(
     bits: int = 16,
     band_bits: int = 4,
     max_hamming: int = 2,
-    fast: bool = True,
 ) -> DataFrame:
     """Near-dup pairs by SimHash: uncapped :func:`candidate_pairs` over
     :func:`simhash_bands`, fingerprints joined back, verify exact Hamming
     ≤ ``max_hamming``."""
-    sh = simhash(df, id_col, text_col, bits, fast=fast)
+    sh = simhash(df, id_col, text_col, bits)
     pairs = candidate_pairs(simhash_bands(sh, id_col, bits, band_bits), id_col, max_bucket=None)
     ham = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
     return join_sides(pairs, sh, id_col, "simhash").select(
@@ -352,7 +344,6 @@ def fuzzy_neardup(
     bits: int = 16,
     band_bits: int = 4,
     max_dist: int = 40,
-    fast: bool = True,
 ) -> DataFrame:
     """Edit-distance-verified near-dup pairs: SimHash band candidates →
     BOUNDED Levenshtein verification (``levenshtein(a, b, threshold)``,
@@ -372,7 +363,7 @@ def fuzzy_neardup(
     ASCII-only text is asserted by
     tests/test_dedup.py::test_documents_text_is_ascii; non-ASCII corpora
     need a byte-level cast on the Spark side for parity."""
-    sh = simhash(df, id_col, text_col, bits, fast=fast)
+    sh = simhash(df, id_col, text_col, bits)
     pairs = candidate_pairs(simhash_bands(sh, id_col, bits, band_bits), id_col, max_bucket=None)
     dist = F.levenshtein(F.col(f"{text_col}_a"), F.col(f"{text_col}_b"), max_dist)
     return (
@@ -393,25 +384,18 @@ def projection_weights(dim: int, num_proj: int) -> list[list[int]]:
     return [[((i * 31 + j * 17 + 13) % 7) - 3 for i in range(dim)] for j in range(num_proj)]
 
 
-def dot_expr(vec: Column, weights: list[int]) -> Column:
-    """vec · w as a JVM fold (zip_with + aggregate), elements cast double."""
-    warr = F.array(*[F.lit(float(w)) for w in weights])
-    return F.aggregate(
-        F.zip_with(vec, warr, lambda x, w: x.cast("double") * w),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
 def sign_bucket_expr(vec: Column, weights: list[list[int]]) -> Column:
     """Bit-string bucket id from projection signs (long)."""
     out = F.lit(0).cast("long")
     for j, w in enumerate(weights):
-        out = out + F.when(dot_expr(vec, w) > 0, F.lit(1 << j)).otherwise(F.lit(0)).cast("long")
+        dot = dot_cols_expr(vec, F.array(*[F.lit(float(x)) for x in w]))
+        out = out + F.when(dot > 0, F.lit(1 << j)).otherwise(F.lit(0)).cast("long")
     return out
 
 
 def dot_cols_expr(a: Column, b: Column) -> Column:
+    """a · b as the one JVM vector fold (zip_with + aggregate), elements
+    cast double and summed left to right."""
     return F.aggregate(
         F.zip_with(a, b, lambda p, q: p.cast("double") * q.cast("double")),
         F.lit(0.0),
@@ -515,13 +499,7 @@ def ivf_train_kmeans(
 def norm_expr(vec: Column) -> Column:
     """sqrt(v·v) — hoisted into its own column by the IVF operators so the
     per-centroid cosine trees don't each re-embed the self-dot fold."""
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(vec, vec, lambda p, q: p.cast("double") * q.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
+    return F.sqrt(dot_cols_expr(vec, vec))
 
 
 def _lit_norm(values: list[float]) -> float:
@@ -546,16 +524,11 @@ def cosine_vs_lit_expr(vec: Column, vnorm: Column, values: list[float]) -> Colum
     when/otherwise blowup note below), so this matters even though the
     per-row work is unchanged."""
     warr = F.array(*[F.lit(float(x)) for x in values])
-    dot = F.aggregate(
-        F.zip_with(vec, warr, lambda p, q: p.cast("double") * q.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    return dot / (vnorm * F.lit(_lit_norm(values)))
+    return dot_cols_expr(vec, warr) / (vnorm * F.lit(_lit_norm(values)))
 
 
 def ivf_assign_expr(
-    vec_col: str, centroids: list[tuple[int, list[float]]], norm_col: str | None = None
+    vec_col: str, centroids: list[tuple[int, list[float]]], norm_col: str
 ) -> Column:
     """Nearest-centroid id as a PURE PROJECTION: the centroid vectors are
     compiled into the expression as literals, so at 10^12 rows assignment
@@ -570,27 +543,16 @@ def ivf_assign_expr(
     previous step's whole expression tree, so k centroids produce 2^k
     copies of the cosine expressions and analysis/codegen time explodes
     (measured 9.5 s vs 0.9 s for the sibling ANN queries at sf0.1).
-    With ``norm_col`` (a pre-computed :func:`norm_expr` column) each
+    ``norm_col`` is a pre-computed :func:`norm_expr` column, so each
     centroid struct holds one dot-fold instead of three — same values,
     ~2.5× smaller tree, visibly less fixed analysis cost."""
-    if norm_col is not None:
-        structs = [
-            F.struct(
-                F.round(
-                    cosine_vs_lit_expr(F.col(vec_col), F.col(norm_col), cv), 6
-                ).alias("c"),
-                F.lit(-j).alias("ncid"),
-            )
-            for j, cv in centroids
-        ]
-    else:
-        structs = [
-            F.struct(
-                F.round(cosine_expr(F.col(vec_col), F.array(*[F.lit(x) for x in cv])), 6).alias("c"),
-                F.lit(-j).alias("ncid"),
-            )
-            for j, cv in centroids
-        ]
+    structs = [
+        F.struct(
+            F.round(cosine_vs_lit_expr(F.col(vec_col), F.col(norm_col), cv), 6).alias("c"),
+            F.lit(-j).alias("ncid"),
+        )
+        for j, cv in centroids
+    ]
     return (-F.array_max(F.array(*structs)).getField("ncid")).alias("centroid_id")
 
 

@@ -9,7 +9,8 @@ only. Interior-cell matches skip PIP entirely — at 100 TB, interior cells
 dominate (area ∝ cells², boundary ∝ cells), so the expensive kernel touches
 only the O(perimeter) fraction of candidates.
 
-Two physical strategies, picked by cover size:
+Two physical strategies; the caller picks one with ``strategy`` (every
+in-repo pipeline passes ``broadcast``):
 
 - ``broadcast`` (default): covers built at page resolution
   (``compact=False``) and broadcast — a BroadcastHashJoin on ``cell_id``;
@@ -17,8 +18,9 @@ Two physical strategies, picked by cover size:
   the broadcast threshold (polygon sets up to ~10^6 cells).
 - ``sortmerge``: pages explode to their parent-cell chain (res_min..res) —
   ~4 keys/row — and sort-merge-join the *compacted* cover on ``cell_id``.
-  Right when covers are too big to broadcast; both sides can be bucketed by
-  ``cell_id`` in storage to make the shuffle a no-op.
+  Kept because it is the only path for covers too large to broadcast;
+  both sides can be bucketed by ``cell_id`` in storage to make the
+  shuffle a no-op.
 
 Skew: hot cells (mega-hosts, dense cities) are handled by AQE skew-join in
 the sortmerge path and are a non-issue in the broadcast path (no shuffle).

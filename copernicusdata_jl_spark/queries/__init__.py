@@ -163,7 +163,6 @@ REGISTRY: dict[str, Query] = {
     "table_profile": Query(analytics.q_table_profile, analytics.Q_TABLE_PROFILE_SQL),
     "zscore_outliers": Query(analytics.q_zscore_outliers, analytics.Q_ZSCORE_SQL),
     "minhash_lsh": Query(text.q_minhash_lsh, text._minhash_sql()),
-    "minhash_lsh_fast": Query(text.q_minhash_lsh_fast, text._minhash_sql()),
     # untimed: the iterative label-propagation loop is per-round fixed cost
     # at sf<=0.1 corpus sizes, which measures Spark job scheduling
     "neardup_components": Query(text.q_neardup_components, text._components_sql(), timed=False),

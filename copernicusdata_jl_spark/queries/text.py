@@ -186,12 +186,11 @@ _NH, _BANDS, _ROWS, _THRESH = 8, 4, 2, 0.8
 
 def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(8)+LSH(4×2) near-dup pairs over documents, exact-Jaccard
-    verified at ≥ 0.8. Portable-hash flavor for the oracle; the production
-    path is operators/dedup.minhash_dedup(fast=True) (xxhash64)."""
+    verified at ≥ 0.8."""
     docs = load(spark, sf_dir, "documents").select(
         "doc_id", D.word_ngrams_expr(F.col("text"), 3).alias("sh")
     )
-    sig = D.minhash_signatures(docs, "doc_id", "sh", _NH, fast=False)
+    sig = D.minhash_signatures(docs, "doc_id", "sh", _NH)
     cand = D.candidate_pairs(D.lsh_bands(sig, "doc_id", _BANDS, _ROWS), "doc_id", max_bucket=64)
     out = D.jaccard_verify(cand, docs, "doc_id", "sh").filter(F.col("jaccard") >= _THRESH)
     return out.orderBy("id_a", "id_b")
@@ -231,34 +230,11 @@ ORDER BY id_a, id_b
 """
 
 
-def q_minhash_lsh_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Production-flavor MinHash-LSH near-dup: xxhash64 base hash (JVM
-    intrinsic, ~20× cheaper than the md5 oracle flavor), same banding and
-    exact-Jaccard ≥ 0.8 verification. This is the path bench.py times as
-    the headline.
-
-    Value oracle (VERDICT r2 #1): DuckDB re-derives the PORTABLE-hash LSH
-    pipeline with exact Jaccard. That checks soundness exactly (every
-    emitted jaccard is the true shingle Jaccard, ≥ 0.8) and completeness
-    up to LSH-candidate equality of the two hash families — both filter
-    the same exact-Jaccard predicate over probabilistically-equivalent
-    candidate sets, and on the deterministic test corpus the surviving
-    pair sets coincide at sf0.01 AND sf0.1 (pinned by
-    tests/test_dedup.py::test_fast_and_portable_minhash_same_pairs; in
-    general a J∈[0.8,1) pair can be banded by one family and not the
-    other with probability ≈ (1-J²)⁴)."""
-    docs = load(spark, sf_dir, "documents")
-    return D.minhash_dedup(
-        docs, "doc_id", "text", ngram=3, num_hashes=_NH, bands=_BANDS,
-        threshold=_THRESH, fast=True, max_bucket=64,
-    ).orderBy("id_a", "id_b")
-
-
 def q_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """☆ Duplicate-cluster resolution: MinHash-LSH near-dup pairs (portable
-    flavor, same parameters as `minhash_lsh`) grouped into connected
-    components — transitive closure of the pair graph — with the minimum
-    doc_id as the canonical survivor per cluster.  Every document of the
+    """☆ Duplicate-cluster resolution: MinHash-LSH near-dup pairs (same
+    parameters as `minhash_lsh`) grouped into connected components —
+    transitive closure of the pair graph — with the minimum doc_id as the
+    canonical survivor per cluster.  Every document of the
     corpus is labeled (singletons survive as their own cluster).  Spark
     side: pointer-jumping min-label propagation (operators/components.py);
     oracle side: exact reachability via a DuckDB recursive CTE."""
@@ -267,7 +243,7 @@ def q_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     pairs = D.minhash_dedup(
         docs, "doc_id", "text", ngram=3, num_hashes=_NH, bands=_BANDS,
-        threshold=_THRESH, fast=False, max_bucket=64,
+        threshold=_THRESH, max_bucket=64,
     )
     return resolve_duplicates(docs, pairs, "doc_id").orderBy("doc_id")
 
@@ -303,9 +279,7 @@ _SIMBITS = 32
 
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """32-bit SimHash per document (tf-weighted token-hash majority)."""
-    return D.simhash(load(spark, sf_dir, "documents"), "doc_id", "text", _SIMBITS, fast=False).orderBy(
-        "doc_id"
-    )
+    return D.simhash(load(spark, sf_dir, "documents"), "doc_id", "text", _SIMBITS).orderBy("doc_id")
 
 
 def _simhash_ctes() -> str:
@@ -334,7 +308,7 @@ def q_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash banding near-dup: pairs within Hamming ≤ 2 of the 32-bit
     fingerprint, candidates via 4-bit chunk buckets."""
     return D.simhash_neardup(
-        load(spark, sf_dir, "documents"), "doc_id", "text", _SIMBITS, 4, 2, fast=False
+        load(spark, sf_dir, "documents"), "doc_id", "text", _SIMBITS, 4, 2
     ).orderBy("id_a", "id_b")
 
 
@@ -375,7 +349,6 @@ def q_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
         bits=_FUZZY_BITS,
         band_bits=_FUZZY_BAND_BITS,
         max_dist=_FUZZY_MAX_DIST,
-        fast=False,
     ).orderBy("id_a", "id_b")
 
 

@@ -328,7 +328,7 @@ def test_fuzzy_neardup_finds_planted_pair(spark):
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     got = {(r["id_a"], r["id_b"]): r["dist"] for r in fuzzy_neardup(
-        docs, bits=16, band_bits=4, max_dist=10, fast=True
+        docs, bits=16, band_bits=4, max_dist=10
     ).collect()}
     assert got.get((1, 2)) == 2
     assert all(3 not in k for k in got)
@@ -340,7 +340,7 @@ def test_fuzzy_neardup_bounded_distance_is_exact(spark):
     rows = [(1, "abcdefgh"), (2, "abXdefgh"), (3, "abcdefghXY")]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     got = {(r["id_a"], r["id_b"]): r["dist"] for r in fuzzy_neardup(
-        docs, bits=16, band_bits=1, max_dist=5, fast=True  # 1-bit bands: all pairs
+        docs, bits=16, band_bits=1, max_dist=5  # 1-bit bands: all pairs
     ).collect()}
     # true distances: (1,2)=1 substitution, (1,3)=2 inserts, (2,3)=3
     assert got[(1, 2)] == 1 and got[(1, 3)] == 2 and got[(2, 3)] == 3

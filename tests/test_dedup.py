@@ -34,34 +34,15 @@ def docs(spark):
 def test_minhash_finds_planted_neardups(docs):
     pairs = {
         (r.id_a, r.id_b): r.jaccard
-        for r in D.minhash_dedup(docs, threshold=0.5, fast=True).collect()
+        for r in D.minhash_dedup(docs, threshold=0.5).collect()
     }
     assert (0, 3) in pairs and pairs[(0, 3)] == 1.0  # exact dup
     assert (0, 1) in pairs and pairs[(0, 1)] > 0.7  # one-token edit
     assert all(not (a in (0, 1, 3) and b in (2, 4)) for a, b in pairs)
 
 
-def test_minhash_portable_equals_fast_structure(docs):
-    slow = D.minhash_dedup(docs, threshold=0.5, fast=False).select("id_a", "id_b").collect()
-    fast = D.minhash_dedup(docs, threshold=0.5, fast=True).select("id_a", "id_b").collect()
-    assert {tuple(r) for r in slow} == {tuple(r) for r in fast}
-
-
-def test_fast_and_portable_minhash_same_pairs(spark):
-    """Completeness pin for the minhash_lsh_fast value oracle (VERDICT r2
-    #1): on the deterministic documents corpus the xxhash64 and md5-portable
-    LSH flavors must emit the SAME (id_a, id_b, jaccard) set after the exact
-    Jaccard ≥ 0.8 filter — which is what licenses using the portable-LSH
-    DuckDB pipeline as the fast flavor's oracle SQL."""
-    from copernicusdata_jl_spark.queries import REGISTRY
-
-    portable = {tuple(r) for r in REGISTRY["minhash_lsh"].plan(spark, SF_DIR).collect()}
-    fast = {tuple(r) for r in REGISTRY["minhash_lsh_fast"].plan(spark, SF_DIR).collect()}
-    assert portable == fast and len(fast) > 0
-
-
 def test_simhash_deterministic_and_discriminative(docs):
-    sh = {r.doc_id: r.simhash for r in D.simhash(docs, bits=32, fast=True).collect()}
+    sh = {r.doc_id: r.simhash for r in D.simhash(docs, bits=32).collect()}
     assert sh[0] == sh[3]  # identical text -> identical fingerprint
     ham01 = bin(sh[0] ^ sh[1]).count("1")
     ham02 = bin(sh[0] ^ sh[2]).count("1")
@@ -343,26 +324,32 @@ def test_containment_catches_quote_inclusion_jaccard_misses(spark):
     assert j < 0.3
 
 
-# every similarity query whose candidate and verify stages go through
-# candidate_pairs/join_sides and their SQL twins; each returns rows at sf0.001
-SIMILARITY_QUERIES = [
-    "minhash_lsh", "minhash_lsh_fast", "neardup_components", "simhash_neardup",
+# every query built on the shared hash, sampler and vector-fold expressions
+# of operators/dedup.py and functions/sample.py (h56, sample_mod,
+# dot_cols), and every similarity query whose candidate and verify stages
+# go through candidate_pairs/join_sides and their SQL twins; each returns
+# rows at sf0.001
+HASH_AND_SIMILARITY_QUERIES = [
+    "minhash_lsh", "neardup_components", "simhash", "simhash_neardup",
     "fuzzy_match", "ngram_jaccard", "ngram_containment", "embed_neardup",
+    "ann_lsh", "ann_multiprobe", "ann_ivf", "stratified_sample",
+    "dataset_split", "priority_sample", "temperature_sample", "training_mix",
 ]
 
 
 @pytest.fixture(scope="module")
 def oracle_db():
     import duckdb
+    from tools.check_oracle import TABLES
 
     con = duckdb.connect()
-    for t in ("documents", "embeddings"):
+    for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
     yield con
     con.close()
 
 
-@pytest.mark.parametrize("name", SIMILARITY_QUERIES)
+@pytest.mark.parametrize("name", HASH_AND_SIMILARITY_QUERIES)
 def test_similarity_query_matches_oracle(spark, oracle_db, name):
     """Spark plan and DuckDB twin agree on row count, columns and the
     order-insensitive value hash of the correctness gate."""

@@ -4,6 +4,7 @@
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from copernicusdata_jl_spark import flagship
@@ -63,23 +64,30 @@ def test_run_flagship_metrics(spark, pages_path, tmp_path):
     assert ck.count() == int(m["n_lineage_buckets"])
 
 
+def _latest_per_url(pages):
+    """Independent reference plan for the url dedup: the classic
+    row_number over (url, warc_ts desc) latest-wins form."""
+    w = Window.partitionBy("url").orderBy(F.desc("warc_ts"))
+    return pages.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
+
+
 def test_dedup_strategies_identical(spark, pages_path):
-    """window and aggregate dedup must produce the same surviving rows."""
+    """The aggregate dedup keeps the same rows as the window reference."""
     pages = spark.read.parquet(pages_path)
-    a = sorted(map(tuple, flagship.prepare_corpus(pages, "window")["deduped"].collect()))
-    b = sorted(map(tuple, flagship.prepare_corpus(pages, "aggregate")["deduped"].collect()))
+    a = sorted(map(tuple, _latest_per_url(pages).collect()))
+    b = sorted(map(tuple, flagship.prepare_corpus(pages)["deduped"].collect()))
     assert a == b and len(a) == 3000
 
 
 def test_dedup_full_tie_key_duplicates_keep_one_whole_row(spark, pages_path):
     """On full (url, warc_ts, html) tie-key duplicates, the aggregate
-    strategy must keep exactly ONE whole input row (single max_by over the
+    dedup must keep exactly ONE whole input row (single max_by over the
     payload struct), not a per-column mix whose lang/lat/lon depend on
-    Spark's encounter order — and must match the window strategy."""
+    Spark's encounter order."""
     pages = spark.read.parquet(pages_path).limit(50)
     ties = pages.withColumn("lang", F.lit("zz")).withColumn("lat", F.col("lat") + 1.0)
     both = pages.unionByName(ties).repartition(7)
-    agg = flagship.prepare_corpus(both, "aggregate")["deduped"]
+    agg = flagship.prepare_corpus(both)["deduped"]
     assert agg.count() == 50
     rows = {tuple(r) for r in pages.collect()} | {tuple(r) for r in ties.collect()}
     for r in agg.collect():
@@ -93,13 +101,12 @@ def test_bucketed_dedup_is_shuffle_free(spark, pages_path):
     pages = spark.read.parquet(pages_path)
     flagship.write_pages_bucketed(pages, table="pages_bucketed_test", buckets=8)
     t = spark.table("pages_bucketed_test")
-    for strategy in ("aggregate", "window"):
-        corpus = flagship.prepare_corpus(t, strategy=strategy)["extracted"]
-        plan = corpus._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, f"{strategy} dedup shuffled on bucketed input"
-    # and the answer is identical to the plain-parquet path
-    a = sorted(map(tuple, flagship.prepare_corpus(t, "aggregate")["deduped"].collect()))
-    b = sorted(map(tuple, flagship.prepare_corpus(pages, "window")["deduped"].collect()))
+    corpus = flagship.prepare_corpus(t)["extracted"]
+    plan = corpus._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, "dedup shuffled on bucketed input"
+    # and the answer is identical to the window reference on plain parquet
+    a = sorted(map(tuple, flagship.prepare_corpus(t)["deduped"].collect()))
+    b = sorted(map(tuple, _latest_per_url(pages).collect()))
     assert a == b
     # cross-session re-registration DDL reads the same rows shuffle-free
     wh = spark.conf.get("spark.sql.warehouse.dir").replace("file:", "")
@@ -108,7 +115,7 @@ def test_bucketed_dedup_is_shuffle_free(spark, pages_path):
     t2 = flagship.register_pages_bucketed(
         spark, os.path.join(wh, "pages_bucketed_test"), table="pages_bucketed_reg", buckets=8
     )
-    corpus2 = flagship.prepare_corpus(t2, "aggregate")["extracted"]
+    corpus2 = flagship.prepare_corpus(t2)["extracted"]
     assert "Exchange" not in corpus2._jdf.queryExecution().executedPlan().toString()
     assert t2.count() == 3150
     spark.sql("DROP TABLE IF EXISTS pages_bucketed_reg")

@@ -93,7 +93,7 @@ def test_whole_stage_codegen_covers_dedup_shingling(spark):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
         "doc_id", D.word_ngrams_expr(F.col("text"), 3).alias("sh")
     )
-    sig = D.minhash_signatures(docs, "doc_id", "sh", 8, fast=True)
+    sig = D.minhash_signatures(docs, "doc_id", "sh", 8)
     plan = plan_of(sig)
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     # partial min per signature lane before the shuffle (map-side combine)

@@ -1,10 +1,13 @@
 """The query registry is the one list of query names: its first 50 names
 are pinned to the committed correctness artifact, and every record's plan
-passes the plan audit with exactly the allowances it declares."""
+passes the plan audit with exactly the allowances it declares. Every
+top-level definition of the package has a reference."""
 
 from __future__ import annotations
 
+import ast
 import json
+import re
 from pathlib import Path
 
 from copernicusdata_jl_spark.queries import REGISTRY
@@ -26,3 +29,41 @@ def test_plan_audit_has_no_violations(spark):
     inventory, violations = audit(spark, SF_DIR)
     assert len(inventory) == len(REGISTRY)
     assert violations == []
+
+
+def _top_level_definitions(tree):
+    """(name, first line, last line) of every top-level def, class and
+    assignment target of a module."""
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            names = [node.name]
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            names = [n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)]
+        else:
+            continue
+        first = min([node.lineno] + [d.lineno for d in getattr(node, "decorator_list", [])])
+        for name in names:
+            if not (name.startswith("__") and name.endswith("__")):
+                yield name, first, node.end_lineno
+
+
+def test_every_package_definition_is_referenced():
+    """Every top-level def, class and assignment of the package is named
+    somewhere besides its own definition: in its module, in another repo
+    ``.py`` file, or in a ``tests/resources/*.toml`` payload spec (which
+    resolves processing units by name)."""
+    sources = [
+        p for p in REPO.rglob("*.py")
+        if not any(part.startswith(".") or part == "__pycache__" for part in p.relative_to(REPO).parts)
+    ] + sorted((REPO / "tests" / "resources").glob("*.toml"))
+    words = {p: set(re.findall(r"\w+", p.read_text())) for p in sources}
+    dead = []
+    for path in sorted((REPO / "copernicusdata_jl_spark").rglob("*.py")):
+        lines = path.read_text().splitlines()
+        others = set().union(*(w for p, w in words.items() if p != path))
+        for name, first, last in _top_level_definitions(ast.parse("\n".join(lines))):
+            rest = set(re.findall(r"\w+", "\n".join(lines[: first - 1] + lines[last:])))
+            if name not in rest and name not in others:
+                dead.append(f"{path.relative_to(REPO)}:{first} {name}")
+    assert dead == []

@@ -45,12 +45,6 @@ def test_stratified_rates_and_determinism(spark):
     assert _ids(out.select("doc_id")) == _ids(again.select("doc_id"))
 
 
-def test_fast_flavor_same_contract(spark):
-    df = spark.range(3000).select(F.col("id").cast("string").alias("k"))
-    n = df.filter(sample_hash_expr(F.col("k"), 0.2, fast=True)).count()
-    assert 0.15 < n / 3000 < 0.25
-
-
 # ---------------------------------------------------------------------------
 # dataset split
 # ---------------------------------------------------------------------------
