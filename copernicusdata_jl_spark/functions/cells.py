@@ -22,6 +22,13 @@ The quadtree hierarchy gives exact parent/child/compact semantics (4 children
 per cell); k-ring is the 8-connected Moore neighborhood with antimeridian
 wrap-around in x and pole clamping in y.
 
+Known distortion (VERDICT r1 #4): EQC cells are equal-ANGLE, not
+equal-area — at latitude φ a cell's metric width is ∝ cos(φ), so cover
+sizes and k-ring *metric* radii skew poleward. Results stay exact: kNN
+escalates its ring until the ring's guaranteed metric radius covers the
+k-th distance (operators/knn.ring_guarantee_m), and cover joins filter
+false candidates with exact PIP refinement.
+
 Every function has two twins:
 - ``*_expr``: a Spark Column (and ``*_sql``: the identical ANSI-SQL string)
 - a NumPy implementation (suffix-free) for driver-side cover computation
@@ -252,107 +259,3 @@ def kring_expr(cell, res: int, k) -> Column:
             + (y + p["dy"]),
         )
     )
-
-
-# ---------------------------------------------------------------------------
-# Provider seam — EQC default, real H3 drop-in when the library exists
-# ---------------------------------------------------------------------------
-
-
-class EqcProvider:
-    """Default cell provider: the pure-arithmetic EQC quadtree above.
-    ``has_exprs=True``: indexing/parent/tile math run as Catalyst column
-    expressions inside whole-stage codegen (the 100 TB hot path).
-
-    Known distortion (VERDICT r1 #4): EQC cells are equal-ANGLE, not
-    equal-area — at latitude φ a cell's metric width shrinks by cos(φ), so
-    cover sizes and k-ring *metric* radii skew poleward. kNN correctness is
-    restored by ring escalation (operators/knn.ring_guarantee_m); cover
-    joins stay exact because PIP refinement filters false candidates. Swap
-    in the real H3 provider for equal-area semantics when the lib exists."""
-
-    name = "eqc"
-    has_exprs = True
-
-    latlng_to_cell = staticmethod(latlng_to_cell)
-    cell_parent = staticmethod(cell_parent)
-    cell_children = staticmethod(cell_children)
-    cell_bounds = staticmethod(cell_bounds)
-    grid_disk = staticmethod(grid_disk)
-    compact_cells = staticmethod(compact_cells)
-    uncompact_cells = staticmethod(uncompact_cells)
-    latlng_to_cell_expr = staticmethod(latlng_to_cell_expr)
-    latlng_to_cell_sql = staticmethod(latlng_to_cell_sql)
-    cell_parent_expr = staticmethod(cell_parent_expr)
-    kring_expr = staticmethod(kring_expr)
-
-
-class H3Provider:
-    """Real-H3 provider (equal-area-ish hexagons). Requires the ``h3``
-    package (not installed in this container — construction raises
-    ImportError, which get_provider('auto') catches). ``has_exprs=False``:
-    H3 indexing runs as an Arrow-batched pandas UDF, not codegen — the
-    documented trade for true H3 cell semantics."""
-
-    name = "h3"
-    has_exprs = False
-
-    def __init__(self) -> None:
-        import h3  # gated: ImportError propagates to get_provider
-
-        self._h3 = h3
-
-    def latlng_to_cell(self, lat, lon, res: int):
-        h3 = self._h3
-        return np.array(
-            [int(h3.latlng_to_cell(float(a), float(o), res), 16)
-             for a, o in zip(np.ravel(lat), np.ravel(lon))],
-            dtype=np.int64,
-        )
-
-    def cell_parent(self, cell_id, parent_res: int):
-        h3 = self._h3
-        return np.array(
-            [int(h3.cell_to_parent(f"{int(c):x}", parent_res), 16) for c in np.ravel(cell_id)],
-            dtype=np.int64,
-        )
-
-    def grid_disk(self, cell_id: int, k: int) -> list[int]:
-        h3 = self._h3
-        return sorted(int(c, 16) for c in h3.grid_disk(f"{int(cell_id):x}", k))
-
-    def compact_cells(self, cell_ids):
-        h3 = self._h3
-        return np.array(
-            sorted(int(c, 16) for c in h3.compact_cells([f"{int(c):x}" for c in np.ravel(cell_ids)])),
-            dtype=np.int64,
-        )
-
-    def latlng_to_cell_udf(self, res: int):
-        """Arrow-batched indexing kernel for the non-codegen path."""
-        import pandas as pd
-        from pyspark.sql import functions as SF
-        from pyspark.sql import types as ST
-
-        prov = self
-
-        @SF.pandas_udf(ST.LongType())
-        def udf(lat: pd.Series, lon: pd.Series) -> pd.Series:
-            return pd.Series(prov.latlng_to_cell(lat.to_numpy(), lon.to_numpy(), res))
-
-        return udf
-
-
-def get_provider(name: str = "auto"):
-    """Resolve the cell provider: 'eqc' (default), 'h3' (raises ImportError
-    when the lib is absent), or 'auto' (h3 if importable, else eqc)."""
-    if name == "eqc":
-        return EqcProvider()
-    if name == "h3":
-        return H3Provider()
-    if name == "auto":
-        try:
-            return H3Provider()
-        except ImportError:
-            return EqcProvider()
-    raise ValueError(f"unknown cell provider {name!r}")

@@ -26,27 +26,28 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import h56_expr, h56_sql
 
-_DENOM = 1_000_000
+# the sampler denominator D of ``h mod D < rate·D``; every Spark and SQL twin builds on it
+DENOM = 1_000_000
 
 
 def sample_hash_expr(key: Column, rate: float, salt: str = "smp") -> Column:
     """Boolean keep-predicate: deterministic ``rate`` fraction of keys.
     ``pmod(h56(salt||key), 1e6) < rate·1e6`` — uniform because the hash's
     low bits are uniform; changing ``salt`` draws an independent sample."""
-    return sample_mod_expr(key, salt) < int(rate * _DENOM)
+    return sample_mod_expr(key, salt) < int(rate * DENOM)
 
 
 def sample_mod_expr(key: Column, salt: str = "smp") -> Column:
     """``pmod(h56(salt||key), 1e6)`` — the hash half of every sampler
     predicate, compared against a per-stratum threshold by callers
     (twin :func:`sample_mod_sql`)."""
-    return F.pmod(h56_expr(key, salt), F.lit(_DENOM))
+    return F.pmod(h56_expr(key, salt), F.lit(DENOM))
 
 
 def sample_mod_sql(key_expr: str, salt: str = "smp") -> str:
     """SQL twin of :func:`sample_mod_expr`."""
     h = h56_sql(key_expr, salt)
-    return f"((({h}) % {_DENOM} + {_DENOM}) % {_DENOM})"
+    return f"((({h}) % {DENOM} + {DENOM}) % {DENOM})"
 
 
 def stratified_sample(
@@ -63,9 +64,9 @@ def stratified_sample(
     sampler costs a scan, nothing more, and the selection is stable under
     any partitioning / resume / cluster size."""
     h = sample_mod_expr(F.col(key_col), salt)
-    thresh = F.lit(int(default_rate * _DENOM))
+    thresh = F.lit(int(default_rate * DENOM))
     for value, rate in sorted(rates.items()):
-        thresh = F.when(F.col(strata_col) == value, F.lit(int(rate * _DENOM))).otherwise(thresh)
+        thresh = F.when(F.col(strata_col) == value, F.lit(int(rate * DENOM))).otherwise(thresh)
     return df.filter(h < thresh)
 
 
@@ -98,7 +99,7 @@ def dataset_split(
     cum = 0.0
     for lbl in labels[:-1]:
         cum += fractions[lbl]
-        cond = m < int(cum * _DENOM)
+        cond = m < int(cum * DENOM)
         expr = F.when(cond, F.lit(lbl)) if expr is None else expr.when(cond, F.lit(lbl))
     expr = expr.otherwise(F.lit(labels[-1]))
     return df.withColumn(out_col, expr)
@@ -115,7 +116,7 @@ def dataset_split_sql(
     cum = 0.0
     for lbl in labels[:-1]:
         cum += fractions[lbl]
-        parts.append(f"WHEN {m} < {int(cum * _DENOM)} THEN '{lbl}'")
+        parts.append(f"WHEN {m} < {int(cum * DENOM)} THEN '{lbl}'")
     parts.append(f"ELSE '{labels[-1]}' END AS {out_col}")
     return " ".join(parts)
 
@@ -154,7 +155,7 @@ def priority_sample(
     if k < 1:
         raise ValueError("k must be >= 1")
     groups = list(group_cols or [])
-    u = (sample_mod_expr(F.col(key_col).cast("string"), salt) + F.lit(0.5)) / F.lit(float(_DENOM))
+    u = (sample_mod_expr(F.col(key_col).cast("string"), salt) + F.lit(0.5)) / F.lit(float(DENOM))
     scored = df.withColumn("_q", F.col(weight_col).cast("double") / u)
     top = topk_per_group(
         scored, groups or [F.lit(1)],

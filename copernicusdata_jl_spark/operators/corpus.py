@@ -299,13 +299,14 @@ def temperature_sample(
     Scale shape: one small per-stratum aggregate, rates broadcast back,
     map-side filter; nothing but (stratum, count) rows ever shuffle.
     Returns the kept rows with their ``_keep_p`` for mix accounting."""
-    from ..functions.sample import _DENOM, sample_mod_expr
+    from ..functions.sample import DENOM, sample_mod_expr
 
     counts = corpus.groupBy(strata_col).agg(F.count(F.lit(1)).alias("_c"))
     # weights integerized at 6dp BEFORE summation: Σ of integers is exact,
     # so the normalizer (and with it every threshold) is bit-deterministic
     # under any aggregation order — a raw double Σ c^alpha varies in the
-    # last ulp with partition order and can flip a floor() boundary.
+    # last ulp with partition order and can flip a floor() boundary. This
+    # 6-decimal scale is not the sampler's DENOM, though both are 10^6.
     pw = F.sqrt("_c") if alpha == 0.5 else F.pow("_c", F.lit(alpha))
     counts = counts.withColumn("_w", F.round(pw * 1_000_000).cast("long"))
     tot = counts.agg(F.sum("_c").alias("_n"), F.sum("_w").alias("_s"))
@@ -320,7 +321,7 @@ def temperature_sample(
     h = sample_mod_expr(F.col(id_col).cast("string"), salt)
     return (
         corpus.join(F.broadcast(rates), strata_col)
-        .filter(h < F.floor(F.col("_keep_p") * _DENOM))
+        .filter(h < F.floor(F.col("_keep_p") * DENOM))
         .select(*corpus.columns, F.round("_keep_p", 6).alias("_keep_p"))
     )
 

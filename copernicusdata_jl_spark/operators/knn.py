@@ -8,41 +8,28 @@ exact haversine, keep k.
 
 Ring escalation (VERDICT r1 #3): a fixed ring can under-fill (sparse
 regions) or under-COVER (near the poles a degree-ring is metrically narrow
-in x, so a closer point can sit outside it). ``escalate=True`` iteratively
-doubles each query's ring until (a) it holds ≥ k candidates AND (b) the
-k-th distance is within the ring's *guaranteed* metric radius — a provable
-lower bound on the distance to any point outside the ring (per-row haversine
-bound below). The escalated result therefore equals exact brute-force kNN,
-which is what the oracle asserts; the ring is purely a pruning accelerator.
+in x, so a closer point can sit outside it). Each round doubles the ring of
+every query whose top-k is not yet guaranteed exact, until (a) it holds
+≥ k candidates AND (b) the k-th distance is within the ring's *guaranteed*
+metric radius :func:`ring_guarantee_m` — a provable lower bound on the
+distance to any point outside the ring. A ring of :func:`full_ring` covers
+the grid and is exact by definition, so a query is done within
+⌈log₂ full_ring(res)⌉ + 2 rounds. The result therefore equals exact
+brute-force kNN, which is what the oracle asserts; the ring is purely a
+pruning accelerator.
 
-Scale design: queries are the small side and broadcast after the k-ring
-explode — the point table never shuffles and is touched once per escalation
-round with its cell id computed in whole-stage codegen. TWO escalation-state
-strategies, auto-switched on query count (VERDICT r2 #6 asked for exactly
-this pair):
-
-- ``state="driver"`` (auto for ≤ 4096 queries): ring/done bookkeeping in a
-  plain dict over the collected query rows — queries are small-side by
-  contract. Each round is one ``collect`` of the ranked top-k rows,
-  measured at 4 Spark jobs (query broadcast, the two top-k window
-  shuffles, the final stage), plus one query collect per call. This is the
-  fast path for the granule/oracle use case (per-round job fixed cost, not
-  data, dominates toy scale).
-- ``state="dataframe"`` (auto above the threshold): ring state is a
-  ``_ring`` column on a localCheckpointed pending frame, never
-  materialized on the driver — millions of queries escalate without
-  serializing through it; the only per-round driver action is one
-  ``isEmpty()`` probe on checkpointed partitions. The exactness test runs
-  as a Catalyst expression (:func:`ring_guarantee_expr`), a CONSERVATIVE
-  twin of the NumPy bound :func:`ring_guarantee_m` — never larger, so
-  escalation still provably reaches exact brute-force kNN, at worst with
-  an extra round near the poles.
-
-Both paths produce identical results (parity-tested); candidate count per
-query is bounded by ring area × cell density. The driver path returns a
-local DataFrame of its collected rows; the DataFrame path persists each
-round's top-k so the final union never recomputes a round, and unpersists
-every round cache once the final result materializes.
+Scale design: queries are the small side. They are collected once, and
+the ring/done bookkeeping is a plain dict over those rows. Each round
+broadcasts the pending queries after the k-ring explode — the point table
+never shuffles and is touched once per round with its cell id computed in
+whole-stage codegen — and is ONE action: a collect of the ranked top-k
+rows (≤ k per pending query), measured at 4 Spark jobs (query broadcast,
+the two top-k window shuffles, the final stage). The broadcast collects
+its side, the ring-exploded queries at (2·ring+1)² rows each, on the
+driver anyway; the ≤ k ranked rows per query kept there are fewer.
+Candidate count per query is bounded by ring area × cell density. The
+result is a local DataFrame of the collected rows of the done queries: no
+round cache, no union.
 """
 
 from __future__ import annotations
@@ -50,8 +37,9 @@ from __future__ import annotations
 import math
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions import cells, geo
 
@@ -116,42 +104,6 @@ def full_ring(res: int) -> int:
     return max(ny - 1, (nx + 1) // 2)
 
 
-def ring_guarantee_expr(qlat: Column, ring: Column, res: int) -> Column:
-    """Catalyst twin of :func:`ring_guarantee_m`, CONSERVATIVE by
-    construction (always ≤ the NumPy bound, pinned by test): it drops the
-    per-row ``gap_lat`` term and takes the minimum ``cos(lat)`` over the
-    WHOLE covered band instead of per row, so a band touching a pole bounds
-    x at 0 and simply escalates until covered. A smaller lower bound can
-    only delay "done", never mis-declare it — exactness is preserved.
-    Runs per query row in whole-stage codegen, which is what lets ring
-    escalation keep its state in a DataFrame column instead of the driver."""
-    nx, ny = cells.nx_ny(res)
-    h, w = 180.0 / ny, 360.0 / nx
-    inf = F.lit(float("inf"))
-    ringd = ring.cast("double")
-    qy = (
-        F.greatest(
-            F.least(F.floor((qlat + F.lit(90.0)) / 180.0 * ny), F.lit(float(ny - 1))),
-            F.lit(0.0),
-        )
-    ).cast("long")
-    y_cov = (qy - ring < 0) & (qy + ring > ny - 1)
-    x_cov = ring * 2 + 1 >= nx
-    y_bound = F.when(y_cov, inf).otherwise(F.radians(ringd * h) * geo.EARTH_RADIUS_M)
-    ymin = F.greatest(qy - ring, F.lit(0)).cast("double")
-    ymax = F.least(qy + ring, F.lit(ny - 1)).cast("double")
-    lat_lo = F.lit(-90.0) + ymin * h
-    lat_hi = F.lit(-90.0) + (ymax + 1) * h
-    cmin = F.least(F.cos(F.radians(lat_lo)), F.cos(F.radians(lat_hi)))
-    a = F.cos(F.radians(qlat)) * cmin * F.pow(F.sin(F.radians(ringd * w) / 2.0), F.lit(2.0))
-    x_bound = F.when(x_cov, inf).otherwise(
-        2.0
-        * geo.EARTH_RADIUS_M
-        * F.asin(F.sqrt(F.greatest(F.least(a, F.lit(1.0)), F.lit(0.0))))
-    )
-    return F.least(y_bound, x_bound)
-
-
 def knn_kring(
     points: DataFrame,
     queries: DataFrame,
@@ -164,135 +116,16 @@ def knn_kring(
     qlon_col: str = "qlon",
     query_id_col: str = "query_id",
     point_id_col: str = "event_id",
-    escalate: bool = True,
-    max_rounds: int = 16,
-    state: str = "auto",
-    small_query_threshold: int = 4096,
 ) -> DataFrame:
-    """Top-k nearest points per query → (query_id, point_id, rank, dist_m).
+    """Top-k nearest points per query → (query_id, point_id, rank, dist_m),
+    equal to brute-force kNN.
 
-    Candidates come from each query's k-ring cells (starting at ``k_ring``);
-    with ``escalate`` the ring doubles per round for queries whose top-k is
-    not yet guaranteed exact, so the result equals brute-force kNN.
-    ``escalate=False`` is the single-pass fixed-ring variant (top-k *within
-    the ring*).
-
-    ``state`` picks the escalation-state strategy (module docstring):
-    "driver" keeps rings in a dict over collected query rows (fast for the
-    contractually-small query side), "dataframe" keeps them in a
-    localCheckpointed ``_ring`` column (unbounded query sets), "auto"
-    collects up to ``threshold+1`` query rows once and picks — the driver
-    path reuses those rows. Both paths return identical rows
-    (parity-tested). Empty query sets return an empty result (correct
-    schema); a 0 starting ring escalates to 1 rather than spinning."""
-    qsel = queries.select(query_id_col, qlat_col, qlon_col)
-    if state == "auto":
-        qrows = qsel.limit(small_query_threshold + 1).collect()
-        state = "driver" if len(qrows) <= small_query_threshold else "dataframe"
-    elif state == "driver":
-        qrows = qsel.collect()
-    if state == "driver":
-        return _knn_kring_driver_state(
-            points, queries, qrows, res, k_ring, k, lat_col, lon_col, qlat_col,
-            qlon_col, query_id_col, point_id_col, escalate, max_rounds,
-        )
-    pts = points.withColumn("cell_id", cells.latlng_to_cell_expr(lat_col, lon_col, res))
-    dist = F.round(
-        geo.haversine_m_expr(F.col(lat_col), F.col(lon_col), F.col(qlat_col), F.col(qlon_col)), 3
-    )
-    r_full = full_ring(res)
-    q = qsel.withColumn("_ring", F.lit(int(min(k_ring, r_full))).cast("int"))
-    cached: list[DataFrame] = []
-    out: DataFrame | None = None
-    rounds = 0
-    try:
-        # each round materializes the pending set ONCE: the bottom-of-loop
-        # localCheckpoint both fills the round's ranked cache and makes the
-        # follow-up isEmpty a trivial cached-partition probe — checkpointing
-        # at the top as well would re-run the whole candidate pipeline a
-        # second time per round (measured ~40% of the toy-scale wall)
-        q = q.localCheckpoint(eager=True)
-        while True:
-            rounds += 1
-            qx = q.withColumn(
-                "qcell", cells.latlng_to_cell_expr(qlat_col, qlon_col, res)
-            ).withColumn(
-                "cell_id", F.explode(cells.kring_expr(F.col("qcell"), res, F.col("_ring")))
-            ).select(query_id_col, qlat_col, qlon_col, "cell_id")
-            cand = pts.join(F.broadcast(qx), "cell_id")
-            ranked = (
-                topk_per_group(
-                    cand.withColumn("dist_m", dist),
-                    [query_id_col],
-                    [F.asc("dist_m"), F.asc(point_id_col)],
-                    k,
-                )
-                .select(query_id_col, point_id_col, "rank", "dist_m")
-                .persist()
-            )
-            cached.append(ranked)
-            stats = ranked.groupBy(query_id_col).agg(
-                F.count(F.lit(1)).alias("_n"), F.max("dist_m").alias("_dk")
-            )
-            qst = q.join(stats, query_id_col, "left").withColumn(
-                "_n", F.coalesce(F.col("_n"), F.lit(0))
-            )
-            exact = (F.col("_ring") >= r_full) | (
-                (F.col("_n") >= k)
-                & (F.col("_dk") <= ring_guarantee_expr(F.col(qlat_col), F.col("_ring"), res))
-            )
-            done = (
-                F.lit(True)
-                if (not escalate or rounds >= max_rounds)
-                else F.coalesce(exact, F.lit(False))
-            )
-            done_ids = qst.filter(done).select(query_id_col)
-            part = ranked.join(F.broadcast(done_ids), query_id_col, "left_semi")
-            out = part if out is None else out.unionByName(part)
-            q = qst.filter(~done).select(
-                query_id_col,
-                qlat_col,
-                qlon_col,
-                F.least(F.greatest(F.col("_ring") * 2, F.lit(1)), F.lit(r_full))
-                .cast("int")
-                .alias("_ring"),
-            ).localCheckpoint(eager=True)
-            if q.isEmpty():
-                break
-        return out.localCheckpoint(eager=True)
-    finally:
-        for c in cached:
-            c.unpersist()
-
-
-def _knn_kring_driver_state(
-    points: DataFrame,
-    queries: DataFrame,
-    qrows: list,
-    res: int,
-    k_ring: int,
-    k: int,
-    lat_col: str,
-    lon_col: str,
-    qlat_col: str,
-    qlon_col: str,
-    query_id_col: str,
-    point_id_col: str,
-    escalate: bool,
-    max_rounds: int,
-) -> DataFrame:
-    """Driver-state escalation loop over the collected query rows ``qrows``:
-    ring/done bookkeeping in a dict. Each round is ONE action — a collect
-    of the ranked top-k rows (≤ k per pending query), from which the
-    per-query count and k-th distance are read on the driver — measured at
-    4 Spark jobs per round (query broadcast, the two top-k window shuffles,
-    the final stage). The result is a local DataFrame of the collected rows
-    of the done queries: no round cache, no union. The fast path when
-    queries fit comfortably on the driver, which is the contract for the
-    granule use case. Result rows identical to the DataFrame path
-    (tests/test_lineage_knn.py parity)."""
-    from pyspark.sql import types as T
-
+    Candidates come from each query's k-ring cells, starting at ``k_ring``;
+    the ring doubles per round for the queries whose top-k is not yet
+    guaranteed exact (module docstring). One collect of the query rows,
+    then one collect per round. The result keeps the id column types of
+    the inputs. An empty query set returns an empty result without a
+    round; a 0 starting ring escalates to 1 rather than spinning."""
     spark = points.sparkSession
     pts = points.withColumn("cell_id", cells.latlng_to_cell_expr(lat_col, lon_col, res))
     dist = F.round(
@@ -301,8 +134,7 @@ def _knn_kring_driver_state(
     r_full = full_ring(res)
     qfields = [queries.schema[c] for c in (query_id_col, qlat_col, qlon_col)]
     qschema = T.StructType(qfields + [T.StructField("_ring", T.IntegerType())])
-    # the result keeps the id COLUMN TYPES of the inputs (a hardcoded
-    # LongType would break unionByName with non-long ids)
+    # a hardcoded LongType would break unionByName with non-long ids
     out_schema = T.StructType(
         [
             T.StructField(query_id_col, qfields[0].dataType),
@@ -311,12 +143,10 @@ def _knn_kring_driver_state(
             T.StructField("dist_m", T.DoubleType()),
         ]
     )
-    rings = {r[0]: min(k_ring, r_full) for r in qrows}
-    pending = qrows
+    pending = queries.select(query_id_col, qlat_col, qlon_col).collect()
+    rings = {r[0]: min(k_ring, r_full) for r in pending}
     done_rows: list[tuple] = []
-    rounds = 0
     while pending:
-        rounds += 1
         qdf = spark.createDataFrame(
             [(r[0], r[1], r[2], rings[r[0]]) for r in pending], qschema
         ).withColumn("qcell", cells.latlng_to_cell_expr(qlat_col, qlon_col, res))
@@ -339,10 +169,9 @@ def _knn_kring_driver_state(
             top = sorted(by_q.get(qid, []), key=lambda t: t[2])
             ring = rings[qid]
             # the k-th distance is the last-ranked row's (ranked ascending)
-            exact = ring >= r_full or (
+            if ring >= r_full or (
                 len(top) >= k and top[-1][3] <= ring_guarantee_m(r[1], ring, res)
-            )
-            if (not escalate) or exact or rounds >= max_rounds:
+            ):
                 done_rows.extend(top)
             else:
                 rings[qid] = min(max(1, ring * 2), r_full)

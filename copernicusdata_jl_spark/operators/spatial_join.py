@@ -48,7 +48,6 @@ COVER_SCHEMA = T.StructType(
 def build_covers(
     polygons: list[dict],
     res: int,
-    id_key: str = "poly_id",
     compact: bool = True,
 ) -> pd.DataFrame:
     """Compute covers for a polygon list, interior runs compacted unless
@@ -63,18 +62,13 @@ def build_covers(
         rings = [np.asarray(r, dtype=np.float64) for r in poly["rings"]]
         for part in geo.split_antimeridian(rings):
             cover, boundary = geo.polygon_cover(part, res=res, compact=compact)
-            ids.extend([poly[id_key]] * len(cover))
+            ids.extend([poly["poly_id"]] * len(cover))
             cids.extend(cover.tolist())
             bnds.extend(boundary.tolist())
     return pd.DataFrame({"poly_id": ids, "cell_id": cids, "is_boundary": bnds})
 
 
-def covers_df(spark: SparkSession, polygons: list[dict], res: int, id_key: str = "poly_id", compact: bool = True) -> DataFrame:
-    pdf = build_covers(polygons, res, id_key=id_key, compact=compact)
-    return spark.createDataFrame(pdf, schema=COVER_SCHEMA)
-
-
-def make_pip_udf(spark: SparkSession, polygons: list[dict], id_key: str = "poly_id"):
+def make_pip_udf(spark: SparkSession, polygons: list[dict]):
     """Arrow-batched PIP refinement: (lat, lon, poly_id) -> bool.
 
     Polygon rings ship once per executor via a Spark broadcast (not
@@ -82,7 +76,7 @@ def make_pip_udf(spark: SparkSession, polygons: list[dict], id_key: str = "poly_
     polygon and ray-cast vectorized."""
     # antimeridian crossers are tested against their split parts (inside any)
     parts_by_id = {
-        p[id_key]: geo.split_antimeridian([np.asarray(r, dtype=np.float64) for r in p["rings"]])
+        p["poly_id"]: geo.split_antimeridian([np.asarray(r, dtype=np.float64) for r in p["rings"]])
         for p in polygons
     }
     bc = spark.sparkContext.broadcast(parts_by_id)
@@ -112,13 +106,13 @@ def spatial_join(
     points: DataFrame,
     polygons: list[dict],
     res: int = 8,
-    id_key: str = "poly_id",
     lat_col: str = "lat",
     lon_col: str = "lon",
     strategy: str = "broadcast",
     keep_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Join points to containing polygons.
+    """Join points to containing polygons, each a dict with ``poly_id``
+    and ``rings``.
 
     Returns points' ``keep_cols`` + ``poly_id`` + ``match_kind``
     (``interior`` | ``boundary``). Exactly the rows where the point is
@@ -129,10 +123,12 @@ def spatial_join(
     pts = points.withColumn("cell_id", cells.latlng_to_cell_expr(lat_col, lon_col, res))
 
     if strategy == "broadcast":
-        cover = covers_df(spark, polygons, res, id_key=id_key, compact=False)
+        cover = spark.createDataFrame(
+            build_covers(polygons, res, compact=False), schema=COVER_SCHEMA
+        )
         cand = pts.join(F.broadcast(cover), "cell_id", "inner")
     elif strategy == "sortmerge":
-        cover_pdf = build_covers(polygons, res, id_key=id_key, compact=True)
+        cover_pdf = build_covers(polygons, res, compact=True)
         res_list = sorted({int(c) >> cells.RES_BITS for c in cover_pdf["cell_id"]})
         parents = F.array(
             *[cells.cell_parent_expr(F.col("cell_id"), res, r) for r in res_list]
@@ -146,7 +142,7 @@ def spatial_join(
     else:
         raise ValueError(f"unknown strategy {strategy!r}")
 
-    pip = make_pip_udf(spark, polygons, id_key=id_key)
+    pip = make_pip_udf(spark, polygons)
     refined = cand.filter(
         (~F.col("is_boundary")) | pip(F.col(lat_col), F.col(lon_col), F.col("poly_id"))
     )

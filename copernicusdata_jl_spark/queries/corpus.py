@@ -733,15 +733,15 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _stratified_sample_sql() -> str:
-    from ..functions.sample import _DENOM, sample_mod_sql
+    from ..functions.sample import DENOM, sample_mod_sql
 
     h = sample_mod_sql("CAST(doc_id AS VARCHAR)", salt="mix")
     cases = " ".join(
-        f"WHEN lang = '{v}' THEN {int(r * _DENOM)}" for v, r in sorted(_MIX_RATES.items())
+        f"WHEN lang = '{v}' THEN {int(r * DENOM)}" for v, r in sorted(_MIX_RATES.items())
     )
     return f"""
 SELECT doc_id, lang, source FROM documents
-WHERE {h} < (CASE {cases} ELSE {int(_MIX_DEFAULT * _DENOM)} END)
+WHERE {h} < (CASE {cases} ELSE {int(_MIX_DEFAULT * DENOM)} END)
 ORDER BY doc_id
 """
 
@@ -796,13 +796,13 @@ def q_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _priority_sample_sql() -> str:
-    from ..functions.sample import sample_mod_sql
+    from ..functions.sample import DENOM, sample_mod_sql
 
     m = sample_mod_sql("CAST(doc_id AS VARCHAR)", salt="pri")
     return f"""
 WITH s AS (
   SELECT doc_id, lang, CAST(n_chars AS DOUBLE) AS w,
-         CAST(n_chars AS DOUBLE) / ((({m}) + 0.5) / 1000000.0) AS q
+         CAST(n_chars AS DOUBLE) / ((({m}) + 0.5) / {float(DENOM)}) AS q
   FROM documents
 ), r AS (
   SELECT *, row_number() OVER (PARTITION BY lang ORDER BY q DESC, doc_id ASC) AS rk
@@ -840,9 +840,11 @@ def q_temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _temperature_sample_sql() -> str:
-    from ..functions.sample import sample_mod_sql
+    from ..functions.sample import DENOM, sample_mod_sql
 
     h = sample_mod_sql("CAST(doc_id AS VARCHAR)", "tmp")
+    # the `* 1000000` in _w is the 6-decimal weight integerisation of
+    # operators/corpus.temperature_sample, not the sampler's DENOM
     return f"""
 WITH c AS (SELECT source, count(*) AS _c,
                   CAST(round(sqrt(count(*)) * 1000000) AS BIGINT) AS _w
@@ -851,7 +853,7 @@ t AS (SELECT SUM(_c) AS _n, SUM(_w) AS _s FROM c),
 r AS (SELECT source, least(1.0, ({_TEMP_FRAC} * _n * _w / _s) / _c) AS p FROM c, t)
 SELECT d.doc_id, d.source, round(p, 6) AS _keep_p
 FROM documents d JOIN r USING (source)
-WHERE {h} < floor(p * 1000000)
+WHERE {h} < floor(p * {DENOM})
 ORDER BY doc_id
 """
 
@@ -906,12 +908,13 @@ def q_training_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _training_mix_sql() -> str:
-    from ..functions.sample import sample_mod_sql
+    from ..functions.sample import DENOM, sample_mod_sql
     from ..functions.text import repetition_ratio_sql, token_count_sql
 
     tok = token_count_sql("text")
     rep = repetition_ratio_sql("text", 3)
     h = sample_mod_sql("CAST(doc_id AS VARCHAR)", "tmp")
+    # `* 1000000` in _w: the weight integerisation, as in _temperature_sample_sql
     return f"""
 WITH capped AS (
   SELECT doc_id FROM (
@@ -930,7 +933,7 @@ t AS (SELECT SUM(_c) AS _n, SUM(_w) AS _s FROM c),
 r AS (SELECT source, least(1.0, ({_MIX_FRAC} * _n * _w / _s) / _c) AS p FROM c, t)
 SELECT g.doc_id, g.source, {tok} AS n_tokens, round(p, 6) AS _keep_p
 FROM gated g JOIN r USING (source)
-WHERE {h} < floor(p * 1000000)
+WHERE {h} < floor(p * {DENOM})
 ORDER BY doc_id
 """
 

@@ -210,7 +210,7 @@ def q_knn_kring(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(q, la, lo) for q, la, lo in KNN_QUERIES], "query_id string, qlat double, qlon double"
     )
     return knn_kring(
-        geotagged_events(spark, sf_dir), qdf, res=_KNN_RES, k_ring=_KNN_RING, k=_KNN_K, escalate=True
+        geotagged_events(spark, sf_dir), qdf, res=_KNN_RES, k_ring=_KNN_RING, k=_KNN_K
     ).orderBy("query_id", "rank")
 
 

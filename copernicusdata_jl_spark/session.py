@@ -9,8 +9,9 @@ Scale rationale (100 TB design point):
 - AQE on: runtime coalescing + skew-join splitting for the cell join.
 - shuffle partitions sized to cores locally; on a real cluster this is
   ``max(2*total_cores, input_bytes / 128MB)`` — AQE coalesces down.
-- Arrow enabled: every row-level kernel (PIP, extractor, interp) is an
-  Arrow-batched pandas UDF, never per-row Python.
+- Arrow enabled: the Python row-level kernels (PIP, interp) are
+  Arrow-batched pandas UDFs, never per-row Python; HTML extraction is the
+  JVM expression ``extract_text_expr``.
 - UTC session timezone: deterministic golden outputs and DuckDB parity.
 """
 

@@ -84,32 +84,9 @@ def test_compact_uncompact_roundtrip():
     assert len(partial) > 1 and parent not in set(partial.tolist())
 
 
-def test_provider_seam():
-    """Cell-provider seam (VERDICT r1 #8): EQC is the default codegen
-    provider; 'h3' resolves only when the real lib is importable; 'auto'
-    silently falls back to EQC in this container."""
-    import pytest
-    from copernicusdata_jl_spark.functions.cells import EqcProvider, get_provider
-
-    p = get_provider()
-    assert p.name == "eqc" and p.has_exprs
-    assert int(p.latlng_to_cell(10.0, 20.0, 6)) == int(C.latlng_to_cell(10.0, 20.0, 6))
-    auto = get_provider("auto")
-    try:
-        import h3  # noqa: F401
-
-        assert auto.name == "h3" and not auto.has_exprs
-    except ImportError:
-        assert isinstance(auto, EqcProvider)
-        with pytest.raises(ImportError):
-            get_provider("h3")
-    with pytest.raises(ValueError):
-        get_provider("nope")
-
-
 def test_eqc_high_latitude_distortion_documented():
     """EQC cells are equal-angle, not equal-area: metric width shrinks by
-    cos(lat) poleward (the documented distortion the H3 provider removes).
+    cos(lat) poleward (the distortion the cells module docstring states).
     Quantify it so the behavior is pinned, and show the k-ring metric
     radius skews the same way — the reason kNN uses ring escalation."""
     import numpy as np

@@ -19,6 +19,18 @@ from copernicusdata_jl_spark.operators.skew import hot_keys, salted_groupby
 # ---------------------------------------------------------------------------
 
 
+def _brute_knn(pts, qdf, k):
+    from copernicusdata_jl_spark.functions import geo
+    from copernicusdata_jl_spark.operators.knn import topk_per_group
+
+    brute = pts.crossJoin(F.broadcast(qdf)).withColumn(
+        "dist_m",
+        F.round(geo.haversine_m_expr(F.col("lat"), F.col("lon"), F.col("qlat"), F.col("qlon")), 3),
+    )
+    return topk_per_group(brute, ["query_id"], [F.asc("dist_m"), F.asc("event_id")], k).select(
+        "query_id", "event_id", "rank", "dist_m")
+
+
 def test_knn_kring_matches_bruteforce_in_ring(spark):
     # a dense cloud near (10, 20): k-ring kNN must equal brute-force kNN
     rng = np.random.default_rng(3)
@@ -194,10 +206,6 @@ def test_knn_kring_escalates_to_bruteforce_polar_sparse(spark):
     """VERDICT r1 #3: escalation must make knn_kring exact even where a
     fixed ring under-fills (sparse) or under-covers (polar x-narrowing):
     compare against brute-force haversine top-k over the same points."""
-    import numpy as np
-    from copernicusdata_jl_spark.functions import geo
-    from copernicusdata_jl_spark.operators.knn import knn_kring, topk_per_group
-
     # sparse global scatter + a polar cluster spread widely in longitude
     rng = [(i, -80.0 + (i * 37 % 160) + (i % 7) / 10.0, -180.0 + (i * 73 % 360) + (i % 11) / 10.0)
            for i in range(60)]
@@ -206,16 +214,8 @@ def test_knn_kring_escalates_to_bruteforce_polar_sparse(spark):
     queries = [("P1", -85.0, 10.0), ("P2", -88.0, -170.0), ("S1", 40.0, 60.0), ("E1", 0.05, 0.05)]
     qdf = spark.createDataFrame(queries, "query_id string, qlat double, qlon double")
 
-    got = knn_kring(pts, qdf, res=5, k_ring=1, k=5, escalate=True).orderBy(
-        "query_id", "rank").collect()
-
-    from pyspark.sql import functions as F
-    brute = pts.crossJoin(F.broadcast(qdf)).withColumn(
-        "dist_m",
-        F.round(geo.haversine_m_expr(F.col("lat"), F.col("lon"), F.col("qlat"), F.col("qlon")), 3),
-    )
-    want = topk_per_group(brute, ["query_id"], [F.asc("dist_m"), F.asc("event_id")], 5).select(
-        "query_id", "event_id", "rank", "dist_m").orderBy("query_id", "rank").collect()
+    got = knn_kring(pts, qdf, res=5, k_ring=1, k=5).orderBy("query_id", "rank").collect()
+    want = _brute_knn(pts, qdf, 5).orderBy("query_id", "rank").collect()
     assert [tuple(r) for r in got] == [tuple(r) for r in want]
 
 
@@ -229,7 +229,7 @@ def test_knn_kring_sparse_fewer_than_k(spark):
         "event_id long, lat double, lon double",
     )
     qdf = spark.createDataFrame([("Q", 0.0, 0.0)], "query_id string, qlat double, qlon double")
-    out = knn_kring(pts, qdf, res=4, k_ring=1, k=5, escalate=True).collect()
+    out = knn_kring(pts, qdf, res=4, k_ring=1, k=5).collect()
     assert sorted(r.event_id for r in out) == [1, 2, 3]
     assert sorted(r.rank for r in out) == [1, 2, 3]
 
@@ -237,7 +237,7 @@ def test_knn_kring_sparse_fewer_than_k(spark):
 def test_knn_kring_empty_queries_and_zero_ring(spark):
     """ADVICE r2: no crash on an empty query set (empty result, correct
     schema) and a 0 starting ring escalates to 1 instead of spinning
-    identical rounds to max_rounds."""
+    identical rounds."""
     from copernicusdata_jl_spark.operators.knn import knn_kring
 
     pts = spark.createDataFrame(
@@ -250,42 +250,13 @@ def test_knn_kring_empty_queries_and_zero_ring(spark):
     assert out.columns == ["query_id", "event_id", "rank", "dist_m"]
 
     qdf = spark.createDataFrame([("Q", 10.0, 20.0)], "query_id string, qlat double, qlon double")
-    got = knn_kring(pts, qdf, res=5, k_ring=0, k=3, escalate=True, max_rounds=8).collect()
+    got = knn_kring(pts, qdf, res=5, k_ring=0, k=3).collect()
     assert len(got) == 3  # would be <3 if ring stayed 0 and the cell is sparse
 
 
-def test_ring_guarantee_expr_conservative_vs_numpy(spark):
-    """The Catalyst guarantee must never EXCEED the NumPy bound (a larger
-    'guarantee' could declare a query done before its top-k is provably
-    exact). Grid over latitudes × rings × resolutions."""
-    from copernicusdata_jl_spark.operators.knn import full_ring, ring_guarantee_expr, ring_guarantee_m
-
-    cases = [
-        (lat, ring, res)
-        for res in (4, 6)
-        for ring in (1, 2, 4, 8, full_ring(res))
-        for lat in (-89.9, -85.0, -45.0, -0.1, 0.0, 37.5, 60.0, 89.9)
-    ]
-    df = spark.createDataFrame(cases, "qlat double, ring int, res int")
-    for res in (4, 6):
-        rows = (
-            df.filter(F.col("res") == res)
-            .select("qlat", "ring", ring_guarantee_expr(F.col("qlat"), F.col("ring"), res).alias("g"))
-            .collect()
-        )
-        for r in rows:
-            want = ring_guarantee_m(r.qlat, r.ring, res)
-            assert r.g <= want + 1e-6, (r.qlat, r.ring, res, r.g, want)
-            assert r.g >= 0.0
-
-
-def test_knn_kring_many_queries_dataframe_native(spark):
-    """VERDICT r2 #6 done-criterion: 10^4 queries escalate without driver
-    materialization of the query set, and the result is EXACT — equal to
-    brute-force kNN over the same points for every query."""
-    from copernicusdata_jl_spark.functions import geo
-    from copernicusdata_jl_spark.operators.knn import knn_kring, topk_per_group
-
+def test_knn_kring_many_queries_exact(spark):
+    """10^4 queries escalate to an EXACT result — equal to brute-force kNN
+    over the same points for every query."""
     pts = spark.range(500).select(
         F.col("id").alias("event_id"),
         (F.pmod(F.col("id") * 37, F.lit(1600)).cast("double") / 10.0 - 80.0).alias("lat"),
@@ -296,15 +267,9 @@ def test_knn_kring_many_queries_dataframe_native(spark):
         (F.pmod(F.col("id") * 131, F.lit(1780)).cast("double") / 10.0 - 89.0).alias("qlat"),
         (F.pmod(F.col("id") * 17, F.lit(3600)).cast("double") / 10.0 - 180.0).alias("qlon"),
     )
-    got = knn_kring(pts, qdf, res=4, k_ring=2, k=3, escalate=True)
+    got = knn_kring(pts, qdf, res=4, k_ring=2, k=3)
     assert got.count() == 30_000
-    brute = pts.crossJoin(F.broadcast(qdf)).withColumn(
-        "dist_m",
-        F.round(geo.haversine_m_expr(F.col("lat"), F.col("lon"), F.col("qlat"), F.col("qlon")), 3),
-    )
-    want = topk_per_group(brute, ["query_id"], [F.asc("dist_m"), F.asc("event_id")], 3).select(
-        "query_id", "event_id", "rank", "dist_m"
-    )
+    want = _brute_knn(pts, qdf, 3)
     assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
 
 
@@ -321,10 +286,8 @@ def test_ring_guarantee_monotone_and_polar_safe():
 
 
 def test_knn_kring_driver_and_dataframe_state_parity(spark):
-    """The two escalation-state strategies (driver dict vs DataFrame _ring
-    column) must return identical rows — 'auto' just picks by query count."""
-    from copernicusdata_jl_spark.operators.knn import knn_kring
-
+    """Queries near both poles and the antimeridian return exactly the
+    brute-force kNN rows."""
     pts = spark.createDataFrame(
         [(i, float((i * 37) % 160) - 80.0, float((i * 73) % 360) - 180.0) for i in range(200)],
         "event_id long, lat double, lon double",
@@ -333,9 +296,9 @@ def test_knn_kring_driver_and_dataframe_state_parity(spark):
         [("A", -85.0, 10.0), ("B", 0.0, 0.0), ("C", 40.0, 179.5), ("D", 88.0, -170.0)],
         "query_id string, qlat double, qlon double",
     )
-    drv = knn_kring(pts, qdf, res=5, k_ring=1, k=4, state="driver").orderBy("query_id", "rank")
-    dfn = knn_kring(pts, qdf, res=5, k_ring=1, k=4, state="dataframe").orderBy("query_id", "rank")
-    assert [tuple(r) for r in drv.collect()] == [tuple(r) for r in dfn.collect()]
+    got = knn_kring(pts, qdf, res=5, k_ring=1, k=4).orderBy("query_id", "rank")
+    want = _brute_knn(pts, qdf, 4).orderBy("query_id", "rank")
+    assert [tuple(r) for r in got.collect()] == [tuple(r) for r in want.collect()]
 
 
 def test_salted_join_equals_plain_join(spark):
@@ -390,42 +353,6 @@ def test_salted_join_spreads_identical_hot_rows(spark):
         .filter("k = 'hot'").select("_salt").distinct().count()
     )
     assert n_salts > 1  # identical rows spread across buckets
-
-
-def _brute_knn(pts, qdf, k):
-    from copernicusdata_jl_spark.functions import geo
-    from copernicusdata_jl_spark.operators.knn import topk_per_group
-
-    brute = pts.crossJoin(F.broadcast(qdf)).withColumn(
-        "dist_m",
-        F.round(geo.haversine_m_expr(F.col("lat"), F.col("lon"), F.col("qlat"), F.col("qlon")), 3),
-    )
-    return topk_per_group(brute, ["query_id"], [F.asc("dist_m"), F.asc("event_id")], k).select(
-        "query_id", "event_id", "rank", "dist_m")
-
-
-@pytest.mark.parametrize("n_queries, path", [(6, "driver"), (7, "dataframe")])
-def test_knn_kring_auto_threshold_edges_match_bruteforce(spark, monkeypatch, n_queries, path):
-    """``state="auto"`` takes the driver path at exactly
-    ``small_query_threshold`` queries and the DataFrame path at one more;
-    both equal brute-force kNN."""
-    from copernicusdata_jl_spark.operators import knn as K
-
-    calls = []
-    driver = K._knn_kring_driver_state
-    monkeypatch.setattr(K, "_knn_kring_driver_state", lambda *a: calls.append(1) or driver(*a))
-    pts = spark.createDataFrame(
-        [(i, float((i * 37) % 160) - 80.0, float((i * 73) % 360) - 180.0) for i in range(150)],
-        "event_id long, lat double, lon double",
-    )
-    qdf = spark.createDataFrame(
-        [(f"q{i}", -85.0 + i * 24.0, float((i * 61) % 358) - 179.0) for i in range(n_queries)],
-        "query_id string, qlat double, qlon double",
-    )
-    got = K.knn_kring(pts, qdf, res=5, k_ring=1, k=4, small_query_threshold=6)
-    assert ("driver" if calls else "dataframe") == path
-    want = _brute_knn(pts, qdf, 4)
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
 
 def test_knn_kring_auto_empty_queries_keep_id_types(spark):

@@ -70,20 +70,20 @@ def test_spatial_join_matches_exact_pip(spark, points_pdf, strategy):
 
 
 @pytest.mark.parametrize(
-    "polygons, id_key",
+    "polygons",
     [
-        (fixtures.footprints(120), "product_id"),
-        ([{"poly_id": "AM", "rings": [[[170.0, -10.0], [-170.0, -10.0], [-170.0, 10.0], [170.0, 10.0]]]}], "poly_id"),
+        [{**p, "poly_id": p["product_id"]} for p in fixtures.footprints(120)],
+        [{"poly_id": "AM", "rings": [[[170.0, -10.0], [-170.0, -10.0], [-170.0, 10.0], [170.0, 10.0]]]}],
     ],
     ids=["footprints120", "antimeridian"],
 )
-def test_broadcast_cover_is_uncompacted_compact_cover(polygons, id_key):
+def test_broadcast_cover_is_uncompacted_compact_cover(polygons):
     """The broadcast strategy builds its cover with ``compact=False``; that
     is, as a set, the compacted cover with every interior parent expanded
     to its leaves (compaction only merges complete interior sibling quads)."""
     res = 7
-    flat = build_covers(polygons, res, id_key=id_key, compact=False)
-    packed = build_covers(polygons, res, id_key=id_key, compact=True)
+    flat = build_covers(polygons, res, compact=False)
+    packed = build_covers(polygons, res, compact=True)
     want = {
         (pid, leaf, b)
         for pid, cid, b in packed.itertuples(index=False)
