@@ -38,7 +38,7 @@ from pyspark.sql import types as T
 
 from . import fixtures
 from .functions import cells
-from .functions.text import extract_text_expr, render_html, render_html_rich
+from .functions.text import render_html, render_html_rich, with_extracted_text
 from .operators.lineage import lineage_rows
 from .operators.spatial_join import spatial_join
 
@@ -104,9 +104,9 @@ def prepare_corpus(pages: DataFrame) -> dict[str, DataFrame]:
        duplicates before the wire. Same rows as the classic
        ``row_number`` over (url, warc_ts desc) form (tested), which
        shuffles and sorts full rows.
-    2. extractor + digest (the per-row invariant gate). JVM codegen
-       expression — byte-identical to the Arrow pandas kernel (tested),
-       but no Arrow round-trip for the hottest column at 10^12 docs.
+    2. extractor + digest (the per-row invariant gate):
+       ``with_extracted_text``, a JVM codegen expression — no Arrow
+       round-trip for the hottest column at 10^12 docs.
     """
     payload = [c for c in pages.columns if c != "url"]
     key = F.struct(F.col("warc_ts"), F.col("html"))
@@ -116,10 +116,7 @@ def prepare_corpus(pages: DataFrame) -> dict[str, DataFrame]:
         .select("url", *[F.col(f"_row.{c}").alias(c) for c in payload])
         .select(pages.columns)
     )
-    extracted = deduped.withColumn("text", extract_text_expr(F.col("html"))).withColumn(
-        "text_sha256", F.sha2(F.col("text"), 256)
-    )
-    return {"deduped": deduped, "extracted": extracted}
+    return {"deduped": deduped, "extracted": with_extracted_text(deduped)}
 
 
 def write_pages_bucketed(

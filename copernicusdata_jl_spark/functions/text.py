@@ -4,7 +4,8 @@ scoring, token counting, winnowing fingerprints.
 The extractor is the engine's per-row invariant gate: byte-identical ``text``
 per ``url`` across runs/partitions/parallelism (BASELINE.json input hint).
 It is pure (no locale, wall-clock, or library-version dependence — a fixed
-regex pipeline), runs as an Arrow-batched pandas UDF, and has an
+regex pipeline), runs as a JVM codegen expression (:func:`extract_text_expr`)
+specified by the Python :func:`extract_text_py`, and has an
 independently-written ANSI-SQL twin (:func:`extract_text_sql`) so any SQL
 engine can oracle the digests.
 """
@@ -105,7 +106,7 @@ def extract_text_py(html: str) -> str:
     Edge trimming is explicitly ASCII-space-only (``strip(" ")``): Python's
     bare ``str.strip()`` also removes \\x0b and Unicode whitespace (NBSP …)
     that the collapse class leaves behind, while Spark ``trim()`` removes
-    only 0x20 — pinning both to ASCII space keeps the python/pandas/JVM
+    only 0x20 — pinning both to ASCII space keeps the Python/JVM/SQL
     paths byte-identical on real-world whitespace (see ADVICE r1)."""
     s = _RE_EXTRACT.sub(" ", html)
     for ent, ch in _ENTITIES:
@@ -113,45 +114,19 @@ def extract_text_py(html: str) -> str:
     return s.strip(" ")
 
 
-def extract_text_batch(html: pd.Series) -> pd.Series:
-    """Vectorized pandas twin (str accessor = C-loop over the batch).
-
-    Binary input decodes with errors="replace" (U+FFFD), matching the JVM
-    path's cast-to-string behavior on invalid UTF-8 rather than raising.
-    NOTE: exact FFFD *counts* for malformed multi-byte sequences can differ
-    between the JVM and Python decoders, so digest parity is guaranteed only
-    for valid-UTF-8 input; the JVM expression (jvm=True) is the canonical
-    digest path."""
-    s = html
-    if len(s) and isinstance(s.iloc[0], (bytes, bytearray)):
-        s = s.str.decode("utf-8", errors="replace")
-    s = s.astype("string")
-    s = s.str.replace(_RE_EXTRACT, " ", regex=True)
-    for ent, ch in _ENTITIES:
-        s = s.str.replace(ent, ch, regex=False)
-    return s.str.strip(" ")
-
-
-@F.pandas_udf(T.StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:
-    return extract_text_batch(html)
-
-
 def extract_text_expr(html: Column) -> Column:
     """JVM-side extractor twin: the same fixed regex pipeline as
     :func:`extract_text_py`, built from Catalyst ``regexp_replace`` /
     ``replace`` so it runs inside whole-stage codegen — no Arrow transfer,
-    no python workers. Byte-identical to the pandas kernel (asserted in
-    tests/test_text.py three ways: python spec == pandas batch == this
-    expression). This is the production path: on this host the Arrow
-    round-trip for ~3 KB pages costs more CPU than the extraction itself,
-    and at 10^12 docs keeping the hot loop in codegen removes the python
-    worker fleet entirely. The pandas kernel remains the specification and
-    the fallback for extractors that genuinely need Python.
+    no python workers. Byte-identical to the Python specification and the
+    DuckDB SQL twin (asserted in tests/test_text.py). It is the only
+    engine path: an Arrow round-trip for ~3 KB pages costs more CPU than
+    the extraction itself, and keeping the hot loop in codegen needs no
+    python workers.
 
     Accepts string or binary input (binary is decoded as UTF-8 first,
     matching the pages schema ``html:binary``). Parity contract: byte-
-    identical to the python/pandas kernels for valid-UTF-8 input — the tag
+    identical to the Python and SQL twins for valid-UTF-8 input — the tag
     boundary is an explicit ASCII lookahead and edge trimming is ASCII-space
     only on every path, so Unicode whitespace (NBSP, \\x0b, …) flows through
     all three identically. On INVALID UTF-8 bytes this JVM path is the
@@ -170,13 +145,11 @@ def extract_text_expr(html: Column) -> Column:
 
 
 def with_extracted_text(
-    df: DataFrame, html_col: str = "html", out_col: str = "text", jvm: bool = True
+    df: DataFrame, html_col: str = "html", out_col: str = "text"
 ) -> DataFrame:
-    """Attach extracted text + sha256 digest columns. ``jvm`` picks the
-    codegen expression extractor (default); ``jvm=False`` runs the
-    Arrow-batched pandas kernel (byte-identical output)."""
-    ext = extract_text_expr(F.col(html_col)) if jvm else extract_text_udf(F.col(html_col))
-    return df.withColumn(out_col, ext).withColumn(
+    """Attach extracted text (:func:`extract_text_expr`) + its sha256
+    digest column ``<out_col>_sha256``."""
+    return df.withColumn(out_col, extract_text_expr(F.col(html_col))).withColumn(
         f"{out_col}_sha256", F.sha2(F.col(out_col), 256)
     )
 

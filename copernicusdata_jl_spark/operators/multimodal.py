@@ -4,11 +4,10 @@ extensions).
 
 The Spark-side plumbing is real and tested — schema, partition-preserving
 mapInPandas, Arrow batch shapes, deterministic outputs. The *codec* layer is
-stubbed: real image/audio decoding needs PIL/ffmpeg which are not in this
-container, so ``decode_real`` raises NotImplementedError behind an
-import-try, and ``decode_fake`` is a deterministic pure-arithmetic stand-in
-(dimensions derived from byte length, features from byte prefixes) used by
-tests and the DuckDB oracle.
+a stand-in: real image/audio decoding needs PIL/ffmpeg, which are not
+installed, so ``fake_dims`` derives dimensions from byte length by pure
+arithmetic (features come from byte slices) — deterministic, and re-derived
+by the DuckDB oracle.
 
 Scale notes: media bytes never leave the executor — mapInPandas streams
 Arrow batches through Python without a shuffle; per-batch memory is bounded
@@ -50,24 +49,6 @@ def media_from_documents(docs: DataFrame) -> DataFrame:
     )
 
 
-def _try_real_decoder():
-    try:  # pragma: no cover - PIL absent in this container by design
-        from PIL import Image  # noqa: F401
-
-        return Image
-    except ImportError:
-        return None
-
-
-def decode_real(media: bytes, kind: str):  # pragma: no cover - gated stub
-    """Real codec path (PIL/ffmpeg); STUB — not available in this
-    environment. The mapInPandas plumbing below is identical either way."""
-    img = _try_real_decoder()
-    if img is None:
-        raise NotImplementedError("image/audio codecs not installed; use decode_fake")
-    raise NotImplementedError("real decode wiring lands when codecs are installable")
-
-
 def fake_dims(n_bytes: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """Deterministic stand-in dims from byte length (pure arithmetic so the
     SQL oracle re-derives them)."""
@@ -76,15 +57,13 @@ def fake_dims(n_bytes: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     return w, h
 
 
-def decode_media(df: DataFrame, n_features: int = 4, use_real: bool = False) -> DataFrame:
+def decode_media(df: DataFrame, n_features: int = 4) -> DataFrame:
     """media → per-item features via mapInPandas (no shuffle; Arrow batch
     in, Arrow batch out)."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             raw = pdf["media"]
-            if use_real:  # pragma: no cover
-                decode_real(raw.iloc[0], pdf["kind"].iloc[0])
             nb = raw.map(len).to_numpy(dtype=np.int64)
             w, h = fake_dims(nb)
             # features: mean byte value of k equal slices, scaled to [0,1]

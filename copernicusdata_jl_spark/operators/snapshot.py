@@ -254,10 +254,11 @@ def digest_first_wins(docs: "DataFrame", text_col: str = "text",
                       order_col: str = "doc_id",
                       digest_col: str = "_digest") -> "DataFrame":
     """Keep the min-``order_col`` row per content digest, digest attached.
-    The ONE definition of the table's content-dedup rule — shared by
-    ``SnapshotTable.dedup_append`` and the streaming ingest's batch twin
-    (streaming/ingest.batch_dedup_reference), so a digest or tie-break
-    change can never silently desync the parity tests (r5 review)."""
+    The ONE definition of the table's content-dedup rule — used by
+    ``SnapshotTable.dedup_append`` and, as the one-shot batch twin a
+    drained streaming ingest must equal, by tests/test_stream_ingest.py,
+    so a digest or tie-break change can never silently desync the parity
+    tests."""
     from pyspark.sql import Window
 
     w = Window.partitionBy(digest_col).orderBy(order_col)
@@ -333,6 +334,27 @@ class SnapshotTable:
 
     # -- commit / read -------------------------------------------------------
 
+    def _publish_manifest(self, next_doc, max_retries: int) -> int:
+        """The one manifest publish loop of ``commit`` and ``delete``:
+        ``next_doc(latest)`` builds the next manifest against the latest
+        version (raising aborts); it is written to a tmp file, fsynced and
+        published as ``v{doc["version"]}``. A version collision re-reads the
+        latest version and rebuilds (rebasing the file list); after
+        ``max_retries`` collisions it gives up."""
+        for _ in range(max_retries):
+            doc = next_doc(self.latest_version())
+            tmp = os.path.join(self._mdir(), f".tmp-{uuid.uuid4().hex}.json")
+            with open(tmp, "w") as f:
+                json.dump(doc, f)
+                f.flush()
+                os.fsync(f.fileno())
+            try:
+                self._publish(tmp, os.path.join(self._mdir(), f"v{doc['version']:08d}.json"))
+                return doc["version"]
+            except CommitConflict:
+                continue  # re-read latest, rebase, try N+1
+        raise CommitConflict(f"gave up after {max_retries} retries at {self.path}")
+
     def commit(self, df: DataFrame, run_id: str, max_retries: int = 10,
                replace: bool = False, expected_parent: int | None = None,
                bloom_cols: list[str] | None = None,
@@ -393,8 +415,8 @@ class SnapshotTable:
             built = _build_blooms(df.schema, df.sparkSession, ddir, eff_bloom)
             file_blooms = {f"data/{cid}/{b}": v for b, v in built.items()}
         new_fields = {f.name: f.dataType.json() for f in df.schema.fields}
-        for _ in range(max_retries):
-            latest = self.latest_version()
+
+        def next_doc(latest: int | None) -> dict:
             # expected_parent=-1 means "the read saw an EMPTY table" (the
             # guard must also catch a racing FIRST commit)
             if expected_parent is not None and latest != (
@@ -451,17 +473,9 @@ class SnapshotTable:
             # the old files' extra columns
             if latest is None or "schema" in parent_doc:
                 doc["schema"] = {**parent_schema, **new_fields}
-            tmp = os.path.join(self._mdir(), f".tmp-{uuid.uuid4().hex}.json")
-            with open(tmp, "w") as f:
-                json.dump(doc, f)
-                f.flush()
-                os.fsync(f.fileno())
-            try:
-                self._publish(tmp, os.path.join(self._mdir(), f"v{version:08d}.json"))
-                return version
-            except CommitConflict:
-                continue  # re-read latest, rebase file list, try N+1
-        raise CommitConflict(f"gave up after {max_retries} retries at {self.path}")
+            return doc
+
+        return self._publish_manifest(next_doc, max_retries)
 
     def delete(self, keys: DataFrame, run_id: str, max_retries: int = 10) -> int:
         """Merge-on-read row-level DELETE (Iceberg equality deletes): commit
@@ -488,8 +502,8 @@ class SnapshotTable:
         dfiles = sorted(
             f"data/{cid}/{f}" for f in os.listdir(ddir) if f.endswith(".parquet")
         )
-        for _ in range(max_retries):
-            latest = self.latest_version()
+
+        def next_doc(latest: int | None) -> dict:
             if latest is None:
                 raise ValueError("cannot delete from a table with no snapshot")
             parent_doc = self.manifest(latest)
@@ -515,17 +529,9 @@ class SnapshotTable:
                     {"files": dfiles, "key_cols": key_cols, "seq": version}
                 ],
             }
-            tmp = os.path.join(self._mdir(), f".tmp-{uuid.uuid4().hex}.json")
-            with open(tmp, "w") as f:
-                json.dump(doc, f)
-                f.flush()
-                os.fsync(f.fileno())
-            try:
-                self._publish(tmp, os.path.join(self._mdir(), f"v{version:08d}.json"))
-                return version
-            except CommitConflict:
-                continue
-        raise CommitConflict(f"gave up after {max_retries} retries at {self.path}")
+            return doc
+
+        return self._publish_manifest(next_doc, max_retries)
 
     def upsert(self, increment: DataFrame, key_cols: list[str],
                run_id: str = "upsert", max_retries: int = 10,

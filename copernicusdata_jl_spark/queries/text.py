@@ -110,7 +110,7 @@ FROM s GROUP BY 1 ORDER BY pred_lang
 
 
 def q_extract_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """☆ S13: Arrow-batched HTML extractor + sha256 digest; the oracle
+    """☆ S13: JVM codegen HTML extractor + sha256 digest; the oracle
     re-derives the text with an independent SQL regexp pipeline —
     byte-identical invariant (BASELINE.json input hint)."""
     d = load(spark, sf_dir, "documents").withColumn("html", F.expr(DOC_HTML_SQL))

@@ -215,20 +215,16 @@ class DataTree:
         mode: str = "error",
         zarr_format: int = 2,
         chunks: tuple[int, ...] | None = None,
-        distributed: bool = True,
     ) -> None:
         """S10 in the native format: write this tree as a Zarr group store
         (v2 default, ``zarr_format=3`` for a v3 store; see
         sources/zarr.write_zarr_datatree; data nodes must be zarr-shaped —
         idx_<dim> + value columns). Chunk objects are written by executor
-        tasks (``distributed=True``); the driver never materializes a full
-        array."""
+        tasks, so ``root`` must be reachable by executors; the driver never
+        materializes a full array."""
         from .zarr import write_zarr_datatree
 
-        write_zarr_datatree(
-            self, root, mode=mode, zarr_format=zarr_format,
-            chunks=chunks, distributed=distributed,
-        )
+        write_zarr_datatree(self, root, mode=mode, zarr_format=zarr_format, chunks=chunks)
 
     def to_zip(self, zpath: str, mode: str = "error") -> None:
         """S2/S10 zip twin (reference src/YAXTrees.jl:454-455 writes a

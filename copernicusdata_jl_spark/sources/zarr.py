@@ -1,16 +1,20 @@
-"""S2: native Zarr v2 store reader — from scratch, stdlib + NumPy only.
+"""S2/S10: native Zarr v2 and v3 store reader and writer — from scratch,
+stdlib + NumPy only.
 
 The reference's primary on-disk format is Zarr group trees
 (``open_zarr_datatree``, reference src/YAXTrees.jl:443-465; zip twin
 :454-455 via ``Zarr.ZipStore``). The ``zarr``/``numcodecs`` packages are
-not installable in this container, so this module implements the public
-Zarr v2 spec directly:
+not installable here, so this module implements the public Zarr specs
+directly:
 
 - store walk: ``.zgroup`` → group node, ``.zarray`` → array, ``.zattrs``
-  → attributes; directory stores and zip stores (both of the reference's
-  physical layouts);
-- chunk grid assembly: C/F order, edge-chunk overhang slicing, missing
-  chunk → ``fill_value``, ``.`` and ``/`` dimension separators;
+  → attributes (v3: one ``zarr.json`` per node); directory, zip and S3
+  stores, consolidated metadata for both formats;
+- one chunk layer that both read paths and every writer go through:
+  ``_array_meta`` (the one v2/v3 metadata normaliser and NULL-sentinel
+  rule), ``_chunk_key`` (v2 ``.``/``/`` keys, v3 ``c/…`` keys),
+  ``_read_chunk`` (hole → ``fill_value``, edge-chunk overhang slicing) and
+  ``_write_chunk``;
 - codecs from first principles: raw/zlib/gzip via stdlib, and a pure-
   Python **c-blosc container** decoder (16-byte header, per-block start
   offsets, per-block byte-unshuffle) with a pure-Python **LZ4 block**
@@ -33,15 +37,17 @@ Dataset. ``fill_value`` is normalized to NULL at scan with the original
 recorded as the node's ``missing_value`` property (reference
 src/YAXTrees.jl:370-375).
 
-Scale note: Zarr trees in the reference are product/granule scale (the
-100-element fixture, per-granule measurement arrays); the conversion
-materializes arrays driver-side and hands Spark a DataFrame per group.
-Web-scale bulk data lives in parquet/Iceberg tables — the zarr path is
-the ingest/front door, a one-time conversion, not the query hot path.
+Two read entry points: ``open_zarr_datatree`` assembles arrays
+driver-side (the only path for S3 stores and string dtypes; Zarr trees in
+the reference are product/granule scale), and ``scan_zarr_distributed``
+decodes chunks in executor tasks, so its memory stays bounded by the
+chunk volume. The one sink, ``write_zarr_datatree``, writes chunks from
+executor tasks.
 """
 
 from __future__ import annotations
 
+import base64
 import gzip
 import json
 import os
@@ -512,54 +518,6 @@ def _decode_filters(buf: bytes, filters: list[dict], dtype: np.dtype) -> bytes:
     return buf
 
 
-def read_zarr_array(store: _Store, key: str) -> tuple[np.ndarray, dict]:
-    """Assemble one Zarr v2 array → (ndarray, attrs). Missing chunks fill
-    with ``fill_value``; edge chunks store the full chunk shape and are
-    sliced to the overhang per the spec."""
-    meta = json.loads(store.read(f"{key}/.zarray" if key else ".zarray"))
-    if meta.get("zarr_format") != 2:
-        raise NotImplementedError(f"zarr_format {meta.get('zarr_format')} (only v2)")
-    dtype = np.dtype(meta["dtype"])
-    if dtype.kind not in "iufbSU":
-        raise NotImplementedError(f"dtype {dtype} not supported (numeric/bool/fixed-string only)")
-    shape, chunks = tuple(meta["shape"]), tuple(meta["chunks"])
-    order = meta.get("order", "C")
-    fill = meta.get("fill_value")
-    if fill is not None and dtype.kind == "S" and isinstance(fill, str):
-        import base64
-
-        fill = base64.b64decode(fill)  # v2 spec: |S fill_value is base64
-    sep = meta.get("dimension_separator", ".")
-    attrs_raw = store.read(f"{key}/.zattrs" if key else ".zattrs")
-    attrs = json.loads(attrs_raw) if attrs_raw else {}
-    # the spec's fill_value lives in .zarray; surface it to callers the way
-    # the reference rewrites it into a missing_value attribute at scan
-    # (src/YAXTrees.jl:370-375)
-    if fill is not None:
-        attrs.setdefault("_FillValue", fill)
-
-    if fill is None:
-        arr = np.zeros(shape, dtype=dtype)
-    else:
-        arr = np.full(shape, dtype.type(fill), dtype=dtype)
-    if 0 in shape:
-        return arr, attrs
-    grid = [range((s + c - 1) // c) for s, c in zip(shape, chunks)]
-    import itertools
-
-    for idx in itertools.product(*grid):
-        ckey = sep.join(str(i) for i in idx) if idx else "0"
-        raw = store.read(f"{key}/{ckey}" if key else ckey)
-        if raw is None:
-            continue  # hole -> fill_value
-        block = _decode_block_v2(raw, meta, dtype, chunks)
-        sel = tuple(
-            slice(i * c, min((i + 1) * c, s)) for i, c, s in zip(idx, chunks, shape)
-        )
-        arr[sel] = block[tuple(slice(0, sl.stop - sl.start) for sl in sel)]
-    return arr, attrs
-
-
 def _decode_block_v2(raw: bytes, meta: dict, dtype: np.dtype, chunks: tuple) -> np.ndarray:
     """Decode one v2 chunk payload → chunk-shaped ndarray. Shared by the
     driver-side assembler and the distributed scan (executor tasks)."""
@@ -715,63 +673,6 @@ def _v3_decode_chunk(raw: bytes, codecs: list[dict], dtype: np.dtype, chunks: tu
     return arr.astype(dtype, copy=False)
 
 
-def read_zarr_array_v3(store: _Store, key: str, meta: dict) -> tuple[np.ndarray, dict]:
-    """Assemble one Zarr v3 array → (ndarray, attrs). Same grid/hole/edge
-    semantics as v2; metadata comes from the node's ``zarr.json``
-    (``dimension_names`` maps onto the v2 ``_ARRAY_DIMENSIONS``
-    convention so the tree layer is format-agnostic)."""
-    name = meta.get("data_type")
-    if name not in _V3_DTYPES:
-        raise NotImplementedError(f"zarr v3 data_type {name!r} not supported")
-    dtype = np.dtype(_V3_DTYPES[name])
-    cg = meta.get("chunk_grid") or {}
-    if cg.get("name") != "regular":
-        raise NotImplementedError(f"zarr v3 chunk_grid {cg.get('name')!r} (only regular)")
-    shape = tuple(meta["shape"])
-    chunks = tuple(cg["configuration"]["chunk_shape"])
-    cke = meta.get("chunk_key_encoding") or {"name": "default"}
-    sep = (cke.get("configuration") or {}).get("separator", "/" if cke.get("name") != "v2" else ".")
-    v2_keys = cke.get("name") == "v2"
-    fill = _v3_fill_value(meta.get("fill_value"), dtype)
-    attrs = dict(meta.get("attributes") or {})
-    dims = meta.get("dimension_names")
-    if dims:
-        attrs.setdefault("_ARRAY_DIMENSIONS", list(dims))
-    # _cd_no_missing: the sink's marker that fill_value is only the spec-
-    # required hole value, NOT a missing sentinel (v3 forbids null fills)
-    no_missing = bool(attrs.pop("_cd_no_missing", False))
-    if fill is not None and not no_missing:
-        attrs.setdefault("_FillValue", fill)
-
-    arr = (
-        np.zeros(shape, dtype=dtype)
-        if fill is None
-        else np.full(shape, dtype.type(fill), dtype=dtype)
-    )
-    if 0 in shape:
-        return arr, attrs
-    import itertools
-
-    # fail fast on an unsupported codec pipeline BEFORE any chunk read —
-    # an all-hole array would otherwise return fill data without the error
-    _v3_shard_index(meta.get("codecs") or [])
-    grid = [range((s + c - 1) // c) for s, c in zip(shape, chunks)]
-    for idx in itertools.product(*grid):
-        if v2_keys:
-            ckey = sep.join(str(i) for i in idx) if idx else "0"
-        else:
-            ckey = "c" + "".join(f"{sep}{i}" for i in idx) if idx else "c"
-        raw = store.read(f"{key}/{ckey}" if key else ckey)
-        if raw is None:
-            continue  # hole -> fill_value
-        block = _decode_block_v3(raw, meta, dtype, chunks, fill)
-        sel = tuple(
-            slice(i * c, min((i + 1) * c, s)) for i, c, s in zip(idx, chunks, shape)
-        )
-        arr[sel] = block[tuple(slice(0, sl.stop - sl.start) for sl in sel)]
-    return arr, attrs
-
-
 def _v3_shard_index(codecs: list) -> int | None:
     """Position of ``sharding_indexed`` in a v3 codec pipeline (or None),
     validating the only supported placement — the ONE source of truth for
@@ -800,6 +701,139 @@ def _decode_block_v3(raw: bytes, meta: dict, dtype: np.dtype, chunks: tuple, fil
             raw, codecs[0].get("configuration") or {}, dtype, chunks, fill
         )
     return _v3_decode_chunk(raw, codecs, dtype, chunks)
+
+
+# ---------------------------------------------------------------------------
+# the chunk layer: one metadata rule, one chunk key, one block reader — the
+# driver assembler, the executor scan and every writer go through it
+# ---------------------------------------------------------------------------
+
+
+def _sub(key: str, name: str) -> str:
+    return f"{key}/{name}" if key else name
+
+
+def _chunk_grid(shape: tuple, chunks: tuple) -> tuple:
+    """Chunks per dimension (the last one may overhang the array edge)."""
+    return tuple((s + c - 1) // c for s, c in zip(shape, chunks))
+
+
+def _chunk_extent(coords: tuple, chunks: tuple, shape: tuple) -> tuple:
+    """In-bounds shape of chunk ``coords``."""
+    return tuple(min(c, s - k * c) for k, c, s in zip(coords, chunks, shape))
+
+
+def _chunk_key(coords: tuple, sep: str, v2_keys: bool) -> str:
+    """Store key of chunk ``coords`` relative to its array: v2
+    ``sep``-joined (``"0"`` for a 0-d array), v3 default ``c{sep}i…``
+    (``"c"``)."""
+    if v2_keys:
+        return sep.join(str(i) for i in coords) or "0"
+    return "c" + "".join(f"{sep}{i}" for i in coords)
+
+
+def _node_type(store: _Store, key: str) -> str | None:
+    """``"array"``, ``"group"`` or None for the v2 or v3 node at ``key``."""
+    zj = store.read(_sub(key, "zarr.json"))
+    if zj is not None:
+        return json.loads(zj).get("node_type")
+    if store.read(_sub(key, ".zarray")) is not None:
+        return "array"
+    return "group" if store.read(_sub(key, ".zgroup")) is not None else None
+
+
+def _array_meta(store: _Store, key: str) -> dict:
+    """ONE array's metadata, v2 (``.zarray`` + ``.zattrs``) or v3
+    (``zarr.json``), normalised for both read paths: ``dtype``, ``shape``,
+    ``chunks``, the chunk-key scheme, the hole value ``fill`` and the
+    caller-visible ``attrs`` (v3 ``dimension_names`` → ``_ARRAY_DIMENSIONS``,
+    so the tree layer is format-agnostic). Every refusal happens here,
+    before any chunk is read.
+
+    The NULL sentinel rule, for both read paths: the explicit
+    ``_FillValue`` attribute, else the spec ``fill_value`` (unless the
+    sink's ``_cd_no_missing`` marker says it is only the hole value v3
+    requires), else the ``missing_value`` attribute. The result is
+    ``attrs["_FillValue"]`` — the reference likewise rewrites the fill into
+    a missing_value attribute at scan (src/YAXTrees.jl:370-375)."""
+    zj = store.read(_sub(key, "zarr.json"))
+    if zj is not None:
+        meta = json.loads(zj)
+        name = meta.get("data_type")
+        if name not in _V3_DTYPES:
+            raise NotImplementedError(f"zarr v3 data_type {name!r} not supported")
+        dtype = np.dtype(_V3_DTYPES[name])
+        cg = meta.get("chunk_grid") or {}
+        if cg.get("name") != "regular":
+            raise NotImplementedError(f"zarr v3 chunk_grid {cg.get('name')!r} (only regular)")
+        # fail fast on an unsupported codec pipeline: an all-hole array
+        # would otherwise return fill data without the error
+        _v3_shard_index(meta.get("codecs") or [])
+        chunks = tuple(cg["configuration"]["chunk_shape"])
+        cke = meta.get("chunk_key_encoding") or {"name": "default"}
+        v2_keys = cke.get("name") == "v2"
+        sep = (cke.get("configuration") or {}).get("separator", "." if v2_keys else "/")
+        fill = _v3_fill_value(meta.get("fill_value"), dtype)
+        attrs = dict(meta.get("attributes") or {})
+        if meta.get("dimension_names"):
+            attrs.setdefault("_ARRAY_DIMENSIONS", list(meta["dimension_names"]))
+    else:
+        raw = store.read(_sub(key, ".zarray"))
+        if raw is None:
+            raise FileNotFoundError(f"{key!r}: no .zarray / zarr.json")
+        meta = json.loads(raw)
+        if meta.get("zarr_format") != 2:
+            raise NotImplementedError(f"zarr_format {meta.get('zarr_format')} (only v2)")
+        dtype = np.dtype(meta["dtype"])
+        if dtype.kind not in "iufbSU":
+            raise NotImplementedError(f"dtype {dtype} not supported (numeric/bool/fixed-string only)")
+        chunks = tuple(meta["chunks"])
+        v2_keys, sep = True, meta.get("dimension_separator", ".")
+        fill = meta.get("fill_value")
+        if fill is not None and dtype.kind == "S" and isinstance(fill, str):
+            fill = base64.b64decode(fill)  # v2 spec: |S fill_value is base64
+        attrs_raw = store.read(_sub(key, ".zattrs"))
+        attrs = json.loads(attrs_raw) if attrs_raw else {}
+    no_missing = bool(attrs.pop("_cd_no_missing", False))
+    if fill is not None and not no_missing:
+        attrs.setdefault("_FillValue", fill)
+    sent = attrs.get("_FillValue", attrs.get("missing_value"))
+    if sent is not None:
+        attrs["_FillValue"] = sent
+    return {
+        "version": 2 if zj is None else 3, "meta": meta, "dtype": dtype,
+        "shape": tuple(meta["shape"]), "chunks": chunks, "sep": sep,
+        "v2_keys": v2_keys, "fill": fill, "attrs": attrs,
+    }
+
+
+def _read_chunk(store: _Store, key: str, m: dict, coords: tuple) -> np.ndarray:
+    """The in-bounds block of chunk ``coords`` of the array at ``key``
+    (``m`` from :func:`_array_meta`): ``fill`` for a hole, else the decoded
+    chunk sliced to the edge overhang (edge chunks store the full chunk
+    shape, per the spec)."""
+    dtype, chunks, fill = m["dtype"], m["chunks"], m["fill"]
+    inb = _chunk_extent(coords, chunks, m["shape"])
+    raw = store.read(_sub(key, _chunk_key(coords, m["sep"], m["v2_keys"])))
+    if raw is None:
+        return np.zeros(inb, dtype) if fill is None else np.full(inb, dtype.type(fill), dtype)
+    if m["version"] == 2:
+        block = _decode_block_v2(raw, m["meta"], dtype, chunks)
+    else:
+        block = _decode_block_v3(raw, m["meta"], dtype, chunks, fill)
+    return block[tuple(slice(0, n) for n in inb)]
+
+
+def read_zarr_array(store: _Store, key: str) -> tuple[np.ndarray, dict]:
+    """Assemble one Zarr array, v2 or v3 → (ndarray, attrs), chunk by
+    chunk through :func:`_read_chunk`; ``attrs["_FillValue"]`` is the NULL
+    sentinel (see :func:`_array_meta`)."""
+    m = _array_meta(store, key)
+    arr = np.empty(m["shape"], m["dtype"])
+    for coords in np.ndindex(*_chunk_grid(m["shape"], m["chunks"])):
+        block = _read_chunk(store, key, m, coords)
+        arr[tuple(slice(k * c, k * c + n) for k, c, n in zip(coords, m["chunks"], block.shape))] = block
+    return arr, m["attrs"]
 
 
 def _group_dataframe(spark: SparkSession, arrays: dict[str, tuple[np.ndarray, dict]]):
@@ -857,64 +891,6 @@ def _spark_type_for_np(dt: np.dtype) -> tuple[str, str]:
     raise NotImplementedError(f"dtype {dt} not supported by the distributed scan")
 
 
-def _scan_array_meta(store: _Store, key: str) -> dict:
-    """Metadata for ONE array (v2 or v3), normalized for the distributed
-    scan: shape/chunks/dtype/fill/dims plus what a worker needs to build
-    chunk keys and decode payloads. Fill semantics mirror the driver-side
-    assemblers (v2 base64 |S fills; v3 _cd_no_missing marker)."""
-    zj = store.read(f"{key}/zarr.json")
-    if zj:
-        meta = json.loads(zj)
-        name = meta.get("data_type")
-        if name not in _V3_DTYPES:
-            raise NotImplementedError(f"zarr v3 data_type {name!r} not supported")
-        dtype = np.dtype(_V3_DTYPES[name])
-        cg = meta.get("chunk_grid") or {}
-        if cg.get("name") != "regular":
-            raise NotImplementedError(f"zarr v3 chunk_grid {cg.get('name')!r}")
-        cke = meta.get("chunk_key_encoding") or {"name": "default"}
-        sep = (cke.get("configuration") or {}).get(
-            "separator", "/" if cke.get("name") != "v2" else "."
-        )
-        attrs = dict(meta.get("attributes") or {})
-        no_missing = bool(attrs.pop("_cd_no_missing", False))
-        fill = _v3_fill_value(meta.get("fill_value"), dtype)
-        # sentinel parity with the driver-side assembler: an EXPLICIT
-        # _FillValue/missing_value attribute wins; else the spec
-        # fill_value, unless _cd_no_missing marks it as padding-only
-        att_fill = attrs.get("_FillValue", attrs.get("missing_value"))
-        sent = att_fill if att_fill is not None else (None if no_missing else fill)
-        return {
-            "version": 3, "meta": meta, "dtype": dtype,
-            "shape": tuple(meta["shape"]),
-            "chunks": tuple(cg["configuration"]["chunk_shape"]),
-            "sep": sep, "v2_keys": cke.get("name") == "v2",
-            "fill": fill, "sent": sent, "sentinel": sent is not None,
-            "dims": list(meta.get("dimension_names") or []) or None,
-        }
-    raw = store.read(f"{key}/.zarray")
-    if raw is None:
-        raise FileNotFoundError(f"{key}: no .zarray / zarr.json")
-    meta = json.loads(raw)
-    dtype = np.dtype(meta["dtype"])
-    fill = meta.get("fill_value")
-    attrs_raw = store.read(f"{key}/.zattrs")
-    attrs = json.loads(attrs_raw) if attrs_raw else {}
-    # an externally-written store (xarray NetCDF conventions) may declare
-    # its missing sentinel in .zattrs while .zarray fill_value is null —
-    # the driver-side scan honors that, so the distributed scan must too
-    # (r5 review). `fill` keeps padding absent chunks; `sent` nulls values.
-    att_fill = attrs.get("_FillValue", attrs.get("missing_value"))
-    sent = att_fill if att_fill is not None else fill
-    return {
-        "version": 2, "meta": meta, "dtype": dtype,
-        "shape": tuple(meta["shape"]), "chunks": tuple(meta["chunks"]),
-        "sep": meta.get("dimension_separator", "."), "v2_keys": True,
-        "fill": fill, "sent": sent, "sentinel": sent is not None,
-        "dims": attrs.get("_ARRAY_DIMENSIONS"),
-    }
-
-
 def scan_zarr_distributed(
     spark: SparkSession,
     path: str,
@@ -924,13 +900,13 @@ def scan_zarr_distributed(
     """Chunk-parallel Zarr scan → DataFrame: the read-side mirror of the
     chunk-parallel sink. The driver reads ONLY per-array metadata and plans
     over a ``spark.range`` of linear chunk ids; executor tasks open the
-    store themselves, read + decode their chunks with the same pure-Python
-    codec machinery as the driver-side assembler (`_decode_block_v2/_v3` —
-    blosc/zlib/gzip/delta/shuffle, v3 codec pipelines incl.
-    ``sharding_indexed``), and emit ``(idx_<dim>..., value...)`` rows with
-    fill sentinels normalized to NULL. Neither driver nor any one task ever
-    materializes a full array — per-task memory is bounded by the chunk
-    volume, so the scan absorbs a 100x granule the same way the sink does.
+    store themselves, read + decode their chunks with the same block reader
+    as the driver-side assembler (:func:`_read_chunk` — blosc/zlib/gzip/
+    delta/shuffle, v3 codec pipelines incl. ``sharding_indexed``), and emit
+    ``(idx_<dim>..., value...)`` rows with fill sentinels normalized to
+    NULL. Neither driver nor any one task ever materializes a full array —
+    per-task memory is bounded by the chunk volume, so the scan absorbs a
+    100x granule the same way the sink does.
 
     ``variables`` must be co-chunked (same dims, shape AND chunk grid —
     they are, per group, in the reference's products); default is every
@@ -939,8 +915,9 @@ def scan_zarr_distributed(
     ``open_zarr_datatree(client=...)`` — executor-side object-store reads
     need per-worker credentials, the s3a seam documented in COVERAGE.md).
 
-    Row parity with the driver-side scan (`open_zarr_datatree` node
-    frames) is pinned by tests/test_zarr.py."""
+    Rows equal the driver-side scan's (`open_zarr_datatree` node frames):
+    both take metadata and the NULL sentinel from :func:`_array_meta` and
+    blocks from :func:`_read_chunk`; tests/test_zarr.py pins the parity."""
     if path.startswith("s3://"):
         raise NotImplementedError(
             "distributed zarr scan reads stores from executors; use the "
@@ -953,16 +930,10 @@ def scan_zarr_distributed(
     for entry in sorted(store.listdir(group)):
         if entry in _META_KEYS:
             continue
-        key = f"{group}/{entry}" if group else entry
-        child_zj = store.read(f"{key}/zarr.json")
-        is_array = store.read(f"{key}/.zarray") is not None or (
-            child_zj is not None and json.loads(child_zj).get("node_type") == "array"
-        )
-        if not is_array:
-            continue
         if variables is not None and entry not in variables:
             continue
-        metas[entry] = _scan_array_meta(store, key)
+        if _node_type(store, _sub(group, entry)) == "array":
+            metas[entry] = _array_meta(store, _sub(group, entry))
     if variables:
         missing = [v for v in variables if v not in metas]
         if missing:
@@ -972,7 +943,7 @@ def scan_zarr_distributed(
 
     sigs: dict[tuple, list[str]] = {}
     for name, m in metas.items():
-        dims = tuple(m["dims"] or [f"dim_{i}" for i in range(len(m["shape"]))])
+        dims = tuple(m["attrs"].get("_ARRAY_DIMENSIONS") or [f"dim_{i}" for i in range(len(m["shape"]))])
         sigs.setdefault((dims, m["shape"], m["chunks"]), []).append(name)
     if variables is None:
         sig = sorted(sigs)[0]
@@ -985,30 +956,11 @@ def scan_zarr_distributed(
         sig = next(iter(sigs))
     dims, shape, chunks = sig
     names = sorted(metas)
-
-    fields = [f"idx_{d} long" for d in dims]
-    for n in names:
-        st, _pd_t = _spark_type_for_np(metas[n]["dtype"])
-        fields.append(f"{n} {st}")
-    schema = ", ".join(fields)
-
-    grid = tuple((s + c - 1) // c for s, c in zip(shape, chunks))
-    nchunks = int(np.prod(grid)) if grid else 1
+    types = {n: _spark_type_for_np(metas[n]["dtype"]) for n in names}
+    schema = ", ".join([f"idx_{d} long" for d in dims] + [f"{n} {types[n][0]}" for n in names])
     if 0 in shape:
         return spark.createDataFrame([], schema)
-
-    # what the workers need, all metadata-scale
-    specs = {
-        n: {
-            "key": f"{group}/{n}" if group else n,
-            "version": m["version"], "meta": m["meta"],
-            "dtype_str": m["dtype"].str, "fill": m["fill"],
-            "sent": m["sent"], "sentinel": m["sentinel"],
-            "sep": m["sep"], "v2_keys": m["v2_keys"],
-            "pd_type": _spark_type_for_np(m["dtype"])[1],
-        }
-        for n, m in metas.items()
-    }
+    grid = _chunk_grid(shape, chunks)
     store_desc = ("zip" if is_zip else "dir", path)
 
     def scan_chunks(batches):
@@ -1019,46 +971,27 @@ def scan_zarr_distributed(
         st = Z._ZipStore(store_desc[1]) if store_desc[0] == "zip" else Z._DirStore(store_desc[1])
         for pdf in batches:
             for lin in pdf["id"].tolist():
-                coords = []
-                rem = int(lin)
-                for g in reversed(grid):
-                    coords.append(rem % g)
-                    rem //= g
-                coords = tuple(reversed(coords))
-                origin = tuple(k * c for k, c in zip(coords, chunks))
-                inb = tuple(min(c, s - o) for c, s, o in zip(chunks, shape, origin))
+                coords = tuple(int(k) for k in np.unravel_index(lin, grid))
+                blocks = {n: Z._read_chunk(st, Z._sub(group, n), metas[n], coords) for n in names}
                 mesh = np.meshgrid(
-                    *[np.arange(o, o + n_, dtype=np.int64) for o, n_ in zip(origin, inb)],
+                    *[np.arange(k * c, k * c + n_, dtype=np.int64)
+                      for k, c, n_ in zip(coords, chunks, blocks[names[0]].shape)],
                     indexing="ij",
                 )
                 cols = {f"idx_{d}": m.ravel() for d, m in zip(dims, mesh)}
                 for n in names:
-                    sp = specs[n]
-                    dt = np.dtype(sp["dtype_str"])
-                    if sp["v2_keys"]:
-                        ckey = sp["sep"].join(str(i) for i in coords) if coords else "0"
-                    else:
-                        ckey = "c" + "".join(f"{sp['sep']}{i}" for i in coords) if coords else "c"
-                    raw = st.read(f"{sp['key']}/{ckey}")
-                    fill = sp["fill"]
-                    if raw is None:
-                        base = dt.type(fill) if fill is not None else dt.type(0)
-                        block = np.full(chunks, base, dtype=dt)
-                    elif sp["version"] == 2:
-                        block = Z._decode_block_v2(raw, sp["meta"], dt, chunks)
-                    else:
-                        block = Z._decode_block_v3(raw, sp["meta"], dt, chunks, fill)
-                    vals = block[tuple(slice(0, n_) for n_ in inb)].ravel()
-                    if sp["sentinel"]:
-                        f = dt.type(sp["sent"])
-                        mask = np.isnan(vals) if f != f else vals == f
-                        s = pd.array(vals, dtype=sp["pd_type"])
-                        s[mask] = pd.NA
-                        cols[n] = s
-                    else:
+                    vals = blocks[n].ravel()
+                    sent = metas[n]["attrs"].get("_FillValue")
+                    if sent is None:
                         cols[n] = vals
+                        continue
+                    f = vals.dtype.type(sent)
+                    s = pd.array(vals, dtype=types[n][1])
+                    s[np.isnan(vals) if f != f else vals == f] = pd.NA
+                    cols[n] = s
                 yield pd.DataFrame(cols)
 
+    nchunks = int(np.prod(grid))
     par = spark.sparkContext.defaultParallelism
     rng = spark.range(nchunks, numPartitions=min(nchunks, par))
     return rng.mapInPandas(scan_chunks, schema)
@@ -1112,10 +1045,10 @@ def open_zarr_datatree(
     tree = DataTree(name or base or "root")
 
     def rec(key: str, node: DataTree) -> None:
-        attrs_raw = store.read(f"{key}/.zattrs" if key else ".zattrs")
+        attrs_raw = store.read(_sub(key, ".zattrs"))
         if attrs_raw:
             node.properties.update(json.loads(attrs_raw))
-        zj_raw = store.read(f"{key}/zarr.json" if key else "zarr.json")
+        zj_raw = store.read(_sub(key, "zarr.json"))
         if zj_raw:  # v3 group: attributes live inline in zarr.json
             node.properties.update(json.loads(zj_raw).get("attributes") or {})
         arrays: dict[str, tuple[np.ndarray, dict]] = {}
@@ -1123,28 +1056,19 @@ def open_zarr_datatree(
         for entry in store.listdir(key):
             if entry in _META_KEYS:
                 continue
-            child_key = f"{key}/{entry}" if key else entry
-            child_zj = store.read(f"{child_key}/zarr.json")
-            child_meta = json.loads(child_zj) if child_zj else None
-            is_array = store.read(f"{child_key}/.zarray") is not None or (
-                child_meta is not None and child_meta.get("node_type") == "array"
-            )
-            if is_array:
+            child_key = _sub(key, entry)
+            kind = _node_type(store, child_key)
+            if kind == "array":
                 if group is None or group in node.path:
-                    if child_meta is not None and child_meta.get("node_type") == "array":
-                        arr, attrs = read_zarr_array_v3(store, child_key, child_meta)
-                    else:
-                        arr, attrs = read_zarr_array(store, child_key)
+                    arr, attrs = read_zarr_array(store, child_key)
                     arrays[entry] = (arr, attrs)
-                    fill = attrs.get("_FillValue", attrs.get("missing_value"))
+                    fill = attrs.get("_FillValue")
                     if fill is not None:
                         # per-variable, like the reference's per-array
                         # missing_value attribute (arrays merge into one
                         # frame here, so the node keeps a var -> fill map)
                         node.properties.setdefault("missing_value", {})[entry] = fill
-            elif store.read(f"{child_key}/.zgroup") is not None or (
-                child_meta is not None and child_meta.get("node_type") == "group"
-            ):
+            elif kind == "group":
                 subgroups.append(entry)
         if arrays:
             frames = _group_dataframe(spark, arrays)
@@ -1155,7 +1079,7 @@ def open_zarr_datatree(
                 # co-dimensioned)
                 node.add_child("_".join(members), data=extra)
         for entry in subgroups:
-            rec(f"{key}/{entry}" if key else entry, node.add_child(entry))
+            rec(_sub(key, entry), node.add_child(entry))
 
     rec("", tree)
     return tree
@@ -1274,6 +1198,28 @@ def _v3_store_chunk_payload(block: np.ndarray, inner: tuple[int, ...] | None) ->
     return b"".join(parts) + idx_body + struct.pack("<I", crc32c(idx_body))
 
 
+def _write_chunk(
+    d: str, coords: tuple, view: np.ndarray, chunks: tuple, pad, v3: bool, inner
+) -> None:
+    """Pad ``view`` — the in-bounds region of chunk ``coords`` — to the
+    chunk shape with ``pad`` (zeros when None), encode it (v3: little-endian,
+    ``inner`` chunks for ``sharding_indexed``) and write it under the array
+    directory ``d``: the one chunk writer of :func:`write_zarr_array`,
+    :func:`write_zarr_array_v3` and the datatree sink, so their bytes agree
+    by construction."""
+    block = np.zeros(chunks, view.dtype) if pad is None else np.full(chunks, pad, view.dtype)
+    block[tuple(slice(0, s) for s in view.shape)] = view
+    if v3:
+        payload = _v3_store_chunk_payload(block.astype(block.dtype.newbyteorder("<"), copy=False), inner)
+        path = os.path.join(d, _chunk_key(coords, "/", False))
+    else:
+        payload = _v2_chunk_bytes(block)
+        path = os.path.join(d, _chunk_key(coords, ".", True))
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    with open(path, "wb") as f:
+        f.write(payload)
+
+
 def write_zarr_array(
     root: str,
     name: str,
@@ -1286,19 +1232,12 @@ def write_zarr_array(
     spec-compliant store any zarr implementation opens. Used for
     round-trip tests and local fixtures (the production sink stays
     parquet/Iceberg, sources/datatree.to_parquet)."""
-    import itertools
-
     chunks = chunks or arr.shape or (1,)
     d = os.path.join(root, name)
     _v2_write_array_meta(d, arr.shape, chunks, arr.dtype.str, fill_value, attrs)
-    grid = [range((s + c - 1) // c) for s, c in zip(arr.shape, chunks)]
-    for idx in itertools.product(*grid):
+    for idx in np.ndindex(*_chunk_grid(arr.shape, chunks)):
         sel = tuple(slice(i * c, (i + 1) * c) for i, c in zip(idx, chunks))
-        block = np.zeros(chunks, dtype=arr.dtype)
-        view = arr[sel]
-        block[tuple(slice(0, s) for s in view.shape)] = view
-        with open(os.path.join(d, ".".join(str(i) for i in idx) or "0"), "wb") as f:
-            f.write(_v2_chunk_bytes(block))
+        _write_chunk(d, idx, arr[sel], chunks, None, False, None)
 
 
 def write_zarr_group(root: str) -> None:
@@ -1335,8 +1274,6 @@ def write_zarr_array_v3(
     inner chunks (bytes+gzip) plus a (bytes+crc32c) uint64 offset/nbytes
     index at the end. The object-store-friendly v3 layout: inner-chunk
     random access with O(shard) keys instead of O(chunk)."""
-    import itertools
-
     chunks = chunks or arr.shape or (1,)
     if shards is not None:
         if any(s % c for s, c in zip(shards, chunks)):
@@ -1344,29 +1281,15 @@ def write_zarr_array_v3(
         store_chunks = tuple(shards)
     else:
         store_chunks = tuple(chunks)
+    inner = None if shards is None else tuple(chunks)
     d = os.path.join(root, name)
     _v3_write_array_meta(
-        d, arr.shape, store_chunks, arr.dtype.name, fill_value, attrs, dims,
-        inner_chunks=None if shards is None else tuple(chunks),
+        d, arr.shape, store_chunks, arr.dtype.name, fill_value, attrs, dims, inner_chunks=inner
     )
-    le = arr.astype(arr.dtype.newbyteorder("<"), copy=False)
     pad = _v3_fill_value(fill_value, arr.dtype)  # "NaN" etc → numpy scalar
-
-    def padded_block(sel_shape: tuple, view: np.ndarray, bshape: tuple) -> np.ndarray:
-        block = np.full(bshape, pad if pad is not None else 0, dtype=le.dtype)
-        block[tuple(slice(0, s) for s in view.shape)] = view
-        return block
-
-    grid = [range((s + c - 1) // c) for s, c in zip(arr.shape, store_chunks)]
-    for idx in itertools.product(*grid):
+    for idx in np.ndindex(*_chunk_grid(arr.shape, store_chunks)):
         sel = tuple(slice(i * c, (i + 1) * c) for i, c in zip(idx, store_chunks))
-        view = le[sel]
-        block = padded_block(sel, view, store_chunks)
-        payload = _v3_store_chunk_payload(block, None if shards is None else chunks)
-        ckey = "c" + "".join(f"/{i}" for i in idx) if idx else "c"
-        os.makedirs(os.path.dirname(os.path.join(d, ckey)), exist_ok=True)
-        with open(os.path.join(d, ckey), "wb") as f:
-            f.write(payload)
+        _write_chunk(d, idx, arr[sel], store_chunks, pad, True, inner)
 
 
 _SPARK_TO_NP = {
@@ -1375,65 +1298,13 @@ _SPARK_TO_NP = {
 }
 
 
-def _resolve_node_fills(val_cols, types, fills, has_null, node_path: str) -> dict:
-    """Per value column: (numpy dtype, fill scalar or None). The single
-    fill-resolution rule shared by the driver-side and distributed writers:
-    a recorded ``missing_value`` sentinel wins; NULLs without a sentinel are
-    only representable for float columns (as NaN) and raise otherwise."""
-    out = {}
-    for col in val_cols:
-        dt = np.dtype(_SPARK_TO_NP.get(types[col], "<f8"))
-        fill = fills.get(col)
-        if fill is None and has_null[col]:
-            if dt.kind != "f":
-                raise ValueError(
-                    f"{node_path}/{col}: NULLs but no missing_value sentinel recorded"
-                )
-            fill = float("nan")
-        out[col] = (dt, fill)
-    return out
-
-
-def _build_chunk_block(
-    coords: tuple, ch: tuple, shape: tuple, dt: np.dtype, fill, v3: bool
-) -> np.ndarray:
-    """Materialize one chunk block pre-scatter, matching the driver-side
-    writers bit-for-bit: v2 pads out-of-bounds cells with raw zeros (the
-    driver slices a base-filled array into zero blocks); v3 pads with the
-    fill value everywhere."""
-    base = dt.type(fill) if fill is not None else dt.type(0)
-    if v3:
-        return np.full(ch, base, dtype=dt)
-    block = np.zeros(ch, dtype=dt)
-    origin = tuple(k * c for k, c in zip(coords, ch))
-    inb = tuple(slice(0, max(0, min(c, s - o))) for c, s, o in zip(ch, shape, origin))
-    block[inb] = base
-    return block
-
-
-def _write_chunk_file(d: str, col: str, coords: tuple, block: np.ndarray, v3: bool) -> None:
-    """Encode + write one chunk object (executor task or driver backfill —
-    same bytes either way via the shared encoders)."""
-    if v3:
-        le = block.astype(block.dtype.newbyteorder("<"), copy=False)
-        payload = _v3_store_chunk_payload(le, None)
-        ckey = "c" + "".join(f"/{i}" for i in coords) if coords else "c"
-    else:
-        payload = _v2_chunk_bytes(block)
-        ckey = ".".join(str(i) for i in coords) or "0"
-    path = os.path.join(d, col, ckey)
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    with open(path, "wb") as f:
-        f.write(payload)
-
-
 def _write_col_meta(
     d: str, col: str, shape: tuple, ch: tuple, dt: np.dtype, fill, dims: list[str], v3: bool
 ) -> None:
-    """The datatree sink's per-column metadata policy, shared by both
-    writers: v3 REQUIRES a fill_value, so a no-sentinel column writes a
-    spec-valid zero marked ``_cd_no_missing`` (reads must not NULL
-    legitimate zeros); v2 writes JSON null for no-sentinel and NaN fills."""
+    """The datatree sink's per-column metadata policy: v3 REQUIRES a
+    fill_value, so a no-sentinel column writes a spec-valid zero marked
+    ``_cd_no_missing`` (reads must not NULL legitimate zeros); v2 writes
+    JSON null for no-sentinel and NaN fills."""
     ad = os.path.join(d, col)
     if v3:
         if fill is None:
@@ -1452,23 +1323,25 @@ def _write_col_meta(
         )
 
 
-def _write_node_arrays_distributed(
+def _write_node_arrays(
     df, d: str, idx_cols: list[str], val_cols: list[str], dims: list[str],
     fills: dict, types: dict, v3: bool, chunks: tuple | None, node_path: str,
 ) -> None:
-    """Chunk-parallel zarr sink (VERDICT r4 #4): instead of materializing
-    the node's array driver-side (``df.toPandas()``), group rows by chunk
-    coordinates — the groupBy IS the chunk-grid repartition — and let each
-    task scatter its rows into a chunk block and write that chunk's objects
-    for every variable directly into the store. The driver sees only
-    (a) one agg row (shape + per-column null flags), (b) the written chunk
-    coordinate list, and (c) the all-fill chunks it backfills for byte
-    parity with the driver-side path; it writes array metadata LAST, so a
-    store is never openable before its chunks exist. At cluster scale the
-    store root is a shared filesystem / object store — the same contract as
-    the reference's to_zarr target (src/YAXTrees.jl:748-773)."""
-    import itertools
+    """Chunk-parallel zarr sink for one data node: rows are grouped by
+    chunk coordinates — the groupBy IS the chunk-grid repartition — and
+    each task scatters its rows into the chunk's in-bounds region and
+    writes that chunk for every variable straight into the store. The
+    driver sees only (a) one agg row (shape + per-column null flags),
+    (b) the written chunk coordinate list and (c) the chunks no row landed
+    in, which it writes all-fill; it writes array metadata LAST, so a store
+    is never openable before its chunks exist.
 
+    Per value column the fill is the recorded ``missing_value`` sentinel;
+    NULLs without one are only representable for float columns (as NaN)
+    and raise otherwise. Regions are base-filled (the fill, else 0); v2
+    pads out-of-bounds cells with zeros and v3 with the fill, exactly as
+    :func:`write_zarr_array` / :func:`write_zarr_array_v3` do for an
+    array holding those values."""
     from pyspark.sql import functions as F
 
     aggs = [F.max(F.col(c)).alias(c) for c in idx_cols] + [
@@ -1476,58 +1349,60 @@ def _write_node_arrays_distributed(
     ]
     row = df.agg(*aggs).first()
     shape = tuple(0 if row[c] is None else int(row[c]) + 1 for c in idx_cols)
-    has_null = {c: bool(row[f"_null_{c}"]) for c in val_cols}
-    spec = _resolve_node_fills(val_cols, types, fills, has_null, node_path)
     ch = tuple(chunks) if chunks else tuple(max(s, 1) for s in shape)
+    spec: dict[str, tuple[np.dtype, object]] = {}
+    for col in val_cols:
+        dt = np.dtype(_SPARK_TO_NP.get(types[col], "<f8"))
+        fill = fills.get(col)
+        if fill is None and row[f"_null_{col}"]:
+            if dt.kind != "f":
+                raise ValueError(
+                    f"{node_path}/{col}: NULLs but no missing_value sentinel recorded"
+                )
+            fill = float("nan")
+        spec[col] = (dt, fill)
+    bases = {col: dt.type(0 if fill is None else fill) for col, (dt, fill) in spec.items()}
 
-    written: set[tuple] = set()
+    def write(coords: tuple, col: str, li: tuple, vals: np.ndarray) -> None:
+        region = np.full(_chunk_extent(coords, ch, shape), bases[col], spec[col][0])
+        region[li] = vals
+        _write_chunk(
+            os.path.join(d, col), coords, region, ch, bases[col] if v3 else None, v3, None
+        )
+
+    ckeys = [f"_ck{i}" for i in range(len(idx_cols))]
+
+    def write_chunk(pdf):
+        import pandas as pd
+
+        coords = tuple(int(pdf[k].iloc[0]) for k in ckeys)
+        li = tuple(
+            pdf[c].to_numpy(dtype=np.int64) - k * cc for c, k, cc in zip(idx_cols, coords, ch)
+        )
+        for col in val_cols:
+            isna = pdf[col].isna().to_numpy()
+            vals = pdf[col].to_numpy()
+            if isna.any():  # the driver pre-checked: null => fill
+                vals = np.where(isna, bases[col], vals)
+            write(coords, col, li, vals.astype(spec[col][0]))
+        return pd.DataFrame({k: [v] for k, v in zip(ckeys, coords)})
+
     if all(shape):
-        ckeys = [f"_ck{i}" for i in range(len(idx_cols))]
         keyed = df.select(
             *idx_cols, *val_cols,
             *[F.floor(F.col(c) / F.lit(int(cc))).cast("long").alias(k)
               for k, c, cc in zip(ckeys, idx_cols, ch)],
         )
-        spec_ser = {c: (dt.str, fill) for c, (dt, fill) in spec.items()}
-
-        def write_chunk(pdf):
-            import numpy as _np
-            import pandas as _pd
-
-            coords = tuple(int(pdf[k].iloc[0]) for k in ckeys)
-            origin = tuple(k * c for k, c in zip(coords, ch))
-            li = tuple(
-                pdf[c].to_numpy(dtype=_np.int64) - o for c, o in zip(idx_cols, origin)
-            )
-            for col in val_cols:
-                dt = _np.dtype(spec_ser[col][0])
-                fill = spec_ser[col][1]
-                block = _build_chunk_block(coords, ch, shape, dt, fill, v3)
-                series = pdf[col]
-                vals = series.to_numpy()
-                if series.isna().any():
-                    base = dt.type(fill)  # driver pre-checked: null => fill
-                    vals = _np.where(series.isna().to_numpy(), base, vals)
-                block[li] = vals.astype(dt)
-                _write_chunk_file(d, col, coords, block, v3)
-            return _pd.DataFrame({k: [v] for k, v in zip(ckeys, coords)})
-
         out_schema = ", ".join(f"{k} long" for k in ckeys)
         written = {
             tuple(int(r[k]) for k in ckeys)
             for r in keyed.groupBy(*ckeys).applyInPandas(write_chunk, out_schema).collect()
         }
-        # backfill chunks no row landed in — all-fill blocks, identical
-        # bytes to what the driver-side path writes for those regions
-        grid = [range((s + c - 1) // c) for s, c in zip(shape, ch)]
-        for coords in itertools.product(*grid):
-            if coords in written:
-                continue
-            for col in val_cols:
-                dt, fill = spec[col]
-                _write_chunk_file(
-                    d, col, coords, _build_chunk_block(coords, ch, shape, dt, fill, v3), v3
-                )
+        empty = tuple(np.empty(0, np.int64) for _ in ch)
+        for coords in np.ndindex(*_chunk_grid(shape, ch)):
+            if coords not in written:  # no row landed here: all fill
+                for col in val_cols:
+                    write(coords, col, empty, np.empty(0, spec[col][0]))
     # metadata last: the store becomes openable only once its chunks exist
     for col in val_cols:
         dt, fill = spec[col]
@@ -1540,7 +1415,6 @@ def write_zarr_datatree(
     mode: str = "error",
     zarr_format: int = 2,
     chunks: tuple[int, ...] | None = None,
-    distributed: bool = True,
 ) -> None:
     """S10 in the NATIVE format: write a DataTree back out as a Zarr
     group store (the reference's ``to_zarr``, src/YAXTrees.jl:748-773 —
@@ -1555,13 +1429,11 @@ def write_zarr_datatree(
     metadata (v2 ``.zmetadata``, v3 inline ``consolidated_metadata``) so
     re-opens cost one metadata read.
 
-    ``distributed=True`` (default) writes chunk objects from executor
-    tasks — rows grouped by chunk-grid coordinates, each task scattering
-    its chunk and writing it straight into the store; the driver handles
-    only metadata and all-fill backfill, never a full array (the sink that
-    absorbs a 100x granule). ``distributed=False`` is the original
-    driver-side path (``df.toPandas()`` + whole-array scatter); the two
-    produce byte-identical stores (pinned by tests/test_zarr.py).
+    Chunk objects are written by executor tasks (:func:`_write_node_arrays`);
+    the driver handles only metadata and the chunks no row lands in, never
+    a full array (the sink that absorbs a 100x granule). So ``root`` must
+    be reachable by executors: at cluster scale a shared filesystem or
+    object store, the same contract as the reference's to_zarr target.
     ``chunks`` sets the chunk grid for every variable (default: one
     whole-array chunk, the historical layout)."""
     if zarr_format not in (2, 3):
@@ -1593,48 +1465,7 @@ def write_zarr_datatree(
         dims = [c[len("idx_"):] for c in idx_cols]
         fills = node.properties.get("missing_value", {})
         types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-        if distributed:
-            _write_node_arrays_distributed(
-                df, d, idx_cols, val_cols, dims, fills, types, v3, chunks, node.path
-            )
-            continue
-        import numpy as _np
-
-        pdf = df.toPandas()
-        shape = tuple(int(pdf[c].max()) + 1 for c in idx_cols) if len(pdf) else (0,) * len(idx_cols)
-        spec = _resolve_node_fills(
-            val_cols, types, fills,
-            {c: bool(pdf[c].isna().any()) for c in val_cols}, node.path,
-        )
-        idx = tuple(pdf[c].to_numpy(dtype=_np.int64) for c in idx_cols)
-        for col in val_cols:
-            dt, fill = spec[col]
-            series = pdf[col]
-            base = dt.type(fill) if fill is not None else dt.type(0)
-            arr = _np.full(shape, base, dtype=dt)
-            vals = series.to_numpy()
-            if fill is not None:
-                vals = _np.where(series.isna().to_numpy(), base, vals)
-            arr[idx] = vals.astype(dt)
-            if v3:
-                if fill is None:
-                    # v3 REQUIRES a fill_value; write a spec-valid zero and
-                    # mark it as not-a-missing-sentinel so reads don't NULL
-                    # legitimate zeros (the v2 layout writes JSON null here)
-                    write_zarr_array_v3(
-                        d, col, arr, chunks=chunks,
-                        fill_value=(False if dt.kind == "b" else 0),
-                        dims=dims, attrs={"_cd_no_missing": True},
-                    )
-                else:
-                    v3fill = "NaN" if fill != fill else fill
-                    write_zarr_array_v3(d, col, arr, chunks=chunks, fill_value=v3fill, dims=dims)
-            else:
-                write_zarr_array(
-                    d, col, arr, chunks=chunks,
-                    fill_value=(None if fill is None or fill != fill else fill),
-                    attrs={"_ARRAY_DIMENSIONS": dims},
-                )
+        _write_node_arrays(df, d, idx_cols, val_cols, dims, fills, types, v3, chunks, node.path)
     if v3:
         write_consolidated_v3(root)
     else:

@@ -65,15 +65,3 @@ def start_stream_ingest(
     elif trigger_interval is not None:
         writer = writer.trigger(processingTime=trigger_interval)
     return writer.start()
-
-
-def batch_dedup_reference(docs: DataFrame, text_col: str = "text",
-                          order_col: str = "doc_id") -> DataFrame:
-    """The one-shot batch twin the drained table must equal: keep the
-    min-``order_col`` row per content digest (the digest column rides
-    along, as the stored table's does). Delegates to the SAME projection
-    dedup_append uses — one definition of the dedup rule, so the parity
-    tests can never assert against a stale twin."""
-    from ..operators.snapshot import digest_first_wins
-
-    return digest_first_wins(docs, text_col, order_col)

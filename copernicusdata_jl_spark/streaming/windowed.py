@@ -201,13 +201,10 @@ def stream_corpus(
     result row-for-row (url, warc_ts, text, text_sha256). Keys recurring
     across windows emit one winner per window — size the window to the
     recrawl horizon or resolve downstream on the window column."""
-    from ..functions.text import extract_text_expr
+    from ..functions.text import with_extracted_text
 
-    dedup = stream_dedup_latest(
-        pages, ["url"], ts_col="warc_ts", window=window, watermark=watermark
-    )
-    return dedup.withColumn("text", extract_text_expr(F.col("html"))).withColumn(
-        "text_sha256", F.sha2(F.col("text"), 256)
+    return with_extracted_text(
+        stream_dedup_latest(pages, ["url"], ts_col="warc_ts", window=window, watermark=watermark)
     )
 
 

@@ -9,11 +9,8 @@ import time
 
 from pyspark.sql import functions as F
 
-from copernicusdata_jl_spark.operators.snapshot import SnapshotTable
-from copernicusdata_jl_spark.streaming.ingest import (
-    batch_dedup_reference,
-    start_stream_ingest,
-)
+from copernicusdata_jl_spark.operators.snapshot import SnapshotTable, digest_first_wins
+from copernicusdata_jl_spark.streaming.ingest import start_stream_ingest
 
 
 def _write_sliced_docs(spark, tmp_path, n_docs=120, n_slices=4):
@@ -38,7 +35,7 @@ def _table_rows(spark, table_path):
 
 
 def _want(spark, src):
-    ref = batch_dedup_reference(spark.read.parquet(src))
+    ref = digest_first_wins(spark.read.parquet(src))
     return sorted((r["doc_id"], r["text"]) for r in ref.collect())
 
 

@@ -62,11 +62,6 @@ def test_media_decode_deterministic_across_partitions(spark):
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 
-def test_real_decoder_stub_raises():
-    with pytest.raises(NotImplementedError):
-        M.decode_real(b"bytes", "image")
-
-
 def test_frame_sample(spark):
     frames = spark.createDataFrame([(1, i, b"x") for i in range(30)], "doc_id long, frame_idx long, media binary")
     assert M.frame_sample(frames, every_n=10).count() == 3

@@ -17,13 +17,6 @@ def test_extractor_matches_expected_text():
         assert text.extract_text_py(text.render_html(i)) == text.expected_text(i)
 
 
-def test_extractor_batch_matches_py():
-    htmls = pd.Series([text.render_html(i) for i in range(100)])
-    got = text.extract_text_batch(htmls)
-    for i in range(100):
-        assert got.iloc[i] == text.extract_text_py(htmls.iloc[i])
-
-
 def test_extractor_handles_entities_and_nested():
     h = "<html><body><p>a &amp; b &lt;tag&gt; &quot;q&quot;</p><script>if(1<2){x}</script></body></html>"
     assert text.extract_text_py(h) == 'a & b <tag> "q"'
@@ -87,8 +80,8 @@ def test_rich_extractor_matches_expected_text():
 
 
 def test_jvm_expr_extractor_byte_parity(spark):
-    """Three-way parity: python spec == Arrow pandas kernel == JVM codegen
-    expression, byte-for-byte, over plain and rich pages (string + binary)."""
+    """Parity: python spec == JVM codegen expression, byte-for-byte, over
+    plain and rich pages (string + binary)."""
     from pyspark.sql import functions as F
 
     htmls = [text.render_html(i) for i in range(100)] + [
@@ -102,15 +95,8 @@ def test_jvm_expr_extractor_byte_parity(spark):
         .orderBy("html")
         .collect()
     ]
-    got_udf = [
-        r.t
-        for r in df.select(text.extract_text_udf(F.col("html")).alias("t"), "html")
-        .orderBy("html")
-        .collect()
-    ]
     want_sorted = [text.extract_text_py(h) for h in sorted(htmls)]
     assert got_expr == want_sorted
-    assert got_udf == want_sorted
     # binary input path (pages schema html:binary)
     dfb = spark.createDataFrame([(h.encode(),) for h in htmls], "html binary")
     got_bin = sorted(
@@ -122,8 +108,8 @@ def test_jvm_expr_extractor_byte_parity(spark):
 def test_extractor_edge_charset_parity(spark):
     """ADVICE r1: parity must hold beyond the fixture charset — Unicode
     whitespace (NBSP), vertical tab, uppercase tags, and \\b-adjacent tag
-    names must extract identically on the python spec, the pandas kernel,
-    the JVM expression, and the DuckDB SQL twin."""
+    names must extract identically on the python spec, the JVM expression,
+    and the DuckDB SQL twin."""
     cases = [
         "<html><body>\xa0 hello\x0bworld \xa0</body></html>",  # unicode ws edges
         " \t<p>lead and trail</p>\n ",
@@ -134,8 +120,6 @@ def test_extractor_edge_charset_parity(spark):
         "café — résumé<script>x</script>",
     ]
     want = [text.extract_text_py(h) for h in cases]
-    # pandas kernel
-    assert list(text.extract_text_batch(pd.Series(cases))) == want
     # JVM expression (string + binary input)
     df = spark.createDataFrame([(h,) for h in cases], "html string")
     got = [r.t for r in df.select(text.extract_text_expr(F.col("html")).alias("t")).collect()]

@@ -388,13 +388,14 @@ def test_zarr_v3_v2_style_keys_and_loud_rejections(spark, tmp_path):
     # sharding rejects loudly, never wrong bytes
     import pytest as _pytest
 
-    from copernicusdata_jl_spark.sources.zarr import read_zarr_array_v3, _DirStore
+    from copernicusdata_jl_spark.sources.zarr import read_zarr_array, _DirStore
 
     meta = json.loads(open(os.path.join(d, "zarr.json")).read())
     meta["codecs"] = [{"name": "sharding_indexed", "configuration": {}},
                       {"name": "bytes"}]
+    json.dump(meta, open(os.path.join(d, "zarr.json"), "w"))
     with _pytest.raises(NotImplementedError):
-        read_zarr_array_v3(_DirStore(root), "a", meta)
+        read_zarr_array(_DirStore(root), "a")
 
 
 def test_open_datatree_dispatches_v3_and_zip_twin(spark, tmp_path):
@@ -502,7 +503,7 @@ def test_zarr_v3_transpose_codec(spark, tmp_path):
     import json
     import os
 
-    from copernicusdata_jl_spark.sources.zarr import _DirStore, read_zarr_array_v3
+    from copernicusdata_jl_spark.sources.zarr import _DirStore, read_zarr_array
 
     root = str(tmp_path / "t.zarr")
     d = os.path.join(root, "a")
@@ -527,7 +528,7 @@ def test_zarr_v3_transpose_codec(spark, tmp_path):
     os.makedirs(os.path.join(d, "c", "0", "0"))
     with open(os.path.join(d, "c", "0", "0", "0"), "wb") as f:
         f.write(gzip.compress(np.ascontiguousarray(stored).tobytes()))
-    got, _ = read_zarr_array_v3(_DirStore(root), "a", meta)
+    got, _ = read_zarr_array(_DirStore(root), "a")
     assert np.array_equal(got, a)
 
 
@@ -624,7 +625,7 @@ def test_zarr_v3_sharding_roundtrip(tmp_path):
 
     from copernicusdata_jl_spark.sources.zarr import (
         _DirStore,
-        read_zarr_array_v3,
+        read_zarr_array,
         write_zarr_array_v3,
     )
 
@@ -634,7 +635,7 @@ def test_zarr_v3_sharding_roundtrip(tmp_path):
     meta = json.load(open(os.path.join(root, "s", "zarr.json")))
     assert meta["codecs"][0]["name"] == "sharding_indexed"
     assert meta["chunk_grid"]["configuration"]["chunk_shape"] == [4, 6]
-    got, _ = read_zarr_array_v3(_DirStore(root), "s", meta)
+    got, _ = read_zarr_array(_DirStore(root), "s")
     assert np.array_equal(got, a)
     # the store holds ceil(7/4)*ceil(10/6) = 4 shard objects, not 4*6 chunks
     files = [
@@ -656,7 +657,7 @@ def test_zarr_v3_sharding_hand_built_holes_and_index_start(tmp_path):
     from copernicusdata_jl_spark.sources.zarr import (
         _DirStore,
         crc32c,
-        read_zarr_array_v3,
+        read_zarr_array,
     )
 
     root = str(tmp_path / "t.zarr")
@@ -695,7 +696,7 @@ def test_zarr_v3_sharding_hand_built_holes_and_index_start(tmp_path):
     payload = index + struct.pack("<I", crc32c(index)) + enc0
     with open(os.path.join(d, "c", "0"), "wb") as f:
         f.write(payload)
-    got, _ = read_zarr_array_v3(_DirStore(root), "a", meta)
+    got, _ = read_zarr_array(_DirStore(root), "a")
     assert got.tolist() == [0, 1, 2, 3, -7, -7, -7, -7]
 
 
@@ -713,11 +714,13 @@ def _walk_bytes(root):
 
 @pytest.mark.parametrize("zfmt", [2, 3])
 def test_distributed_sink_byte_identical_to_driver_path(spark, tmp_path, zfmt):
-    """VERDICT r4 #4: the chunk-parallel sink (executor tasks write chunk
-    objects; driver writes metadata last) must produce a store byte-for-byte
-    identical to the original driver-side path on a multi-chunk array with
-    ragged edges, an all-fill hole chunk (no rows land in it — exercises the
-    backfill), NULLs through a sentinel, NaN-fill NULLs, and an int column."""
+    """The chunk-parallel sink (executor tasks write chunk objects; driver
+    writes metadata last) must produce a store byte-for-byte identical to
+    the same arrays written whole by write_zarr_array(_v3) under the sink's
+    metadata policy, on a multi-chunk array with ragged edges, an all-fill
+    hole chunk (no rows land in it — exercises the backfill), NULLs through
+    a sentinel, NaN-fill NULLs, and an int column."""
+    from copernicusdata_jl_spark.sources import zarr as Z
     from copernicusdata_jl_spark.sources.datatree import DataTree
     from pyspark.sql import functions as F
 
@@ -738,17 +741,36 @@ def test_distributed_sink_byte_identical_to_driver_path(spark, tmp_path, zfmt):
     )
     t = DataTree("g", properties={"missing_value": {"temp": 1.0e32}})
     t.data = df
-    a, b = str(tmp_path / "driver.zarr"), str(tmp_path / "dist.zarr")
-    t.to_zarr(a, zarr_format=zfmt, chunks=(4, 3), distributed=False)
-    t.to_zarr(b, zarr_format=zfmt, chunks=(4, 3), distributed=True)
+    a, b = str(tmp_path / "whole.zarr"), str(tmp_path / "dist.zarr")
+    t.to_zarr(b, zarr_format=zfmt, chunks=(4, 3))
+
+    # the same arrays, whole: NULL temp -> its sentinel, NULL raw -> NaN,
+    # hole cells -> the column's fill (0 for the fill-less int column)
+    ids = np.arange(80).reshape(10, 8)
+    hole = (ids // 8 >= 8) & (ids % 8 >= 6)
+    temp = np.where((ids % 11 == 3) | hole, 1.0e32, ids * 1.5)
+    raw = np.where((ids % 13 == 5) | hole, np.nan, ids / 3)
+    n = np.where(hole, 0, ids * 7).astype(np.int64)
+    dims = ["y", "x"]
+    if zfmt == 2:
+        Z.write_zarr_group(a)
+        for name, arr, fill in (("temp", temp, 1.0e32), ("raw", raw, None), ("n", n, None)):
+            Z.write_zarr_array(a, name, arr, chunks=(4, 3), fill_value=fill,
+                               attrs={"_ARRAY_DIMENSIONS": dims})
+        Z.write_consolidated(a)
+    else:
+        Z.write_zarr_group_v3(a)
+        Z.write_zarr_array_v3(a, "temp", temp, chunks=(4, 3), fill_value=1.0e32, dims=dims)
+        Z.write_zarr_array_v3(a, "raw", raw, chunks=(4, 3), fill_value="NaN", dims=dims)
+        Z.write_zarr_array_v3(a, "n", n, chunks=(4, 3), fill_value=0, dims=dims,
+                              attrs={"_cd_no_missing": True})
+        Z.write_consolidated_v3(a)
     fa, fb = _walk_bytes(a), _walk_bytes(b)
     assert set(fa) == set(fb)
     diff = [k for k in fa if fa[k] != fb[k]]
     assert diff == []
     # and the store round-trips: NULLs come back, hole reads as fill/NULL
-    from copernicusdata_jl_spark.sources.zarr import open_zarr_datatree
-
-    back = open_zarr_datatree(spark, b)
+    back = Z.open_zarr_datatree(spark, b)
     got = {(r["idx_y"], r["idx_x"]): (r["temp"], r["n"]) for r in back.data.collect()}
     assert got[(0, 3)][0] is None  # sentinel NULL round-trip (id=3)
     assert got[(1, 1)] == (13.5, 63)  # id=9
@@ -874,7 +896,6 @@ def test_distributed_scan_never_assembles_driver_side(spark, tmp_path, monkeypat
         raise AssertionError("driver-side assembler ran during distributed scan")
 
     monkeypatch.setattr(Z, "read_zarr_array", boom)
-    monkeypatch.setattr(Z, "read_zarr_array_v3", boom)
     df = Z.scan_zarr_distributed(spark, root)
     assert df.count() == 60000
     got = df.filter("idx_y = 123 and idx_x = 45").collect()
@@ -915,38 +936,63 @@ def test_distributed_scan_zip_store_and_refusals(spark, tmp_path):
         scan_zarr_distributed(spark, zpath, variables=["nope"])
 
 
-def test_distributed_scan_honors_zattrs_fill_sentinel(spark, tmp_path):
-    """r5 review: an externally-written v2 store (xarray NetCDF
-    conventions) declares _FillValue in .zattrs while .zarray fill_value
-    is null — the distributed scan must NULL those cells exactly like the
-    driver-side scan does."""
-    import json as _json
+def _int_store(root, fmt, spec_fill, attrs, size, vals):
+    """Hand-written int32 array ``v`` (dim ``i``, chunks of 2, no codec)
+    holding ``vals``; chunks past ``vals`` are holes."""
+    import json
+    import os
 
-    import numpy as _np
+    v = os.path.join(root, "v")
+    os.makedirs(os.path.join(v, "c"))
+    if fmt == 2:
+        json.dump({"zarr_format": 2}, open(os.path.join(root, ".zgroup"), "w"))
+        meta = {"zarr_format": 2, "shape": [size], "chunks": [2], "dtype": "<i4",
+                "order": "C", "fill_value": spec_fill, "filters": None, "compressor": None}
+        json.dump(meta, open(os.path.join(v, ".zarray"), "w"))
+        json.dump({"_ARRAY_DIMENSIONS": ["i"], **attrs}, open(os.path.join(v, ".zattrs"), "w"))
+    else:
+        json.dump({"zarr_format": 3, "node_type": "group"},
+                  open(os.path.join(root, "zarr.json"), "w"))
+        meta = {"zarr_format": 3, "node_type": "array", "shape": [size], "data_type": "int32",
+                "chunk_grid": {"name": "regular", "configuration": {"chunk_shape": [2]}},
+                "chunk_key_encoding": {"name": "default", "configuration": {"separator": "/"}},
+                "fill_value": spec_fill, "dimension_names": ["i"], "attributes": attrs,
+                "codecs": [{"name": "bytes", "configuration": {"endian": "little"}}]}
+        json.dump(meta, open(os.path.join(v, "zarr.json"), "w"))
+    for k in range(len(vals) // 2):
+        key = str(k) if fmt == 2 else os.path.join("c", str(k))
+        open(os.path.join(v, key), "wb").write(np.array(vals[2 * k:2 * k + 2], dtype="<i4").tobytes())
 
+
+@pytest.mark.parametrize(
+    "fmt, spec_fill, attrs, size, vals, want",
+    [
+        # xarray NetCDF conventions: _FillValue in .zattrs, .zarray fill null
+        (2, None, {"_FillValue": -9999}, 4, [1, -9999, -9999, 4], [1, None, None, 4]),
+        # missing_value differs from the spec fill_value: the spec fill is
+        # the sentinel (and fills the hole chunk); -9 stays a value
+        (2, -1, {"missing_value": -9}, 6, [1, -1, -9, 4], [1, None, -9, 4, None, None]),
+        (3, -1, {"missing_value": -9}, 6, [1, -1, -9, 4], [1, None, -9, 4, None, None]),
+    ],
+    ids=["v2_zattrs_fillvalue", "v2_missing_value", "v3_missing_value"],
+)
+def test_distributed_scan_honors_zattrs_fill_sentinel(
+    spark, tmp_path, fmt, spec_fill, attrs, size, vals, want
+):
+    """One NULL-sentinel rule for both read paths: the explicit _FillValue
+    attribute, else the spec fill_value, else the missing_value attribute.
+    An externally-written v2 store declaring _FillValue only in .zattrs,
+    and v2/v3 stores whose missing_value attribute differs from the spec
+    fill_value, read the same rows through the driver-side and the
+    distributed scan."""
     from copernicusdata_jl_spark.sources.zarr import (
         open_zarr_datatree,
         scan_zarr_distributed,
     )
 
-    import os as _os
-
     root = str(tmp_path / "ext.zarr")
-    v = root + "/v"
-    _os.makedirs(v)
-    _json.dump({"zarr_format": 2}, open(root + "/.zgroup", "w"))
-    _json.dump(
-        {"zarr_format": 2, "shape": [4], "chunks": [2], "dtype": "<i4",
-         "order": "C", "fill_value": None, "filters": None, "compressor": None},
-        open(v + "/.zarray", "w"),
-    )
-    _json.dump({"_ARRAY_DIMENSIONS": ["i"], "_FillValue": -9999},
-               open(v + "/.zattrs", "w"))
-    open(v + "/0", "wb").write(_np.array([1, -9999], dtype="<i4").tobytes())
-    open(v + "/1", "wb").write(_np.array([-9999, 4], dtype="<i4").tobytes())
-
-    want = {0: 1, 1: None, 2: None, 3: 4}
+    _int_store(root, fmt, spec_fill, attrs, size, vals)
     drv = {r["idx_i"]: r["v"] for r in open_zarr_datatree(spark, root).data.collect()}
     dist = {r["idx_i"]: r["v"] for r in scan_zarr_distributed(spark, root).collect()}
-    assert drv == want
-    assert dist == want
+    assert drv == dict(enumerate(want))
+    assert dist == drv
