@@ -36,8 +36,8 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship: pages (url, warc_ts, html, lang, lat, lon) → Arrow HTML
     extraction + digest → url dedup → cell index → broadcast cover join +
     PIP refine → per-tile doc counts. Page count scaled to the sf0.001
-    smoke tier; the same pipeline is what bench.py and scaling_bench
-    measure at size."""
+    smoke tier; the same pipeline is what bench.py and perfbench's
+    ``pages_neardup`` workload measure at size."""
     from copernicusdata_jl_spark.flagship import build_pages, flagship_pipeline
 
     _ensure_shipped(spark)

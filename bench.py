@@ -4,8 +4,7 @@ ONE JSON line:
 {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
 
 Throughput framing (north rule): the flagship spatial-join+tiling job also
-reports docs/sec. Scaling-efficiency evidence (local[8] vs local[32]) is
-produced by tools/scaling_bench.py → BENCH/BASELINE.md.
+reports docs/sec.
 """
 
 from __future__ import annotations

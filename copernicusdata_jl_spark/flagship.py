@@ -6,8 +6,8 @@ style pages table ``(url, warc_ts, html, text, lang)``:
   join + PIP refinement against granule footprints → per-tile counts →
   per-partition lineage rows to a checkpoint table.
 
-This is the benchmarked unit (docs/sec, tiles/sec) and the scaling-
-efficiency job (tools/scaling_bench.py runs it at local[8] vs local[32]).
+This is the benchmarked unit: bench.py reports its docs/sec, and
+perfbench's ``pages_neardup`` workload runs it end to end.
 
 Scale design notes (10^12 docs):
 - Pages are generated DISTRIBUTED (spark.range → column exprs + one Arrow

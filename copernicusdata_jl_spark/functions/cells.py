@@ -29,10 +29,12 @@ escalates its ring until the ring's guaranteed metric radius covers the
 k-th distance (operators/knn.ring_guarantee_m), and cover joins filter
 false candidates with exact PIP refinement.
 
-Every function has two twins:
+Two kinds of function:
 - ``*_expr``: a Spark Column (and ``*_sql``: the identical ANSI-SQL string)
 - a NumPy implementation (suffix-free) for driver-side cover computation
   and for pandas-UDF kernels.
+The NumPy references the tests check ``kring_expr`` and the covers against
+(children, k-ring, uncompact) live in tests/reference.py.
 """
 
 from __future__ import annotations
@@ -87,26 +89,12 @@ def unpack(cell_id):
     return r, x, y
 
 
-def cell_res(cell_id):
-    return np.asarray(cell_id, dtype=np.int64) >> RES_BITS
-
-
 def cell_parent(cell_id, parent_res: int):
     r, x, y = unpack(cell_id)
     shift = r - parent_res
     if np.any(shift < 0):
         raise ValueError("parent_res must be <= cell res")
     return pack(parent_res, x >> shift, y >> shift)
-
-
-def cell_children(cell_id: int) -> list[int]:
-    r, x, y = unpack(np.int64(cell_id))
-    r, x, y = int(r), int(x), int(y)
-    return [
-        int(pack(r + 1, 2 * x + dx, 2 * y + dy))
-        for dx in (0, 1)
-        for dy in (0, 1)
-    ]
 
 
 def cell_bounds(cell_id):
@@ -118,26 +106,6 @@ def cell_bounds(cell_id):
     min_lon = -180.0 + x * w
     min_lat = -90.0 + y * h
     return min_lon, min_lat, min_lon + w, min_lat + h
-
-
-def cell_center(cell_id):
-    min_lon, min_lat, max_lon, max_lat = cell_bounds(cell_id)
-    return (min_lat + max_lat) / 2.0, (min_lon + max_lon) / 2.0
-
-
-def grid_disk(cell_id: int, k: int) -> list[int]:
-    """k-ring (Moore neighborhood radius k) with antimeridian wrap in x and
-    pole clamping in y. Returns the cell itself plus neighbors, sorted."""
-    r, x, y = unpack(np.int64(cell_id))
-    r, x, y = int(r), int(x), int(y)
-    nx, ny = nx_ny(r)
-    out = set()
-    for dx in range(-k, k + 1):
-        for dy in range(-k, k + 1):
-            yy = y + dy
-            if 0 <= yy < ny:
-                out.add(int(pack(r, (x + dx) % nx, yy)))
-    return sorted(out)
 
 
 def compact_cells(cell_ids) -> np.ndarray:
@@ -159,22 +127,6 @@ def compact_cells(cell_ids) -> np.ndarray:
                 cells.add(parent)
                 changed = True
     return np.array(sorted(cells), dtype=np.int64)
-
-
-def uncompact_cells(cell_ids, res: int) -> np.ndarray:
-    """Expand mixed-resolution cells down to uniform resolution ``res``."""
-    out: list[int] = []
-    stack = [int(c) for c in np.asarray(cell_ids, dtype=np.int64).ravel()]
-    while stack:
-        c = stack.pop()
-        r = c >> RES_BITS
-        if r == res:
-            out.append(c)
-        elif r < res:
-            stack.extend(cell_children(c))
-        else:
-            raise ValueError("cell finer than target res")
-    return np.array(sorted(out), dtype=np.int64)
 
 
 # ---------------------------------------------------------------------------

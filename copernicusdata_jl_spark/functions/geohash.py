@@ -182,14 +182,3 @@ def quadkey_sql(lat: str, lon: str, levels: int = 8) -> str:
         for i in range(1, levels + 1)
     )
     return f"({digits})"
-
-
-def quadkey_py(lat: float, lon: float, levels: int = 8) -> str:
-    """Driver-side twin for tests."""
-    n = 1 << levels
-    qx = int(max(min((lon + 180.0) / 360.0 * n // 1, n - 1), 0))
-    qy = int(max(min((90.0 - lat) / 180.0 * n // 1, n - 1), 0))
-    return "".join(
-        str(((qx >> (levels - i)) & 1) + 2 * ((qy >> (levels - i)) & 1))
-        for i in range(1, levels + 1)
-    )

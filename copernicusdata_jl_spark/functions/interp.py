@@ -6,22 +6,16 @@ over all the others (src/interpolation.jl:10-24, reverse-ordered axes
 handled at :15-21); docs interpolate ``atmospheric_temperature_profile`` at
 p=832.2 hPa over ``pressure_level`` (docs/src/examples.md:71-73).
 
-Spark re-expression, two flavors:
-
-1. ``linear_interp_at`` — relational: per group, find the bracketing
-   samples of ``x`` around ``at`` with two tiny filtered aggregations and
-   lerp. Pure JVM expressions, shuffles only (group, x0/x1) pairs; the
-   DuckDB oracle reproduces it exactly (queries/spatial.q_linear_interp).
-   Reverse-ordered axes need no special case — bracketing is order-free.
-2. ``interp_series_udf`` — the mapslices analog: ``applyInPandas`` per
-   group running ``np.interp`` over a whole target grid (resampling many
-   points at once; the raster↔vector resampling kernel).
+Spark re-expression: ``linear_interp_at`` interpolates per group at one
+target coordinate. It finds the bracketing samples of ``x`` around ``at``
+in one conditional-aggregate pass and lerps. Pure JVM expressions, one
+shuffle of (group, x0/x1) partials; the DuckDB oracle reproduces it
+exactly (queries/spatial.q_linear_interp). Reverse-ordered axes need no
+special case — bracketing is order-free.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -62,38 +56,3 @@ def linear_interp_at(
         *group_cols,
         F.round(interp, 6).alias(out_col),
     )
-
-
-def interp_series(pdf: pd.DataFrame, x_col: str, y_col: str, grid: np.ndarray) -> pd.DataFrame:
-    """np.interp kernel over one group (the mapslices body)."""
-    s = pdf[[x_col, y_col]].dropna().sort_values(x_col)
-    xs = s[x_col].to_numpy(dtype=np.float64)
-    ys = s[y_col].to_numpy(dtype=np.float64)
-    if len(xs) == 0:
-        vals = np.full(len(grid), np.nan)
-    else:
-        vals = np.interp(grid, xs, ys)  # clamps outside range like DiskArrays edge-hold
-    return pd.DataFrame({"x": grid, "y_interp": vals})
-
-
-def resample_to_grid(
-    df: DataFrame,
-    group_cols: list[str],
-    x_col: str,
-    y_col: str,
-    grid: list[float],
-) -> DataFrame:
-    """applyInPandas resampling: every group's y(x) sampled onto a shared
-    target grid (Arrow-batched; one Python call per group, vectorized
-    inside — the T7 kernel generalized to raster↔vector tiling)."""
-    garr = np.asarray(grid, dtype=np.float64)
-    keys = [(c, df.schema[c].dataType.simpleString()) for c in group_cols]
-    schema = ", ".join([f"{c} {t}" for c, t in keys] + ["x double", "y_interp double"])
-
-    def fn(key, pdf):
-        out = interp_series(pdf, x_col, y_col, garr)
-        for c, k in zip(group_cols, key):
-            out[c] = k
-        return out[[*group_cols, "x", "y_interp"]]
-
-    return df.groupBy(*group_cols).applyInPandas(fn, schema=schema)

@@ -30,13 +30,6 @@ from ..operators.dedup import h56_expr, h56_sql
 DENOM = 1_000_000
 
 
-def sample_hash_expr(key: Column, rate: float, salt: str = "smp") -> Column:
-    """Boolean keep-predicate: deterministic ``rate`` fraction of keys.
-    ``pmod(h56(salt||key), 1e6) < rate·1e6`` — uniform because the hash's
-    low bits are uniform; changing ``salt`` draws an independent sample."""
-    return sample_mod_expr(key, salt) < int(rate * DENOM)
-
-
 def sample_mod_expr(key: Column, salt: str = "smp") -> Column:
     """``pmod(h56(salt||key), 1e6)`` — the hash half of every sampler
     predicate, compared against a per-stratum threshold by callers

@@ -349,11 +349,6 @@ def winnow_fingerprints_batch(texts: list[str], k: int = 8, w: int = 12) -> list
     return out
 
 
-def winnow_fingerprints(text: str, k: int = 8, w: int = 12) -> list[int]:
-    """Single-document convenience wrapper over the batch kernel."""
-    return winnow_fingerprints_batch([text], k, w)[0]
-
-
 @F.pandas_udf(T.ArrayType(T.LongType()))
 def winnow_udf(text: pd.Series) -> pd.Series:
     return pd.Series(winnow_fingerprints_batch(text.tolist()), index=text.index)
@@ -404,12 +399,6 @@ def render_html_rich(i: int) -> str:
         f"<footer>terms &amp; privacy {i % 100}</footer>"
         f"<script>var x={i};track(x);</script></body></html>"
     )
-
-
-def expected_text_rich(i: int) -> str:
-    """Independent golden derivation for render_html_rich."""
-    paras = " ".join(_sentence(i, k) for k in range(40 + i % 20))
-    return f"doc {i} home | about Document {i} {paras} terms & privacy {i % 100}"
 
 
 # punctuation folds: curly quotes -> straight, en/em dash -> '-', NBSP

@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -51,37 +51,3 @@ def zorder_sql(x: str, y: str, bits: int = 16) -> str:
         terms.append(f"((({xs} >> {i}) & 1) << {2 * i})")
         terms.append(f"((({ys} >> {i}) & 1) << {2 * i + 1})")
     return "(" + " | ".join(terms) + ")"
-
-
-def zorder_py(x: int, y: int, bits: int = 16) -> int:
-    """Pure-Python reference (tests pin the Spark/SQL twins against it)."""
-    z = 0
-    for i in range(bits):
-        z |= ((x >> i) & 1) << (2 * i)
-        z |= ((y >> i) & 1) << (2 * i + 1)
-    return z
-
-
-def cluster_by_zorder(
-    df: DataFrame,
-    x_col: str,
-    y_col: str,
-    num_files: int,
-    bits: int = 16,
-    z_col: str = "_z",
-) -> DataFrame:
-    """Range-partition + sort ``df`` by the Morton code of (x, y) so a
-    downstream file-per-partition write (e.g. ``SnapshotTable.commit``)
-    produces files whose min/max stats are tight on BOTH columns. The
-    helper column is dropped after the sort — the layout survives in row
-    order, not in schema.
-
-    Scale: one range shuffle (sampled bounds), exactly what a plain
-    ``repartitionByRange`` costs; everything else is layout for free."""
-    z = zorder_expr(F.col(x_col), F.col(y_col), bits)
-    return (
-        df.withColumn(z_col, z)
-        .repartitionByRange(num_files, z_col)
-        .sortWithinPartitions(z_col)
-        .drop(z_col)
-    )

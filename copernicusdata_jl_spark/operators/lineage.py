@@ -27,9 +27,6 @@ from pyspark.sql import functions as F
 from . import dedup as _d
 from .snapshot import SnapshotTable
 
-LINEAGE_COLS = ["bucket", "cell_min", "cell_max", "row_count", "checksum"]
-
-
 def lineage_rows(
     df: DataFrame,
     bucket_col: str = "bucket",

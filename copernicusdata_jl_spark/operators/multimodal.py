@@ -90,9 +90,3 @@ def decode_media(df: DataFrame, n_features: int = 4) -> DataFrame:
             )
 
     return df.mapInPandas(fn, schema=FEATURE_SCHEMA)
-
-
-def frame_sample(df: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video-style frame sampling over a frames table (doc_id, frame_idx,
-    media): keep every n-th frame — pure Catalyst filter, no Python."""
-    return df.filter(F.col("frame_idx") % every_n == 0)

@@ -99,15 +99,3 @@ def salted_join(
         "_salt", F.explode(F.array(*[F.lit(i) for i in range(salt_mod)]))
     )
     return b.join(s, keys + ["_salt"], how).drop("_salt")
-
-
-def hot_keys(df: DataFrame, keys: list[str], threshold: int, sample: float = 0.01) -> DataFrame:
-    """Approximate hot-key list from a sampled count (scaled). One narrow
-    pass; at 10^12 rows the sample read is ~1% of the scan, and the result
-    is a tiny driver-side broadcast."""
-    return (
-        df.sample(fraction=sample, seed=42)
-        .groupBy(*keys)
-        .agg((F.count(F.lit(1)) / sample).cast("long").alias("est_count"))
-        .filter(F.col("est_count") >= threshold)
-    )

@@ -100,7 +100,7 @@ def get_spark(
     # not survive fork(), and the orphaned locks sent forked workers into a
     # sys-time spin (measured: warm pandas-UDF stages 6× slower). Worker
     # warm-up is handled by an un-timed warmup pass in the benchmarks
-    # instead (tools/scaling_bench.py).
+    # instead (bench.py, perfbench/run.py).
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()

@@ -363,6 +363,23 @@ class _S3Store(_Store):
         return sorted(x for x in out if x)
 
 
+def _open_store(path: str, client=None) -> _Store:
+    """The one store choice of both read entry points: ``s3://bucket/prefix``
+    (``client`` is a boto3 S3 client, default ``sources.s3.s3_client()``),
+    else a zip archive by content whatever its name, else a directory. A
+    missing local path raises ``FileNotFoundError``."""
+    if path.startswith("s3://"):
+        if client is None:
+            from . import s3 as _s3
+
+            client = _s3.s3_client()
+        bucket, _, prefix = path[len("s3://"):].partition("/")
+        return _S3Store(client, bucket, prefix)
+    if not os.path.exists(path):
+        raise FileNotFoundError(f"no Zarr store at {path!r}")
+    return _ZipStore(path) if zipfile.is_zipfile(path) else _DirStore(path)
+
+
 class _ConsolidatedStore(_Store):
     """Zarr consolidated-metadata view: every ``.zgroup/.zarray/.zattrs``
     read is served from the single ``.zmetadata`` document and the tree
@@ -923,8 +940,7 @@ def scan_zarr_distributed(
             "distributed zarr scan reads stores from executors; use the "
             "driver-side open_zarr_datatree(client=...) for s3:// paths"
         )
-    is_zip = path.endswith(".zip") and not os.path.isdir(path)
-    store: _Store = _ZipStore(path) if is_zip else _DirStore(path)
+    store = _open_store(path)
 
     metas: dict[str, dict] = {}
     for entry in sorted(store.listdir(group)):
@@ -961,14 +977,13 @@ def scan_zarr_distributed(
     if 0 in shape:
         return spark.createDataFrame([], schema)
     grid = _chunk_grid(shape, chunks)
-    store_desc = ("zip" if is_zip else "dir", path)
 
     def scan_chunks(batches):
         import pandas as pd
 
         from copernicusdata_jl_spark.sources import zarr as Z
 
-        st = Z._ZipStore(store_desc[1]) if store_desc[0] == "zip" else Z._DirStore(store_desc[1])
+        st = Z._open_store(path)
         for pdf in batches:
             for lin in pdf["id"].tolist():
                 coords = tuple(int(k) for k in np.unravel_index(lin, grid))
@@ -1013,17 +1028,7 @@ def open_zarr_datatree(
     document (consolidated open, :455-457). ``group`` filters nodes by
     path substring at scan (S4's group filter). fill_value → NULL with a
     per-variable ``missing_value`` property on the node."""
-    if path.startswith("s3://"):
-        if client is None:
-            from . import s3 as _s3
-
-            client = _s3.s3_client()
-        bucket, _, prefix = path[len("s3://"):].partition("/")
-        store: _Store = _S3Store(client, bucket, prefix)
-    elif zipfile.is_zipfile(path):
-        store = _ZipStore(path)
-    else:
-        store = _DirStore(path)
+    store = _open_store(path, client)
     zmeta = store.read(".zmetadata")
     if zmeta is not None:
         store = _ConsolidatedStore(store, json.loads(zmeta))

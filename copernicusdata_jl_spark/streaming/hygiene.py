@@ -127,23 +127,6 @@ def hygiene_front(
     )
 
 
-def mix_sample(
-    front: DataFrame, alpha: float = 0.5, target_frac: float = 0.6
-) -> DataFrame:
-    """The training-mix BACK half over a hygiene front (batch
-    ``hygiene_front`` or streaming ``read_stream_hygiene`` — identical
-    shape): per-host temperature resampling, p_host ∝ count^alpha. The
-    salted-hash selection is a deterministic function of (url, rates), so
-    the incremental and batch paths pick the SAME documents — the
-    partitioning/resume invariance functions/sample.py guarantees,
-    asserted across the two differently-produced inputs in the tests."""
-    from ..operators.corpus import temperature_sample
-
-    return temperature_sample(
-        front, strata_col="host", alpha=alpha, target_frac=target_frac, id_col="url"
-    )
-
-
 def start_stream_hygiene(
     pages_stream: DataFrame,
     benchmark: DataFrame,

@@ -1,5 +1,6 @@
 """Structured Streaming surface: event-time windowed aggregation with
-watermarked late-data handling, plus a stateful per-key dedup operator.
+watermarked late-data handling, latest-wins per-key dedup, session
+windows and the incremental crawl-ingest twin of the flagship corpus stage.
 
 The reference is batch-only (SURVEY.md §2.11) — granules arrive as files —
 so streaming here models the engine's incremental-ingest path: the same
@@ -60,41 +61,6 @@ def windowed_counts(
         )
         .select(F.col("w.start").alias("window_start"), "event_type", "n_events", "sum_value")
     )
-
-
-def run_available_now(
-    stream_df: DataFrame, table_name: str, checkpoint: str, output_mode: str = "complete"
-) -> None:
-    """Drain everything currently available into an in-memory sink and stop
-    — deterministic batch-equivalent execution of the streaming plan."""
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def stream_dedup(
-    events: DataFrame, key_cols: list[str], ts_col: str = "ts", watermark: str = "2 days"
-) -> DataFrame:
-    """Streaming exact dedup on ``key_cols`` with FIRST-WINS semantics: the
-    first-arriving row per key survives (``dropDuplicatesWithinWatermark``),
-    and per-key state expires once the watermark passes it — at 10^12 docs
-    the state store holds only the watermark horizon, not the full key
-    history (``dropDuplicates`` without a watermark would grow unboundedly).
-
-    NOT the same surviving row as the batch url-dedup (prepare_corpus keeps
-    the LATEST ``warc_ts`` per url): the two agree only when each key occurs
-    once per watermark window. For latest-wins incremental dedup use
-    :func:`stream_dedup_latest`."""
-    src = events.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    if events.isStreaming:
-        return src.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(key_cols)
-    return src.dropDuplicates(key_cols)
 
 
 def stream_dedup_latest(
@@ -205,46 +171,4 @@ def stream_corpus(
 
     return with_extracted_text(
         stream_dedup_latest(pages, ["url"], ts_col="warc_ts", window=window, watermark=watermark)
-    )
-
-
-def running_key_stats(
-    events: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    val_col: str = "value",
-) -> DataFrame:
-    """Custom stateful operator (``applyInPandasWithState``): per-key running
-    (n_events, sum_value, last_ts) emitted in update mode — the streaming
-    twin of the per-partition lineage rows (operators/lineage.py). Each
-    micro-batch updates one small state tuple per key; the emitted row
-    carries the running count so a consumer can always identify the most
-    recent update per key (max n_events)."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    def update(key, pdfs, state):
-        n, s, last = state.get if state.exists else (0, 0.0, 0)
-        for pdf in pdfs:
-            n += len(pdf)
-            s += float(pdf[val_col].sum())
-            mx = int(pdf[ts_col].astype("int64").max()) if len(pdf) else 0
-            last = max(last, mx)
-        state.update((n, s, last))
-        yield pd.DataFrame(
-            {
-                key_col: [key[0]],
-                "n_events": [n],
-                "sum_value": [s],
-                "last_ts": [pd.Timestamp(last, unit="ns")],
-            }
-        )
-
-    src = events.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    return src.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=f"{key_col} long, n_events long, sum_value double, last_ts timestamp",
-        stateStructType="n long, s double, last long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
     )

@@ -8,12 +8,10 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from copernicusdata_jl_spark.operators.cluster import (
-    cluster_by_zorder,
-    zorder_expr,
-    zorder_py,
-)
+from copernicusdata_jl_spark.operators.cluster import zorder_expr
 from copernicusdata_jl_spark.operators.snapshot import SnapshotTable
+
+from reference import zorder_py
 
 
 def test_zorder_matches_python_reference(spark):
@@ -61,7 +59,8 @@ def test_zorder_layout_prunes_on_both_axes(spark, tmp_path):
     n_files = 16
 
     t_z = SnapshotTable(str(tmp_path / "zorder"))
-    t_z.commit(cluster_by_zorder(pts, "x", "y", n_files, bits=8), "z")
+    z = pts.withColumn("_z", zorder_expr(F.col("x"), F.col("y"), bits=8))
+    t_z.commit(z.repartitionByRange(n_files, "_z").sortWithinPartitions("_z").drop("_z"), "z")
     t_x = SnapshotTable(str(tmp_path / "xonly"))
     t_x.commit(pts.repartitionByRange(n_files, "x").sortWithinPartitions("x"), "x")
 

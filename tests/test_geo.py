@@ -11,6 +11,8 @@ from hypothesis import strategies as st
 
 from copernicusdata_jl_spark.functions import cells, geo
 
+from reference import uncompact_cells
+
 
 def scalar_pip(lat: float, lon: float, rings) -> bool:
     inside = False
@@ -98,7 +100,7 @@ def test_cover_join_equivalence_to_exact_pip():
         cover, boundary = geo.polygon_cover(rings, res=res, compact=True)
         # uncompact interior for membership check
         interior = set(
-            cells.uncompact_cells(cover[~boundary], res).tolist()
+            uncompact_cells(cover[~boundary], res).tolist()
         ) if (~boundary).any() else set()
         bound = set(cover[boundary].tolist())
         pt_cells = cells.latlng_to_cell(lat, lon, res)

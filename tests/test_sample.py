@@ -7,7 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from copernicusdata_jl_spark.functions.sample import sample_hash_expr, stratified_sample
+from copernicusdata_jl_spark.functions.sample import DENOM, sample_mod_expr, stratified_sample
 
 
 def _ids(df):
@@ -16,7 +16,7 @@ def _ids(df):
 
 def test_partitioning_invariance(spark):
     df = spark.range(2000).select(F.col("id"), F.col("id").cast("string").alias("k"))
-    keep = sample_hash_expr(F.col("k"), 0.3)
+    keep = sample_mod_expr(F.col("k")) < int(0.3 * DENOM)
     a = _ids(df.filter(keep).select("id"))
     b = _ids(df.repartition(17).filter(keep).select("id"))
     c = _ids(df.coalesce(1).filter(keep).select("id"))
@@ -25,8 +25,9 @@ def test_partitioning_invariance(spark):
 
 def test_salt_gives_independent_samples(spark):
     df = spark.range(2000).select(F.col("id").cast("string").alias("k"))
-    a = set(_ids(df.filter(sample_hash_expr(F.col("k"), 0.5, salt="s1")).select("k")))
-    b = set(_ids(df.filter(sample_hash_expr(F.col("k"), 0.5, salt="s2")).select("k")))
+    half = int(0.5 * DENOM)
+    a = set(_ids(df.filter(sample_mod_expr(F.col("k"), salt="s1") < half).select("k")))
+    b = set(_ids(df.filter(sample_mod_expr(F.col("k"), salt="s2") < half).select("k")))
     overlap = len(a & b) / 2000
     assert 0.2 < overlap < 0.3  # ≈ 0.25 if independent
 

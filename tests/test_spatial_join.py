@@ -13,6 +13,8 @@ from copernicusdata_jl_spark import fixtures
 from copernicusdata_jl_spark.functions import cells, geo
 from copernicusdata_jl_spark.operators.spatial_join import build_covers, spatial_join
 
+from reference import grid_disk, uncompact_cells
+
 POLYGONS = [
     {"poly_id": "SQ", "rings": [[[0.0, 0.0], [10.0, 0.0], [10.0, 10.0], [0.0, 10.0]]]},
     {
@@ -87,7 +89,7 @@ def test_broadcast_cover_is_uncompacted_compact_cover(polygons):
     want = {
         (pid, leaf, b)
         for pid, cid, b in packed.itertuples(index=False)
-        for leaf in cells.uncompact_cells(np.array([cid]), res).tolist()
+        for leaf in uncompact_cells(np.array([cid]), res).tolist()
     }
     got = list(flat.itertuples(index=False, name=None))
     assert len(got) == len(set(got)) and set(got) == want
@@ -129,7 +131,7 @@ def test_kring_expr_matches_numpy(spark):
     )
     rows = df.select("cell_id", cells.kring_expr("cell_id", 8, 2).alias("ring")).collect()
     for r in rows:
-        assert sorted(r["ring"]) == cells.grid_disk(int(r["cell_id"]), 2)
+        assert sorted(r["ring"]) == grid_disk(int(r["cell_id"]), 2)
 
 
 def test_tile_pyramid_levels_consistent(spark):

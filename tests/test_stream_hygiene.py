@@ -84,18 +84,15 @@ def test_stream_hygiene_matches_batch_front_half(spark, tmp_path):
     # resampling is a deterministic function of (url, per-host rates), so
     # the stream-combined front and the batch front select the same docs
     # despite completely different partitionings
-    from copernicusdata_jl_spark.streaming.hygiene import mix_sample
+    from copernicusdata_jl_spark.operators.corpus import temperature_sample
 
-    want_mix = sorted(
-        map(tuple, mix_sample(
-            hygiene_front(corpus, bench, CAP, MIN_TOKENS, MAX_REP, DECON_N)
-        ).collect())
-    )
-    got_mix = sorted(
-        map(tuple, mix_sample(
-            read_stream_hygiene(spark, out_dir, CAP, MIN_TOKENS, MAX_REP)
-        ).collect())
-    )
+    def mix(front):
+        return sorted(map(tuple, temperature_sample(
+            front, strata_col="host", alpha=0.5, target_frac=0.6, id_col="url"
+        ).collect()))
+
+    want_mix = mix(hygiene_front(corpus, bench, CAP, MIN_TOKENS, MAX_REP, DECON_N))
+    got_mix = mix(read_stream_hygiene(spark, out_dir, CAP, MIN_TOKENS, MAX_REP))
     assert got_mix == want_mix and 0 < len(got_mix) < len(got)
 
     # every stage bites on this fixture: decontaminated docs are gone ...

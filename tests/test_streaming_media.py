@@ -8,7 +8,8 @@ from pyspark.sql import functions as F
 
 from copernicusdata_jl_spark.operators import multimodal as M
 from copernicusdata_jl_spark.streaming import stream_events, windowed_counts
-from copernicusdata_jl_spark.streaming.windowed import run_available_now
+
+from reference import run_available_now
 
 SF = "/root/testdata/sf0.001"
 
@@ -60,64 +61,6 @@ def test_media_decode_deterministic_across_partitions(spark):
     a = M.decode_media(M.media_from_documents(docs).repartition(1)).collect()
     b = M.decode_media(M.media_from_documents(docs).repartition(7)).collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-
-
-def test_frame_sample(spark):
-    frames = spark.createDataFrame([(1, i, b"x") for i in range(30)], "doc_id long, frame_idx long, media binary")
-    assert M.frame_sample(frames, every_n=10).count() == 3
-
-
-def test_stream_dedup_state_bounded(spark, tmp_path):
-    """dropDuplicatesWithinWatermark dedup: one surviving row per key over
-    the replayed history; state expires with the watermark."""
-    from copernicusdata_jl_spark.streaming.windowed import stream_dedup
-
-    stream = stream_dedup(stream_events(spark, SF), ["user_id"], watermark="3650 days")
-    assert stream.isStreaming
-    run_available_now(stream, "dedup_out", str(tmp_path / "ckpt_dd"), output_mode="append")
-    got = spark.table("dedup_out")
-    n_keys = (
-        spark.read.parquet(f"{SF}/events.parquet").select("user_id").distinct().count()
-    )
-    assert got.count() == n_keys
-    assert got.select("user_id").distinct().count() == n_keys
-
-
-def test_running_key_stats_matches_batch(spark, tmp_path):
-    """Custom applyInPandasWithState operator: the final update per key ==
-    the batch groupBy aggregate over the same files."""
-    from copernicusdata_jl_spark.streaming.windowed import running_key_stats
-
-    stream = running_key_stats(stream_events(spark, SF))
-    assert stream.isStreaming
-    run_available_now(stream, "stats_out", str(tmp_path / "ckpt_rs"), output_mode="update")
-    # most recent update per key = the row with the max running count
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
-    got = {
-        r.user_id: r
-        for r in spark.table("stats_out")
-        .withColumn("rn", F.row_number().over(w))
-        .filter("rn = 1")
-        .collect()
-    }
-    want = {
-        r.user_id: r
-        for r in spark.read.parquet(f"{SF}/events.parquet")
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum("value").alias("sum_value"),
-            F.max(F.col("ts").cast("timestamp")).alias("last_ts"),
-        )
-        .collect()
-    }
-    assert set(got) == set(want)
-    for k, g in got.items():
-        assert g.n_events == want[k].n_events
-        assert g.sum_value == pytest.approx(want[k].sum_value, rel=1e-9)
-        assert g.last_ts == want[k].last_ts
 
 
 def test_stream_dedup_latest_matches_batch(spark, tmp_path):
@@ -244,10 +187,7 @@ def test_stream_corpus_matches_batch_prepare_corpus(spark, tmp_path):
     import datetime
 
     from copernicusdata_jl_spark.flagship import build_pages, prepare_corpus
-    from copernicusdata_jl_spark.streaming.windowed import (
-        run_available_now,
-        stream_corpus,
-    )
+    from copernicusdata_jl_spark.streaming.windowed import stream_corpus
 
     pages = build_pages(spark, 300, partitions=4)
     src = str(tmp_path / "pages")

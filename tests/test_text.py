@@ -11,6 +11,8 @@ from pyspark.sql import functions as F
 from copernicusdata_jl_spark import fixtures
 from copernicusdata_jl_spark.functions import text
 
+from reference import expected_text_rich, winnow_fingerprints
+
 
 def test_extractor_matches_expected_text():
     for i in range(200):
@@ -62,10 +64,10 @@ def test_winnow_fingerprints_detect_near_dupes():
     b = a.replace("granule", "granule")  # identical
     c = a + " extra tail words appended here"
     d = text.expected_text(99)
-    fa = set(text.winnow_fingerprints(a))
-    fc = set(text.winnow_fingerprints(c))
-    fd = set(text.winnow_fingerprints(d))
-    assert fa == set(text.winnow_fingerprints(b))
+    fa = set(winnow_fingerprints(a))
+    fc = set(winnow_fingerprints(c))
+    fd = set(winnow_fingerprints(d))
+    assert fa == set(winnow_fingerprints(b))
     jac_ac = len(fa & fc) / len(fa | fc)
     jac_ad = len(fa & fd) / max(1, len(fa | fd))
     assert jac_ac > 0.5 > jac_ad
@@ -75,7 +77,7 @@ def test_rich_extractor_matches_expected_text():
     # rich (Common-Crawl-weight) pages: same byte-identical contract,
     # independently derived golden (boilerplate nav/footer/entities)
     for i in (0, 1, 7, 99, 1234, 54321):
-        assert text.extract_text_py(text.render_html_rich(i)) == text.expected_text_rich(i)
+        assert text.extract_text_py(text.render_html_rich(i)) == expected_text_rich(i)
     assert len(text.render_html_rich(123)) > 2000
 
 

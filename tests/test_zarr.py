@@ -616,6 +616,48 @@ def test_blosc_snappy_chunk_decodes():
     assert blosc_decompress(chunk) == data
 
 
+
+def test_lz4_block_decoder():
+    """Hand-assembled streams per the public LZ4 block format: a literal
+    run then an OVERLAPPING match (RLE idiom), 255-extended literal and
+    match lengths, a trailing literal-only sequence, and corruption errors."""
+    from copernicusdata_jl_spark.sources.zarr import lz4_block_decompress as dec
+
+    # token (lit 2, match 8 - 4): "ab", offset 2 → copies its own output
+    s = bytes([(2 << 4) | (8 - 4)]) + b"ab" + bytes([2, 0]) + bytes([3 << 4]) + b"xyz"
+    assert dec(s, 13) == b"ab" * 5 + b"xyz"
+
+    # nibble 15 + extension bytes 255, 5 → 275 literals; match nibble 15
+    # + 4 + extension 255, 1 → 275 copies of the last byte at offset 1
+    lit = bytes(range(256)) + bytes(range(19))
+    s = bytes([0xFF, 255, 5]) + lit + bytes([1, 0, 255, 1]) + bytes([1 << 4]) + b"Z"
+    assert dec(s, 551) == lit + lit[-1:] * 275 + b"Z"
+
+    with pytest.raises(ValueError, match="zero match offset"):
+        dec(bytes([(1 << 4) | 0]) + b"a" + bytes([0, 0]), 5)
+    with pytest.raises(ValueError, match="expected"):
+        dec(bytes([3 << 4]) + b"xyz", 4)
+
+
+def test_blosc_lz4_chunk_decodes():
+    """blosc chunk with inner codec lz4 (id 1) + byte shuffle: the
+    reference store's codec, without the reference store."""
+    import struct
+
+    from copernicusdata_jl_spark.sources.zarr import blosc_decompress
+
+    data = b"abcd" * 16  # typesize 4 → shuffled planes 'a'*16 'b'*16 'c'*16 'd'*16
+    # per run: one literal + a 15-byte overlapping match at offset 1; the
+    # last run ends in a literal-only sequence, as LZ4 encoders emit
+    payload = b"".join(bytes([(1 << 4) | (15 - 4)]) + c + bytes([1, 0]) for c in (b"a", b"b", b"c"))
+    payload += bytes([(1 << 4) | (10 - 4)]) + b"d" + bytes([1, 0]) + bytes([5 << 4]) + b"d" * 5
+    body = struct.pack("<I", len(payload)) + payload
+    hdr = bytes([2, 1, 0x1 | (1 << 5), 4]) + struct.pack(
+        "<III", len(data), len(data), 16 + 4 + len(body)
+    )
+    chunk = hdr + struct.pack("<I", 20) + body
+    assert blosc_decompress(chunk) == data
+
 def test_zarr_v3_sharding_roundtrip(tmp_path):
     """sharding_indexed: write shards (inner bytes+gzip chunks + crc32c'd
     uint64 index at the end), read back exactly — including a ragged edge
@@ -907,6 +949,7 @@ def test_distributed_scan_zip_store_and_refusals(spark, tmp_path):
     import zipfile
 
     from copernicusdata_jl_spark.sources.zarr import (
+        open_zarr_datatree,
         scan_zarr_distributed,
         write_zarr_array,
         write_zarr_group,
@@ -934,6 +977,17 @@ def test_distributed_scan_zip_store_and_refusals(spark, tmp_path):
         scan_zarr_distributed(spark, "s3://bucket/store.zarr")
     with pytest.raises(KeyError, match="nope"):
         scan_zarr_distributed(spark, zpath, variables=["nope"])
+
+    # the store is a zip by content, not by name, on both entry points
+    odd = str(tmp_path / "store.zarr.zipped")
+    os.rename(zpath, odd)
+    assert scan_zarr_distributed(spark, odd, variables=["v"]).count() == 12
+    tree = open_zarr_datatree(spark, odd)
+    assert sorted(n.data.count() for n in tree if n.data is not None) == [6, 12]
+    # a missing local path is a missing file, not an empty store
+    for read in (scan_zarr_distributed, open_zarr_datatree):
+        with pytest.raises(FileNotFoundError):
+            read(spark, str(tmp_path / "missing.zarr"))
 
 
 def _int_store(root, fmt, spec_fill, attrs, size, vals):

@@ -8,7 +8,7 @@ bench output makes every BENCH_r{N}.json self-calibrating: before reading a
 per-query delta as a plan regression, place both snapshots on the host-state
 axis first.
 
-Scalars (miniature versions of tools/platform_probe.py's microbenchmarks):
+Scalars:
 - ``mem_gb_s``  — single-process NumPy copy rate over a 64 MB working set
   (memory bandwidth; the resource string-heavy extraction consumes).
 - ``alu_mloops_s`` — tight integer-loop rate (CPU scheduling capacity;
