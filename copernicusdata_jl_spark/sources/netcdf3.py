@@ -170,25 +170,22 @@ def read_nc3(path: str):
 def nc3_group_frames(spark: SparkSession, path: str):
     """One .nc file → the zarr-style grouped frames: arrays sharing
     (dims, shape) merge into one DataFrame of ``idx_<dim>`` + value
-    columns, ``_FillValue`` normalized to NULL (shared machinery with the
-    Zarr scan: sources/zarr._group_dataframe). Returns
+    columns, ``_FillValue`` (else ``missing_value``) normalized to NULL.
+    Rows and column types come from the Zarr readers' one row builder
+    (sources/zarr._row_batch, via ``_group_dataframe``). Returns
     ``(frames, global_attrs, fills)``."""
     from .zarr import _group_dataframe
 
     _dims, gattrs, variables = read_nc3(path)
-    arrays: dict[str, tuple[np.ndarray, dict]] = {}
+    arrays: dict[str, tuple[np.ndarray, list[str], object]] = {}
     fills: dict[str, object] = {}
     for nm, (arr, vattrs, dnames) in variables.items():
-        a = dict(vattrs)
-        a["_ARRAY_DIMENSIONS"] = dnames
         if arr.dtype.kind == "S":
             arr = np.char.decode(arr, "latin-1")
-        else:
-            arr = arr.astype(arr.dtype.newbyteorder("="))
         fill = vattrs.get("_FillValue", vattrs.get("missing_value"))
         if fill is not None:
             fills[nm] = fill
-        arrays[nm] = (arr, a)
+        arrays[nm] = (arr, dnames, fill)
     return _group_dataframe(spark, arrays), gattrs, fills
 
 

@@ -1,5 +1,5 @@
 """S2/S10: native Zarr v2 and v3 store reader and writer — from scratch,
-stdlib + NumPy only.
+stdlib + NumPy for stores and codecs, pyarrow for rows.
 
 The reference's primary on-disk format is Zarr group trees
 (``open_zarr_datatree``, reference src/YAXTrees.jl:443-465; zip twin
@@ -15,6 +15,9 @@ directly:
   rule), ``_chunk_key`` (v2 ``.``/``/`` keys, v3 ``c/…`` keys),
   ``_read_chunk`` (hole → ``fill_value``, edge-chunk overhang slicing) and
   ``_write_chunk``;
+- one row path for both read paths (and the NetCDF-3 reader):
+  ``_row_batch`` turns co-shaped blocks into a ``pyarrow.RecordBatch``
+  whose NULLs are the sentinel's elements, typed by ``_arrow_type``;
 - codecs from first principles: raw/zlib/gzip via stdlib, and a pure-
   Python **c-blosc container** decoder (16-byte header, per-block start
   offsets, per-block byte-unshuffle) with a pure-Python **LZ4 block**
@@ -37,12 +40,12 @@ Dataset. ``fill_value`` is normalized to NULL at scan with the original
 recorded as the node's ``missing_value`` property (reference
 src/YAXTrees.jl:370-375).
 
-Two read entry points: ``open_zarr_datatree`` assembles arrays
-driver-side (the only path for S3 stores and string dtypes; Zarr trees in
-the reference are product/granule scale), and ``scan_zarr_distributed``
-decodes chunks in executor tasks, so its memory stays bounded by the
-chunk volume. The one sink, ``write_zarr_datatree``, writes chunks from
-executor tasks.
+Two read entry points with the same rows and column types:
+``open_zarr_datatree`` assembles arrays driver-side (the only path for S3
+stores; Zarr trees in the reference are product/granule scale), and
+``scan_zarr_distributed`` decodes chunks in executor tasks, so its memory
+stays bounded by the chunk volume. The one sink, ``write_zarr_datatree``,
+writes chunks from executor tasks.
 """
 
 from __future__ import annotations
@@ -853,59 +856,63 @@ def read_zarr_array(store: _Store, key: str) -> tuple[np.ndarray, dict]:
     return arr, m["attrs"]
 
 
-def _group_dataframe(spark: SparkSession, arrays: dict[str, tuple[np.ndarray, dict]]):
-    """Merge a group's arrays into DataFrames: arrays sharing (dims, shape)
-    become one frame — index columns ``idx_<dim>`` + a value column per
-    array (the reference's co-dimensioned Dataset). Returns a list of
-    (DataFrame, member_names) in deterministic order."""
-    import pandas as pd
+def _arrow_type(dt: np.dtype):
+    """The one numpy dtype → Arrow value-column type map of both read
+    paths and the NetCDF-3 reader. Unsigned ints widen to the next signed
+    width (uint64 refused: no lossless Spark type); ``|S`` is binary and
+    ``<U`` string."""
+    import pyarrow as pa
 
-    by_sig: dict[tuple, dict[str, tuple[np.ndarray, dict]]] = {}
-    for name in sorted(arrays):
-        a, attrs = arrays[name]
-        dims = tuple(attrs.get("_ARRAY_DIMENSIONS", [f"dim_{i}" for i in range(a.ndim)]))
-        by_sig.setdefault((dims, a.shape), {})[name] = (a, attrs)
-    frames = []
-    for (dims, shape), members in sorted(by_sig.items(), key=lambda kv: kv[0]):
-        cols: dict[str, np.ndarray] = {}
-        if shape:
-            mesh = np.meshgrid(*[np.arange(s, dtype=np.int64) for s in shape], indexing="ij")
-            for d, m in zip(dims, mesh):
-                cols[f"idx_{d}"] = m.ravel()
-        for name, (a, attrs) in members.items():
-            col = a.ravel()
-            fill = attrs.get("_FillValue", attrs.get("missing_value"))
-            if fill is not None:
-                sentinel = col == a.dtype.type(fill)
-                if a.dtype.kind == "f":
-                    col = np.where(sentinel, np.nan, col)
-                elif sentinel.any():  # int/bool: NULL needs object dtype
-                    col = np.array(
-                        [None if s else x.item() for x, s in zip(col, sentinel)], dtype=object
-                    )
-            cols[name] = col
-        pdf = pd.DataFrame(cols)
-        frames.append((spark.createDataFrame(pdf), sorted(members)))
-    return frames
-
-
-def _spark_type_for_np(dt: np.dtype) -> tuple[str, str]:
-    """numpy dtype → (spark type, pandas nullable dtype) for the
-    distributed scan's output schema. Unsigned ints upcast to the next
-    signed width (uint64 refused: no lossless Spark type)."""
-    if dt.kind == "b":
-        return "boolean", "boolean"
-    if dt.kind == "f":
-        return ("double", "Float64") if dt.itemsize == 8 else ("float", "Float32")
-    if dt.kind == "i":
-        return {1: ("tinyint", "Int8"), 2: ("smallint", "Int16"),
-                4: ("int", "Int32"), 8: ("bigint", "Int64")}[dt.itemsize]
+    if dt.kind == "S":
+        return pa.binary()
+    if dt.kind == "U":
+        return pa.string()
     if dt.kind == "u":
         if dt.itemsize == 8:
             raise NotImplementedError("uint64 has no lossless Spark type")
-        return {1: ("smallint", "Int16"), 2: ("int", "Int32"),
-                4: ("bigint", "Int64")}[dt.itemsize]
-    raise NotImplementedError(f"dtype {dt} not supported by the distributed scan")
+        dt = np.dtype(f"i{2 * dt.itemsize}")
+    return pa.from_numpy_dtype(dt)
+
+
+def _row_batch(dims: tuple, origin: tuple, blocks: dict[str, tuple[np.ndarray, object]]):
+    """The one row builder: co-shaped ``name → (block, sentinel)`` blocks
+    whose first element sits at index ``origin`` → a ``pyarrow.RecordBatch``
+    of ``idx_<dim>`` columns plus one value column per block, in ``blocks``
+    order. Elements equal to the sentinel are NULL (a NaN sentinel matches
+    NaN); a ``None`` sentinel masks nothing."""
+    import pyarrow as pa
+
+    shape = next(iter(blocks.values()))[0].shape
+    mesh = np.meshgrid(
+        *[np.arange(o, o + n, dtype=np.int64) for o, n in zip(origin, shape)], indexing="ij"
+    )
+    cols = {f"idx_{d}": pa.array(m.ravel()) for d, m in zip(dims, mesh)}
+    for name, (block, sent) in blocks.items():
+        vals = block.ravel().astype(block.dtype.newbyteorder("="), copy=False)  # Arrow: native order
+        mask = None
+        if sent is not None:
+            f = vals.dtype.type(sent)
+            mask = np.isnan(vals) if f != f else vals == f
+        cols[name] = pa.array(vals, type=_arrow_type(block.dtype), mask=mask)
+    return pa.RecordBatch.from_pydict(cols)
+
+
+def _group_dataframe(spark: SparkSession, arrays: dict[str, tuple[np.ndarray, list, object]]):
+    """Merge a group's ``name → (ndarray, dims, sentinel)`` arrays into
+    DataFrames: arrays sharing (dims, shape) become one frame of
+    :func:`_row_batch` rows (the reference's co-dimensioned Dataset).
+    Returns a list of (DataFrame, member_names) in deterministic order."""
+    import pyarrow as pa
+
+    by_sig: dict[tuple, dict[str, tuple[np.ndarray, object]]] = {}
+    for name in sorted(arrays):
+        a, dims, sent = arrays[name]
+        by_sig.setdefault((tuple(dims), a.shape), {})[name] = (a, sent)
+    frames = []
+    for (dims, shape), members in sorted(by_sig.items(), key=lambda kv: kv[0]):
+        batch = _row_batch(dims, (0,) * len(shape), members)
+        frames.append((spark.createDataFrame(pa.Table.from_batches([batch])), sorted(members)))
+    return frames
 
 
 def scan_zarr_distributed(
@@ -917,13 +924,11 @@ def scan_zarr_distributed(
     """Chunk-parallel Zarr scan → DataFrame: the read-side mirror of the
     chunk-parallel sink. The driver reads ONLY per-array metadata and plans
     over a ``spark.range`` of linear chunk ids; executor tasks open the
-    store themselves, read + decode their chunks with the same block reader
-    as the driver-side assembler (:func:`_read_chunk` — blosc/zlib/gzip/
-    delta/shuffle, v3 codec pipelines incl. ``sharding_indexed``), and emit
-    ``(idx_<dim>..., value...)`` rows with fill sentinels normalized to
-    NULL. Neither driver nor any one task ever materializes a full array —
-    per-task memory is bounded by the chunk volume, so the scan absorbs a
-    100x granule the same way the sink does.
+    store themselves, read + decode their chunks with :func:`_read_chunk`
+    (every codec, v3 ``sharding_indexed`` included) and yield one
+    :func:`_row_batch` per chunk through ``mapInArrow``. Neither driver
+    nor any one task ever materializes a full array — per-task memory is
+    bounded by the chunk volume.
 
     ``variables`` must be co-chunked (same dims, shape AND chunk grid —
     they are, per group, in the reference's products); default is every
@@ -932,14 +937,18 @@ def scan_zarr_distributed(
     ``open_zarr_datatree(client=...)`` — executor-side object-store reads
     need per-worker credentials, the s3a seam documented in COVERAGE.md).
 
-    Rows equal the driver-side scan's (`open_zarr_datatree` node frames):
-    both take metadata and the NULL sentinel from :func:`_array_meta` and
-    blocks from :func:`_read_chunk`; tests/test_zarr.py pins the parity."""
+    Rows and column types equal ``open_zarr_datatree``'s node frames,
+    whatever the session's Arrow setting: both take the NULL sentinel from
+    :func:`_array_meta` and build rows with :func:`_row_batch`;
+    tests/test_zarr.py pins the parity."""
     if path.startswith("s3://"):
         raise NotImplementedError(
             "distributed zarr scan reads stores from executors; use the "
             "driver-side open_zarr_datatree(client=...) for s3:// paths"
         )
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import from_arrow_schema
+
     store = _open_store(path)
 
     metas: dict[str, dict] = {}
@@ -972,44 +981,31 @@ def scan_zarr_distributed(
         sig = next(iter(sigs))
     dims, shape, chunks = sig
     names = sorted(metas)
-    types = {n: _spark_type_for_np(metas[n]["dtype"]) for n in names}
-    schema = ", ".join([f"idx_{d} long" for d in dims] + [f"{n} {types[n][0]}" for n in names])
+    schema = from_arrow_schema(pa.schema(
+        [(f"idx_{d}", pa.int64()) for d in dims]
+        + [(n, _arrow_type(metas[n]["dtype"])) for n in names]
+    ))
     if 0 in shape:
         return spark.createDataFrame([], schema)
     grid = _chunk_grid(shape, chunks)
 
     def scan_chunks(batches):
-        import pandas as pd
-
         from copernicusdata_jl_spark.sources import zarr as Z
 
         st = Z._open_store(path)
-        for pdf in batches:
-            for lin in pdf["id"].tolist():
+        for batch in batches:
+            for lin in batch.column("id").to_pylist():
                 coords = tuple(int(k) for k in np.unravel_index(lin, grid))
-                blocks = {n: Z._read_chunk(st, Z._sub(group, n), metas[n], coords) for n in names}
-                mesh = np.meshgrid(
-                    *[np.arange(k * c, k * c + n_, dtype=np.int64)
-                      for k, c, n_ in zip(coords, chunks, blocks[names[0]].shape)],
-                    indexing="ij",
-                )
-                cols = {f"idx_{d}": m.ravel() for d, m in zip(dims, mesh)}
-                for n in names:
-                    vals = blocks[n].ravel()
-                    sent = metas[n]["attrs"].get("_FillValue")
-                    if sent is None:
-                        cols[n] = vals
-                        continue
-                    f = vals.dtype.type(sent)
-                    s = pd.array(vals, dtype=types[n][1])
-                    s[np.isnan(vals) if f != f else vals == f] = pd.NA
-                    cols[n] = s
-                yield pd.DataFrame(cols)
+                yield Z._row_batch(dims, tuple(k * c for k, c in zip(coords, chunks)), {
+                    n: (Z._read_chunk(st, Z._sub(group, n), metas[n], coords),
+                        metas[n]["attrs"].get("_FillValue"))
+                    for n in names
+                })
 
     nchunks = int(np.prod(grid))
     par = spark.sparkContext.defaultParallelism
     rng = spark.range(nchunks, numPartitions=min(nchunks, par))
-    return rng.mapInPandas(scan_chunks, schema)
+    return rng.mapInArrow(scan_chunks, schema)
 
 
 def open_zarr_datatree(
@@ -1056,7 +1052,7 @@ def open_zarr_datatree(
         zj_raw = store.read(_sub(key, "zarr.json"))
         if zj_raw:  # v3 group: attributes live inline in zarr.json
             node.properties.update(json.loads(zj_raw).get("attributes") or {})
-        arrays: dict[str, tuple[np.ndarray, dict]] = {}
+        arrays: dict[str, tuple[np.ndarray, list, object]] = {}
         subgroups: list[str] = []
         for entry in store.listdir(key):
             if entry in _META_KEYS:
@@ -1066,8 +1062,9 @@ def open_zarr_datatree(
             if kind == "array":
                 if group is None or group in node.path:
                     arr, attrs = read_zarr_array(store, child_key)
-                    arrays[entry] = (arr, attrs)
                     fill = attrs.get("_FillValue")
+                    dims = attrs.get("_ARRAY_DIMENSIONS") or [f"dim_{i}" for i in range(arr.ndim)]
+                    arrays[entry] = (arr, dims, fill)
                     if fill is not None:
                         # per-variable, like the reference's per-array
                         # missing_value attribute (arrays merge into one

@@ -7,8 +7,6 @@ from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import functions as F
-
 from copernicusdata_jl_spark.operators.asof import asof_join
 
 

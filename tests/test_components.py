@@ -5,9 +5,6 @@ need multiple propagation rounds, and the end-to-end corpus resolution.
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
 from copernicusdata_jl_spark.operators.components import (
     connected_components,
     resolve_duplicates,

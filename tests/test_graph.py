@@ -6,7 +6,6 @@ two-node fixture with a known closed form.
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from copernicusdata_jl_spark.operators.graph import pagerank
 

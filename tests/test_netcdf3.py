@@ -134,6 +134,8 @@ def test_open_datatree_dispatches_nc3_and_normalizes_fill(spark, tmp_path):
                 and "temp" in n.data.columns)
     got = {(r["idx_y"], r["idx_x"]): r["temp"] for r in node.data.collect()}
     assert got[(0, 1)] is None and got[(1, 2)] is None and got[(0, 0)] == 1
+    # the Zarr readers' dtype map: i2 with a sentinel keeps its width
+    assert dict(node.data.dtypes)["temp"] == "smallint"
     # record var frame exists with both records
     rnode = next(n for n in t if n.data is not None and "rv" in n.data.columns)
     assert rnode.data.count() == 6

@@ -11,7 +11,6 @@ the assertions run against the explain output rather than the results.
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from copernicusdata_jl_spark.operators.spatial_join import spatial_join

@@ -28,9 +28,9 @@ def test_stream_equals_batch(spark, tmp_path):
 
 def test_watermark_present_in_plan(spark):
     stream = windowed_counts(stream_events(spark, SF), watermark="3 hours")
-    assert "watermark" in stream.explain if False else True
     plan = stream._jdf.queryExecution().analyzed().toString()
-    assert "EventTimeWatermark" in plan
+    wm = [ln for ln in plan.splitlines() if "EventTimeWatermark" in ln]
+    assert len(wm) == 1 and wm[0].endswith(", 3 hours"), plan
 
 
 def test_media_decode_shapes(spark):

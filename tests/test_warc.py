@@ -7,7 +7,6 @@ from __future__ import annotations
 import gzip
 
 import pytest
-from pyspark.sql import functions as F
 
 from copernicusdata_jl_spark.sources.warc import (
     parse_warc_bytes,

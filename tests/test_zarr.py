@@ -990,9 +990,9 @@ def test_distributed_scan_zip_store_and_refusals(spark, tmp_path):
             read(spark, str(tmp_path / "missing.zarr"))
 
 
-def _int_store(root, fmt, spec_fill, attrs, size, vals):
-    """Hand-written int32 array ``v`` (dim ``i``, chunks of 2, no codec)
-    holding ``vals``; chunks past ``vals`` are holes."""
+def _store(root, fmt, dtype, spec_fill, attrs, size, vals):
+    """Hand-written array ``v`` of ``dtype`` (dim ``i``, chunks of 2, no
+    codec) holding ``vals``; chunks past ``vals`` are holes."""
     import json
     import os
 
@@ -1000,14 +1000,15 @@ def _int_store(root, fmt, spec_fill, attrs, size, vals):
     os.makedirs(os.path.join(v, "c"))
     if fmt == 2:
         json.dump({"zarr_format": 2}, open(os.path.join(root, ".zgroup"), "w"))
-        meta = {"zarr_format": 2, "shape": [size], "chunks": [2], "dtype": "<i4",
+        meta = {"zarr_format": 2, "shape": [size], "chunks": [2], "dtype": dtype,
                 "order": "C", "fill_value": spec_fill, "filters": None, "compressor": None}
         json.dump(meta, open(os.path.join(v, ".zarray"), "w"))
         json.dump({"_ARRAY_DIMENSIONS": ["i"], **attrs}, open(os.path.join(v, ".zattrs"), "w"))
     else:
         json.dump({"zarr_format": 3, "node_type": "group"},
                   open(os.path.join(root, "zarr.json"), "w"))
-        meta = {"zarr_format": 3, "node_type": "array", "shape": [size], "data_type": "int32",
+        meta = {"zarr_format": 3, "node_type": "array", "shape": [size],
+                "data_type": np.dtype(dtype).name,
                 "chunk_grid": {"name": "regular", "configuration": {"chunk_shape": [2]}},
                 "chunk_key_encoding": {"name": "default", "configuration": {"separator": "/"}},
                 "fill_value": spec_fill, "dimension_names": ["i"], "attributes": attrs,
@@ -1015,38 +1016,61 @@ def _int_store(root, fmt, spec_fill, attrs, size, vals):
         json.dump(meta, open(os.path.join(v, "zarr.json"), "w"))
     for k in range(len(vals) // 2):
         key = str(k) if fmt == 2 else os.path.join("c", str(k))
-        open(os.path.join(v, key), "wb").write(np.array(vals[2 * k:2 * k + 2], dtype="<i4").tobytes())
+        open(os.path.join(v, key), "wb").write(np.array(vals[2 * k:2 * k + 2], dtype=dtype).tobytes())
 
 
 @pytest.mark.parametrize(
-    "fmt, spec_fill, attrs, size, vals, want",
+    "fmt, dtype, spec_fill, attrs, size, vals, want, want_type",
     [
         # xarray NetCDF conventions: _FillValue in .zattrs, .zarray fill null
-        (2, None, {"_FillValue": -9999}, 4, [1, -9999, -9999, 4], [1, None, None, 4]),
+        (2, "<i4", None, {"_FillValue": -9999}, 4, [1, -9999, -9999, 4], [1, None, None, 4], "int"),
         # missing_value differs from the spec fill_value: the spec fill is
         # the sentinel (and fills the hole chunk); -9 stays a value
-        (2, -1, {"missing_value": -9}, 6, [1, -1, -9, 4], [1, None, -9, 4, None, None]),
-        (3, -1, {"missing_value": -9}, 6, [1, -1, -9, 4], [1, None, -9, 4, None, None]),
+        (2, "<i4", -1, {"missing_value": -9}, 6, [1, -1, -9, 4], [1, None, -9, 4, None, None], "int"),
+        (3, "<i4", -1, {"missing_value": -9}, 6, [1, -1, -9, 4], [1, None, -9, 4, None, None], "int"),
+        # one dtype -> Spark type map: integer columns keep their width
+        # with a sentinel, unsigned widen to the next signed width
+        (2, "|i1", -1, {}, 4, [1, -1, 3, 4], [1, None, 3, 4], "tinyint"),
+        (2, "<u2", 7, {}, 4, [1, 7, 3, 4], [1, None, 3, 4], "int"),
+        (2, "<u2", None, {}, 4, [1, 2, 3, 4], [1, 2, 3, 4], "int"),
+        (2, "<i4", None, {}, 4, [1, 2, 3, 4], [1, 2, 3, 4], "int"),
+        # float sentinels are NULL, not NaN, whatever the Arrow setting
+        (2, "<f8", None, {"_FillValue": -9999}, 4, [1, -9999, 3, 4], [1.0, None, 3.0, 4.0], "double"),
+        (3, "<f8", "NaN", {}, 4, [1, np.nan, 3, 4], [1.0, None, 3.0, 4.0], "double"),
+        (2, "<f4", -1.0, {}, 4, [1, -1, 3, 4], [1.0, None, 3.0, 4.0], "float"),
+        # fixed-width strings read through the scan too
+        (2, "|S6", "LS0=", {}, 4, [b"a", b"--", b"c", b"d"], [b"a", None, b"c", b"d"], "binary"),
+        (2, "<U3", "--", {}, 4, ["a", "--", "c", "d"], ["a", None, "c", "d"], "string"),
+        # a zero-size array is an empty frame of the same type
+        (2, "<i4", -1, {}, 0, [], [], "int"),
     ],
-    ids=["v2_zattrs_fillvalue", "v2_missing_value", "v3_missing_value"],
+    ids=["v2_zattrs_fillvalue", "v2_missing_value", "v3_missing_value", "v2_int8_fill",
+         "v2_uint16_fill", "v2_uint16_no_fill", "v2_int32_no_fill", "v2_float64_zattrs_fillvalue",
+         "v3_float64_nan_fill", "v2_float32_fill", "v2_bytes_fill", "v2_unicode_fill",
+         "v2_empty"],
 )
 def test_distributed_scan_honors_zattrs_fill_sentinel(
-    spark, tmp_path, fmt, spec_fill, attrs, size, vals, want
+    spark, tmp_path, fmt, dtype, spec_fill, attrs, size, vals, want, want_type
 ):
-    """One NULL-sentinel rule for both read paths: the explicit _FillValue
-    attribute, else the spec fill_value, else the missing_value attribute.
-    An externally-written v2 store declaring _FillValue only in .zattrs,
-    and v2/v3 stores whose missing_value attribute differs from the spec
-    fill_value, read the same rows through the driver-side and the
-    distributed scan."""
+    """One NULL-sentinel rule and one row builder for both read paths: the
+    explicit _FillValue attribute, else the spec fill_value, else the
+    missing_value attribute. Externally-written v2/v3 stores read the same
+    column type and rows through the driver-side and the distributed scan,
+    with the session's Arrow conversion on and off."""
     from copernicusdata_jl_spark.sources.zarr import (
         open_zarr_datatree,
         scan_zarr_distributed,
     )
 
     root = str(tmp_path / "ext.zarr")
-    _int_store(root, fmt, spec_fill, attrs, size, vals)
-    drv = {r["idx_i"]: r["v"] for r in open_zarr_datatree(spark, root).data.collect()}
-    dist = {r["idx_i"]: r["v"] for r in scan_zarr_distributed(spark, root).collect()}
-    assert drv == dict(enumerate(want))
-    assert dist == drv
+    _store(root, fmt, dtype, spec_fill, attrs, size, vals)
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    saved = spark.conf.get(key)
+    try:
+        for arrow in ("true", "false"):
+            spark.conf.set(key, arrow)
+            for df in (open_zarr_datatree(spark, root).data, scan_zarr_distributed(spark, root)):
+                assert dict(df.dtypes)["v"] == want_type, arrow
+                assert [r["v"] for r in df.orderBy("idx_i").collect()] == want, arrow
+    finally:
+        spark.conf.set(key, saved)
