@@ -10,7 +10,7 @@ Architecture (Spark-first, NOT a port):
   (reference docs/src/examples.md:44-46) become plain ``lat``/``lon``
   columns feeding cell indexing.
 - **Cell index**: a deterministic equirectangular quadtree ("EQC grid",
-  :mod:`.functions.cells`) standing in for H3/S2 — ``latlng_to_cell`` is a
+  :mod:`.functions.cells`) standing in for H3/S2 — ``latlng_to_cell_expr`` is a
   pure Catalyst column expression (floor arithmetic → whole-stage codegen,
   no UDF), with NumPy twins for driver-side polygon covers.
 - **Spatial join**: compacted polygon covers → broadcast / cell-ID

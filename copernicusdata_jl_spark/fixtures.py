@@ -1,12 +1,11 @@
-"""Deterministic synthetic tables (FIXTURES.md): pages, footprints,
-admin_polygons, planted embeddings. Seeded NumPy, no wall-clock, no
-external data.
+"""Deterministic synthetic tables (FIXTURES.md): page languages,
+footprints, planted embeddings. Seeded NumPy, no wall-clock, no external
+data.
 
-``pages`` mirrors BASELINE.json's input hint
-``(url, warc_ts, html, text, lang)`` plus geotag columns; host ids are
-Zipf-skewed so a few mega-hosts exercise skew salting. ``footprints``
-mirror Sentinel granule identity (product name encodes type + sensing time
-+ tile id, reference src/YAXTrees.jl:311, name slice 5:12 at :539-540).
+``LANGS`` is the language cycle of the flagship's ``build_pages``.
+``footprints`` mirror Sentinel granule identity (product name encodes type
++ sensing time + tile id, reference src/YAXTrees.jl:311, name slice 5:12 at
+:539-540).
 """
 
 from __future__ import annotations
@@ -15,53 +14,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from .functions.text import expected_text, render_html
-
 LANGS = ["en", "fr", "de", "es", "pt"]
-BASE_TS = np.datetime64("2024-01-01T00:00:00")
-
-
-def pages_pdf(n: int = 1000, seed: int = 42) -> pd.DataFrame:
-    rng = np.random.default_rng(seed)
-    i = np.arange(n, dtype=np.int64)
-    # Zipf-skewed host assignment over 200 hosts (alpha=1.2)
-    ranks = np.arange(1, 201, dtype=np.float64)
-    probs = ranks ** -1.2
-    probs /= probs.sum()
-    host = rng.choice(200, size=n, p=probs)
-    url = np.array([f"https://host{h:04d}.example/p/{k}" for h, k in zip(host, i)])
-    warc_ts = BASE_TS + (i * 137).astype("timedelta64[s]")
-    # ~5% duplicated urls with later warc_ts (dedup-window test)
-    ndup = n // 20
-    dup_src = rng.choice(n, size=ndup, replace=False)
-    # geotag: cluster center per host + jitter; ~30% coastal band
-    center_lat = (host * 37 % 160) - 80 + 0.5
-    center_lon = (host * 73 % 360) - 180 + 0.5
-    lat = np.clip(center_lat + rng.normal(0, 2.0, n), -89.9, 89.9)
-    lon = ((center_lon + rng.normal(0, 2.0, n) + 180) % 360) - 180
-    coastal = rng.random(n) < 0.3
-    lat = np.where(coastal, np.clip(lat * 0.2 + 10.0, -89.9, 89.9), lat)
-    # antimeridian band
-    anti = rng.random(n) < 0.02
-    lon = np.where(anti, ((179.5 + rng.random(n)) + 180) % 360 - 180, lon)
-    lang = np.array(LANGS)[i % 5]
-    html = [render_html(int(k)) for k in i]
-    text = [expected_text(int(k)) for k in i]
-    pdf = pd.DataFrame(
-        {
-            "url": url,
-            "warc_ts": pd.to_datetime(warc_ts),
-            "html": [h.encode("utf-8") for h in html],
-            "text": text,
-            "lang": lang,
-            "lat": lat,
-            "lon": lon,
-        }
-    )
-    dups = pdf.iloc[dup_src].copy()
-    dups["warc_ts"] = dups["warc_ts"] + pd.Timedelta(days=30)
-    out = pd.concat([pdf, dups], ignore_index=True)
-    return out.sort_values("url", kind="stable").reset_index(drop=True)
 
 
 def _rect(lon0, lat0, w, h) -> np.ndarray:
@@ -112,33 +65,6 @@ def footprints(n: int = 200, seed: int = 42) -> list[dict]:
                 "sensing_start": start,
                 "sensing_stop": start + pd.Timedelta(minutes=3),
                 "tile_id": f"T{tile:03d}",
-                "rings": [r.tolist() for r in rings],
-            }
-        )
-    return out
-
-
-def admin_polygons(n: int = 50, seed: int = 42) -> list[dict]:
-    rng = np.random.default_rng(seed + 1)
-    out = []
-    for k in range(n):
-        lon0 = float(((k * 67) % 320) - 160)
-        lat0 = float(((k * 41) % 140) - 70)
-        w, h = 6.0 + float(rng.random() * 10), 5.0 + float(rng.random() * 8)
-        if k == 7:  # multi-thousand-vertex "coast" polygon (hot boundary cell)
-            t = np.linspace(0, 2 * np.pi, 2500, endpoint=False)
-            rr = 5.0 + 1.5 * np.sin(9 * t) + 0.7 * np.sin(23 * t)
-            ring = np.column_stack([lon0 + rr * np.cos(t), lat0 + rr * 0.7 * np.sin(t)])
-            ring[:, 0] = np.clip(ring[:, 0], -179.9, 179.9)
-            ring[:, 1] = np.clip(ring[:, 1], -89.9, 89.9)
-            rings = [ring]
-        else:
-            rings = [_rect(lon0, lat0, w, h)]
-        out.append(
-            {
-                "admin_id": f"ADM{k:04d}",
-                "level": k % 3,
-                "name": f"region-{k}",
                 "rings": [r.tolist() for r in rings],
             }
         )

@@ -38,7 +38,7 @@ from pyspark.sql import types as T
 
 from . import fixtures
 from .functions import cells
-from .functions.text import render_html, render_html_rich, with_extracted_text
+from .functions.text import render_html, with_extracted_text
 from .operators.lineage import lineage_rows
 from .operators.spatial_join import spatial_join
 
@@ -48,16 +48,11 @@ def _render_html_udf(i: pd.Series) -> pd.Series:
     return i.map(lambda k: render_html(int(k)))
 
 
-@F.pandas_udf(T.StringType())
-def _render_html_rich_udf(i: pd.Series) -> pd.Series:
-    return i.map(lambda k: render_html_rich(int(k)))
-
-
-def build_pages(spark: SparkSession, n: int, partitions: int = 32, rich: bool = False) -> DataFrame:
+def build_pages(spark: SparkSession, n: int, partitions: int = 32) -> DataFrame:
     """Deterministic distributed pages table (url, warc_ts, html, lang,
-    lat, lon). Same arithmetic family as fixtures.pages_pdf but generated
-    executor-side so n scales without a driver bottleneck. ~5% of urls get
-    a later-timestamp duplicate (dedup work)."""
+    lat, lon), generated executor-side so n scales without a driver
+    bottleneck. ~5% of urls get a later-timestamp duplicate (dedup
+    work)."""
     base = spark.range(0, n, 1, partitions)
     dups = (
         spark.range(0, n, 1, partitions)
@@ -74,9 +69,7 @@ def build_pages(spark: SparkSession, n: int, partitions: int = 32, rich: bool = 
         F.concat(F.lit("https://host"), host.cast("string"), F.lit(".example/p/"), F.col("id").cast("string")).alias("url"),
         (F.to_timestamp(F.lit("2024-01-01 00:00:00"))
          + (F.col("id") * 137 + F.col("dup") * 2592000).cast("long").cast("interval second")).alias("warc_ts"),
-        F.encode(
-            (_render_html_rich_udf if rich else _render_html_udf)(F.col("id")), "utf-8"
-        ).alias("html"),
+        F.encode(_render_html_udf(F.col("id")), "utf-8").alias("html"),
         F.element_at(F.array(*[F.lit(x) for x in fixtures.LANGS]), (F.pmod(F.col("id"), F.lit(5)) + 1).cast("int")).alias("lang"),
         lat.alias("lat"),
         lon.alias("lon"),

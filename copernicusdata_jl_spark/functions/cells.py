@@ -14,8 +14,8 @@ into ``nx = 2^(r+1)`` columns of longitude and ``ny = 2^r`` rows of latitude
     cell_id = r * 2^58 + x * 2^29 + y
 
 Why not the real H3 library: it is not installed here, and — more important
-for a 100 TB engine — a *pure-arithmetic* index means ``latlng_to_cell``,
-``cell_parent`` and tile math are Catalyst column expressions: they run
+for a 100 TB engine — a *pure-arithmetic* index means ``latlng_to_cell_expr``,
+``cell_parent_expr`` and tile math are Catalyst column expressions: they run
 JVM-side inside whole-stage codegen, cost no Python round-trip, survive
 predicate pushdown, and are independently checkable by any ANSI-SQL oracle.
 The quadtree hierarchy gives exact parent/child/compact semantics (4 children
@@ -33,8 +33,9 @@ Two kinds of function:
 - ``*_expr``: a Spark Column (and ``*_sql``: the identical ANSI-SQL string)
 - a NumPy implementation (suffix-free) for driver-side cover computation
   and for pandas-UDF kernels.
-The NumPy references the tests check ``kring_expr`` and the covers against
-(children, k-ring, uncompact) live in tests/reference.py.
+The NumPy references the tests check the expressions and the covers
+against (point to cell, children, k-ring, uncompact) live in
+tests/reference.py.
 """
 
 from __future__ import annotations
@@ -74,11 +75,6 @@ def pack(res, x, y):
         + np.asarray(x, dtype=np.int64) * X_MULT
         + np.asarray(y, dtype=np.int64)
     )
-
-
-def latlng_to_cell(lat, lon, res: int):
-    x, y = latlng_to_xy(lat, lon, res)
-    return pack(res, x, y)
 
 
 def unpack(cell_id):

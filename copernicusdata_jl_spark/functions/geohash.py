@@ -16,8 +16,9 @@ size), interleave with the same shift-or chain as ``zorder_expr``
 (cluster.py), then render base32 via ``substr`` over the alphabet literal.
 Everything stays inside whole-stage codegen; the DuckDB twin
 (``geohash_sql``) is the identical arithmetic, so oracle hashes match
-exactly, and ``geohash_py`` pins both against the canonical
-interval-halving algorithm (published vectors + random sweep).
+exactly, and a pure-Python reference in ``tests/reference.py`` pins both
+against the canonical interval-halving algorithm (published vectors +
+random sweep).
 
 Boundary caveat (documented, not hidden): the single multiply rounds once
 where interval halving compares against exactly-representable midpoints,
@@ -37,13 +38,12 @@ same level-from-level trick as tile_pyramid).
 
 from __future__ import annotations
 
-import math
 from functools import reduce
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-__all__ = ["ALPHABET", "geohash_expr", "geohash_sql", "geohash_py"]
+__all__ = ["ALPHABET", "geohash_expr", "geohash_sql", "quadkey_expr", "quadkey_sql"]
 
 ALPHABET = "0123456789bcdefghjkmnpqrstuvwxyz"
 
@@ -115,26 +115,6 @@ def geohash_sql(lat: str, lon: str, precision: int = 8) -> str:
         for i in range(precision)
     ]
     return "(" + " || ".join(chars) + ")"
-
-
-def geohash_py(lat: float, lon: float, precision: int = 8) -> str:
-    """Pure-Python reference with the same quantization formula (tests pin
-    the Spark/SQL twins against it AND against canonical interval-halving)."""
-    total, lon_bits, lat_bits = _bit_split(precision)
-    latq = min(max(int(math.floor((lat + 90.0) / 180.0 * float(1 << lat_bits))), 0), (1 << lat_bits) - 1)
-    lonq = min(max(int(math.floor((lon + 180.0) / 360.0 * float(1 << lon_bits))), 0), (1 << lon_bits) - 1)
-    z = 0
-    if total % 2 == 1:
-        for i in range(lon_bits):
-            z |= ((lonq >> i) & 1) << (2 * i)
-        for i in range(lat_bits):
-            z |= ((latq >> i) & 1) << (2 * i + 1)
-    else:
-        for i in range(lat_bits):
-            z |= ((latq >> i) & 1) << (2 * i)
-        for i in range(lon_bits):
-            z |= ((lonq >> i) & 1) << (2 * i + 1)
-    return "".join(ALPHABET[(z >> (5 * (precision - 1 - i))) & 31] for i in range(precision))
 
 
 # ---------------------------------------------------------------------------

@@ -5,9 +5,9 @@ The extractor is the engine's per-row invariant gate: byte-identical ``text``
 per ``url`` across runs/partitions/parallelism (BASELINE.json input hint).
 It is pure (no locale, wall-clock, or library-version dependence — a fixed
 regex pipeline), runs as a JVM codegen expression (:func:`extract_text_expr`)
-specified by the Python :func:`extract_text_py`, and has an
-independently-written ANSI-SQL twin (:func:`extract_text_sql`) so any SQL
-engine can oracle the digests.
+specified by the pure-Python extractor in ``tests/reference.py``, and has
+an independently-written ANSI-SQL twin (:func:`extract_text_sql`) so any
+SQL engine can oracle the digests.
 """
 
 from __future__ import annotations
@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # ---------------------------------------------------------------------------
-# Deterministic synthetic HTML (fixture twin of the extractor)
+# Deterministic synthetic HTML (the flagship's pages)
 # ---------------------------------------------------------------------------
 
 WORDS = (
@@ -48,21 +48,17 @@ def render_html(i: int) -> str:
     )
 
 
-def expected_text(i: int) -> str:
-    """Golden extractor output for ``render_html(i)`` — written independently
-    of the extractor so tests compare two derivations."""
-    paras = " ".join(_sentence(i, k) for k in range(1 + i % 3))
-    return f"doc {i} Document {i} {paras}"
-
-
 # ---------------------------------------------------------------------------
-# Extractor — Arrow-batched, pure regex pipeline
+# Extractor — one fused regex pass
 # ---------------------------------------------------------------------------
 
-# Tag-name boundary written as an explicit ASCII negative lookahead
-# (?![0-9A-Za-z_]) rather than \b: Python \b is Unicode-aware and Java \b is
-# ASCII in this position, so the same pattern text would diverge on inputs
-# like "<scripté" — the lookahead is identical ASCII semantics in both.
+_ENTITIES = [("&lt;", "<"), ("&gt;", ">"), ("&quot;", '"'), ("&#39;", "'"), ("&amp;", "&")]
+
+# The pattern of extract_text_expr. Tag-name boundary written as an
+# explicit ASCII negative lookahead (?![0-9A-Za-z_]) rather than \b: Python
+# \b is Unicode-aware and Java \b is ASCII in this position, so the same
+# pattern text would diverge on inputs like "<scripté" — the lookahead is
+# identical ASCII semantics in both.
 #
 # Pass fusion (bandwidth, r2+r3): script/style-block removal, tag-strip and
 # whitespace-collapse all fuse into ONE alternation pass replacing each
@@ -91,32 +87,11 @@ def expected_text(i: int) -> str:
 # never backtracks anyway) — same language, pinned by the oracle. Measured
 # at 2M rich pages, local[16]: sequential two-pass 31.5s → fused 29.5s →
 # this form 23.7s for the extraction stage.
-_BOUND = r"(?![0-9A-Za-z_])"
-_RE_EXTRACT = re.compile(
-    rf"(?:[ \t\n\r\f]++|<(?:script{_BOUND}[^>]*+>.*?</script>"
-    rf"|style{_BOUND}[^>]*+>.*?</style>|[^>]*+>))+",
-    re.S | re.I,
-)
-_ENTITIES = [("&lt;", "<"), ("&gt;", ">"), ("&quot;", '"'), ("&#39;", "'"), ("&amp;", "&")]
-
-
-def extract_text_py(html: str) -> str:
-    """Pure-Python single-string extractor (the specification).
-
-    Edge trimming is explicitly ASCII-space-only (``strip(" ")``): Python's
-    bare ``str.strip()`` also removes \\x0b and Unicode whitespace (NBSP …)
-    that the collapse class leaves behind, while Spark ``trim()`` removes
-    only 0x20 — pinning both to ASCII space keeps the Python/JVM/SQL
-    paths byte-identical on real-world whitespace (see ADVICE r1)."""
-    s = _RE_EXTRACT.sub(" ", html)
-    for ent, ch in _ENTITIES:
-        s = s.replace(ent, ch)
-    return s.strip(" ")
 
 
 def extract_text_expr(html: Column) -> Column:
-    """JVM-side extractor twin: the same fixed regex pipeline as
-    :func:`extract_text_py`, built from Catalyst ``regexp_replace`` /
+    """JVM-side extractor: the same fixed regex pipeline as the Python
+    specification in ``tests/reference.py``, built from Catalyst ``regexp_replace`` /
     ``replace`` so it runs inside whole-stage codegen — no Arrow transfer,
     no python workers. Byte-identical to the Python specification and the
     DuckDB SQL twin (asserted in tests/test_text.py). It is the only
@@ -156,7 +131,7 @@ def with_extracted_text(
 
 def extract_text_sql(html_expr: str) -> str:
     """ANSI-SQL twin of the extractor (DuckDB/RE2-compatible), used as the
-    independent oracle for digest parity. Mirrors extract_text_py exactly
+    independent oracle for digest parity. Mirrors the Python specification exactly
     for HTML without nested/malformed tags. RE2 lacks lookahead, so the
     ASCII tag boundary is the equivalent alternation (>| non-word char);
     same single fused pass as the engine (script|style blocks, tags, ws)."""
@@ -383,22 +358,6 @@ m AS (
 )
 SELECT {id_col}, unnest(fps) AS fp FROM m ORDER BY {id_col}, fp
 """
-
-
-def render_html_rich(i: int) -> str:
-    """Rich deterministic page (~3 KB, Common-Crawl-ish weight): nav/footer
-    boilerplate, 40-59 paragraphs, inline style + trailing script. Used by
-    the flagship benchmark so extraction cost per row resembles real crawl
-    pages rather than fixture stubs."""
-    paras = "".join(f"<p>{_sentence(i, k)}</p>" for k in range(40 + i % 20))
-    return (
-        f"<html><head><title>doc {i}</title><meta charset=\"utf-8\"/>"
-        f"<style>p{{margin:0;padding:2px}} nav{{display:flex}}</style></head>"
-        f"<body><nav><a href=\"/\">home</a> | <a href=\"/about\">about</a></nav>"
-        f"<h1>Document {i}</h1>{paras}"
-        f"<footer>terms &amp; privacy {i % 100}</footer>"
-        f"<script>var x={i};track(x);</script></body></html>"
-    )
 
 
 # punctuation folds: curly quotes -> straight, en/em dash -> '-', NBSP

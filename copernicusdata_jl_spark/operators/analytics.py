@@ -36,9 +36,6 @@ def skyline2d(
     df: DataFrame,
     x_col: str,
     y_col: str,
-    *,
-    minimize_x: bool = True,
-    maximize_y: bool = True,
 ) -> DataFrame:
     """Pareto frontier of ``df`` under (minimize x, maximize y) — rows for
     which no other row is at-least-as-good on both axes and strictly
@@ -50,12 +47,10 @@ def skyline2d(
     iff the running max of y over STRICTLY EARLIER rows reaches its own y
     (an earlier row has x <= mine; equal-x rows with equal y are impossible
     after distinct, so the test is exact strict dominance). One window,
-    no self-join. Other orientations are handled by sign-flipping into
-    the canonical frame and never materializing the flipped columns in
-    the output.
+    no self-join. For another orientation, negate a column before the
+    call.
     """
-    sx = F.col(x_col) if minimize_x else -F.col(x_col)
-    sy = F.col(y_col) if maximize_y else -F.col(y_col)
+    sx, sy = F.col(x_col), F.col(y_col)
     pts = (
         df.select(sx.alias("_sx"), sy.alias("_sy"))
         .filter(F.col("_sx").isNotNull() & F.col("_sy").isNotNull())

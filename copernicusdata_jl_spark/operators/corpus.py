@@ -74,13 +74,35 @@ def decontaminate(
     )
 
 
+def _dup_positions(
+    corpus: DataFrame, k: int, id_col: str, text_col: str, min_docs: int
+) -> DataFrame:
+    """``(id, p)`` of every duplicated 1-based k-gram position: one whose
+    gram occurs in ≥ ``min_docs`` distinct documents. The positional
+    explode feeds ONE aggregate keyed by gram (map-side partial
+    count-distinct via the (gram, doc) pre-distinct), and the join back to
+    positions reuses that hash partitioning (AQE). The gram string is the
+    key, which keeps the DuckDB oracle exact."""
+    pos = corpus.select(
+        F.col(id_col),
+        F.posexplode(word_ngrams_expr(F.col(text_col), k, distinct=False)).alias("_p0", "gram"),
+    ).select(id_col, (F.col("_p0") + 1).alias("p"), "gram")
+    hot = (
+        pos.select(id_col, "gram").distinct()
+        .groupBy("gram")
+        .agg(F.count(F.lit(1)).alias("nd"))
+        .filter(F.col("nd") >= min_docs)
+        .select("gram")
+    )
+    return pos.join(hot, "gram").select(id_col, "p")
+
+
 def dup_span_stats(
     corpus: DataFrame,
     k: int = 5,
     id_col: str = "doc_id",
     text_col: str = "text",
     min_docs: int = 2,
-    hashed: bool = False,
 ) -> DataFrame:
     """Per-document duplicated-span statistics via positional k-grams.
 
@@ -90,31 +112,18 @@ def dup_span_stats(
     et al. threshold to drop or trim documents built from boilerplate.
 
     Scale shape: ``total_grams`` is computed map-side from the token count
-    (no explode); the positional explode feeds ONE aggregate keyed by gram
-    (map-side partial count-distinct via the (gram, doc) pre-distinct) and
-    the join back to positions reuses that hash partitioning (AQE).
-    ``hashed=True`` is the 100 TB flavor: the gram key becomes a 64-bit
-    ``xxhash64`` (same plan, 8-byte shuffle keys instead of strings;
-    pair-set parity with the string flavor pinned in tests — the string
-    key is what keeps the DuckDB oracle exact).
+    (no explode); the duplicated positions are :func:`_dup_positions`,
+    counted per document.
     """
     toks = F.split(F.col(text_col), " ")
     total = F.greatest(F.size(toks) - (k - 1), F.lit(0))
-    base = corpus.select(F.col(id_col), total.alias("total_grams"),
-                         word_ngrams_expr(F.col(text_col), k, distinct=False).alias("_g"))
-    pos = base.select(id_col, F.explode("_g").alias("gram"))
-    if hashed:
-        pos = pos.withColumn("gram", F.xxhash64("gram"))
-    hot = (
-        pos.select(id_col, "gram").distinct()
-        .groupBy("gram")
-        .agg(F.count(F.lit(1)).alias("nd"))
-        .filter(F.col("nd") >= min_docs)
-        .select("gram")
+    dup = (
+        _dup_positions(corpus, k, id_col, text_col, min_docs)
+        .groupBy(id_col)
+        .agg(F.count(F.lit(1)).alias("dup_grams"))
     )
-    dup = pos.join(hot, "gram").groupBy(id_col).agg(F.count(F.lit(1)).alias("dup_grams"))
     return (
-        base.select(id_col, "total_grams")
+        corpus.select(F.col(id_col), total.alias("total_grams"))
         .join(dup, id_col, "left")
         .select(
             id_col,
@@ -397,11 +406,11 @@ def dup_span_islands(
     id_col: str = "doc_id",
     text_col: str = "text",
     min_docs: int = 2,
-    hashed: bool = False,
 ) -> DataFrame:
     """Contiguous duplicated spans per document — Lee et al. 2021's actual
     removal unit, built from the same positional k-gram multiplicity as
-    :func:`dup_span_stats` plus a gaps-and-islands window.
+    :func:`dup_span_stats` (:func:`_dup_positions`) plus a gaps-and-islands
+    window.
 
     A gram *position* (1-based) is duplicated when its k-gram occurs in
     ≥ ``min_docs`` distinct documents; maximal runs of consecutive
@@ -415,26 +424,8 @@ def dup_span_islands(
     the document id — the text and grams never reach it. The classic
     ``pos - row_number()`` grouping key turns each maximal run into one
     group so the whole merge is a single window + aggregate, no iteration.
-    ``hashed=True`` is the 100 TB flavor (same as :func:`dup_span_stats`):
-    gram keys become 64-bit ``xxhash64`` so the multiplicity aggregate and
-    the join back shuffle 8-byte longs instead of gram strings — identical
-    output (position-set parity pinned in tests; the string key is what
-    keeps the DuckDB oracle exact).
     """
-    pos = corpus.select(
-        F.col(id_col),
-        F.posexplode(word_ngrams_expr(F.col(text_col), k, distinct=False)).alias("_p0", "gram"),
-    ).select(id_col, (F.col("_p0") + 1).alias("p"), "gram")
-    if hashed:
-        pos = pos.withColumn("gram", F.xxhash64("gram"))
-    hot = (
-        pos.select(id_col, "gram").distinct()
-        .groupBy("gram")
-        .agg(F.count(F.lit(1)).alias("nd"))
-        .filter(F.col("nd") >= min_docs)
-        .select("gram")
-    )
-    dup = pos.join(hot, "gram").select(id_col, "p")
+    dup = _dup_positions(corpus, k, id_col, text_col, min_docs)
     w = Window.partitionBy(id_col).orderBy("p")
     return (
         dup.withColumn("_grp", F.col("p") - F.row_number().over(w))
@@ -453,12 +444,10 @@ def blocklist_filter(
     blocklist: DataFrame,
     host_col: str = "host",
     id_col: str = "doc_id",
-    invert: bool = False,
 ) -> DataFrame:
     """Drop documents whose host is a blocklisted domain OR any subdomain
     of one (suffix match on label boundaries) — the UT1/C4-style domain
-    blocklist stage. ``blocklist`` has a ``domain`` column;
-    ``invert=True`` returns the blocked rows instead (audit mode).
+    blocklist stage. ``blocklist`` has a ``domain`` column.
 
     Scale shape: each host expands map-side into its O(labels) dot-suffix
     chain (``a.b.spam.farm`` → 4 suffixes) and joins the BROADCAST
@@ -478,7 +467,7 @@ def blocklist_filter(
         .select(id_col)
         .distinct()
     )
-    return corpus.join(hits, id_col, "left_semi" if invert else "left_anti")
+    return corpus.join(hits, id_col, "left_anti")
 
 
 def remove_dup_spans(
@@ -488,13 +477,11 @@ def remove_dup_spans(
     text_col: str = "text",
     min_docs: int = 2,
     min_span_tokens: int | None = None,
-    hashed: bool = False,
 ) -> DataFrame:
     """Lee et al. 2021's removal step applied: delete every token covered
     by a duplicated span (:func:`dup_span_islands`, optionally only spans
-    ≥ ``min_span_tokens`` — their paper uses 50; ``hashed=True`` selects
-    the islands' 8-byte-gram-key flavor for the 100 TB shuffle) and return
-    each document with its residual text: ``(id, clean_text, n_removed)``.
+    ≥ ``min_span_tokens`` — their paper uses 50) and return each document
+    with its residual text: ``(id, clean_text, n_removed)``.
 
     Scale shape: the islands computation is :func:`dup_span_islands`
     unchanged; per-doc spans collapse to a small struct array
@@ -503,7 +490,7 @@ def remove_dup_spans(
     the text is rewritten map-side after one (id)-keyed join, never
     exploded to token rows.
     """
-    spans = dup_span_islands(corpus, k, id_col, text_col, min_docs, hashed=hashed)
+    spans = dup_span_islands(corpus, k, id_col, text_col, min_docs)
     if min_span_tokens is not None:
         spans = spans.filter(F.col("span_tokens") >= min_span_tokens)
     per_doc = spans.groupBy(id_col).agg(
@@ -903,7 +890,6 @@ def line_dedup(
     id_col: str = "doc_id",
     text_col: str = "text",
     min_chars: int = 1,
-    hashed: bool = False,
 ) -> DataFrame:
     """☆ Global line-level dedup (the C4 recipe, Raffel et al. 2020 §2.2:
     'we discarded all but one of any three-sentence span occurring more
@@ -914,31 +900,26 @@ def line_dedup(
     n_removed)``.
 
     ``min_chars`` exempts short lines (blank separators and one-word
-    bullets would otherwise dedup across the entire corpus); ``hashed``
-    shuffles 8-byte ``xxhash64(line)`` keys instead of line bytes — the
-    100 TB flavor (same survivors absent hash collisions; equality with
-    the string-keyed flavor is pinned by test).
+    bullets would otherwise dedup across the entire corpus). The line
+    string is the election key, which keeps the DuckDB oracle exact.
 
     Scale: the winner election groups (key, id, pos) triples only; the
     loser list joins back as (id, pos) int pairs; the rebuild is one
     map-side JVM index-filter over a split-once line array (materialized
     in its own projection — the SPARK-35410 rule, see
-    ``remove_dup_spans``). Text bytes never ride a shuffle key when
-    ``hashed=True``.
+    ``remove_dup_spans``).
     """
     lines = corpus.select(
         F.col(id_col), F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "line")
     )
     elig = lines.filter(F.length("line") >= min_chars)
-    key = F.xxhash64("line") if hashed else F.col("line")
-    elig = elig.withColumn("_k", key)
     win = (
-        elig.groupBy("_k")
+        elig.groupBy("line")
         .agg(F.min(F.struct(id_col, "pos")).alias("_w"), F.count("*").alias("_n"))
         .filter(F.col("_n") > 1)
     )
     losers = (
-        elig.join(win, "_k")
+        elig.join(win, "line")
         .filter(
             ~((F.col(id_col) == F.col(f"_w.{id_col}")) & (F.col("pos") == F.col("_w.pos")))
         )
@@ -1036,7 +1017,6 @@ def dsir_scores(
     text_col: str = "text",
     n_buckets: int = 1024,
     salt: str = "dsir",
-    log_form: bool = False,
 ) -> DataFrame:
     """☆ DSIR-style importance scoring (Xie et al. 2023, "Data Selection
     for Language Models via Importance Resampling"): score every corpus
@@ -1044,17 +1024,14 @@ def dsir_scores(
     training mix can resample raw crawl toward a small trusted target set.
 
     Features are salted-hash buckets of whitespace tokens (the paper's
-    hashed n-gram reduction). Two flavors:
-
-    - ratio form (default): ``score = sum_t cnt_target[b(t)] * R /
-      (sum_t cnt_raw[b(t)] * T)`` with R/T the global token totals —
-      one integer-exact numerator/denominator pair and a single IEEE
-      division, reproducible bit-for-bit in any engine (the same
-      log-avoidance trick as cooccur_pmi; see the queries/ parity rules).
-    - log form (``log_form=True``): the paper's actual importance
-      log-weight ``sum_t log((cnt_t+1)/(T+B)) - log((cnt_r+1)/(R+B))``
-      — use for production resampling, not for cross-engine oracles
-      (libm log is not guaranteed identical across engines).
+    hashed n-gram reduction). The score is the ratio form
+    ``score = sum_t cnt_target[b(t)] * R / (sum_t cnt_raw[b(t)] * T)``
+    with R/T the global token totals — one integer-exact
+    numerator/denominator pair and a single IEEE division, reproducible
+    bit-for-bit in any engine (the same log-avoidance trick as
+    cooccur_pmi; see the queries/ parity rules). The paper's log-weight
+    ``sum_t log((cnt_t+1)/(T+B)) - log((cnt_r+1)/(R+B))`` is not offered:
+    libm log is not guaranteed identical across engines.
 
     Scale shape: both distributions aggregate to ``n_buckets`` rows —
     broadcast-sized sidecars joined onto the exploded token stream
@@ -1086,17 +1063,6 @@ def dsir_scores(
         F.sum("cr").alias("sum_raw"),
     )
     out = per_doc.crossJoin(F.broadcast(tot_t)).crossJoin(F.broadcast(tot_r))
-    if log_form:
-        score = (
-            F.log((F.col("ct") + 1).cast("double") / (F.col("tt") + n_buckets).cast("double"))
-            - F.log((F.col("cr") + 1).cast("double") / (F.col("tr") + n_buckets).cast("double"))
-        )
-        logw = joined.crossJoin(F.broadcast(tot_t)).crossJoin(F.broadcast(tot_r)).select(
-            id_col, score.alias("s")
-        )
-        return logw.groupBy(id_col).agg(
-            F.count(F.lit(1)).alias("n_tokens"), F.sum("s").alias("log_weight")
-        )
     return out.select(
         id_col,
         "n_tokens",

@@ -8,13 +8,14 @@ completed buckets from its work and recomputes only what's missing.
 
 The checksum is an order-insensitive BIT_XOR of row hashes — stable under
 any partitioning/shuffle order, so resume verification works no matter how
-AQE re-plans the job. Checkpoint storage: ``atomic=True`` (the default for
-:func:`run_with_resume`) commits through :class:`..operators.snapshot.
-SnapshotTable` — manifest-listed parquet with atomic create-if-absent
-publishes, so a crashed run can never expose a torn checkpoint to the next
-resume (Iceberg's guarantee, implemented locally; the jar-backed catalog
-drops into the same seam). ``atomic=False`` is the plain append-only
-parquet directory. Reads auto-detect the layout.
+AQE re-plans the job. Checkpoint storage: :func:`run_with_resume` always
+commits through :class:`..operators.snapshot.SnapshotTable` —
+manifest-listed parquet with atomic create-if-absent publishes, so a
+crashed run can never expose a torn checkpoint to the next resume
+(Iceberg's guarantee, implemented locally; the jar-backed catalog drops
+into the same seam). :func:`write_checkpoint` also writes the plain
+append-only parquet directory (``atomic=False``). Reads auto-detect the
+layout.
 """
 
 from __future__ import annotations
@@ -96,12 +97,11 @@ def run_with_resume(
     checkpoint_path: str,
     run_id: str,
     cell_col: str = "cell_id",
-    atomic: bool = True,
 ) -> tuple[DataFrame, int]:
-    """Compute lineage for buckets not yet checkpointed, append them, and
-    return (lineage_df_written, n_buckets_skipped). Idempotent: a second
-    call with the same checkpoint writes nothing. With ``atomic`` (default)
-    a run killed mid-commit leaves the checkpoint exactly as before — the
+    """Compute lineage for buckets not yet checkpointed, commit them as one
+    snapshot, and return (lineage_df_written, n_buckets_skipped).
+    Idempotent: a second call with the same checkpoint writes nothing. A
+    run killed mid-commit leaves the checkpoint exactly as before — the
     retry recomputes that run's buckets instead of trusting torn state.
 
     Contract: bucket ids are work units, one lineage row each, so the done
@@ -117,5 +117,5 @@ def run_with_resume(
     fresh = df.filter(F.col(bucket_col).isin(sorted(todo)))
     lin = lineage_rows(fresh, bucket_col, cell_col)
     if todo:
-        write_checkpoint(lin, checkpoint_path, run_id, atomic=atomic)
+        write_checkpoint(lin, checkpoint_path, run_id, atomic=True)
     return lin, len(total) - len(todo)

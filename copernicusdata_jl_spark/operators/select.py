@@ -3,13 +3,12 @@ conditional-masking surface re-expressed as Catalyst projections.
 
 - ``select_vars`` / ``exclude_vars``: reference src/YAXTrees.jl:1082-1126 /
   :1146-1175 (keep/drop listed variables; warn-or-raise on missing).
-- ``where_mask`` / ``pwhere_mask``: reference src/YAXTrees.jl:794-804
-  (element-wise ternary with missing→false coalescing) and :826-854
-  (``pwhere`` — the chunked/parallel variant; Spark partitions replace
-  ``setchunks``, so ``pwhere`` is ``repartition(n)`` + the same projection;
-  both fuse into whole-stage codegen).
-- ``rename_vars``: the SEN3 mapping src→dest rename projection
-  (reference src/YAXTrees.jl:584-587).
+- ``where_mask``: reference src/YAXTrees.jl:794-804 (element-wise ternary
+  with missing→false coalescing); it fuses into whole-stage codegen. The
+  chunked ``pwhere`` (:826-854) is ``where_mask`` after a ``repartition``:
+  Spark partitions replace ``setchunks``, and the rows are the same.
+- The SEN3 mapping src→dest rename (reference src/YAXTrees.jl:584-587) is
+  ``sources/mapping.apply_mapping``.
 """
 
 from __future__ import annotations
@@ -22,13 +21,11 @@ from pyspark.sql import functions as F
 log = logging.getLogger(__name__)
 
 
-def select_vars(df: DataFrame, varnames: list[str], strict: bool = False) -> DataFrame:
+def select_vars(df: DataFrame, varnames: list[str]) -> DataFrame:
     """Keep listed columns. Missing names warn (reference logs
-    "Variable(s) not found", src/YAXTrees.jl:1041-1044) or raise."""
+    "Variable(s) not found", src/YAXTrees.jl:1041-1044)."""
     missing = [v for v in varnames if v not in df.columns]
     if missing:
-        if strict:
-            raise KeyError(f"variables not found: {missing}")
         log.warning("select_vars: variable(s) not found: %s", missing)
     keep = [v for v in varnames if v in df.columns]
     return df.select(*keep)
@@ -39,30 +36,11 @@ def exclude_vars(df: DataFrame, varnames: list[str]) -> DataFrame:
     return df.drop(*[v for v in varnames if v in df.columns])
 
 
-def rename_vars(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
-    """Mapping-driven src→dest rename projection (reference
-    src/YAXTrees.jl:584-587; mapping JSONs under src/mappings/)."""
-    return df.select(
-        *[F.col(c).alias(mapping.get(c, c)) for c in df.columns]
-    )
-
-
 def where_mask(df: DataFrame, cond: Column, v1: Column, v2: Column, out_col: str) -> DataFrame:
     """``where(cond, v1, v2)`` with the reference's missing-aware rule:
     NULL condition counts as false (coalesce(cond, false),
     reference src/YAXTrees.jl:802-804)."""
     return df.withColumn(out_col, F.when(F.coalesce(cond, F.lit(False)), v1).otherwise(v2))
-
-
-def pwhere_mask(
-    df: DataFrame, cond: Column, v1: Column, v2: Column, out_col: str, num_partitions: int | None = None
-) -> DataFrame:
-    """Chunked/parallel ``pwhere`` (reference src/YAXTrees.jl:826-854):
-    ``setchunks`` becomes ``repartition`` — results identical to
-    :func:`where_mask` by construction, only the physical layout differs."""
-    if num_partitions:
-        df = df.repartition(num_partitions)
-    return where_mask(df, cond, v1, v2, out_col)
 
 
 def normalize_fill_value(df: DataFrame, col: str, fill_value) -> DataFrame:

@@ -310,8 +310,29 @@ class SnapshotTable:
         return vs[-1] if vs else None
 
     def manifest(self, version: int) -> dict:
+        """Manifest ``version`` as ``commit``/``delete`` write it. A manifest
+        without a recorded ``schema`` (written before schemas were
+        recorded) is refused: its files' union schema is unknown."""
         with open(os.path.join(self._mdir(), f"v{version:08d}.json")) as f:
-            return json.load(f)
+            doc = json.load(f)
+        if "schema" not in doc:
+            raise ValueError(
+                f"{self.path!r}: manifest v{version} records no schema; "
+                "rewrite the table into a fresh path"
+            )
+        return doc
+
+    @staticmethod
+    def _reader(spark: SparkSession, doc: dict):
+        """A parquet reader of the snapshot's recorded schema (the additive
+        union over its history), projected by NAME: files written before a
+        column was added read it as NULL."""
+        from pyspark.sql.types import StructField, StructType, _parse_datatype_json_string
+
+        return spark.read.schema(StructType([
+            StructField(n, _parse_datatype_json_string(t), True)
+            for n, t in doc["schema"].items()
+        ]))
 
     @staticmethod
     def _check_evolution(parent_schema: dict[str, str], df: DataFrame, parent_v) -> None:
@@ -389,7 +410,7 @@ class SnapshotTable:
             # fail additive-only violations BEFORE the (possibly huge) data
             # write; the publish loop re-validates against whatever parent
             # it actually rebases onto
-            self._check_evolution(self.manifest(pre).get("schema", {}), df, pre)
+            self._check_evolution(self.manifest(pre)["schema"], df, pre)
         df.write.mode("error").parquet(ddir)
         files = sorted(
             f"data/{cid}/{f}" for f in os.listdir(ddir) if f.endswith(".parquet")
@@ -446,9 +467,7 @@ class SnapshotTable:
                 else {**parent_doc.get("file_stats", {}), **stats},
                 # per-file sequence number (the version that added the file)
                 # — what decides which equality deletes apply to which rows
-                # (a delete affects only files with a LOWER seq). Legacy
-                # parent files missing from the map read as seq 0: older
-                # than any delete, so deletes always apply — safe direction.
+                # (a delete affects only files with a LOWER seq)
                 "file_seq": {f: version for f in files} if replace
                 else {**parent_doc.get("file_seq", {}),
                       **{f: version for f in files}},
@@ -464,15 +483,10 @@ class SnapshotTable:
                 "deletes": ([] if replace else parent_doc.get("deletes", []))
                 + ([{"files": _delete_keys[0], "key_cols": _delete_keys[1],
                      "seq": version}] if _delete_keys else []),
+                # union of parent + new columns: files written before a
+                # column was added surface it as NULL on read
+                "schema": {**parent_schema, **new_fields},
             }
-            # union of parent + new columns: files written before a column
-            # was added surface it as NULL on read. A LEGACY parent (no
-            # recorded schema) stays schema-less: its historical files'
-            # columns are unknown here, and recording only the new commit's
-            # columns would make read()'s schema projection silently hide
-            # the old files' extra columns
-            if latest is None or "schema" in parent_doc:
-                doc["schema"] = {**parent_schema, **new_fields}
             return doc
 
         return self._publish_manifest(next_doc, max_retries)
@@ -507,8 +521,8 @@ class SnapshotTable:
             if latest is None:
                 raise ValueError("cannot delete from a table with no snapshot")
             parent_doc = self.manifest(latest)
-            schema = parent_doc.get("schema", {})
-            missing = [c for c in key_cols if schema and c not in schema]
+            schema = parent_doc["schema"]
+            missing = [c for c in key_cols if c not in schema]
             if missing:
                 raise ValueError(
                     f"delete key column(s) {missing} not in table schema "
@@ -629,34 +643,12 @@ class SnapshotTable:
         all_files = doc["files"]
         if not all_files:
             return None
-        reader = spark.read
-        if doc.get("schema"):
-            # the snapshot's evolved schema (additive union over its
-            # history): files written before a column was added read it
-            # as NULL — the parquet reader projects a supplied schema by
-            # NAME, no mergeSchema footer sweep needed
-            from pyspark.sql.types import StructField, StructType, _parse_datatype_json_string
-
-            reader = reader.schema(StructType([
-                StructField(n, _parse_datatype_json_string(t), True)
-                for n, t in doc["schema"].items()
-            ]))
-        else:
-            # legacy table (manifest predates schema recording): the files'
-            # union schema is unknown, so pay the footer sweep rather than
-            # letting Spark sample one file and silently drop the columns
-            # the others carry
-            reader = reader.option("mergeSchema", "true")
+        reader = self._reader(spark, doc)
         files = self.files_for(v, where)
         if not files:
-            # schema-stable empty result, read no rows. With a recorded
-            # schema one file suffices (the supplied schema projects by
-            # name); a LEGACY table must plan over ALL files so mergeSchema
-            # still unions every footer — one file alone could omit columns
-            # the others carry, breaking downstream unionByName
-            base = all_files if not doc.get("schema") else all_files[:1]
-            df = reader.parquet(*[os.path.join(self.path, f) for f in base])
-            return df.filter(F.lit(False))
+            # schema-stable empty result, read no rows: the recorded schema
+            # projects by name, so one file suffices
+            return reader.parquet(os.path.join(self.path, all_files[0])).filter(F.lit(False))
         df = self._read_with_deletes(spark, reader, doc, files)
         return df.filter(_residual(where)) if where else df
 
@@ -674,11 +666,9 @@ class SnapshotTable:
         deletes = doc.get("deletes", [])
         if not deletes:
             return reader.parquet(*[os.path.join(self.path, f) for f in files])
-        fseq = doc.get("file_seq", {})
         groups: dict[tuple, list[str]] = {}
         for f in files:
-            s = fseq.get(f, 0)  # legacy file: older than any delete
-            applicable = tuple(i for i, d in enumerate(deletes) if d["seq"] > s)
+            applicable = tuple(i for i, d in enumerate(deletes) if d["seq"] > doc["file_seq"][f])
             groups.setdefault(applicable, []).append(f)
         parts = []
         for applicable, fl in sorted(groups.items()):
@@ -729,15 +719,7 @@ class SnapshotTable:
         added = doc.get("added", [])
         if not added:
             return None
-        reader = spark.read
-        if doc.get("schema"):
-            from pyspark.sql.types import StructField, StructType, _parse_datatype_json_string
-
-            reader = reader.schema(StructType([
-                StructField(n, _parse_datatype_json_string(t), True)
-                for n, t in doc["schema"].items()
-            ]))
-        return reader.parquet(*[os.path.join(self.path, f) for f in added])
+        return self._reader(spark, doc).parquet(*[os.path.join(self.path, f) for f in added])
 
     def compact(self, spark: SparkSession, target_files: int = 1,
                 run_id: str = "compact") -> int | None:

@@ -114,9 +114,7 @@ class DataTree:
         Returns a new tree; lazy — no job runs until an action."""
 
         def rec(src: DataTree, parent: DataTree | None) -> DataTree:
-            data = src.data
-            if data is not None or all_nodes:
-                data = fn(data) if (data is not None or all_nodes) else None
+            data = fn(src.data) if src.data is not None or all_nodes else None
             out = DataTree(src.name, src.properties, data, parent)
             for name in sorted(src.children):
                 out.children[name] = rec(src.children[name], out)

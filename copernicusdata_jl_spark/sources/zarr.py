@@ -178,27 +178,15 @@ def _unshuffle(buf: bytes, typesize: int) -> bytes:
     return out + buf[n * typesize :]
 
 
-def _bit_shuffle(buf: bytes, typesize: int) -> bytes:
-    """Forward blosc bit-shuffle, NumPy-vectorized. Layout per the public
+def _bit_unshuffle(buf: bytes, typesize: int) -> bytes:
+    """Inverse blosc bit-shuffle, NumPy-vectorized. Layout per the public
     bitshuffle reference implementation (kiyo-masui/bitshuffle
     ``bshuf_trans_bit_elem``, the kernel c-blosc's BITSHUFFLE flag calls):
-    output plane ``[byte b][bit ii]`` packs bit ``ii`` of byte ``b`` of
-    every element, elements LSB-first in groups of 8. Per c-blosc's
-    wrapper, only ``n - n % 8`` whole elements shuffle; leftover bytes
-    (tail elements + any partial element) are copied verbatim."""
-    n = len(buf) // typesize
-    n8 = n - n % 8
-    if n8 == 0:
-        return buf
-    head = np.frombuffer(buf[: n8 * typesize], np.uint8).reshape(n8, typesize)
-    bits = np.unpackbits(head, axis=1, bitorder="little").reshape(n8, typesize, 8)
-    planes = bits.transpose(1, 2, 0).reshape(typesize, 8, n8 // 8, 8)
-    return np.packbits(planes, axis=3, bitorder="little").tobytes() + buf[n8 * typesize :]
-
-
-def _bit_unshuffle(buf: bytes, typesize: int) -> bytes:
-    """Inverse of :func:`_bit_shuffle` (exact by construction; round-trip
-    property-tested in tests/test_zarr.py)."""
+    plane ``[byte b][bit ii]`` packs bit ``ii`` of byte ``b`` of every
+    element, elements LSB-first in groups of 8. Per c-blosc's wrapper,
+    only ``n - n % 8`` whole elements are shuffled; leftover bytes are
+    verbatim. The forward shuffle it inverts is in tests/reference.py
+    (round-trip property-tested in tests/test_zarr.py)."""
     n = len(buf) // typesize
     n8 = n - n % 8
     if n8 == 0:
@@ -652,7 +640,7 @@ def _v3_decode_shard(
     out = (
         np.zeros(shard_shape, dtype=dtype)
         if fill is None
-        else np.full(shard_shape, dtype.type(fill), dtype=dtype)
+        else np.full(shard_shape, fill, dtype=dtype)
     )
     for j in itertools.product(*[range(g) for g in grid]):
         off, nb = int(index[j + (0,)]), int(index[j + (1,)])
@@ -762,6 +750,23 @@ def _node_type(store: _Store, key: str) -> str | None:
     return "group" if store.read(_sub(key, ".zgroup")) is not None else None
 
 
+def _sentinel(dtype: np.dtype, value, name: str):
+    """``value`` as a scalar of ``dtype`` — the one conversion of every
+    fill and NULL sentinel. An integer dtype takes only an integral value
+    within ``np.iinfo(dtype)`` and raises ``ValueError`` naming the array
+    otherwise (a plain cast would wrap −1 to 255 in ``uint8`` or truncate
+    1.5 to 1); other dtypes keep the plain cast, so a float32 fill of
+    ``9.96921e36`` still matches its rounded elements."""
+    if dtype.kind not in "iu":
+        return dtype.type(value)
+    if isinstance(value, (float, np.floating)) and float(value).is_integer():
+        value = int(value)
+    info = np.iinfo(dtype)
+    if not isinstance(value, (int, np.integer)) or not info.min <= int(value) <= info.max:
+        raise ValueError(f"{name!r}: fill/missing value {value!r} is not a {dtype} value")
+    return dtype.type(value)
+
+
 def _array_meta(store: _Store, key: str) -> dict:
     """ONE array's metadata, v2 (``.zarray`` + ``.zattrs``) or v3
     (``zarr.json``), normalised for both read paths: ``dtype``, ``shape``,
@@ -775,7 +780,9 @@ def _array_meta(store: _Store, key: str) -> dict:
     sink's ``_cd_no_missing`` marker says it is only the hole value v3
     requires), else the ``missing_value`` attribute. The result is
     ``attrs["_FillValue"]`` — the reference likewise rewrites the fill into
-    a missing_value attribute at scan (src/YAXTrees.jl:370-375)."""
+    a missing_value attribute at scan (src/YAXTrees.jl:370-375). Both the
+    hole value and the sentinel must be values of the dtype
+    (:func:`_sentinel`); ``fill`` is returned converted."""
     zj = store.read(_sub(key, "zarr.json"))
     if zj is not None:
         meta = json.loads(zj)
@@ -819,11 +826,13 @@ def _array_meta(store: _Store, key: str) -> dict:
         attrs.setdefault("_FillValue", fill)
     sent = attrs.get("_FillValue", attrs.get("missing_value"))
     if sent is not None:
+        _sentinel(dtype, sent, key)
         attrs["_FillValue"] = sent
     return {
         "version": 2 if zj is None else 3, "meta": meta, "dtype": dtype,
         "shape": tuple(meta["shape"]), "chunks": chunks, "sep": sep,
-        "v2_keys": v2_keys, "fill": fill, "attrs": attrs,
+        "v2_keys": v2_keys, "fill": None if fill is None else _sentinel(dtype, fill, key),
+        "attrs": attrs,
     }
 
 
@@ -836,7 +845,7 @@ def _read_chunk(store: _Store, key: str, m: dict, coords: tuple) -> np.ndarray:
     inb = _chunk_extent(coords, chunks, m["shape"])
     raw = store.read(_sub(key, _chunk_key(coords, m["sep"], m["v2_keys"])))
     if raw is None:
-        return np.zeros(inb, dtype) if fill is None else np.full(inb, dtype.type(fill), dtype)
+        return np.zeros(inb, dtype) if fill is None else np.full(inb, fill, dtype)
     if m["version"] == 2:
         block = _decode_block_v2(raw, m["meta"], dtype, chunks)
     else:
@@ -879,7 +888,8 @@ def _row_batch(dims: tuple, origin: tuple, blocks: dict[str, tuple[np.ndarray, o
     whose first element sits at index ``origin`` → a ``pyarrow.RecordBatch``
     of ``idx_<dim>`` columns plus one value column per block, in ``blocks``
     order. Elements equal to the sentinel are NULL (a NaN sentinel matches
-    NaN); a ``None`` sentinel masks nothing."""
+    NaN); a ``None`` sentinel masks nothing, and one that is not a value of
+    the block's dtype raises (:func:`_sentinel`)."""
     import pyarrow as pa
 
     shape = next(iter(blocks.values()))[0].shape
@@ -891,7 +901,7 @@ def _row_batch(dims: tuple, origin: tuple, blocks: dict[str, tuple[np.ndarray, o
         vals = block.ravel().astype(block.dtype.newbyteorder("="), copy=False)  # Arrow: native order
         mask = None
         if sent is not None:
-            f = vals.dtype.type(sent)
+            f = _sentinel(vals.dtype, sent, name)
             mask = np.isnan(vals) if f != f else vals == f
         cols[name] = pa.array(vals, type=_arrow_type(block.dtype), mask=mask)
     return pa.RecordBatch.from_pydict(cols)
@@ -1206,8 +1216,8 @@ def _write_chunk(
     """Pad ``view`` — the in-bounds region of chunk ``coords`` — to the
     chunk shape with ``pad`` (zeros when None), encode it (v3: little-endian,
     ``inner`` chunks for ``sharding_indexed``) and write it under the array
-    directory ``d``: the one chunk writer of :func:`write_zarr_array`,
-    :func:`write_zarr_array_v3` and the datatree sink, so their bytes agree
+    directory ``d``: the one chunk writer of the datatree sink and of the
+    whole-array writers the tests build stores with, so their bytes agree
     by construction."""
     block = np.zeros(chunks, view.dtype) if pad is None else np.full(chunks, pad, view.dtype)
     block[tuple(slice(0, s) for s in view.shape)] = view
@@ -1220,26 +1230,6 @@ def _write_chunk(
     os.makedirs(os.path.dirname(path), exist_ok=True)
     with open(path, "wb") as f:
         f.write(payload)
-
-
-def write_zarr_array(
-    root: str,
-    name: str,
-    arr: np.ndarray,
-    chunks: tuple[int, ...] | None = None,
-    attrs: dict | None = None,
-    fill_value=None,
-) -> None:
-    """Write one Zarr v2 array with the stdlib zlib compressor — a
-    spec-compliant store any zarr implementation opens. Used for
-    round-trip tests and local fixtures (the production sink stays
-    parquet/Iceberg, sources/datatree.to_parquet)."""
-    chunks = chunks or arr.shape or (1,)
-    d = os.path.join(root, name)
-    _v2_write_array_meta(d, arr.shape, chunks, arr.dtype.str, fill_value, attrs)
-    for idx in np.ndindex(*_chunk_grid(arr.shape, chunks)):
-        sel = tuple(slice(i * c, (i + 1) * c) for i, c in zip(idx, chunks))
-        _write_chunk(d, idx, arr[sel], chunks, None, False, None)
 
 
 def write_zarr_group(root: str) -> None:
@@ -1255,43 +1245,6 @@ def write_zarr_group_v3(root: str, attrs: dict | None = None) -> None:
         doc["attributes"] = attrs
     with open(os.path.join(root, "zarr.json"), "w") as f:
         json.dump(doc, f)
-
-
-def write_zarr_array_v3(
-    root: str,
-    name: str,
-    arr: np.ndarray,
-    chunks: tuple[int, ...] | None = None,
-    attrs: dict | None = None,
-    fill_value=0,
-    dims: list[str] | None = None,
-    shards: tuple[int, ...] | None = None,
-) -> None:
-    """Write one Zarr v3 array (``bytes`` little-endian + gzip codec
-    pipeline, default ``c/``-separated chunk keys) — spec-compliant for
-    any v3 implementation; used for round-trip tests and fixtures.
-
-    ``shards``: when given, write the ``sharding_indexed`` layout — the
-    store grid is ``shards``-sized objects each packing ``chunks``-sized
-    inner chunks (bytes+gzip) plus a (bytes+crc32c) uint64 offset/nbytes
-    index at the end. The object-store-friendly v3 layout: inner-chunk
-    random access with O(shard) keys instead of O(chunk)."""
-    chunks = chunks or arr.shape or (1,)
-    if shards is not None:
-        if any(s % c for s, c in zip(shards, chunks)):
-            raise ValueError(f"chunks {chunks} must divide shards {shards}")
-        store_chunks = tuple(shards)
-    else:
-        store_chunks = tuple(chunks)
-    inner = None if shards is None else tuple(chunks)
-    d = os.path.join(root, name)
-    _v3_write_array_meta(
-        d, arr.shape, store_chunks, arr.dtype.name, fill_value, attrs, dims, inner_chunks=inner
-    )
-    pad = _v3_fill_value(fill_value, arr.dtype)  # "NaN" etc → numpy scalar
-    for idx in np.ndindex(*_chunk_grid(arr.shape, store_chunks)):
-        sel = tuple(slice(i * c, (i + 1) * c) for i, c in zip(idx, store_chunks))
-        _write_chunk(d, idx, arr[sel], store_chunks, pad, True, inner)
 
 
 _SPARK_TO_NP = {
@@ -1342,8 +1295,8 @@ def _write_node_arrays(
     NULLs without one are only representable for float columns (as NaN)
     and raise otherwise. Regions are base-filled (the fill, else 0); v2
     pads out-of-bounds cells with zeros and v3 with the fill, exactly as
-    :func:`write_zarr_array` / :func:`write_zarr_array_v3` do for an
-    array holding those values."""
+    writing the whole array through ``_write_chunk`` does for an array
+    holding those values."""
     from pyspark.sql import functions as F
 
     aggs = [F.max(F.col(c)).alias(c) for c in idx_cols] + [

@@ -27,7 +27,8 @@ batch (same source offsets ⇒ same rows) rewrites the same path —
 no loss, no dup across kill/restart (tested).
 
 Batch/stream parity contract (tested): ``read_stream_hygiene`` after an
-availableNow drain equals :func:`hygiene_front` over the batch
+availableNow drain equals the batch front half (``hygiene_meta`` then
+``_finish`` in one job; the tests' ``hygiene_front``) over the batch
 ``flagship.prepare_corpus`` output of the same pages — the same stage
 order the batch ``training_mix`` composition uses (cap → dedup → gates),
 plus the decontamination stage in front of the gates.
@@ -94,7 +95,9 @@ def hygiene_meta(
 def _finish(meta: DataFrame, cap: int, min_tokens: int, max_rep: float) -> DataFrame:
     """cap → digest dedup (min url) → gates ∧ ¬contaminated, over metadata
     rows — shared verbatim by the batch twin and the combining read, so
-    the parity is structural, not coincidental."""
+    the parity is structural, not coincidental. Over one batch job's
+    ``hygiene_meta`` it is the batch front half (the order of
+    queries/corpus.q_training_mix, plus decontamination)."""
     capped = topk_per_group(
         meta, ["host"], [F.col("_ord").asc(), F.col("url").asc()], cap, rank_col="rk"
     )
@@ -107,23 +110,6 @@ def _finish(meta: DataFrame, cap: int, min_tokens: int, max_rep: float) -> DataF
             & ~F.col("contaminated")
         )
         .select("url", "host", "n_tokens")
-    )
-
-
-def hygiene_front(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    cap: int = 15,
-    min_tokens: int = 20,
-    max_rep: float = 0.3,
-    decontaminate_n: int = 4,
-) -> DataFrame:
-    """BATCH front half over an url-deduped extracted corpus
-    (flagship.prepare_corpus order: cap → exact text dedup → gates, as in
-    queries/corpus.q_training_mix, plus decontamination): returns
-    ``(url, host, n_tokens)`` — the documents that enter mixing."""
-    return _finish(
-        hygiene_meta(corpus, benchmark, decontaminate_n), cap, min_tokens, max_rep
     )
 
 
@@ -186,9 +172,9 @@ def read_stream_hygiene(
     max_rep: float = 0.3,
 ) -> DataFrame:
     """Combine per-batch hygiene partials → the documents entering mixing,
-    equal to batch :func:`hygiene_front` over the same corpus: global
-    re-rank of the unioned local cap winners, then the same digest dedup
-    and gates (the combine IS `_finish`, shared with the batch twin)."""
+    equal to the batch front half over the same corpus: global re-rank of
+    the unioned local cap winners, then the same digest dedup and gates
+    (the combine IS `_finish`, shared with the batch twin)."""
     partials = spark.read.option(
         "basePath", os.path.join(out_dir, HYGIENE_SUBDIR)
     ).parquet(os.path.join(out_dir, HYGIENE_SUBDIR))

@@ -156,12 +156,6 @@ def test_skyline_orientations(spark):
     )
     # minimize x, maximize y: all three are incomparable chains -> frontier
     assert skyline2d(df, "x", "y").count() == 3
-    # minimize both: only (1,1)
-    got = skyline2d(df, "x", "y", maximize_y=False).collect()
-    assert [(r["x"], r["y"]) for r in got] == [(1, 1)]
-    # maximize both: only (3,3)
-    got = skyline2d(df, "x", "y", minimize_x=False).collect()
-    assert [(r["x"], r["y"]) for r in got] == [(3, 3)]
 
 
 def test_skyline_query_null_coordinates_match_oracle(spark, tmp_path):
@@ -284,12 +278,6 @@ def test_dsir_scores_orders_target_like_docs(spark):
     # sit well below the corpus-neutral 1.0 even with 64-bucket collisions
     assert got[3]["score"] < 0.6
     assert got[3]["sum_target"] < got[3]["sum_raw"]
-    # log form runs and preserves the same ordering
-    lg = {
-        r["doc_id"]: r["log_weight"]
-        for r in dsir_scores(docs, target, n_buckets=64, log_form=True).collect()
-    }
-    assert lg[1] > lg[3] and lg[2] > lg[3]
 
 
 # ---------------------------------------------------------------------------

@@ -13,7 +13,7 @@ from hypothesis import strategies as st
 from copernicusdata_jl_spark.functions import cells
 from copernicusdata_jl_spark.functions import cells as C
 
-from reference import cell_center, cell_children, grid_disk, uncompact_cells
+from reference import cell_center, cell_children, grid_disk, latlng_to_cell, uncompact_cells
 
 LAT = st.floats(min_value=-90.0, max_value=90.0, allow_nan=False)
 LON = st.floats(min_value=-180.0, max_value=180.0, allow_nan=False)
@@ -30,7 +30,7 @@ def test_pack_unpack_roundtrip():
 @given(LAT, LON, RES)
 @settings(max_examples=200, deadline=None)
 def test_cell_contains_point(lat, lon, res):
-    cid = cells.latlng_to_cell(np.array([lat]), np.array([lon]), res)
+    cid = latlng_to_cell(np.array([lat]), np.array([lon]), res)
     min_lon, min_lat, max_lon, max_lat = cells.cell_bounds(cid)
     assert min_lat[0] - 1e-9 <= lat <= max_lat[0] + 1e-9
     assert min_lon[0] - 1e-9 <= lon <= max_lon[0] + 1e-9
@@ -39,14 +39,14 @@ def test_cell_contains_point(lat, lon, res):
 @given(LAT, LON, st.integers(min_value=2, max_value=12))
 @settings(max_examples=100, deadline=None)
 def test_parent_consistency(lat, lon, res):
-    child = cells.latlng_to_cell(np.array([lat]), np.array([lon]), res)
-    direct = cells.latlng_to_cell(np.array([lat]), np.array([lon]), res - 2)
+    child = latlng_to_cell(np.array([lat]), np.array([lon]), res)
+    direct = latlng_to_cell(np.array([lat]), np.array([lon]), res - 2)
     rolled = cells.cell_parent(child, res - 2)
     assert int(direct[0]) == int(rolled[0])
 
 
 def test_children_partition_parent():
-    cid = int(cells.latlng_to_cell(np.array([40.0]), np.array([-3.0]), 6)[0])
+    cid = int(latlng_to_cell(np.array([40.0]), np.array([-3.0]), 6)[0])
     kids = cell_children(cid)
     assert len(kids) == 4
     assert all(int(cells.cell_parent(np.array([k]), 6)[0]) == cid for k in kids)
@@ -61,7 +61,7 @@ def test_children_partition_parent():
 
 def test_grid_disk_wraps_antimeridian():
     # cell at lon ~ -179.99 — its west neighbors must wrap to +179.x
-    cid = int(cells.latlng_to_cell(np.array([10.0]), np.array([-179.99]), 8)[0])
+    cid = int(latlng_to_cell(np.array([10.0]), np.array([-179.99]), 8)[0])
     ring = grid_disk(cid, 1)
     assert cid in ring
     assert len(ring) == 9
@@ -70,13 +70,13 @@ def test_grid_disk_wraps_antimeridian():
 
 
 def test_grid_disk_clamps_pole():
-    cid = int(cells.latlng_to_cell(np.array([89.9]), np.array([0.0]), 6)[0])
+    cid = int(latlng_to_cell(np.array([89.9]), np.array([0.0]), 6)[0])
     ring = grid_disk(cid, 1)
     assert len(ring) == 6  # top row clipped
 
 
 def test_compact_uncompact_roundtrip():
-    parent = int(cells.latlng_to_cell(np.array([20.0]), np.array([20.0]), 5)[0])
+    parent = int(latlng_to_cell(np.array([20.0]), np.array([20.0]), 5)[0])
     leaves = uncompact_cells(np.array([parent]), 8)
     assert len(leaves) == 4 ** 3
     compacted = cells.compact_cells(leaves)
@@ -97,7 +97,7 @@ def test_eqc_high_latitude_distortion_documented():
     res = 6
 
     def cell_width_m(lat):
-        c = C.latlng_to_cell(lat, 0.0, res)
+        c = latlng_to_cell(lat, 0.0, res)
         lon0, lat0, lon1, lat1 = C.cell_bounds(c)
         mid = (lat0 + lat1) / 2.0
         return float(geo.haversine_m(mid, lon0, mid, lon1))
@@ -110,7 +110,7 @@ def test_eqc_high_latitude_distortion_documented():
     # cell HEIGHT stays constant (equal-angle in lat): the y-bound the kNN
     # escalation guarantee relies on
     def cell_height_m(lat):
-        c = C.latlng_to_cell(lat, 0.0, res)
+        c = latlng_to_cell(lat, 0.0, res)
         lon0, lat0, lon1, lat1 = C.cell_bounds(c)
         return float(geo.haversine_m(lat0, lon0, lat1, lon0))
 

@@ -282,20 +282,9 @@ def test_corpus_ops_on_empty_input(spark):
     assert C.decontaminate(empty, bench, n=4).count() == 0
 
 
-def test_dup_span_stats_hashed_flavor_matches_string(spark):
-    corpus = _docs(
-        spark,
-        [(1, "a b c d e x y z w v"), (2, "q a b c d e"), (3, "p q r s t u")],
-    )
-    a = sorted(map(tuple, C.dup_span_stats(corpus, k=5).collect()))
-    b = sorted(map(tuple, C.dup_span_stats(corpus, k=5, hashed=True).collect()))
-    assert a == b
-
-
 def test_blocklist_filter_suffix_semantics(spark):
     """Exact domain and subdomains are blocked; lookalike hosts that only
-    END with the domain string (no dot boundary) survive; invert=True
-    returns the blocked set."""
+    END with the domain string (no dot boundary) survive."""
     docs = spark.createDataFrame(
         [
             (1, "spam.farm"),
@@ -309,8 +298,6 @@ def test_blocklist_filter_suffix_semantics(spark):
     bl = spark.createDataFrame([("spam.farm",)], "domain string")
     kept = sorted(r.doc_id for r in C.blocklist_filter(docs, bl).collect())
     assert kept == [3, 4, 5]
-    blocked = sorted(r.doc_id for r in C.blocklist_filter(docs, bl, invert=True).collect())
-    assert blocked == [1, 2]
 
 
 def test_ccnet_buckets_rank_by_lm_score(spark):
@@ -353,6 +340,29 @@ def test_dup_span_islands_splits_on_gap(spark):
     # only gram position 1 ("p q r s t") and position 11 ("v w x y z")
     # are cross-doc duplicates; the overlap grams mix unique tokens
     assert isl == [(1, 1, 5), (11, 1, 5)]
+
+
+def test_dup_grams_equal_island_gram_sum_per_document(spark):
+    """dup_span_stats and dup_span_islands count the same duplicated
+    positions: on the sf0.001 documents, every document's dup_grams is the
+    sum of its islands' n_grams (0 for a document without islands)."""
+    from conftest import SF_DIR
+
+    from copernicusdata_jl_spark.queries.corpus import _SPAN_K, _SPAN_MIN_DOCS
+    from copernicusdata_jl_spark.queries.shared import load
+
+    docs = load(spark, SF_DIR, "documents")
+    stats = {
+        r.doc_id: r.dup_grams
+        for r in C.dup_span_stats(docs, _SPAN_K, min_docs=_SPAN_MIN_DOCS).collect()
+    }
+    islands = (
+        C.dup_span_islands(docs, _SPAN_K, min_docs=_SPAN_MIN_DOCS)
+        .groupBy("doc_id").agg(F.sum("n_grams").alias("n"))
+    )
+    summed = {r.doc_id: r.n for r in islands.collect()}
+    assert len(stats) == docs.count() and any(summed.values())
+    assert stats == {d: summed.get(d, 0) for d in stats}
 
 
 def test_remove_dup_spans_deletes_covered_tokens(spark):
@@ -570,18 +580,6 @@ def test_line_dedup_first_occurrence_wins(spark):
     assert got[1] == ("alpha beta\nshared line one\nunique a", 0)
     assert got[2] == ("gamma", 2)
     assert got[3] == ("x\nunique c", 1)
-
-
-def test_line_dedup_hashed_matches_string_keys(spark):
-    from copernicusdata_jl_spark.operators.corpus import line_dedup
-    from copernicusdata_jl_spark.queries.shared import load
-
-    d = load(spark, "/root/testdata/sf0.001", "documents").withColumn(
-        "text", F.regexp_replace("text", r"((\S+ ){3}\S+) ", "$1\n")
-    )
-    a = sorted(map(tuple, line_dedup(d, min_chars=2).collect()))
-    b = sorted(map(tuple, line_dedup(d, min_chars=2, hashed=True).collect()))
-    assert a == b and any(r[2] > 0 for r in a)
 
 
 def test_line_dedup_partitioning_invariant(spark):

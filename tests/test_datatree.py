@@ -69,6 +69,22 @@ def test_map_over_subtrees_lazy(tree):
     assert mapped["conditions/meteo"].data is None  # data guard (T2 not T3)
 
 
+def test_map_over_subtrees_all_nodes_reaches_nodes_without_data(spark, tree):
+    """T3: a node without data reaches ``fn`` (as None) only with
+    ``all_nodes=True``; data nodes reach it either way."""
+    for all_nodes, want in ((False, ["geo", "measurements"]), (True, ["conditions", "geo", "measurements", "meteo", "root"])):
+        seen = []
+
+        def fn(df, seen=seen):
+            seen.append(df)
+            return spark.range(1) if df is None else df
+
+        mapped = tree.map_over_subtrees(fn, all_nodes=all_nodes)
+        assert sorted(n.name for n in mapped if n.data is not None) == want
+        assert seen.count(None) == (3 if all_nodes else 0)
+        assert len(seen) == len(want)
+
+
 def test_isomorphic_schema_not_values(spark, tree):
     other = tree.map_over_subtrees(lambda df: df.withColumn("id", F.col("id") + 100))
     assert tree.isomorphic(other)  # same structure/schema, different values

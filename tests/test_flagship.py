@@ -8,7 +8,8 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from copernicusdata_jl_spark import flagship
-from copernicusdata_jl_spark.functions.text import expected_text
+
+from reference import expected_text
 
 
 @pytest.fixture(scope="module")

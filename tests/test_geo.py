@@ -11,7 +11,7 @@ from hypothesis import strategies as st
 
 from copernicusdata_jl_spark.functions import cells, geo
 
-from reference import uncompact_cells
+from reference import latlng_to_cell, uncompact_cells
 
 
 def scalar_pip(lat: float, lon: float, rings) -> bool:
@@ -103,7 +103,7 @@ def test_cover_join_equivalence_to_exact_pip():
             uncompact_cells(cover[~boundary], res).tolist()
         ) if (~boundary).any() else set()
         bound = set(cover[boundary].tolist())
-        pt_cells = cells.latlng_to_cell(lat, lon, res)
+        pt_cells = latlng_to_cell(lat, lon, res)
         joined = np.zeros(len(lat), dtype=bool)
         for i, c in enumerate(pt_cells.tolist()):
             if c in interior:

@@ -11,9 +11,10 @@ from pyspark.sql import functions as F
 from copernicusdata_jl_spark.functions.geohash import (
     ALPHABET,
     geohash_expr,
-    geohash_py,
     geohash_sql,
 )
+
+from reference import geohash_py
 
 
 def _canonical(lat: float, lon: float, precision: int) -> str:

@@ -169,43 +169,17 @@ def test_pack_and_mix_plans_scale_out(spark):
 
 def test_dup_span_plans(spark):
     """Round-4 span operators keep their scale shape: text never keys an
-    Exchange in either flavor; the hashed flavor's gram Exchanges carry
-    8-byte longs (gram#NL), not strings; and everything stays JVM-side."""
+    Exchange, and everything stays JVM-side."""
     import re
-
-    from conftest import SF_DIR as _sf
-
-    from copernicusdata_jl_spark.operators.corpus import dup_span_islands
 
     plan = REGISTRY["dup_span_islands"].plan(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
     exchanges = [l for l in plan.splitlines() if "Exchange" in l]
     assert not [l for l in exchanges if re.search(r"text#\d+", l)], exchanges
 
-    docs = spark.read.parquet(f"{_sf}/documents.parquet")
-    hplan = (
-        dup_span_islands(docs, k=5, hashed=True)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    hexchanges = [l for l in hplan.splitlines() if "Exchange" in l]
-    # every gram key in the hashed flavor is a long (xxhash64), never a string
-    assert not [l for l in hexchanges if re.search(r"gram#\d+(?![\dL])", l)], hexchanges
-
     rplan = REGISTRY["dup_span_removal"].plan(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
     # no Python UDF anywhere in either plan
     assert "BatchEvalPython" not in plan and "BatchEvalPython" not in rplan
     assert "ArrowEvalPython" not in plan and "ArrowEvalPython" not in rplan
-
-
-def test_dup_span_islands_hashed_matches_string(spark):
-    shared = "a b c d e f g h"
-    docs = spark.createDataFrame(
-        [(1, shared + " x1 y1"), (2, shared + " x2 y2")], "doc_id long, text string"
-    )
-    from copernicusdata_jl_spark.operators.corpus import dup_span_islands
-
-    a = sorted(map(tuple, dup_span_islands(docs, k=5).collect()))
-    b = sorted(map(tuple, dup_span_islands(docs, k=5, hashed=True).collect()))
-    assert a == b and len(a) == 2
 
 
 def test_ccnet_buckets_vocab_broadcast(spark):

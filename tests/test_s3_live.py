@@ -14,6 +14,8 @@ from pyspark.sql import functions as F
 from copernicusdata_jl_spark.sources import DataTree, open_datatree
 from copernicusdata_jl_spark.sources import s3 as S3
 
+from reference import write_zarr_array_v3
+
 moto = pytest.importorskip("moto")
 
 
@@ -132,12 +134,12 @@ def test_zarr_v3_over_s3_consolidated_never_lists(spark, client, tmp_path, monke
 
     root = str(tmp_path / "v3.zarr")
     Z.write_zarr_group_v3(root)
-    Z.write_zarr_array_v3(root, "x", np.arange(10, dtype=np.float64) + 1.0,
-                          chunks=(4,), fill_value=-1.0, dims=["i"])
+    write_zarr_array_v3(root, "x", np.arange(10, dtype=np.float64) + 1.0,
+                        chunks=(4,), fill_value=-1.0, dims=["i"])
     sub = os.path.join(root, "g")
     Z.write_zarr_group_v3(sub)
-    Z.write_zarr_array_v3(sub, "y", np.arange(3, dtype=np.int32) + 1,
-                          chunks=(2,), fill_value=-1, dims=["j"])
+    write_zarr_array_v3(sub, "y", np.arange(3, dtype=np.int32) + 1,
+                        chunks=(2,), fill_value=-1, dims=["j"])
     Z.write_consolidated_v3(root)
     for d, _dirs, files in os.walk(root):
         for f in files:

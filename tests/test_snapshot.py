@@ -91,16 +91,16 @@ def test_vacuum_removes_orphans_keeps_latest_readable(spark, tmp_path):
 def test_lineage_resume_over_atomic_checkpoint(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     df = spark.range(0, 40).selectExpr("id % 4 AS bucket", "id AS cell_id", "id AS x")
-    lin1, skip1 = L.run_with_resume(df, "bucket", ckpt, "run1", "cell_id", atomic=True)
+    lin1, skip1 = L.run_with_resume(df, "bucket", ckpt, "run1", "cell_id")
     assert (lin1.count(), skip1) == (4, 0)
     # second run: everything checkpointed, nothing recomputed or written
-    lin2, skip2 = L.run_with_resume(df, "bucket", ckpt, "run2", "cell_id", atomic=True)
+    lin2, skip2 = L.run_with_resume(df, "bucket", ckpt, "run2", "cell_id")
     assert (lin2.count(), skip2) == (0, 4)
     t = SnapshotTable(ckpt)
     assert t.latest_version() == 0  # run2 committed nothing
     # a torn lineage commit (data, no manifest) does not corrupt resume
     _df(spark, 0, 1).write.parquet(os.path.join(ckpt, "data", "torn"))
-    lin3, skip3 = L.run_with_resume(df, "bucket", ckpt, "run3", "cell_id", atomic=True)
+    lin3, skip3 = L.run_with_resume(df, "bucket", ckpt, "run3", "cell_id")
     assert (lin3.count(), skip3) == (0, 4)
 
 
@@ -150,28 +150,7 @@ def test_manifest_pruning_residual_filter_is_exact(spark, tmp_path):
     assert len(t.files_for(where=[("w", ">=", "melon")])) == 1
     rows = t.read(spark, where=[("w", ">=", "melon"), ("id", "==", 4)]).collect()
     assert [(r.id, r.w) for r in rows] == [(4, "peach")]
-
-
-def test_legacy_manifest_commit_never_narrows_columns(spark, tmp_path):
-    """A table whose manifests predate schema recording: a commit with
-    FEWER columns must not cause read() to hide the historical files'
-    extra columns (the evolved-schema projection stays off for legacy
-    lineages; mergeSchema unions the footers instead)."""
-    import json as _json
-
-    t = SnapshotTable(str(tmp_path / "t"))
-    t.commit(_df(spark, 0, 3), "a")  # (id, v)
-    mpath = os.path.join(t._mdir(), "v00000000.json")
-    doc = _json.load(open(mpath))
-    del doc["schema"]
-    _json.dump(doc, open(mpath, "w"))
-    t.commit(spark.range(3, 5).selectExpr("id"), "narrow")
-    got = t.read(spark)
-    assert set(got.columns) == {"id", "v"}
-    rows = {r.id: r.v for r in got.collect()}
-    assert rows[0] == 0 and rows[3] is None
-    assert "schema" not in t.manifest(1)  # legacy lineage stays legacy
-    # invalid predicate op fails loudly everywhere, stats or not
+    # invalid predicate op fails loudly everywhere
     with pytest.raises(ValueError, match="unknown predicate op"):
         t.files_for(where=[("id", "=", 1)])
     with pytest.raises(ValueError, match="unknown predicate op"):
@@ -271,13 +250,10 @@ def test_schema_evolution_additive(spark, tmp_path):
 def test_atomic_checkpoint_refuses_mixed_layout(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     df = spark.range(0, 8).selectExpr("id % 2 AS bucket", "id AS cell_id", "id AS x")
-    L.run_with_resume(df, "bucket", ckpt, "run1", "cell_id", atomic=False)
+    L.write_checkpoint(L.lineage_rows(df), ckpt, "run1", atomic=False)
     df2 = spark.range(0, 8).selectExpr("id % 4 AS bucket", "id AS cell_id", "id AS x")
     with pytest.raises(ValueError, match="plain append-only"):
-        L.run_with_resume(df2, "bucket", ckpt, "run2", "cell_id", atomic=True)
-    # the plain layout keeps working
-    _, skip = L.run_with_resume(df, "bucket", ckpt, "run3", "cell_id", atomic=False)
-    assert skip == 2
+        L.run_with_resume(df2, "bucket", ckpt, "run2", "cell_id")
 
 
 # ---------------------------------------------------------------------------
@@ -378,21 +354,47 @@ def test_nan_stats_never_prune():
     assert _may_match({"x": [0.0, 1.0]}, "x", ">", 2.0) is False
 
 
+def _strip_schema(t, version):
+    p = os.path.join(t.path, "_manifests", f"v{version:08d}.json")
+    doc = json.load(open(p))
+    del doc["schema"]
+    json.dump(doc, open(p, "w"))
+
+
+def test_legacy_manifest_commit_never_narrows_columns(spark, tmp_path):
+    """A manifest written before schemas were recorded cannot say which
+    columns the table has, so a narrower commit on top of it could hide
+    the historical files' extra columns. Such a manifest is refused,
+    naming its version, by read, read_added, commit and delete alike, and
+    no new version is written."""
+    t = SnapshotTable(str(tmp_path / "t"))
+    t.commit(_df(spark, 0, 3), "a")  # (id, v)
+    t.commit(_df(spark, 3, 5), "b")
+    _strip_schema(t, 1)
+    for op in (
+        lambda: t.read(spark),
+        lambda: t.read_added(spark, 1),
+        lambda: t.commit(spark.range(5, 7).selectExpr("id"), "narrow"),
+        lambda: t.delete(spark.range(1).selectExpr("id"), "del"),
+    ):
+        with pytest.raises(ValueError, match="manifest v1 records no schema"):
+            op()
+    assert t.versions() == [0, 1]
+
+
 def test_legacy_empty_pruned_read_keeps_union_schema(spark, tmp_path):
-    # legacy (schema-less) manifests: a fully-pruned read must still carry
-    # the UNION of all files' columns, not just the first file's
+    """A fully-pruned read carries the UNION of all files' columns, not
+    just the first file's; on a schema-less (legacy) manifest it is refused
+    rather than answered with a guessed, narrower schema."""
     t = SnapshotTable(str(tmp_path / "t"))
     t.commit(spark.range(0, 3).selectExpr("id", "id AS a"), "one")
     t.commit(spark.range(10, 13).selectExpr("id", "id AS a", "id AS b"), "two")
-    # strip recorded schemas to simulate a legacy table
-    for v in t.versions():
-        p = os.path.join(t.path, "_manifests", f"v{v:08d}.json")
-        doc = json.load(open(p))
-        doc.pop("schema", None)
-        json.dump(doc, open(p, "w"))
     empty = t.read(spark, where=[("id", ">", 10_000)])
     assert empty.count() == 0
     assert set(empty.columns) == {"id", "a", "b"}
+    _strip_schema(t, 1)
+    with pytest.raises(ValueError, match="manifest v1 records no schema"):
+        t.read(spark, where=[("id", ">", 10_000)])
 
 
 def test_dedup_append_idempotent(spark, tmp_path):

@@ -13,7 +13,7 @@ from copernicusdata_jl_spark import fixtures
 from copernicusdata_jl_spark.functions import cells, geo
 from copernicusdata_jl_spark.operators.spatial_join import build_covers, spatial_join
 
-from reference import grid_disk, uncompact_cells
+from reference import grid_disk, latlng_to_cell, uncompact_cells
 
 POLYGONS = [
     {"poly_id": "SQ", "rings": [[[0.0, 0.0], [10.0, 0.0], [10.0, 10.0], [0.0, 10.0]]]},
@@ -120,7 +120,7 @@ def test_cell_expr_matches_numpy(spark):
             .toPandas()["c"]
             .to_numpy()
         )
-        want = cells.latlng_to_cell(pdf["lat"].to_numpy(), pdf["lon"].to_numpy(), res)
+        want = latlng_to_cell(pdf["lat"].to_numpy(), pdf["lon"].to_numpy(), res)
         assert np.array_equal(got, want)
 
 

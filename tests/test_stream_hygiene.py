@@ -12,10 +12,11 @@ from test_stream_spatial import SENTINEL, _write_sliced_pages
 
 from copernicusdata_jl_spark.flagship import prepare_corpus
 from copernicusdata_jl_spark.streaming.hygiene import (
-    hygiene_front,
     read_stream_hygiene,
     start_stream_hygiene,
 )
+
+from reference import hygiene_front
 
 CAP, MIN_TOKENS, MAX_REP, DECON_N = 1, 15, 0.9, 13
 

@@ -8,20 +8,26 @@ import duckdb
 import pandas as pd
 from pyspark.sql import functions as F
 
-from copernicusdata_jl_spark import fixtures
 from copernicusdata_jl_spark.functions import text
 
-from reference import expected_text_rich, winnow_fingerprints
+from reference import (
+    expected_text,
+    expected_text_rich,
+    extract_text_py,
+    pages_pdf,
+    render_html_rich,
+    winnow_fingerprints,
+)
 
 
 def test_extractor_matches_expected_text():
     for i in range(200):
-        assert text.extract_text_py(text.render_html(i)) == text.expected_text(i)
+        assert extract_text_py(text.render_html(i)) == expected_text(i)
 
 
 def test_extractor_handles_entities_and_nested():
     h = "<html><body><p>a &amp; b &lt;tag&gt; &quot;q&quot;</p><script>if(1<2){x}</script></body></html>"
-    assert text.extract_text_py(h) == 'a & b <tag> "q"'
+    assert extract_text_py(h) == 'a & b <tag> "q"'
 
 
 def test_extractor_sql_twin_parity():
@@ -32,12 +38,12 @@ def test_extractor_sql_twin_parity():
     con.register("t", pd.DataFrame({"html": htmls}))
     sql = f"SELECT {text.extract_text_sql('html')} AS txt FROM t"
     got = [r[0] for r in con.execute(sql).fetchall()]
-    want = [text.extract_text_py(h) for h in htmls]
+    want = [extract_text_py(h) for h in htmls]
     assert got == want
 
 
 def test_spark_extraction_deterministic_across_parallelism(spark):
-    pdf = fixtures.pages_pdf(300)
+    pdf = pages_pdf(300)
     digests = {}
     for parts in (1, 7):
         df = spark.createDataFrame(pdf[["url", "warc_ts", "html"]]).repartition(parts)
@@ -60,10 +66,10 @@ def test_spark_extraction_deterministic_across_parallelism(spark):
 
 
 def test_winnow_fingerprints_detect_near_dupes():
-    a = text.expected_text(1)
+    a = expected_text(1)
     b = a.replace("granule", "granule")  # identical
     c = a + " extra tail words appended here"
-    d = text.expected_text(99)
+    d = expected_text(99)
     fa = set(winnow_fingerprints(a))
     fc = set(winnow_fingerprints(c))
     fd = set(winnow_fingerprints(d))
@@ -77,8 +83,8 @@ def test_rich_extractor_matches_expected_text():
     # rich (Common-Crawl-weight) pages: same byte-identical contract,
     # independently derived golden (boilerplate nav/footer/entities)
     for i in (0, 1, 7, 99, 1234, 54321):
-        assert text.extract_text_py(text.render_html_rich(i)) == expected_text_rich(i)
-    assert len(text.render_html_rich(123)) > 2000
+        assert extract_text_py(render_html_rich(i)) == expected_text_rich(i)
+    assert len(render_html_rich(123)) > 2000
 
 
 def test_jvm_expr_extractor_byte_parity(spark):
@@ -87,9 +93,9 @@ def test_jvm_expr_extractor_byte_parity(spark):
     from pyspark.sql import functions as F
 
     htmls = [text.render_html(i) for i in range(100)] + [
-        text.render_html_rich(i) for i in range(60)
+        render_html_rich(i) for i in range(60)
     ]
-    want = [text.extract_text_py(h) for h in htmls]
+    want = [extract_text_py(h) for h in htmls]
     df = spark.createDataFrame([(h,) for h in htmls], "html string").repartition(5)
     got_expr = [
         r.t
@@ -97,7 +103,7 @@ def test_jvm_expr_extractor_byte_parity(spark):
         .orderBy("html")
         .collect()
     ]
-    want_sorted = [text.extract_text_py(h) for h in sorted(htmls)]
+    want_sorted = [extract_text_py(h) for h in sorted(htmls)]
     assert got_expr == want_sorted
     # binary input path (pages schema html:binary)
     dfb = spark.createDataFrame([(h.encode(),) for h in htmls], "html binary")
@@ -121,7 +127,7 @@ def test_extractor_edge_charset_parity(spark):
         "<style media=print>p{}</style>styled text",
         "café — résumé<script>x</script>",
     ]
-    want = [text.extract_text_py(h) for h in cases]
+    want = [extract_text_py(h) for h in cases]
     # JVM expression (string + binary input)
     df = spark.createDataFrame([(h,) for h in cases], "html string")
     got = [r.t for r in df.select(text.extract_text_expr(F.col("html")).alias("t")).collect()]

@@ -9,6 +9,8 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+from reference import bit_shuffle, write_zarr_array, write_zarr_array_v3
+
 REF = "/root/reference/test/resources"
 
 
@@ -67,7 +69,6 @@ def test_roundtrip_zlib_multichunk_edge_and_hole(spark, tmp_path):
 
     from copernicusdata_jl_spark.sources.zarr import (
         open_zarr_datatree,
-        write_zarr_array,
         write_zarr_group,
     )
 
@@ -110,25 +111,25 @@ def test_blosc_decoder_errors_are_loud():
 
 
 def test_bitshuffle_roundtrip_properties():
-    """_bit_shuffle/_bit_unshuffle are exact inverses across typesizes,
+    """bit_shuffle/_bit_unshuffle are exact inverses across typesizes,
     odd element counts (leftover elements copied verbatim per the c-blosc
     wrapper), and partial trailing bytes."""
-    from copernicusdata_jl_spark.sources.zarr import _bit_shuffle, _bit_unshuffle
+    from copernicusdata_jl_spark.sources.zarr import _bit_unshuffle
 
     rng = np.random.default_rng(7)
     for typesize in (1, 2, 4, 8):
         for n_elem in (8, 16, 64, 11, 3):  # 11, 3 → non-multiple-of-8 tails
             buf = rng.integers(0, 256, n_elem * typesize, dtype=np.uint8).tobytes()
-            s = _bit_shuffle(buf, typesize)
+            s = bit_shuffle(buf, typesize)
             assert len(s) == len(buf)
             assert _bit_unshuffle(s, typesize) == buf
     # partial element tail bytes also survive
     buf = rng.integers(0, 256, 8 * 4 + 3, dtype=np.uint8).tobytes()
-    assert _bit_unshuffle(_bit_shuffle(buf, 4), 4) == buf
+    assert _bit_unshuffle(bit_shuffle(buf, 4), 4) == buf
     # layout pin (not just round-trip): for 1-byte elements, plane ii's
     # first byte packs bit ii of elements 0..7, LSB-first
     raw = bytes([0b1, 0b0, 0b1, 0b0, 0b1, 0b0, 0b1, 0b0])  # bit0 alternates
-    s = _bit_shuffle(raw, 1)
+    s = bit_shuffle(raw, 1)
     assert s[0] == 0b01010101  # elements 0,2,4,6 have bit0 set
     assert all(b == 0 for b in s[1:])
 
@@ -140,10 +141,10 @@ def test_blosc_bitshuffle_chunk_decodes():
     import struct
     import zlib
 
-    from copernicusdata_jl_spark.sources.zarr import _bit_shuffle, blosc_decompress
+    from copernicusdata_jl_spark.sources.zarr import blosc_decompress
 
     data = np.arange(48, dtype="<i4").tobytes()  # 192 bytes, typesize 4
-    shuffled = _bit_shuffle(data, 4)
+    shuffled = bit_shuffle(data, 4)
     payload = zlib.compress(shuffled)
     body = struct.pack("<I", len(payload)) + payload
     bstart = 16 + 4  # header + one block-offset entry
@@ -327,7 +328,6 @@ def test_zarr_v3_roundtrip_holes_edges_and_nesting(spark, tmp_path):
 
     from copernicusdata_jl_spark.sources.zarr import (
         open_zarr_datatree,
-        write_zarr_array_v3,
         write_zarr_group_v3,
     )
 
@@ -403,7 +403,7 @@ def test_open_datatree_dispatches_v3_and_zip_twin(spark, tmp_path):
     import os
 
     from copernicusdata_jl_spark.sources.datatree import open_datatree
-    from copernicusdata_jl_spark.sources.zarr import write_zarr_array_v3, write_zarr_group_v3
+    from copernicusdata_jl_spark.sources.zarr import write_zarr_group_v3
 
     root = str(tmp_path / "t.zarr")
     write_zarr_group_v3(root)
@@ -434,7 +434,6 @@ def test_to_zarr_v3_sink_roundtrip_with_nulls(spark, tmp_path):
 
     from copernicusdata_jl_spark.sources.zarr import (
         open_zarr_datatree,
-        write_zarr_array,
         write_zarr_group,
     )
 
@@ -472,7 +471,6 @@ def test_zarr_v3_consolidated_serves_all_metadata(spark, tmp_path):
     from copernicusdata_jl_spark.sources.zarr import (
         open_zarr_datatree,
         write_consolidated_v3,
-        write_zarr_array_v3,
         write_zarr_group_v3,
     )
 
@@ -668,7 +666,6 @@ def test_zarr_v3_sharding_roundtrip(tmp_path):
     from copernicusdata_jl_spark.sources.zarr import (
         _DirStore,
         read_zarr_array,
-        write_zarr_array_v3,
     )
 
     root = str(tmp_path / "t.zarr")
@@ -797,15 +794,15 @@ def test_distributed_sink_byte_identical_to_driver_path(spark, tmp_path, zfmt):
     if zfmt == 2:
         Z.write_zarr_group(a)
         for name, arr, fill in (("temp", temp, 1.0e32), ("raw", raw, None), ("n", n, None)):
-            Z.write_zarr_array(a, name, arr, chunks=(4, 3), fill_value=fill,
-                               attrs={"_ARRAY_DIMENSIONS": dims})
+            write_zarr_array(a, name, arr, chunks=(4, 3), fill_value=fill,
+                             attrs={"_ARRAY_DIMENSIONS": dims})
         Z.write_consolidated(a)
     else:
         Z.write_zarr_group_v3(a)
-        Z.write_zarr_array_v3(a, "temp", temp, chunks=(4, 3), fill_value=1.0e32, dims=dims)
-        Z.write_zarr_array_v3(a, "raw", raw, chunks=(4, 3), fill_value="NaN", dims=dims)
-        Z.write_zarr_array_v3(a, "n", n, chunks=(4, 3), fill_value=0, dims=dims,
-                              attrs={"_cd_no_missing": True})
+        write_zarr_array_v3(a, "temp", temp, chunks=(4, 3), fill_value=1.0e32, dims=dims)
+        write_zarr_array_v3(a, "raw", raw, chunks=(4, 3), fill_value="NaN", dims=dims)
+        write_zarr_array_v3(a, "n", n, chunks=(4, 3), fill_value=0, dims=dims,
+                            attrs={"_cd_no_missing": True})
         Z.write_consolidated_v3(a)
     fa, fb = _walk_bytes(a), _walk_bytes(b)
     assert set(fa) == set(fb)
@@ -864,7 +861,6 @@ def test_distributed_scan_parity_v2_with_holes_and_fill(spark, tmp_path):
     from copernicusdata_jl_spark.sources.zarr import (
         open_zarr_datatree,
         scan_zarr_distributed,
-        write_zarr_array,
         write_zarr_group,
     )
 
@@ -900,7 +896,6 @@ def test_distributed_scan_parity_v3_sharded(spark, tmp_path):
     from copernicusdata_jl_spark.sources.zarr import (
         open_zarr_datatree,
         scan_zarr_distributed,
-        write_zarr_array_v3,
         write_zarr_group_v3,
     )
 
@@ -931,8 +926,8 @@ def test_distributed_scan_never_assembles_driver_side(spark, tmp_path, monkeypat
     root = str(tmp_path / "big.zarr")
     Z.write_zarr_group(root)
     a = np.arange(200 * 300, dtype=np.float64).reshape(200, 300)
-    Z.write_zarr_array(root, "v", a, chunks=(50, 60),
-                       attrs={"_ARRAY_DIMENSIONS": ["y", "x"]})
+    write_zarr_array(root, "v", a, chunks=(50, 60),
+                     attrs={"_ARRAY_DIMENSIONS": ["y", "x"]})
 
     def boom(*_a, **_k):
         raise AssertionError("driver-side assembler ran during distributed scan")
@@ -951,7 +946,6 @@ def test_distributed_scan_zip_store_and_refusals(spark, tmp_path):
     from copernicusdata_jl_spark.sources.zarr import (
         open_zarr_datatree,
         scan_zarr_distributed,
-        write_zarr_array,
         write_zarr_group,
     )
 
@@ -1074,3 +1068,43 @@ def test_distributed_scan_honors_zattrs_fill_sentinel(
                 assert [r["v"] for r in df.orderBy("idx_i").collect()] == want, arrow
     finally:
         spark.conf.set(key, saved)
+
+
+@pytest.mark.parametrize(
+    "dtype, vals, sent",
+    [("|u1", [1, 255], -1), ("<i4", [1, -1], 2**32 - 1), ("<i2", [1, 2], 1.5)],
+    ids=["uint8_minus_one", "int32_two_pow_32_minus_one", "int16_fraction"],
+)
+def test_row_batch_refuses_sentinel_outside_integer_dtype(dtype, vals, sent):
+    """An integer block's sentinel must be an integral value of its dtype:
+    a plain cast would wrap −1 to 255, 2³²−1 to −1, and truncate 1.5 to 1,
+    masking a real value."""
+    from copernicusdata_jl_spark.sources.zarr import _row_batch
+
+    with pytest.raises(ValueError, match="'v'"):
+        _row_batch(("i",), (0,), {"v": (np.array(vals, dtype), sent)})
+
+
+def test_row_batch_sentinel_keeps_integral_and_float_casts():
+    """An integral float sentinel masks its integer; a float32 block keeps
+    the plain cast, so the NetCDF default fill 9.96921e36 matches."""
+    from copernicusdata_jl_spark.sources.zarr import _row_batch
+
+    b = _row_batch(("i",), (0,), {
+        "n": (np.array([1, -1], "<i4"), -1.0),
+        "f": (np.array([1.0, 9.96921e36], "<f4"), 9.96921e36),
+    })
+    assert b.column("n").to_pylist() == [1, None]
+    assert b.column("f").to_pylist() == [1.0, None]
+
+
+def test_zarr_reads_refuse_fill_outside_integer_dtype(spark, tmp_path):
+    """A uint8 store whose fill_value is −1 (the hole value and the NULL
+    sentinel) is refused by both read entry points, naming the array."""
+    from copernicusdata_jl_spark.sources.zarr import open_zarr_datatree, scan_zarr_distributed
+
+    root = str(tmp_path / "u8.zarr")
+    _store(root, 2, "|u1", -1, {}, 4, [1, 255])
+    for read in (open_zarr_datatree, scan_zarr_distributed):
+        with pytest.raises(ValueError, match="'v'"):
+            read(spark, root)
