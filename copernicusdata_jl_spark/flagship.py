@@ -221,23 +221,24 @@ def run_flagship(
         F.expr("bit_xor(xxhash64(text_sha256))").alias("corpus_digest"),
     ).first()
     # pass 2 — the spatial product joins the persisted corpus (no
-    # re-extraction). The tiles aggregation is the job that MATERIALIZES
-    # the joined cache (cover join + PIP refine); lineage then reads the
-    # cache, and n_assign folds out of the collected tile counts — no
-    # separate count() job. Every job carries fixed scheduling time
-    # (submit, stage planning, task ramp-up/down) that does not shrink
-    # with executor count; at 10^12 rows it is noise, but job COUNT is
-    # what the N→4N efficiency tail is made of, so the pipeline runs the
-    # minimum: corpus aggregate, tiles, lineage.
+    # re-extraction). Every job carries fixed scheduling time (submit,
+    # stage planning, task ramp-up/down) that does not shrink with
+    # executor count, and AQE runs one job per query stage. Over the
+    # url-bucketed table a pass runs 12 jobs: ``pages.count()`` 2, the
+    # corpus ``first()`` 3, the tiles ``collect()`` 4 (it materializes the
+    # joined cache: cover join + PIP refine), the lineage ``toArrow()`` 2
+    # (it reads that cache) and the checkpoint write of those ≤ 64 rows 1.
+    # ``n_assign`` folds out of the tile counts and the lineage bucket
+    # count is the collected table's row count.
     spatial = spatial_products(extracted)
     joined = spatial["joined"].persist()
     tiles = spatial["tiles"].collect()
-    lineage = spatial["lineage"].count()
+    lineage = spatial["lineage"].toArrow()
     n_assign = int(sum(r["n_docs"] for r in tiles))
     if checkpoint_path:
         from .operators.lineage import write_checkpoint
 
-        write_checkpoint(spatial["lineage"], checkpoint_path, run_id="bench")
+        write_checkpoint(spark.createDataFrame(lineage), checkpoint_path, run_id="bench")
     joined.unpersist()
     extracted.unpersist()
     wall = time.perf_counter() - t0
@@ -248,7 +249,7 @@ def run_flagship(
         "corpus_chars": float(corpus["chars"]),
         "n_tile_assignments": float(n_assign),
         "n_tiles": float(n_tiles),
-        "n_lineage_buckets": float(lineage),
+        "n_lineage_buckets": float(lineage.num_rows),
         "wall_sec": round(wall, 3),
         "docs_per_sec": round(n_docs / wall, 1),
         "tiles_per_sec": round(n_assign / wall, 1),

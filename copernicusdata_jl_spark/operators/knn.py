@@ -27,9 +27,14 @@ rows (≤ k per pending query), measured at 4 Spark jobs (query broadcast,
 the two top-k window shuffles, the final stage). The broadcast collects
 its side, the ring-exploded queries at (2·ring+1)² rows each, on the
 driver anyway; the ≤ k ranked rows per query kept there are fewer.
-Candidate count per query is bounded by ring area × cell density. The
-result is a local DataFrame of the collected rows of the done queries: no
-round cache, no union.
+Candidate count per query is bounded by ring area × cell density.
+
+Driver tables: each round's query table and the result are built from one
+``pyarrow.Table`` (its schema from the Spark one, so the inputs' id types
+are kept) and plan as a ``LocalTableScan``; a ``createDataFrame`` of Python
+rows would plan as ``Scan ExistingRDD``, whose every evaluation unpickles
+the rows in Python workers. Jobs: one query collect, four per round, one
+per read of the result.
 """
 
 from __future__ import annotations
@@ -37,9 +42,11 @@ from __future__ import annotations
 import math
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..functions import cells, geo
 
@@ -123,9 +130,10 @@ def knn_kring(
     Candidates come from each query's k-ring cells, starting at ``k_ring``;
     the ring doubles per round for the queries whose top-k is not yet
     guaranteed exact (module docstring). One collect of the query rows,
-    then one collect per round. The result keeps the id column types of
-    the inputs. An empty query set returns an empty result without a
-    round; a 0 starting ring escalates to 1 rather than spinning."""
+    then one collect per round. The result is a local table of the done
+    queries' rows with the id column types of the inputs. An empty query
+    set returns an empty result without a round; a 0 starting ring
+    escalates to 1 rather than spinning."""
     spark = points.sparkSession
     pts = points.withColumn("cell_id", cells.latlng_to_cell_expr(lat_col, lon_col, res))
     dist = F.round(
@@ -147,8 +155,8 @@ def knn_kring(
     rings = {r[0]: min(k_ring, r_full) for r in pending}
     done_rows: list[tuple] = []
     while pending:
-        qdf = spark.createDataFrame(
-            [(r[0], r[1], r[2], rings[r[0]]) for r in pending], qschema
+        qdf = _local_table(
+            spark, qschema, [(r[0], r[1], r[2], rings[r[0]]) for r in pending]
         ).withColumn("qcell", cells.latlng_to_cell_expr(qlat_col, qlon_col, res))
         qx = qdf.withColumn(
             "cell_id", F.explode(cells.kring_expr(F.col("qcell"), res, F.col("_ring")))
@@ -177,4 +185,12 @@ def knn_kring(
                 rings[qid] = min(max(1, ring * 2), r_full)
                 still.append(r)
         pending = still
-    return spark.createDataFrame(done_rows, out_schema)
+    return _local_table(spark, out_schema, done_rows)
+
+
+def _local_table(spark, schema: T.StructType, rows: list[tuple]) -> DataFrame:
+    """Driver-held rows as a DataFrame built from one Arrow table (module
+    docstring): a ``LocalTableScan`` whose column types are ``schema``'s,
+    empty ``rows`` included."""
+    cols = list(zip(*rows)) or [()] * len(schema.fields)
+    return spark.createDataFrame(pa.table(cols, schema=to_arrow_schema(schema)))

@@ -106,12 +106,15 @@ def run_with_resume(
 
     Contract: bucket ids are work units, one lineage row each, so the done
     and pending bucket sets are the size of the checkpoint table and are
-    decided on the driver — one collect of the checkpoint's buckets, one of
-    ``df``'s distinct buckets, then set arithmetic. A NULL bucket is never
-    written and never counted as skipped."""
+    decided on the driver, then by set arithmetic. The done set is one
+    Arrow read of the checkpoint's ``bucket`` column: the checkpoint holds
+    one row per bucket per committing run, so a distinct there would only
+    add a shuffle, and a bucket two runs committed is still skipped once.
+    ``df``'s buckets are one collect of its distinct buckets. A NULL
+    bucket is never written and never counted as skipped."""
     spark = df.sparkSession
     ckpt = read_checkpoint(spark, checkpoint_path)
-    done = set() if ckpt is None else {r[0] for r in ckpt.select("bucket").distinct().collect()}
+    done = set() if ckpt is None else set(ckpt.select("bucket").toArrow().column(0).to_pylist())
     total = {r[0] for r in df.select(bucket_col).distinct().collect()} - {None}
     todo = total - done
     fresh = df.filter(F.col(bucket_col).isin(sorted(todo)))

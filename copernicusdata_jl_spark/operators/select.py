@@ -42,8 +42,3 @@ def where_mask(df: DataFrame, cond: Column, v1: Column, v2: Column, out_col: str
     reference src/YAXTrees.jl:802-804)."""
     return df.withColumn(out_col, F.when(F.coalesce(cond, F.lit(False)), v1).otherwise(v2))
 
-
-def normalize_fill_value(df: DataFrame, col: str, fill_value) -> DataFrame:
-    """Scan-time fill_value→NULL normalization (reference
-    src/YAXTrees.jl:370-375, src/EOProducts.jl:134-140)."""
-    return df.withColumn(col, F.when(F.col(col) == F.lit(fill_value), F.lit(None)).otherwise(F.col(col)))

@@ -169,53 +169,51 @@ def tile_pyramid(
     ``[res_coarse, res_fine]`` with event counts and the number of
     res_fine cells covered.
 
-    Scale shape: the EVENT table is scanned and aggregated exactly once
-    (at ``res_fine``, map-side partials) — the finest aggregate is
-    materialized with an eager ``localCheckpoint`` because a plain union
-    of levels would re-plan that whole lineage per level (Spark performs
-    no cross-branch subplan sharing), turning one event scan into
-    ``n_levels`` scans at 100 TB. Every coarser level then re-aggregates
-    the PREVIOUS level's (cell, n) rows — input shrinks geometrically
-    (≥4× per level on this quadtree), so levels beyond the first cost
-    ~nothing. Parent derivation composes (floor-div chain), pinned
-    against direct fine→level truncation in the oracle twin.
+    Scale shape: one plan with two aggregates. The first counts events per
+    ``res_fine`` cell (map-side partials, one exchange on ``cell_id``);
+    the second builds every coarser level from those fine rows with one
+    ``explode`` of ``(res, parent cell)`` structs, taking ``sum(n_events)``
+    and ``count(*)`` as ``n_fine_cells`` — the shape of the oracle twin.
+    Both union branches hold the same fine exchange, so the final
+    adaptive plan reads it back as a ``ReusedExchange``: the events are
+    scanned and shuffled once, and the second aggregate's input is the
+    fine cell table, not the events. The explode emits one row per fine
+    cell and coarser level; the map-side partial aggregate folds them
+    before the second exchange, which carries at most the coarse cells of
+    each partition. Parents are derived directly fine → level, as in the
+    oracle twin.
     """
-    base = (
+    fine = (
         events.select(
             cells.latlng_to_cell_expr(lat_col, lon_col, res_fine).alias("cell_id")
         )
         .groupBy("cell_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.lit(res_fine).alias("res"),
-            "cell_id",
-            "n_events",
-            F.lit(1).cast("long").alias("n_fine_cells"),
-        )
-        .localCheckpoint(eager=True)
     )
-    levels = [base]
-    prev, prev_res = base, res_fine
-    for r in range(res_fine - 1, res_coarse - 1, -1):
-        nxt = (
-            prev.select(
-                cells.cell_parent_expr(F.col("cell_id"), prev_res, r).alias("cell_id"),
-                "n_events",
-                "n_fine_cells",
-            )
-            .groupBy("cell_id")
-            .agg(
-                F.sum("n_events").alias("n_events"),
-                F.sum("n_fine_cells").alias("n_fine_cells"),
-            )
-            .select(F.lit(r).alias("res"), "cell_id", "n_events", "n_fine_cells")
+    out = fine.select(
+        F.lit(res_fine).alias("res"),
+        "cell_id",
+        "n_events",
+        F.lit(1).cast("long").alias("n_fine_cells"),
+    )
+    if res_coarse >= res_fine:
+        return out
+    parents = F.array(*[
+        F.struct(
+            F.lit(r).alias("res"),
+            cells.cell_parent_expr(F.col("cell_id"), res_fine, r).alias("cell_id"),
         )
-        levels.append(nxt)
-        prev, prev_res = nxt, r
-    out = levels[0]
-    for lv in levels[1:]:
-        out = out.unionByName(lv)
-    return out
+        for r in range(res_fine - 1, res_coarse - 1, -1)
+    ])
+    coarse = (
+        fine.select(F.explode(parents).alias("p"), "n_events")
+        .groupBy(F.col("p.res").alias("res"), F.col("p.cell_id").alias("cell_id"))
+        .agg(
+            F.sum("n_events").alias("n_events"),
+            F.count(F.lit(1)).alias("n_fine_cells"),
+        )
+    )
+    return out.unionByName(coarse)
 
 
 def compact_cells_df(

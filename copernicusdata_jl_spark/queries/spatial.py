@@ -370,8 +370,8 @@ _PYR_FINE, _PYR_COARSE = 7, 4
 
 def q_tile_pyramid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """☆ Multi-resolution tile pyramid (operators/spatial_join.
-    tile_pyramid): cell counts at res 7..4, each coarser level
-    re-aggregated from the previous level's rows — events scanned once."""
+    tile_pyramid): cell counts at res 7..4, every coarser level
+    aggregated from the res-7 cell rows — events scanned once."""
     from ..operators.spatial_join import tile_pyramid
 
     return tile_pyramid(

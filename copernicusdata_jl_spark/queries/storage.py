@@ -71,9 +71,9 @@ def q_fill_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     src/YAXTrees.jl:370-375): sentinel values become NULL, then
     null-skipping min/max/count like the reference's skipmissing reductions
     (docs/src/quickstart.md:43-44)."""
-    from ..operators.select import normalize_fill_value
+    from ..sources.datatree import normalize_fill_value
 
-    p = normalize_fill_value(load(spark, sf_dir, "part"), "p_size", 50)
+    p = normalize_fill_value(load(spark, sf_dir, "part"), 50, ["p_size"])
     return p.groupBy("p_brand").agg(
         F.count("p_size").alias("n_present"),
         F.count(F.when(F.col("p_size").isNull(), 1)).alias("n_missing"),

@@ -88,6 +88,21 @@ def uncompact_cells(cell_ids, res: int) -> np.ndarray:
     return np.array(sorted(out), dtype=np.int64)
 
 
+def tile_pyramid_counts(lat, lon, res_fine: int, res_coarse: int) -> dict:
+    """``{(res, cell_id): (n_events, n_fine_cells)}`` for every level in
+    ``[res_coarse, res_fine]``: each level's cells and event counts come
+    straight from the points, and ``n_fine_cells`` counts the distinct
+    ``res_fine`` cells of the points in each cell."""
+    fine = latlng_to_cell(lat, lon, res_fine)
+    out = {}
+    for r in range(res_coarse, res_fine + 1):
+        cell = latlng_to_cell(lat, lon, r)
+        ids, n_events = np.unique(cell, return_counts=True)
+        _, n_fine = np.unique(np.unique(np.stack([cell, fine]), axis=1)[0], return_counts=True)
+        out.update({(r, int(c)): (int(e), int(f)) for c, e, f in zip(ids, n_events, n_fine)})
+    return out
+
+
 # ---------------------------------------------------------------------------
 # bit-interleaved keys (functions/geohash.py, operators/cluster.py)
 # ---------------------------------------------------------------------------

@@ -59,6 +59,28 @@ def test_knn_kring_antimeridian(spark):
     assert got == [2, 1]  # -179.9 is closer across the antimeridian
 
 
+@pytest.mark.parametrize("qid_type,qids", [("bigint", [7, 8, 9]), ("string", ["a", "b", "c"])])
+def test_knn_kring_result_is_a_local_table_scan(spark, qid_type, qids):
+    """The result is built from one Arrow table: it plans as a
+    LocalTableScan, never a Scan ExistingRDD of pickled rows, and keeps
+    the query and point id types, for a filled and an empty query set."""
+    pts = spark.createDataFrame(
+        [(i, float(i % 40) - 20.0, float(i % 70) - 35.0) for i in range(120)],
+        "event_id int, lat double, lon double",
+    )
+    qdf = spark.createDataFrame(
+        [(q, float(5 * i), float(-5 * i)) for i, q in enumerate(qids)],
+        f"query_id {qid_type}, qlat double, qlon double",
+    )
+    want_types = [("query_id", qid_type), ("event_id", "int"), ("rank", "int"), ("dist_m", "double")]
+    for q, n in ((qdf, 6), (qdf.limit(0), 0)):
+        out = knn_kring(pts, q, res=5, k_ring=1, k=2)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+        assert out.dtypes == want_types
+        assert out.toArrow().num_rows == n
+
+
 # ---------------------------------------------------------------------------
 # lineage + resume
 # ---------------------------------------------------------------------------
@@ -138,6 +160,35 @@ def test_resume_half_done_writes_exactly_missing_buckets(spark, cellified, tmp_p
     run2 = sorted(tuple(r) for r in ck.filter(F.col("run_id") == "run2").select(*cols).collect())
     want = L.lineage_rows(cellified.filter(F.col("bucket") % 2 == 0), "bucket", "cell_id")
     assert run2 == sorted(tuple(r) for r in want.collect())
+    assert ck.count() == 8 and ck.select("bucket").distinct().count() == 8
+
+
+def test_resume_skips_a_bucket_committed_twice_once(spark, cellified, tmp_path):
+    """Two runs that committed the same buckets leave two checkpoint rows
+    per bucket; resume still counts each done bucket once and writes
+    only the missing ones."""
+    ckpt = str(tmp_path / "ckpt_twice")
+    lin = L.lineage_rows(cellified.filter(F.col("bucket") < 3), "bucket", "cell_id")
+    L.write_checkpoint(lin, ckpt, "run1", atomic=True)
+    L.write_checkpoint(lin, ckpt, "run2", atomic=True)
+    assert L.read_checkpoint(spark, ckpt).count() == 6
+    lin3, skip = L.run_with_resume(cellified, "bucket", ckpt, "run3", "cell_id")
+    assert skip == 3
+    assert sorted(r.bucket for r in lin3.collect()) == [3, 4, 5, 6, 7]
+
+
+def test_resume_recomputes_a_deleted_bucket(spark, cellified, tmp_path):
+    """A bucket removed from the checkpoint by SnapshotTable.delete is no
+    longer done: the next resume recomputes exactly that bucket."""
+    ckpt = str(tmp_path / "ckpt_del")
+    L.run_with_resume(cellified, "bucket", ckpt, "run1", "cell_id")
+    SnapshotTable(ckpt).delete(spark.createDataFrame([(5,)], "bucket long"), "takedown")
+    assert L.read_checkpoint(spark, ckpt).count() == 7
+    lin, skip = L.run_with_resume(cellified, "bucket", ckpt, "run2", "cell_id")
+    assert skip == 7
+    want = L.lineage_rows(cellified.filter(F.col("bucket") == 5), "bucket", "cell_id")
+    assert [tuple(r) for r in lin.collect()] == [tuple(r) for r in want.collect()]
+    ck = L.read_checkpoint(spark, ckpt)
     assert ck.count() == 8 and ck.select("bucket").distinct().count() == 8
 
 
@@ -331,11 +382,3 @@ def test_salted_join_spreads_identical_hot_rows(spark):
         .filter("k = 'hot'").select("_salt").distinct().count()
     )
     assert n_salts > 1  # identical rows spread across buckets
-
-
-def test_knn_kring_auto_empty_queries_keep_id_types(spark):
-    pts = spark.createDataFrame([(1, 10.0, 10.0), (2, 11.0, 11.0)], "event_id int, lat double, lon double")
-    empty_q = spark.createDataFrame([], "query_id bigint, qlat double, qlon double")
-    out = knn_kring(pts, empty_q, res=5, k_ring=2, k=3)
-    assert out.count() == 0
-    assert out.dtypes == [("query_id", "bigint"), ("event_id", "int"), ("rank", "int"), ("dist_m", "double")]

@@ -7,13 +7,14 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 
 from copernicusdata_jl_spark import fixtures
 from copernicusdata_jl_spark.functions import cells, geo
-from copernicusdata_jl_spark.operators.spatial_join import build_covers, spatial_join
+from copernicusdata_jl_spark.operators.spatial_join import build_covers, spatial_join, tile_pyramid
 
-from reference import grid_disk, latlng_to_cell, uncompact_cells
+from reference import grid_disk, latlng_to_cell, tile_pyramid_counts, uncompact_cells
 
 POLYGONS = [
     {"poly_id": "SQ", "rings": [[[0.0, 0.0], [10.0, 0.0], [10.0, 10.0], [0.0, 10.0]]]},
@@ -155,3 +156,44 @@ def test_tile_pyramid_levels_consistent(spark):
         assert sum(x["n_fine_cells"] for x in rows) == n_fine
         sizes.append(len(rows))
     assert sizes == sorted(sizes, reverse=True)
+
+
+def _pyramid_events(spark, n: int = 2000):
+    """Uniform points plus the four corners and the antimeridian at the
+    equator, as an Arrow-built frame (a LocalTableScan)."""
+    rng = np.random.default_rng(11)
+    lat = np.concatenate([rng.uniform(-90.0, 90.0, n), [90.0, -90.0, 90.0, -90.0, 0.0, 0.0]])
+    lon = np.concatenate([rng.uniform(-180.0, 180.0, n), [180.0, -180.0, -180.0, 180.0, 180.0, -180.0]])
+    return lat, lon, spark.createDataFrame(pa.table({"lat": lat, "lon": lon}))
+
+
+def _pyramid_dict(df) -> dict:
+    t = df.toArrow().to_pydict()
+    return {(r, c): (e, f) for r, c, e, f in zip(t["res"], t["cell_id"], t["n_events"], t["n_fine_cells"])}
+
+
+@pytest.mark.parametrize("res_fine,res_coarse", [(7, 4), (5, 5)])
+def test_tile_pyramid_matches_numpy_reference(spark, res_fine, res_coarse):
+    """Every level's rows equal the NumPy count from the points, poles and
+    antimeridian included; ``res_coarse == res_fine`` is the fine level
+    alone, and empty input gives no rows with the same column types."""
+    lat, lon, events = _pyramid_events(spark)
+    pyr = tile_pyramid(events, res_fine=res_fine, res_coarse=res_coarse)
+    assert _pyramid_dict(pyr) == tile_pyramid_counts(lat, lon, res_fine, res_coarse)
+    empty = tile_pyramid(events.limit(0), res_fine=res_fine, res_coarse=res_coarse)
+    assert empty.collect() == []
+    assert empty.dtypes == pyr.dtypes == [
+        ("res", "int"), ("cell_id", "bigint"), ("n_events", "bigint"), ("n_fine_cells", "bigint")
+    ]
+
+
+def test_tile_pyramid_reuses_fine_exchange(spark):
+    """One plan with two aggregates: after an action the final adaptive
+    plan reads the fine aggregate's exchange back as a ReusedExchange, so
+    the events are scanned once, and no driver-side RDD scan remains."""
+    _, _, events = _pyramid_events(spark)
+    pyr = tile_pyramid(events, res_fine=7, res_coarse=4)
+    pyr.collect()
+    plan = pyr._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    assert "ReusedExchange" in plan and "ExistingRDD" not in plan
