@@ -32,7 +32,7 @@ from __future__ import annotations
 import time
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -76,39 +76,46 @@ def build_pages(spark: SparkSession, n: int, partitions: int = 32) -> DataFrame:
     )
 
 
+def latest_per_url(pages: DataFrame, *groups: Column) -> DataFrame:
+    """The one latest-wins rule: the latest (warc_ts, html) row per url
+    within each value of ``groups`` — none for the batch job, the
+    event-time window for the stream (streaming/windowed.stream_corpus).
+    Returns the ``groups`` columns, then ``pages``' columns.
+
+    ``groupBy(*groups, url).agg(max_by(struct(payload), key))`` — a hash
+    aggregate, no sort; ONE max_by over the whole payload struct, so
+    exactly one input row survives even on full (url, warc_ts, html)
+    tie-key duplicates (per-column max_by would let the surviving
+    lang/lat/lon come from different rows depending on encounter order).
+    Ties on warc_ts break deterministically on the html bytes. Over a
+    pages table BUCKETED BY url (``write_pages_bucketed`` — the Iceberg
+    bucket-partitioned-table analog) Catalyst elides the Exchange
+    entirely: html NEVER crosses a shuffle (plan-asserted in
+    tests/test_flagship.py). Over a plain table the one shuffle it needs
+    partial-aggregates map-side, collapsing same-partition duplicates
+    before the wire. Same rows as the classic ``row_number`` over (url,
+    warc_ts desc) form (tested), which shuffles and sorts full rows."""
+    payload = [c for c in pages.columns if c != "url"]
+    key = F.struct(F.col("warc_ts"), F.col("html"))
+    agg = pages.groupBy(*groups, "url").agg(F.max_by(F.struct(*payload), key).alias("_row"))
+    return agg.select(
+        *agg.columns[:-2],
+        *[F.col(f"_row.{c}").alias(c) if c in payload else F.col(c) for c in pages.columns],
+    )
+
+
 def prepare_corpus(pages: DataFrame) -> dict[str, DataFrame]:
     """Dedup + extraction: the corpus half of the pipeline.
 
-    1. dedup FIRST: latest warc_ts per url, so the extractor runs once per
-       surviving url instead of once per crawl duplicate — at 10^12 docs
-       with ~5-30% recrawl duplication this is the single biggest saving.
-
-       ``groupBy(url).agg(max_by(struct(payload), key))`` — a hash
-       aggregate, no sort; ONE max_by over the whole payload struct, so
-       exactly one input row survives even on full (url, warc_ts, html)
-       tie-key duplicates (per-column max_by would let the surviving
-       lang/lat/lon come from different rows depending on encounter
-       order). Ties on warc_ts break deterministically on the html bytes.
-       Over a pages table BUCKETED BY url (``write_pages_bucketed`` — the
-       Iceberg bucket-partitioned-table analog) Catalyst elides the
-       Exchange entirely: html NEVER crosses a shuffle (plan-asserted in
-       tests/test_flagship.py). Over a plain table the one shuffle it
-       needs partial-aggregates map-side, collapsing same-partition
-       duplicates before the wire. Same rows as the classic
-       ``row_number`` over (url, warc_ts desc) form (tested), which
-       shuffles and sorts full rows.
+    1. dedup FIRST: latest warc_ts per url (:func:`latest_per_url`), so
+       the extractor runs once per surviving url instead of once per crawl
+       duplicate — at 10^12 docs with ~5-30% recrawl duplication this is
+       the single biggest saving.
     2. extractor + digest (the per-row invariant gate):
        ``with_extracted_text``, a JVM codegen expression — no Arrow
        round-trip for the hottest column at 10^12 docs.
     """
-    payload = [c for c in pages.columns if c != "url"]
-    key = F.struct(F.col("warc_ts"), F.col("html"))
-    deduped = (
-        pages.groupBy("url")
-        .agg(F.max_by(F.struct(*payload), key).alias("_row"))
-        .select("url", *[F.col(f"_row.{c}").alias(c) for c in payload])
-        .select(pages.columns)
-    )
+    deduped = latest_per_url(pages)
     return {"deduped": deduped, "extracted": with_extracted_text(deduped)}
 
 
@@ -159,9 +166,8 @@ def spatial_products(
     polys = footprints or fixtures.footprints(120)
     for p in polys:
         p.setdefault("poly_id", p["product_id"])
-    indexed = extracted.withColumn("cell_id", cells.latlng_to_cell_expr("lat", "lon", res))
     joined = spatial_join(
-        indexed, polys, res=res, keep_cols=["url", "cell_id", "text_sha256"], strategy="broadcast"
+        extracted, polys, res=res, keep_cols=["url", "cell_id", "text_sha256"], strategy="broadcast"
     )
     tile_by_poly = {p["poly_id"]: p["tile_id"] for p in polys}
     tmap = F.create_map(*[F.lit(v) for kv in tile_by_poly.items() for v in kv])

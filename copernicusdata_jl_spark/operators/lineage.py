@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -106,19 +107,21 @@ def run_with_resume(
 
     Contract: bucket ids are work units, one lineage row each, so the done
     and pending bucket sets are the size of the checkpoint table and are
-    decided on the driver, then by set arithmetic. The done set is one
-    Arrow read of the checkpoint's ``bucket`` column: the checkpoint holds
-    one row per bucket per committing run, so a distinct there would only
-    add a shuffle, and a bucket two runs committed is still skipped once.
-    ``df``'s buckets are one collect of its distinct buckets. A NULL
-    bucket is never written and never counted as skipped."""
+    decided on the driver. The done set is one Arrow read of the
+    checkpoint's ``bucket`` column: the checkpoint holds one row per bucket
+    per committing run, so a distinct there would only add a shuffle, and a
+    bucket two runs committed is still skipped once. ``df`` is read once:
+    one ``toArrow()`` of the lineage rows of its non-NULL buckets gives the
+    bucket set, the skip count and the rows to commit, at the price of
+    aggregating the done buckets too. A NULL bucket is never written and
+    never counted as skipped."""
     spark = df.sparkSession
     ckpt = read_checkpoint(spark, checkpoint_path)
     done = set() if ckpt is None else set(ckpt.select("bucket").toArrow().column(0).to_pylist())
-    total = {r[0] for r in df.select(bucket_col).distinct().collect()} - {None}
-    todo = total - done
-    fresh = df.filter(F.col(bucket_col).isin(sorted(todo)))
-    lin = lineage_rows(fresh, bucket_col, cell_col)
-    if todo:
+    rows = lineage_rows(df.filter(F.col(bucket_col).isNotNull()), bucket_col, cell_col).toArrow()
+    todo = rows.filter(pa.array([b not in done for b in rows.column("bucket").to_pylist()], pa.bool_()))
+    # one file per commit: a local table splits into a partition per core
+    lin = spark.createDataFrame(todo).coalesce(1)
+    if todo.num_rows:
         write_checkpoint(lin, checkpoint_path, run_id, atomic=True)
-    return lin, len(total) - len(todo)
+    return lin, rows.num_rows - todo.num_rows

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from ..operators.analytics import gap_fill_days, retention_cohorts, skyline2d
 from ..operators.asof import funnel_flags
+from ..streaming.windowed import stream_sessionize, windowed_counts
 from .shared import load
 
 
@@ -589,20 +590,12 @@ ORDER BY event_id
 
 
 def q_event_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 1-day event-time windows per event_type — the batch twin of
-    the Structured Streaming aggregation (streaming/windowed.py runs the
-    same plan incrementally with a watermark)."""
-    ev = load(spark, sf_dir, "events")
-    return (
-        ev.groupBy(
-            F.date_trunc("day", F.col("ts")).alias("window_start"),
-            "event_type",
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum(F.round(F.col("value"), 3).cast("decimal(18,3)")).cast("double"), 3).alias("sum_value"),
-        )
-        .orderBy("window_start", "event_type")
+    """Tumbling 1-day event-time windows per event_type:
+    streaming/windowed.windowed_counts run in batch mode — the SAME plan
+    the stream executes incrementally with a watermark."""
+    out = windowed_counts(load(spark, sf_dir, "events"))
+    return out.withColumn("window_start", F.col("window_start").cast("timestamp_ntz")).orderBy(
+        "window_start", "event_type"
     )
 
 
@@ -628,8 +621,6 @@ def q_session_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     last_event + gap) and touching windows merge (only a gap STRICTLY
     greater than 30 min splits). The oracle re-derives that rule
     independently with a lag/running-sum CTE in integer microseconds."""
-    from ..streaming.windowed import stream_sessionize
-
     ev = load(spark, sf_dir, "events")
     out = stream_sessionize(ev)  # batch frame -> plain aggregation plan
     return (

@@ -1,8 +1,8 @@
 """Incremental hygiene twin (VERDICT r3 item 9): the training-mix FRONT
 HALF — host frequency cap → exact text dedup → quality gates →
 benchmark decontamination — composed onto :func:`..streaming.windowed.
-stream_corpus` with the foreachBatch idempotent-partial pattern the
-streaming spatial half established (streaming/spatial.py).
+stream_corpus` with the foreachBatch idempotent-partial pattern of the
+one streaming front door (streaming/windowed.py), as the spatial half.
 
 Why each stage composes incrementally:
 
@@ -36,15 +36,13 @@ plus the decontamination stage in front of the gates.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import repetition_ratio_expr, token_count_expr
 from ..operators.corpus import decontaminate
 from ..operators.knn import topk_per_group
-from .windowed import stream_corpus
+from .windowed import _read_partials, _start, _write_partial, stream_corpus
 
 HYGIENE_SUBDIR = "hygiene_partial"
 META_COLS = ["url", "host", "_ord", "text_sha256", "n_tokens", "rep_ratio", "contaminated"]
@@ -151,17 +149,9 @@ def start_stream_hygiene(
         partial = topk_per_group(
             meta, ["host"], [F.col("_ord").asc(), F.col("url").asc()], cap, rank_col="rk"
         ).select(*META_COLS)
-        out = os.path.join(out_dir, HYGIENE_SUBDIR, f"batch_id={batch_id}")
-        partial.write.mode("overwrite").parquet(out)
+        _write_partial(partial, out_dir, HYGIENE_SUBDIR, batch_id)
 
-    writer = corpus.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_interval is not None:
-        writer = writer.trigger(processingTime=trigger_interval)
-    return writer.start()
+    return _start(corpus, process_batch, checkpoint, available_now, trigger_interval)
 
 
 def read_stream_hygiene(
@@ -175,7 +165,5 @@ def read_stream_hygiene(
     equal to the batch front half over the same corpus: global re-rank of
     the unioned local cap winners, then the same digest dedup and gates
     (the combine IS `_finish`, shared with the batch twin)."""
-    partials = spark.read.option(
-        "basePath", os.path.join(out_dir, HYGIENE_SUBDIR)
-    ).parquet(os.path.join(out_dir, HYGIENE_SUBDIR))
+    partials = _read_partials(spark, out_dir, HYGIENE_SUBDIR)
     return _finish(partials.select(*META_COLS), cap, min_tokens, max_rep)

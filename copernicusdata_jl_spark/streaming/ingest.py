@@ -29,9 +29,10 @@ holds only source offsets — state lives in the table's manifests.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from ..operators.snapshot import SnapshotTable
+from .windowed import _start
 
 
 def start_stream_ingest(
@@ -57,11 +58,4 @@ def start_stream_ingest(
             run_id=f"batch-{batch_id:08d}",
         )
 
-    writer = docs_stream.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_interval is not None:
-        writer = writer.trigger(processingTime=trigger_interval)
-    return writer.start()
+    return _start(docs_stream, process_batch, checkpoint, available_now, trigger_interval)

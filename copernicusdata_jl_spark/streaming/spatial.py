@@ -33,12 +33,11 @@ the combining reads aggregate a few thousand tiny rows.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .windowed import stream_corpus
+from ..flagship import spatial_products
+from .windowed import _read_partials, _start, _write_partial, stream_corpus
 
 TILES_SUBDIR = "tiles_partial"
 LINEAGE_SUBDIR = "lineage_partial"
@@ -63,31 +62,17 @@ def start_stream_spatial(
     corpus = stream_corpus(pages_stream, window=window, watermark=watermark)
 
     def process_batch(bdf: DataFrame, batch_id: int) -> None:
-        from ..flagship import spatial_products
-
         sp = spatial_products(bdf.drop("window_start"), footprints, res)
-        # overwrite into a batch_id-addressed directory: a replayed batch
-        # (same offsets ⇒ same rows for the file source) lands on the same
-        # path and the rewrite is a no-op semantically — idempotent resume
-        tiles_out = os.path.join(out_dir, TILES_SUBDIR, f"batch_id={batch_id}")
-        lin_out = os.path.join(out_dir, LINEAGE_SUBDIR, f"batch_id={batch_id}")
-        sp["tiles"].write.mode("overwrite").parquet(tiles_out)
-        sp["lineage"].write.mode("overwrite").parquet(lin_out)
+        _write_partial(sp["tiles"], out_dir, TILES_SUBDIR, batch_id)
+        _write_partial(sp["lineage"], out_dir, LINEAGE_SUBDIR, batch_id)
 
-    writer = corpus.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(corpus, process_batch, checkpoint, available_now, None)
 
 
 def read_stream_tiles(spark: SparkSession, out_dir: str) -> DataFrame:
     """Combine per-batch tile partials → (tile_id, n_docs), equal to the
     batch flagship.spatial_products tiles over the same deduped corpus."""
-    partials = spark.read.option("basePath", os.path.join(out_dir, TILES_SUBDIR)).parquet(
-        os.path.join(out_dir, TILES_SUBDIR)
-    )
+    partials = _read_partials(spark, out_dir, TILES_SUBDIR)
     return partials.groupBy("tile_id").agg(F.sum("n_docs").alias("n_docs"))
 
 
@@ -96,10 +81,7 @@ def read_stream_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
     exact global (cell_min, cell_max, row_count, checksum): min/max/sum
     compose trivially and BIT_XOR over disjoint row sets composes by XOR of
     the batch checksums."""
-    partials = spark.read.option("basePath", os.path.join(out_dir, LINEAGE_SUBDIR)).parquet(
-        os.path.join(out_dir, LINEAGE_SUBDIR)
-    )
-    return partials.groupBy("bucket").agg(
+    return _read_partials(spark, out_dir, LINEAGE_SUBDIR).groupBy("bucket").agg(
         F.min("cell_min").alias("cell_min"),
         F.max("cell_max").alias("cell_max"),
         F.sum("row_count").alias("row_count"),

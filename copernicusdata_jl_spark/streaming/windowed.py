@@ -1,13 +1,17 @@
 """Structured Streaming surface: event-time windowed aggregation with
-watermarked late-data handling, latest-wins per-key dedup, session
-windows and the incremental crawl-ingest twin of the flagship corpus stage.
+watermarked late-data handling, session windows, the incremental
+crawl-ingest twin of the flagship corpus stage, and the one front door
+every ``start_stream_*`` job starts through.
 
 The reference is batch-only (SURVEY.md §2.11) — granules arrive as files —
-so streaming here models the engine's incremental-ingest path: the same
-tumbling-window aggregation as the batch query ``event_windows`` run
-incrementally over arriving files. Batch/stream parity is the test
-contract: an availableNow pass over the same parquet must equal the batch
-plan's answer (exactly-once file source semantics).
+so streaming here models the engine's incremental-ingest path. Each
+operator is the batch operator run on a stream: the registry queries
+``event_windows`` and ``session_window_agg`` run :func:`windowed_counts`
+and :func:`stream_sessionize` on the batch frame, and
+:func:`stream_corpus` runs the flagship's one latest-wins rule
+(``flagship.latest_per_url``) per event-time window. Batch/stream parity
+is the test contract: an availableNow pass over the same parquet must
+equal the batch plan's answer (exactly-once file source semantics).
 
 Scale notes: the window agg is a streaming state-store aggregation keyed by
 (window, event_type) — state size is bounded by the watermark horizon; the
@@ -18,25 +22,14 @@ protocol in operators/lineage.py).
 
 from __future__ import annotations
 
+import os
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def stream_events(spark: SparkSession, sf_dir: str, schema=None) -> DataFrame:
-    """File-source stream over the events table (one-file-per-trigger keeps
-    memory bounded when replaying history)."""
-    import os
-
-    path = f"{sf_dir}/events.parquet"
-    if schema is None:
-        schema = spark.read.parquet(path).schema
-    reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", 8)
-    if os.path.isfile(path):
-        # FileStreamSource wants a directory; select the single-file table
-        # out of the shared dir with a glob filter
-        reader = reader.option("pathGlobFilter", "events.parquet")
-        path = sf_dir
-    return reader.parquet(path)
+from ..flagship import latest_per_url
+from ..functions.text import with_extracted_text
 
 
 def windowed_counts(
@@ -46,8 +39,9 @@ def windowed_counts(
     ts_col: str = "ts",
 ) -> DataFrame:
     """Tumbling event-time windows per event_type with a watermark bounding
-    late data (and state size). Works on both batch and streaming frames —
-    the SAME plan text, which is the parity the tests assert."""
+    late data (and state size). Works on both batch and streaming frames
+    with the SAME plan: the registry query ``event_windows`` runs it on the
+    batch frame, and the tests assert batch == stream."""
     # event time must be TIMESTAMP (not NTZ) for watermarks; session tz is
     # UTC so the cast is value-preserving
     src = events.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
@@ -61,38 +55,6 @@ def windowed_counts(
         )
         .select(F.col("w.start").alias("window_start"), "event_type", "n_events", "sum_value")
     )
-
-
-def stream_dedup_latest(
-    events: DataFrame,
-    key_cols: list[str],
-    ts_col: str = "ts",
-    window: str = "1 day",
-    watermark: str = "2 days",
-) -> DataFrame:
-    """LATEST-WINS streaming dedup — the true incremental twin of the batch
-    url-dedup (latest ``ts_col`` per key): a watermarked tumbling-window
-    ``max_by`` aggregation emits, once the watermark closes a window, the
-    single latest row per (window, key). Append output mode (each row final
-    exactly once); state is one payload row per in-flight (window, key).
-
-    Equals the batch latest-wins result per window partition; keys recurring
-    across windows surface one winner per window — the consumer keeps the
-    window column to resolve globally (or windows are sized to the recrawl
-    horizon). On a batch frame the same plan runs as a plain aggregation,
-    which is the parity the tests assert."""
-    src = events.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    payload = [c for c in src.columns if c not in key_cols and c != ts_col]
-    if src.isStreaming:
-        src = src.withWatermark(ts_col, watermark)
-    agg = (
-        src.groupBy(F.window(ts_col, window).alias("w"), *key_cols)
-        .agg(
-            F.max(ts_col).alias(ts_col),
-            *[F.max_by(c, ts_col).alias(c) for c in payload],
-        )
-    )
-    return agg.select(F.col("w.start").alias("window_start"), *key_cols, ts_col, *payload)
 
 
 def stream_sessionize(
@@ -155,20 +117,59 @@ def stream_corpus(
     watermark: str = "30 days",
 ) -> DataFrame:
     """Streaming twin of the flagship corpus stage
-    (flagship.prepare_corpus): incremental crawl ingest — latest-wins url
-    dedup (watermarked window max_by over ``warc_ts``) with the
-    deterministic extractor + sha256 digest applied to each surviving
-    page. Extraction runs AFTER dedup, so at 10^12 docs each url's html
-    is extracted once per emitted winner, not once per recrawl — the same
-    ordering argument as the batch pipeline.
+    (flagship.prepare_corpus): incremental crawl ingest — the batch
+    latest-wins rule ``latest_per_url`` grouped by the watermarked
+    ``warc_ts`` window as well as the url, then the deterministic
+    extractor + sha256 digest on each surviving page. Append mode emits a
+    (window, url) winner once, when the watermark closes its window; state
+    is one payload row per in-flight (window, url). Extraction runs AFTER
+    dedup, so at 10^12 docs each url's html is extracted once per emitted
+    winner, not once per recrawl — the same ordering argument as the batch
+    pipeline. On a batch frame it runs the same aggregation unwatermarked.
 
     Parity contract (tested): when every url's recrawls fall inside one
     window, an availableNow drain equals the batch ``prepare_corpus``
-    result row-for-row (url, warc_ts, text, text_sha256). Keys recurring
-    across windows emit one winner per window — size the window to the
-    recrawl horizon or resolve downstream on the window column."""
-    from ..functions.text import with_extracted_text
-
+    result row-for-row, tie-key recrawls included. Keys recurring across
+    windows emit one winner per window — size the window to the recrawl
+    horizon or resolve downstream on ``window_start``."""
+    src = pages.withWatermark("warc_ts", watermark) if pages.isStreaming else pages
+    deduped = latest_per_url(src, F.window("warc_ts", window).alias("w"))
     return with_extracted_text(
-        stream_dedup_latest(pages, ["url"], ts_col="warc_ts", window=window, watermark=watermark)
+        deduped.select(F.col("w.start").alias("window_start"), *pages.columns)
     )
+
+
+def _start(
+    stream: DataFrame,
+    process_batch: Callable[[DataFrame, int], None],
+    checkpoint: str,
+    available_now: bool,
+    trigger_interval: str | None,
+):
+    """The one front door of the ``start_stream_*`` jobs: ``process_batch``
+    runs per micro-batch in ``foreachBatch``, the source offsets live in
+    ``checkpoint``, and the trigger drains what is available and stops
+    (``available_now``) or paces continuous micro-batches
+    (``trigger_interval``; Spark's default when None). Returns the
+    StreamingQuery."""
+    writer = stream.writeStream.foreachBatch(process_batch).option(
+        "checkpointLocation", checkpoint
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    elif trigger_interval is not None:
+        writer = writer.trigger(processingTime=trigger_interval)
+    return writer.start()
+
+
+def _write_partial(df: DataFrame, out_dir: str, subdir: str, batch_id: int) -> None:
+    """One micro-batch's partial, overwritten into its ``batch_id=N``
+    directory: a replayed batch (same source offsets ⇒ same rows) lands on
+    the same path, so a foreachBatch replay after a crash is idempotent —
+    no loss, no dup."""
+    df.write.mode("overwrite").parquet(os.path.join(out_dir, subdir, f"batch_id={batch_id}"))
+
+
+def _read_partials(spark: SparkSession, out_dir: str, subdir: str) -> DataFrame:
+    """Every batch's partial under ``subdir``, for a combining read."""
+    return spark.read.parquet(os.path.join(out_dir, subdir))

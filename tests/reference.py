@@ -13,7 +13,7 @@ import re
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 from copernicusdata_jl_spark.fixtures import LANGS
 from copernicusdata_jl_spark.functions.cells import RES_BITS, cell_bounds, latlng_to_xy, nx_ny, pack, unpack
@@ -339,6 +339,19 @@ def write_zarr_array_v3(
 # ---------------------------------------------------------------------------
 # streaming
 # ---------------------------------------------------------------------------
+
+
+def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """File-source stream over the events table (one-file-per-trigger keeps
+    memory bounded when replaying history)."""
+    path = f"{sf_dir}/events.parquet"
+    reader = spark.readStream.schema(spark.read.parquet(path).schema).option("maxFilesPerTrigger", 8)
+    if os.path.isfile(path):
+        # FileStreamSource wants a directory; select the single-file table
+        # out of the shared dir with a glob filter
+        reader = reader.option("pathGlobFilter", "events.parquet")
+        path = sf_dir
+    return reader.parquet(path)
 
 
 def run_available_now(

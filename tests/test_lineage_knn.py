@@ -314,7 +314,7 @@ def test_ring_guarantee_monotone_and_polar_safe():
     assert ring_guarantee_m(-89.0, full_ring(5), 5) == float("inf")
 
 
-def test_knn_kring_driver_and_dataframe_state_parity(spark):
+def test_knn_kring_matches_bruteforce_at_poles_and_antimeridian(spark):
     """Queries near both poles and the antimeridian return exactly the
     brute-force kNN rows."""
     pts = spark.createDataFrame(

@@ -82,15 +82,16 @@ def _code_trees():
     }
 
 
-def _code_names(tree, skip=None):
+def _code_names(tree, skip=()):
     """Every name a module's code reads: loaded ``Name`` ids and
     ``Attribute`` attrs (f-string expressions parse into the same nodes) and
     the parts of imported names. Strings, comments and docstrings are not
-    code; the subtree ``skip`` (a definition itself) is left out."""
+    code; the subtrees in ``skip`` (a definition itself, a package's
+    re-exports) are left out."""
     stack = [tree]
     while stack:
         node = stack.pop()
-        if node is skip:
+        if any(node is s for s in skip):
             continue
         if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
             yield node.id
@@ -101,16 +102,24 @@ def _code_names(tree, skip=None):
         stack.extend(ast.iter_child_nodes(node))
 
 
+def _reexports(path, tree):
+    """A package ``__init__.py``'s relative imports: re-exporting a name
+    from a submodule is not a use of it."""
+    if path.name != "__init__.py":
+        return []
+    return [n for n in tree.body if isinstance(n, ast.ImportFrom) and n.level]
+
+
 def test_every_package_definition_is_referenced():
     """Every top-level def, class and assignment of the package is read by
     code outside its own definition and outside tests/: in its module, in
     another repo ``.py`` file, or named in a ``tests/resources/*.toml``
     payload spec (which resolves processing units by name) — or it is
     listed in ``PUBLIC_API``. A test, docstring, comment or string naming a
-    definition is not a use of it, and a ``PUBLIC_API`` entry that names no
-    definition fails too."""
+    definition, or a package ``__init__.py`` re-exporting it, is not a use
+    of it, and a ``PUBLIC_API`` entry that names no definition fails too."""
     trees = _code_trees()
-    names = {p: set(_code_names(t)) for p, t in trees.items()}
+    names = {p: set(_code_names(t, skip=_reexports(p, t))) for p, t in trees.items()}
     specs = set().union(*(re.findall(r"\w+", p.read_text()) for p in (REPO / "tests" / "resources").glob("*.toml")))
     dead, defined = [], set()
     for path in sorted(PKG.rglob("*.py")):
@@ -120,7 +129,7 @@ def test_every_package_definition_is_referenced():
             defined.add(f"{module}.{name}")
             if name in others or f"{module}.{name}" in PUBLIC_API:
                 continue
-            if name not in set(_code_names(trees[path], skip=node)):
+            if name not in set(_code_names(trees[path], skip=[node])):
                 dead.append(f"{path.relative_to(REPO)}:{node.lineno} {name}")
     assert dead == [], dead
     assert sorted(set(PUBLIC_API) - defined) == []

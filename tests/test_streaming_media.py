@@ -6,10 +6,11 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from copernicusdata_jl_spark.flagship import build_pages, prepare_corpus
 from copernicusdata_jl_spark.operators import multimodal as M
-from copernicusdata_jl_spark.streaming import stream_events, windowed_counts
+from copernicusdata_jl_spark.streaming.windowed import stream_corpus, windowed_counts
 
-from reference import run_available_now
+from reference import run_available_now, stream_events
 
 SF = "/root/testdata/sf0.001"
 
@@ -64,30 +65,36 @@ def test_media_decode_deterministic_across_partitions(spark):
 
 
 def test_stream_dedup_latest_matches_batch(spark, tmp_path):
-    """stream_dedup_latest (watermarked window + max_by, append mode) must
-    emit exactly the batch latest-wins winner per (window, key)."""
-    from copernicusdata_jl_spark.streaming.windowed import stream_dedup_latest
-
-    stream = stream_dedup_latest(
-        stream_events(spark, SF), ["user_id"], window="1 day", watermark="0 seconds"
+    """The one latest-wins rule (flagship.latest_per_url) per watermarked
+    1-day window, drained in append mode, emits exactly the batch winner
+    per (window, url) over the many days of the events table read as
+    crawl pages: each user is a url, each event a crawl of it."""
+    ev = spark.read.parquet(f"{SF}/events.parquet")
+    src = str(tmp_path / "pages")
+    ev.select(
+        F.concat(F.lit("https://user/"), F.col("user_id").cast("string")).alias("url"),
+        F.col("ts").cast("timestamp").alias("warc_ts"),
+        F.encode(F.concat_ws(" ", "event_type", F.col("event_id").cast("string")), "utf-8").alias("html"),
+        F.col("event_type").alias("lang"),
+        F.col("value").alias("lat"),
+        F.col("event_id").cast("double").alias("lon"),
+    ).coalesce(1).write.parquet(src)
+    schema = spark.read.parquet(src).schema
+    stream = stream_corpus(
+        spark.readStream.schema(schema).parquet(src), window="1 day", watermark="0 seconds"
     )
     assert stream.isStreaming
     run_available_now(stream, "dedup_latest_out", str(tmp_path / "ckpt_dl"), output_mode="append")
     # append mode emits a window only once the watermark passes its end, so
     # the final (still-open) event-time day never flushes in a drain —
     # compare the closed windows, which must match the batch plan exactly
-    max_day = (
-        spark.read.parquet(f"{SF}/events.parquet")
-        .select(F.date_trunc("day", F.max(F.col("ts").cast("timestamp"))).alias("d"))
-        .first()
-        .d
-    )
-    got = sorted(map(tuple, spark.table("dedup_latest_out").filter(F.col("window_start") < F.lit(max_day)).collect()))
-    batch = stream_dedup_latest(
-        spark.read.parquet(f"{SF}/events.parquet"), ["user_id"], window="1 day"
-    ).filter(F.col("window_start") < F.lit(max_day))
+    max_day = ev.select(F.date_trunc("day", F.max(F.col("ts").cast("timestamp"))).alias("d")).first().d
+    cols = ["window_start", "url", "warc_ts", "html", "lang", "lat", "lon", "text_sha256"]
+    closed = F.col("window_start") < F.lit(max_day)
+    got = sorted(map(tuple, spark.table("dedup_latest_out").filter(closed).select(cols).collect()))
+    batch = stream_corpus(spark.read.parquet(src), window="1 day").filter(closed).select(cols)
     want = sorted(map(tuple, batch.collect()))
-    assert got == want and len(got) > 0
+    assert got == want and len({r[0] for r in want}) > 10
 
 
 def test_stream_restart_from_checkpoint_no_loss_no_dup(spark, tmp_path):
@@ -186,9 +193,6 @@ def test_stream_corpus_matches_batch_prepare_corpus(spark, tmp_path):
     open and is excluded from the comparison."""
     import datetime
 
-    from copernicusdata_jl_spark.flagship import build_pages, prepare_corpus
-    from copernicusdata_jl_spark.streaming.windowed import stream_corpus
-
     pages = build_pages(spark, 300, partitions=4)
     src = str(tmp_path / "pages")
     pages.write.parquet(src)
@@ -222,3 +226,38 @@ def test_stream_corpus_matches_batch_prepare_corpus(spark, tmp_path):
     )
     want = sorted(map(tuple, batch.collect()))
     assert got == want and len(got) == 300
+
+
+def test_stream_corpus_keeps_the_batch_row_on_a_warc_ts_tie(spark, tmp_path):
+    """Two crawls of one url share warc_ts, the larger html first in the
+    file: the drained stream keeps the whole row the batch rule keeps (the
+    larger html), not the one that arrived last. A far-future sentinel page
+    in a later file closes the window, as above."""
+    import datetime
+
+    schema = "url string, warc_ts timestamp, html binary, lang string, lat double, lon double"
+    ts = datetime.datetime(2024, 1, 1)
+    src = str(tmp_path / "pages")
+    spark.createDataFrame(
+        [
+            ("https://a/", ts, b"<p>zzz first</p>", "en", 1.0, 1.0),
+            ("https://a/", ts, b"<p>aaa second</p>", "fr", 2.0, 2.0),
+            ("https://b/", ts, b"<p>only</p>", "de", 3.0, 3.0),
+        ],
+        schema,
+    ).coalesce(1).write.parquet(src)
+    spark.createDataFrame(
+        [("https://sentinel/", datetime.datetime(2035, 1, 1), b"<p></p>", "en", 0.0, 0.0)], schema
+    ).coalesce(1).write.mode("append").parquet(src)
+    cols = ["url", "warc_ts", "html", "lang", "lat", "lon", "text", "text_sha256"]
+    pages = spark.read.parquet(src).filter(F.col("url") != "https://sentinel/")
+    want = sorted(map(tuple, prepare_corpus(pages)["extracted"].select(cols).collect()))
+    stream = stream_corpus(
+        spark.readStream.schema(schema).parquet(src), window="365 days", watermark="0 seconds"
+    )
+    run_available_now(stream, "tie_out", str(tmp_path / "ckpt"), output_mode="append")
+    got = sorted(
+        map(tuple, spark.table("tie_out").filter(F.col("url") != "https://sentinel/").select(cols).collect())
+    )
+    assert got == want
+    assert [r[2] for r in got] == [b"<p>zzz first</p>", b"<p>only</p>"]
